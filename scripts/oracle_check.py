@@ -50,30 +50,36 @@ def type_mismatch(sql_con, sql, sp_dir):
     """The driver writes the DuckDB result to parquet and hash-compares
     values against Spark's parquet, so a HUGEINT column (serialized as
     DOUBLE) or any int-vs-float kind split fails there even when Python
-    values compare equal here. Returns an error string or None."""
+    values compare equal here. Every hint found is reported, joined by
+    '; ', so one kind of mismatch cannot hide another. Returns an error
+    string or None."""
     duck = sql_con.sql(sql)
     d_types = dict(zip(duck.columns, [str(t) for t in duck.types]))
+    hints = []
     hug = [c for c, t in d_types.items() if type_kind(t) == "hugeint"]
     if hug:
-        return (f"oracle SQL returns HUGEINT column(s) {hug} — DuckDB "
+        text = (f"oracle SQL returns HUGEINT column(s) {hug} — DuckDB "
                 "serializes HUGEINT to parquet as DOUBLE; CAST(... AS BIGINT)")
+        hints.append(text)
     # r17 driver evidence: every hash-red query emitted a DECIMAL output
     # column and no green query emitted any — the driver's parquet hash
     # gate fails on DECIMAL outputs even when the integer values match
     # bit-for-bit. Finish wide anchors as BIGINT (hi/lo split if >int64).
     dec = [c for c, t in d_types.items() if type_kind(t) == "decimal"]
     if dec:
-        return (f"oracle SQL returns DECIMAL column(s) {dec} — the "
+        text = (f"oracle SQL returns DECIMAL column(s) {dec} — the "
                 "driver's hash gate fails on DECIMAL outputs (r17); "
                 "finish as BIGINT (10^18 hi/lo split if past int64)")
+        hints.append(text)
     sp = sql_con.sql(f"SELECT * FROM read_parquet('{sp_dir}/*.parquet')")
     s_types = dict(zip(sp.columns, [str(t) for t in sp.types]))
     for c, dt in d_types.items():
         if c in s_types and type_kind(dt) != type_kind(s_types[c]):
-            return (f"column '{c}' type kind differs: duck {dt} "
+            text = (f"column '{c}' type kind differs: duck {dt} "
                     f"({type_kind(dt)}) vs spark {s_types[c]} "
                     f"({type_kind(s_types[c])}) — driver hash gate will fail")
-    return None
+            hints.append(text)
+    return "; ".join(hints) or None
 
 
 def values_equal(a, b):

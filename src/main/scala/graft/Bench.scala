@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Benchmark main. Each query runs [[Bench.Warmups]] discarded warm-up
   * iterations (JVM / codegen / file-listing warm-up) followed by
@@ -19,22 +20,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner only frees finished broadcasts/shuffles when the
-      // DRIVER GC runs, and its own periodic-GC default (30 min) never
-      // fires inside a ~10-minute bench — so ~560 entries' broadcast
-      // blocks accumulate in the block manager and mid-pass entries pay
-      // eviction churn that isn't theirs (r15: q312 read 25.5 s in-pass
-      // vs 8.9 s in its own same-run sentinel). 1 min + the explicit
-      // System.gc() cadence below keeps the store near-empty all run.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the session's 1-min cleaner GC + the explicit System.gc() cadence
+    // below keep the block manager near-empty all run
+    val spark = GraftSession.local("graft-bench")
 
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Boolean) = {
@@ -103,12 +91,9 @@ object Bench {
     // A renamed/mistyped sentinel entry must FAIL the bench, not be
     // silently dropped from the box-state baseline (r15 advice note):
     // queries(name) throws NoSuchElementException on a missing key.
-    def runSentinel(reps: Int): Seq[(String, Double, Boolean)] =
+    def runSentinel(): Seq[(String, Double, Boolean)] =
       SentinelQueries.map { name =>
-        val fn = SparkEntry.queries(name)
-        val (t, ok) =
-          if (reps >= Reps) median(fn)
-          else once(fn) // single-rep diagnostic tick (already warm)
+        val (t, ok) = median(SparkEntry.queries(name))
         (name, t, ok)
       }
     def sentinelToJson(s: Seq[(String, Double, Boolean)]): String =
@@ -116,7 +101,7 @@ object Bench {
         "\"" + name + "\":" + (if (ok) r4(t) else "null")
       }.mkString("{", ",", "}")
     val sentinelPre =
-      if (filterEnv.isDefined) Seq.empty else runSentinel(Reps)
+      if (filterEnv.isDefined) Seq.empty else runSentinel()
     val sentinelJson = sentinelToJson(sentinelPre)
     if (filterEnv.isEmpty)
       println(s"""{"metric":"sentinel","unit":"sec","queries":$sentinelJson}""")
@@ -126,10 +111,10 @@ object Bench {
         .toSeq.sortBy(_._1)
     // Mid-pass sentinel tick (r15 verdict "what's wrong" #2): the
     // pre-pass sentinel adjudicates cross-round BOX state but is blind
-    // to state accumulated DURING the pass; one single-rep re-read of
-    // the same four queries halfway through makes in-run drift
-    // self-evident in the artifact (sentinel_mid ≈ sentinel ⟹ the
-    // pass's own readings are trustworthy end to end).
+    // to state accumulated DURING the pass; one re-read of the same
+    // four queries halfway through makes in-run drift self-evident in
+    // the artifact (sentinel_mid ≈ sentinel ⟹ the pass's own readings
+    // are trustworthy end to end).
     val midAt = entries.size / 2
     var sentinelMid: Seq[(String, Double, Boolean)] = Seq.empty
     val results = entries.zipWithIndex.map {
@@ -143,9 +128,10 @@ object Bench {
           // two of three tripped the gate on sampling noise alone; r18
           // runs 1/2 recorded in OPTIMIZATION_r18.md §10 with the old
           // single-rep numbers kept). Same queries, same JSON keys;
-          // mid-tick wall cost rises by two reps per sentinel entry,
-          // none of it counted in any per-query median or the total.
-          sentinelMid = runSentinel(Reps)
+          // the mid tick costs a warm-up + 3 timed reps per sentinel
+          // entry, none of it counted in any per-query median or the
+          // total.
+          sentinelMid = runSentinel()
         // Drive the ContextCleaner: without an explicit driver GC the
         // weak refs behind finished broadcasts are never processed on a
         // big mostly-idle heap, so block-manager occupancy only grows.

@@ -1,20 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
-/** Dev tool: print the formatted physical plan of named queries.
+/** Dev tool: print the formatted physical plan of named queries, on the
+  * same session settings the bench runs (`SPARK_GRAFT_CPUS` cores).
   * Usage: runMain graft.Explain <sfDir> <name-substring>[,<substring>...]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val pats = args(1).split(',').toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-explain")
     SparkEntry.queries
       .filter(kv => pats.exists(kv._1.contains)).toSeq.sortBy(_._1)
       .foreach { case (name, fn) =>

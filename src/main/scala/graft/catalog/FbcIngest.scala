@@ -46,15 +46,17 @@ object FbcIngest {
   /** Parse a catalog JSONL stream into the meta table, keeping the
     * verbatim blob. Corrupt lines (no parsable header schema) raise.
     */
-  def readMetaStream(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val parsed = spark.read.textFile(path).toDF("blob")
-      .filter(length(trim($"blob")) > 0)
-      .select(from_json($"blob", headerSchema).as("h"), $"blob")
-      .select($"h.schema".as("schema"), $"h.package".as("package"),
-        $"h.name".as("name"), $"blob")
-    parsed
-  }
+  def readMetaStream(spark: SparkSession, path: String): DataFrame =
+    parseMeta(spark.read.textFile(path).toDF("blob"))
+
+  /** Header fields of each non-blank `blob` line (batch or streaming),
+    * with the blob kept verbatim.
+    */
+  private def parseMeta(lines: DataFrame): DataFrame =
+    lines.filter(length(trim(col("blob"))) > 0)
+      .select(from_json(col("blob"), headerSchema).as("h"), col("blob"))
+      .select(col("h.schema").as("schema"), col("h.package").as("package"),
+        col("h.name").as("name"), col("blob"))
 
   /** Apply the derived partition key (R6). */
   def withPackageKey(df: DataFrame): DataFrame =
@@ -62,6 +64,17 @@ object FbcIngest {
       packageKey(col("schema"), col("package"), col("name")))
 
   private val BadMetaMsg = "meta record lacks schema/name"
+
+  /** The stored columns: the derived partition key, plus a schema
+    * column that raises on a record lacking schema or name — validation
+    * rides the write pass instead of a separate count() over the source.
+    */
+  private def checkedMeta(meta: DataFrame): DataFrame =
+    withPackageKey(meta).select(col("package"),
+      when(col("schema").isNull || col("name").isNull,
+        raise_error(concat(lit(s"$BadMetaMsg: "), coalesce(col("blob"), lit("")))))
+        .otherwise(col("schema")).as("schema"),
+      col("name"), col("blob"))
 
   /** Validate-and-write one immutable snapshot under
     * `root/snapshots/<ts>/` partitioned by (package, schema), and
@@ -74,15 +87,10 @@ object FbcIngest {
     */
   def writeSnapshot(spark: SparkSession, meta: DataFrame, root: String,
       snapshotId: Option[String] = None, sourceWatermark: Long = 0L): String = {
-    import spark.implicits._
     val id = snapshotId.getOrElse(tsFmt.format(Instant.now()))
     val snapDir = s"$root/snapshots/$id"
-    val checkedSchema = when(col("schema").isNull || col("name").isNull,
-        raise_error(concat(lit(s"$BadMetaMsg: "), coalesce($"blob", lit("")))))
-      .otherwise(col("schema")).as("schema")
     try {
-      withPackageKey(meta)
-        .select($"package", checkedSchema, $"name", $"blob")
+      checkedMeta(meta)
         .repartition(col("package"), col("schema"))
         .sortWithinPartitions("package", "schema", "name")
         .write.mode(SaveMode.Overwrite)
@@ -202,19 +210,8 @@ object FbcIngest {
   def refreshIncremental(spark: SparkSession, sourceDir: String,
       root: String): Unit = {
     import org.apache.spark.sql.streaming.Trigger
-    import spark.implicits._
-    val parsed = spark.readStream
-      .text(sourceDir)
-      .withColumnRenamed("value", "blob")
-      .filter(length(trim($"blob")) > 0)
-      .select(from_json($"blob", headerSchema).as("h"), $"blob")
-      .select($"h.schema".as("schema"), $"h.package".as("package"),
-        $"h.name".as("name"), $"blob")
-    val checkedSchema = when(col("schema").isNull || col("name").isNull,
-        raise_error(concat(lit(s"$BadMetaMsg: "), coalesce($"blob", lit("")))))
-      .otherwise(col("schema")).as("schema")
-    val q = withPackageKey(parsed)
-      .select($"package", checkedSchema, $"name", $"blob")
+    val q = checkedMeta(parseMeta(
+        spark.readStream.text(sourceDir).withColumnRenamed("value", "blob")))
       .writeStream
       .format("parquet")
       .option("path", s"$root/incremental/data")
@@ -234,18 +231,10 @@ object FbcIngest {
     * cache.go:39).
     */
   def gcSnapshots(root: String, keep: Int): Seq[String] = {
-    val snaps = Paths.get(root, "snapshots")
-    if (!Files.exists(snaps)) return Nil
     val active = activeSnapshot(root).map(_._1)
-    import scala.jdk.CollectionConverters._
-    val all = {
-      val s = Files.list(snaps)
-      try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
-      finally s.close()
-    }
-    val victims = all.dropRight(keep).filterNot(active.contains)
+    val victims = listSnapshots(root).dropRight(keep).filterNot(active.contains)
     victims.foreach { id =>
-      val dir = snaps.resolve(id)
+      val dir = Paths.get(root, "snapshots", id)
       val walk = Files.walk(dir)
       try walk.sorted(Comparator.reverseOrder[Path]())
         .forEach(f => Files.delete(f))

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Session + table-loading helpers shared by every graft module.
   *
@@ -11,21 +11,58 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * of that is re-implemented here.
   */
 object GraftSession {
-  /** Local session sized for the container (local[32], 128 GiB). On a real
-    * cluster the builder is replaced by spark-submit conf; nothing else in
-    * the library changes.
+  /** The one local session every main and spec runs on, so a plan dump,
+    * a test and a bench run all see the same settings. `cores` sets both
+    * the master and the shuffle partition count; it defaults to
+    * `SPARK_GRAFT_CPUS` (4 when unset). On a real cluster the builder is
+    * replaced by spark-submit conf; nothing else in the library changes.
     */
-  def local(appName: String = "graft", cores: Int = 32): SparkSession = {
+  def local(appName: String = "graft",
+      cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+      : SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // ContextCleaner only frees finished broadcasts/shuffles when the
+      // SparkContext's JVM runs a GC, and its periodic-GC default
+      // (30 min) never fires inside a ~10-minute bench — so ~560
+      // entries' broadcast blocks accumulate in the block manager and
+      // mid-pass entries pay eviction churn that isn't theirs (r15: q312
+      // read 25.5 s in-pass vs 8.9 s in its own same-run sentinel).
+      .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Run `body` with `confs` set on the session, then put every key back
+    * the way it was: a key that was set gets its prior value, a key that
+    * was not set is unset — also when `body` throws.
+    *
+    * A Dataset result is materialised (localCheckpoint) inside the
+    * scope: a lazy plan would otherwise be planned after the restore,
+    * under the session's other settings.
+    *
+    * The scope mutates the shared session conf, not a
+    * `spark.newSession()`: a new session starts with empty `experimental`
+    * state and would drop the strategies `PlanBridge.addStrategy`
+    * installs (q266's AsOfStrategy).
+    */
+  def withConfs[A](s: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val prior = s.conf.getAll
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body match {
+      case ds: Dataset[_] => ds.localCheckpoint().asInstanceOf[A]
+      case a => a
+    } finally confs.foreach { case (k, _) =>
+      prior.get(k) match {
+        case Some(v) => s.conf.set(k, v)
+        case None => s.conf.unset(k)
+      }
+    }
   }
 }
 

@@ -136,13 +136,15 @@ object VectorStats {
     * 2 000 rows; the tight-loop accumulator computes the identical
     * exact integer sums (long addition is order-free) in one scan.
     * Pair (i, j), i ≤ j, indexes d-independently at j(j+1)/2 + i, so
-    * ragged arrays accumulate correctly with a grow-and-copy.
+    * ragged arrays accumulate correctly with a grow-and-copy. A null
+    * embedding row contributes nothing, as in the oracle's unnest.
     */
   val q151EmbeddingCovariance: Q = (s, dir) => {
     import s.implicits._
     val q = transform($"embedding",
       x => floor(x.cast("double") * lit(CovQuantScale)).cast("long"))
     val partials = T.embeddings(s, dir)
+      .filter($"embedding".isNotNull)
       .select(q.as("q")).as[Array[Long]]
       .mapPartitions { rows =>
         var accP = new Array[Long](0) // Σ qᵢ·qⱼ per (i ≤ j)

@@ -43,10 +43,11 @@ import graft.core.{Tables => T}
   *   4. chosen edges enter the forest tagged with the EMITTED
   *      `merge_round` (the q522 "read it, never guess it" rule: the
   *      oracle unrolls [[MstMaxRounds]]/[[MstMaxHalve]] and the engine
-  *      REQUIREs it never exceeds them — ProfMst-measured maxima at
-  *      sf0.001/0.01/0.1: 2 rounds / 3 halvings; both loops are
-  *      idempotent past convergence, so the SQL may safely
-  *      over-unroll).
+  *      REQUIREs it never exceeds them — measured maxima at
+  *      sf0.001/0.01/0.1: 2 rounds / 3 halvings (BASELINE.md,
+  *      "Appendix: measurements from the retired probe mains");
+  *      both loops are idempotent past convergence, so the SQL may
+  *      safely over-unroll).
   *
   * `sl_rank` (ascending (w, u, v) rank over the final forest — the
   * Gower–Ross single-linkage merge ORDER) is computed with the
@@ -62,12 +63,12 @@ object BoruvkaMst {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Outer-round unroll: ProfMst-measured max 2 at sf0.001/0.01/0.1
+  /** Outer-round unroll: measured max 2 at sf0.001/0.01/0.1
     * (+margin). Engine REQUIREs ≤ this; the SQL unrolls exactly this
     * many (idempotent once the forest spans).
     */
   val MstMaxRounds = 5
-  /** Pointer-halving unroll per round: ProfMst-measured max 3
+  /** Pointer-halving unroll per round: measured max 3
     * (+margin); halving is idempotent at the fixpoint, so
     * over-unrolling is safe.
     */
@@ -75,13 +76,6 @@ object BoruvkaMst {
 
   /** q43's df cap, restated (graft.llm.DedupQueries.StopShingleDfCap). */
   val MstDfCap = 100
-
-  /** Last run's observed (rounds, max halving steps) — dev
-    * instrumentation read by ProfMst for the unroll-constant
-    * measurements recorded in the scaladoc above.
-    */
-  @volatile var lastRounds: Int = 0
-  @volatile var lastMaxHalve: Int = 0
 
   /** Exact Jaccard-distance edges (u < v, dist_ppm) over the df-capped
     * trigram-shingle universe — the q43 inverted-index pipeline with
@@ -156,7 +150,6 @@ object BoruvkaMst {
   def mstForest(edges0: DataFrame): DataFrame = {
     val s = edges0.sparkSession
     import s.implicits._
-    lastRounds = 0; lastMaxHalve = 0
     val edges = PlanBridge.checkpointResetStats(edges0)
     var comp = PlanBridge.checkpointResetStats(
       edges.select($"u".as("id")).unionAll(edges.select($"v"))
@@ -215,10 +208,8 @@ object BoruvkaMst {
         comp = PlanBridge.checkpointResetStats(
           comp.join(p.select($"cc".as("c"), $"p"), Seq("c"), "left")
             .select($"id", coalesce($"p", $"c").as("c")))
-        if (halve > lastMaxHalve) lastMaxHalve = halve
       }
     }
-    lastRounds = r
     acc
   }
 

@@ -42,7 +42,8 @@ object Coreness {
   type Q = (SparkSession, String) => DataFrame
 
   /** ≥ measured rounds-to-fixpoint + margin at the oracle SFs
-    * (ProfCore: 5 / 10 at sf0.001 / sf0.01; 15 at sf0.1 — the unroll
+    * (5 / 10 at sf0.001 / sf0.01; 15 at sf0.1 — BASELINE.md,
+    * "Appendix: measurements from the retired probe mains"; the unroll
     * covers the ORACLE SFs, the in-engine loop is data-driven; the
     * nested-peel probe's max-coreness histogram matches the H-index
     * fixpoint at every SF, cross-validating the two algorithms).

@@ -131,7 +131,8 @@ object KTruss {
 
   /** Levels the q515 oracle unrolls — one past the measured empty level
     * at the oracle SFs, so the SQL-side trussness is complete and the
-    * margin level is a no-op by monotonicity. Measured (ProfTruss):
+    * margin level is a no-op by monotonicity. Measured (BASELINE.md,
+    * "Appendix: measurements from the retired probe mains"):
     * max trussness 4 / 4 / 5 at sf0.001 / 0.01 / 0.1 (k=5 truss empty
     * at both oracle SFs; 60 5-truss edges appear at sf0.1 — block-
     * local density nudges up slowly); per-level fixpoint rounds ≤ 5 at

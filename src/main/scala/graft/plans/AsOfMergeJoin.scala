@@ -26,9 +26,10 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   * exactly what EnsureRequirements would give a sort-merge join — and
   * resolves matches in one forward walk with O(1) state (the latest
   * right row per key): no union blow-up, no window buffer, no
-  * post-filter. Measured on a join-dominated synthetic (graft.ProfAsof:
-  * 2M left × 1M right, 100k keys, multi-column payloads, local[32],
-  * warm): composition 0.74–0.89 s, native 0.52–0.58 s — ~1.4×; on
+  * post-filter. Measured on a join-dominated synthetic (2M left × 1M
+  * right, 100k keys, multi-column payloads, local[32], warm;
+  * BASELINE.md, "Appendix: measurements from the retired probe
+  * mains"): composition 0.74–0.89 s, native 0.52–0.58 s — ~1.4×; on
   * q31's own fixture the signups-dedup aggregate dominates both plans
   * and the spellings tie, which is why the bench carries both rows.
   *
@@ -312,10 +313,8 @@ object AsOfMergeJoin {
     // check); our writer guarantees one file per bucket, which is
     // exactly the regime the flag serves. Scoped + restored: the
     // sort-elision claim should not leak into other queries' plans.
-    val flag = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-    val prev = s.conf.get(flag, "false")
-    s.conf.set(flag, "true")
-    try {
+    graft.core.GraftSession.withConfs(s,
+        "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
       val joined = backward(s.table(p), s.table(g), Seq("user_id"),
         leftTime = "ts", rightTime = "signup_ts")
       val plan = joined.queryExecution.executedPlan.toString
@@ -327,8 +326,7 @@ object AsOfMergeJoin {
         s"co-bucketed sorted as-of join must not re-sort; plan:\n$plan")
       joined.select($"purchase_id", $"user_id", $"ts", $"signup_id")
         .orderBy($"purchase_id")
-        .localCheckpoint() // materialize under the scoped flag
-    } finally s.conf.set(flag, prev)
+    }
   }
 
   val queries: Map[String, Q] = Map(

@@ -19,9 +19,10 @@ import graft.functions.{BitmapAgg, BitmapCount}
   * distinct-pair count. The bitmap form is ONE ObjectHashAggregate
   * whose partials ship a compressed bitmap per group: shuffle volume
   * goes by groups × compressed-set size, and the per-row path is a
-  * bitmap add instead of a hash-relation probe+insert. Measured with
-  * graft.ProfDistinct (20M rows, 32 groups, 500k distinct int keys,
-  * local[32], warm): default two-level plan 1.08–1.30 s, rewritten
+  * bitmap add instead of a hash-relation probe+insert. Measured on
+  * 20M rows, 32 groups, 500k distinct int keys, local[32], warm
+  * (BASELINE.md, "Appendix: measurements from the retired probe
+  * mains"): default two-level plan 1.08–1.30 s, rewritten
   * bitmap plan 0.48–0.70 s — ~1.9×; the gap goes by
   * rows-per-distinct (the dedup level's input volume).
   *

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregat
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{GraftSession, Tables => T}
 
 /** RUNTIME plan instrumentation — per-operator ACTUAL row counts read
   * back from the executed plan's SQLMetrics. This is the observability
@@ -57,17 +57,15 @@ object PlanMetrics {
     }
 
   /** q253 — metric-faithfulness gate over a fixed filter→join→agg
-    * query, AQE disabled for a stable single-tree plan (the withCbo
-    * scoped-conf discipline). Three semantic extractions:
+    * query, AQE disabled for a stable single-tree plan (scoped by
+    * `GraftSession.withConfs`). Three semantic extractions:
     * the lineitem filter's output rows, the join's output rows, and
     * the final aggregate's group count — each hash-compared against
     * DuckDB's independent recomputation of the same stage.
     */
   val q253PlanMetrics: Q = (s, dir) => {
     import s.implicits._
-    val saved = s.conf.getOption("spark.sql.adaptive.enabled")
-    try {
-      s.conf.set("spark.sql.adaptive.enabled", "false")
+    GraftSession.withConfs(s, "spark.sql.adaptive.enabled" -> "false") {
       val df = T.lineitem(s, dir).filter($"l_quantity" < 10)
         .join(T.orders(s, dir), $"l_orderkey" === $"o_orderkey")
         .groupBy($"o_orderpriority").agg(count(lit(1)).as("n"))
@@ -90,11 +88,6 @@ object PlanMetrics {
       Seq(("agg_groups", aggRows), ("filter_rows", filterRows),
         ("join_rows", joinRows))
         .toDF("op", "n_rows").orderBy($"op")
-    } finally {
-      saved match {
-        case Some(v) => s.conf.set("spark.sql.adaptive.enabled", v)
-        case None => s.conf.unset("spark.sql.adaptive.enabled")
-      }
     }
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{GraftSession, Tables => T, dsl, OracleDsl => O}
 
 /** Multi-join analytical headliners (TPC-H Q3/Q5 shapes) — the
   * join-ordering / broadcast-chain stress tests of the relational
@@ -215,24 +215,21 @@ object AnalyticalQueries {
     * under confs a shared bench/verify session doesn't run with
     * (shuffle-join regime + zero application-side size threshold at
     * test scale), so the confs are set HERE, the plan is asserted to
-    * carry the bloom probe (`might_contain`), the result is
-    * materialized under those confs via `localCheckpoint()`, and the
-    * original confs are restored before returning — later queries in
-    * the same session see no change.
+    * carry the bloom probe (`might_contain`), and `withConfs`
+    * materializes the result under those confs and restores the
+    * original ones before returning — later queries in the same session
+    * see no change.
     */
   val q99BloomPrunedJoin: Q = (s, dir) => {
     import s.implicits._
-    val confs = Seq(
+    GraftSession.withConfs(s,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       // sf-test plans sit far below the 10 GiB default application-side
       // threshold that gates injection at real scale
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       // injection targets probable SHUFFLE joins — the 100 TB regime;
       // disable auto-broadcast so the test join takes that path
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val urgent = T.orders(s, dir)
         .filter($"o_orderpriority" === "1-URGENT" && $"o_totalprice" > 250000.0)
       val result = T.lineitem(s, dir)
@@ -244,10 +241,7 @@ object AnalyticalQueries {
       val plan = result.queryExecution.optimizedPlan.toString
       require(plan.contains("might_contain"),
         s"bloom runtime filter not injected; optimized plan:\n$plan")
-      result.localCheckpoint()
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
+      result
     }
   }
 

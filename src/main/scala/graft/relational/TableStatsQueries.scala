@@ -3,7 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{GraftSession, Tables => T}
 
 /** Catalog-grade table statistics + co-occurrence analytics.
   *
@@ -458,21 +458,12 @@ object TableStatsQueries {
     cboPrepared.add(dir)
   }
 
-  /** Run `body` with CBO + join reorder ON, restoring the prior conf
-    * values after (the StreamBench.withStreamConfs discipline — q183
-    * must not leave CBO enabled for every later query in the session).
-    * The caller must FREEZE any plan it builds (materialize
-    * queryExecution.executedPlan) before this returns.
+  /** CBO + join reorder ON, for `GraftSession.withConfs` — q183 must
+    * not leave CBO enabled for every later query in the session.
     */
-  def withCbo[A](s: SparkSession)(body: => A): A = {
-    val keys = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val saved = keys.map(k => k -> s.conf.getOption(k))
-    keys.foreach(s.conf.set(_, "true"))
-    try body finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+  val CboConfs: Seq[(String, String)] = Seq(
+    "spark.sql.cbo.enabled" -> "true",
+    "spark.sql.cbo.joinReorder.enabled" -> "true")
 
   /** The join written in a deliberately BAD order: the 600k-row fact
     * table joins the 15k-row orders table FIRST as stated, with the
@@ -494,18 +485,12 @@ object TableStatsQueries {
 
   /** q183 — the CBO-reordered join as a driver row: same answer as the
     * statistics-blind plan (the oracle replays it over the raw files),
-    * reached through the stats-driven join order. The plan is
-    * MATERIALIZED inside the scoped-conf window (QueryExecution caches
-    * its phases), so the frozen CBO plan executes later while the
-    * session's conf is already restored.
+    * reached through the stats-driven join order. `withConfs`
+    * materializes the result inside the CBO scope.
     */
   val q183CboJoinReorder: Q = (s, dir) => {
     prepareCboTables(s, dir)
-    withCbo(s) {
-      val df = s.sql(CboJoinSql)
-      df.queryExecution.executedPlan // freeze the stats-driven plan
-      df
-    }
+    GraftSession.withConfs(s, CboConfs: _*)(s.sql(CboJoinSql))
   }
 
   val q183Sql: String = CboJoinSql.replace("cbo_", "")

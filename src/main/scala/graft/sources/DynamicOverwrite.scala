@@ -6,7 +6,7 @@ import java.util.Comparator
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{GraftSession, Tables => T, dsl, OracleDsl => O}
 
 /** DYNAMIC partition overwrite — the write-side primitive between
   * full-table overwrite (loses everything else) and append (duplicates
@@ -57,17 +57,11 @@ object DynamicOverwrite {
       .select($"event_id", $"user_id", $"value", to_date($"ts").as("day"))
     ev.write.partitionBy("day").parquet(table)
     // reprocess ONE day (values adjusted) and dynamically overwrite it
-    val saved = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
+    GraftSession.withConfs(s,
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       ev.filter($"day" === lit(TargetDay).cast("date"))
         .withColumn("value", $"value" + Adjust)
         .write.mode("overwrite").partitionBy("day").parquet(table)
-    } finally saved match {
-      case Some(v) =>
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        s.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
     s.read.parquet(table)
       .groupBy($"day")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.GraftSession.withConfs
 
 /** Date-partitioned table layout + partition pruning — the write-side
   * scale recipe: laying a fact table out by day means a day-filtered
@@ -154,20 +155,6 @@ object LayoutQueries {
         import scala.jdk.CollectionConverters._
         s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
       } finally s.close()
-    }
-  }
-
-  /** Run `body` under temporary session confs, restoring the previous
-    * values after (the q99 scoping discipline — a shared session must
-    * not observe the change).
-    */
-  private def withConfs[T](s: SparkSession, confs: (String, String)*)
-      (body: => T): T = {
-    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 

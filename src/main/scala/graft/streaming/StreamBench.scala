@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{GraftSession, Tables => T}
 
 /** CDC update row for the qs02 bench (top-level: Spark's encoder codegen
   * cannot instantiate a case class nested inside an object). */
@@ -54,8 +54,8 @@ object StreamBench {
     * local[32] default (32 partitions) stand would time 4× the store
     * open/commit overhead against 8 shards of actual state.
     */
-  private def withStreamConfs[A](s: SparkSession)(body: => A): A = {
-    val confs = Seq(
+  private def withStreamConfs[A](s: SparkSession)(body: => A): A =
+    GraftSession.withConfs(s,
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       // changelog checkpointing: commit the per-batch delta instead of
@@ -64,14 +64,7 @@ object StreamBench {
       // I/O instead of the dedup path
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
         "true",
-      "spark.sql.shuffle.partitions" -> "8")
-    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+      "spark.sql.shuffle.partitions" -> "8")(body)
 
   private def boundedEvents(s: SparkSession, dir: String): Seq[Event] = {
     import s.implicits._

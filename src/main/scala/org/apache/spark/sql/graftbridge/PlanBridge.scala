@@ -64,15 +64,21 @@ object PlanBridge {
     val cp = df.asInstanceOf[classic.Dataset[Row]].localCheckpoint()
     val spark = cp.sparkSession
     val qe = cp.queryExecution
-    val blockSize = qe.analyzed.collectFirst {
-      case lr: execution.LogicalRDD => lr.rdd.id
-    }.flatMap(id => spark.sparkContext.getRDDStorageInfo.find(_.id == id))
-      .map(i => BigInt(i.memSize + i.diskSize)).filter(_ > 0)
-    val stats = blockSize.map(s =>
-      catalyst.plans.logical.Statistics(sizeInBytes = s))
     ofRows(spark, execution.LogicalRDD(qe.analyzed.output, qe.toRdd)(
-      spark, stats, None))
+      spark, measuredStats(cp), None))
   }
+
+  /** Size stats read from a just-materialized checkpoint's blocks
+    * (BlockManager memSize + diskSize); None when the storage info is
+    * missing.
+    */
+  private def measuredStats(cp: classic.Dataset[Row])
+      : Option[catalyst.plans.logical.Statistics] =
+    cp.queryExecution.analyzed.collectFirst {
+      case lr: execution.LogicalRDD => lr.rdd.id
+    }.flatMap(id => cp.sparkSession.sparkContext.getRDDStorageInfo.find(_.id == id))
+      .map(i => BigInt(i.memSize + i.diskSize)).filter(_ > 0)
+      .map(s => catalyst.plans.logical.Statistics(sizeInBytes = s))
 
   /** localCheckpoint that KEEPS a hash clustering (r17 optimization,
     * guide §2.4 "two operations keyed the same way can share one
@@ -129,13 +135,7 @@ object PlanBridge {
       hits.head
     }
     val part = catalyst.plans.physical.HashPartitioning(exprs, numParts)
-    val blockSize = qe.analyzed.collectFirst {
-      case lr: execution.LogicalRDD => lr.rdd.id
-    }.flatMap(id => spark.sparkContext.getRDDStorageInfo.find(_.id == id))
-      .map(i => BigInt(i.memSize + i.diskSize)).filter(_ > 0)
-    val stats = blockSize.map(s =>
-      catalyst.plans.logical.Statistics(sizeInBytes = s))
     ofRows(spark, execution.LogicalRDD(out, qe.toRdd, part, Nil, false)(
-      spark, stats, None))
+      spark, measuredStats(cp), None))
   }
 }

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.catalog.FbcIngest
+import graft.core.GraftSession
 import org.apache.spark.sql.functions._
 
 /** The ScalaCheck property tests promised in SURVEY.md §5.3, driven via
@@ -149,8 +150,8 @@ class PropertySpec extends SparkSpec {
     // the key-sorted run files + k-way merge path is what is tested
     val p = Prop.forAll(rowsGen, Gen.choose(1, 6), Gen.choose(1, 9)) {
       (rows, k, threshold) =>
-        spark.conf.set(graft.plans.TopK.SpillThresholdKey, threshold.toString)
-        try {
+        GraftSession.withConfs(spark,
+            graft.plans.TopK.SpillThresholdKey -> threshold.toString) {
           val df = rows.toDF("id", "g", "v")
           val got = graft.plans.TopK
             .perGroup(df, Seq("g"), Seq("v" -> false, "id" -> true), k)
@@ -159,7 +160,7 @@ class PropertySpec extends SparkSpec {
             grp.sortBy(r => (-r._3, r._1)).take(k).map(_._1)
           }.toSet
           got == want
-        } finally spark.conf.unset(graft.plans.TopK.SpillThresholdKey)
+        }
     }
     check("heap-topk-spill", p, minTests = 20)
   }

@@ -1,0 +1,59 @@
+package graft.core
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** One way to do each thing: sessions come from `GraftSession.local`,
+  * temporary confs go through `GraftSession.withConfs`, and the only
+  * mains are the three entry points. Scans every Scala file under `src/`
+  * (mains under `src/main`).
+  */
+class SessionGuardSpec extends AnyFunSuite {
+
+  private val factory = Paths.get("src/main/scala/graft/core/GraftSession.scala")
+
+  private val sources: Seq[(Path, Seq[String])] = {
+    val walk = Files.walk(Paths.get("src"))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(p => p -> Files.readAllLines(p).asScala.toSeq)
+    finally walk.close()
+  }
+
+  /** (file, 0-based line) of every line matching `re`. */
+  private def hits(re: String): Seq[(Path, Int)] = {
+    val r = re.r
+    for {
+      (p, lines) <- sources
+      (l, i) <- lines.zipWithIndex if r.findFirstIn(l).isDefined
+    } yield (p, i)
+  }
+
+  test("the scan sees the source tree") {
+    assert(sources.exists(_._1 == factory), s"no $factory under src/")
+  }
+
+  test("GraftSession.local is the only session builder") {
+    val found = hits("""SparkSession\s*\.\s*builder""")
+    assert(found.map(_._1) == Seq(factory), s"builders at: $found")
+  }
+
+  test("conf save/restore happens only inside withConfs") {
+    val lines = sources.find(_._1 == factory).get._2
+    val start = lines.indexWhere(_.contains("def withConfs"))
+    val end = lines.indexWhere(_.startsWith("  }"), start)
+    assert(start >= 0 && end > start, "withConfs not found in GraftSession")
+    val outside = hits("""conf\s*\.\s*(getOption|unset)\b""")
+      .filterNot { case (p, i) => p == factory && i > start && i < end }
+    assert(outside.isEmpty, s"conf save/restore outside withConfs: $outside")
+  }
+
+  test("the only mains are Bench, Verify and Explain") {
+    val mains = hits("""def main\(|extends App\b""")
+      .collect { case (p, _) if p.startsWith("src/main") => p.getFileName.toString }
+    assert(mains.sorted == Seq("Bench.scala", "Explain.scala", "Verify.scala"),
+      s"mains: $mains")
+  }
+}

@@ -76,6 +76,22 @@ class CorpusOpsSpec extends SparkSpec {
     assert(got == expected)
   }
 
+  test("covariance numerators skip a null embedding row") {
+    val dir = java.nio.file.Files.createTempDirectory("q151-null").toString
+    val vecs = Seq(Seq(0.1f, -0.2f), Seq(0.3f, 0.4f))
+    (vecs.map(Option(_)) :+ None).zipWithIndex
+      .map { case (v, i) => (i.toLong, v, 1) }
+      .toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$dir/embeddings.parquet")
+    val q = vecs.map(_.map(x =>
+      math.floor(x.toDouble * VectorStats.CovQuantScale).toLong))
+    val expected = (for (j <- 0 until 2; i <- 0 to j)
+      yield (i.toLong, j.toLong, 2L, q.map(v => v(i) * v(j)).sum)).toSet
+    val got = VectorStats.q151EmbeddingCovariance(spark, dir)
+      .as[(Long, Long, Long, Long)].collect().toSet
+    assert(got == expected)
+  }
+
   test("dup-span profile on a hand-built pair of overlapping docs") {
     // doc1/doc2 share exactly one 8-token window; doc3 is disjoint;
     // doc4 is too short to carry any span

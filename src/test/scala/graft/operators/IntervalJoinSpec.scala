@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.GraftSession.withConfs
 
 /** Bin-bucketed interval join: must be pair-identical to the naive
   * inequality join (the binning is an execution strategy, never a
@@ -45,8 +46,7 @@ class IntervalJoinSpec extends SparkSpec {
 
   test("the range join plans as an equi-join, never a nested loop — " +
       "including in the shuffle regime") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val ev = graft.core.Tables.events(spark, "/root/testdata/sf0.001")
       val p = ev.filter($"event_type" === "purchase")
         .select($"user_id", $"event_id".as("pid"), $"ts".as("lts"))
@@ -59,7 +59,7 @@ class IntervalJoinSpec extends SparkSpec {
         s"expected a shuffled equi-join; plan:\n$plan")
       assert(!plan.contains("NestedLoop") && !plan.contains("Cartesian"),
         s"range join degenerated to a nested loop; plan:\n$plan")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("parity holds on the events fixture") {

@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
+import graft.core.GraftSession.withConfs
 import org.apache.spark.sql.functions._
 
 /** Runtime plan metrics: the generic operator listing carries faithful
@@ -24,18 +25,19 @@ class PlanMetricsSpec extends SparkSpec {
   }
 
   test("AQE plans unwrap: joins under adaptive execution report metrics") {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    val li = graft.core.Tables.lineitem(spark, sf)
-    val df = li.join(graft.core.Tables.orders(spark, sf),
-        $"l_orderkey" === $"o_orderkey")
-      .groupBy($"o_orderpriority").agg(count(lit(1)).as("n"))
-    val expectedJoin = li.join(graft.core.Tables.orders(spark, sf),
-      $"l_orderkey" === $"o_orderkey").count()
-    df.collect()
-    val rows = PlanMetrics.operatorRows(df)
-    val joinRow = rows.find(_._1.toLowerCase.contains("join"))
-    assert(joinRow.isDefined, s"no join operator in $rows")
-    assert(joinRow.get._2 == expectedJoin,
-      s"join metric ${joinRow.get._2} != actual $expectedJoin")
+    withConfs(spark, "spark.sql.adaptive.enabled" -> "true") {
+      val li = graft.core.Tables.lineitem(spark, sf)
+      val df = li.join(graft.core.Tables.orders(spark, sf),
+          $"l_orderkey" === $"o_orderkey")
+        .groupBy($"o_orderpriority").agg(count(lit(1)).as("n"))
+      val expectedJoin = li.join(graft.core.Tables.orders(spark, sf),
+        $"l_orderkey" === $"o_orderkey").count()
+      df.collect()
+      val rows = PlanMetrics.operatorRows(df)
+      val joinRow = rows.find(_._1.toLowerCase.contains("join"))
+      assert(joinRow.isDefined, s"no join operator in $rows")
+      assert(joinRow.get._2 == expectedJoin,
+        s"join metric ${joinRow.get._2} != actual $expectedJoin")
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
+import graft.core.GraftSession.withConfs
 import org.apache.spark.sql.functions._
 
 class TopKPerGroupSpec extends SparkSpec {
@@ -91,12 +92,12 @@ class TopKPerGroupSpec extends SparkSpec {
       TopK.perGroup(wide, Seq("g"), Seq("v" -> false, "id" -> true), 3)
         .as[(String, Long, Double)].collect().toSet
     val inMemory = run()
-    spark.conf.set(TopK.SpillThresholdKey, "7") // force many tiny runs
-    try {
+    // force many tiny runs
+    withConfs(spark, TopK.SpillThresholdKey -> "7") {
       val spilled = run()
       assert(spilled == inMemory,
         s"spill path diverged: ${spilled.diff(inMemory)} vs ${inMemory.diff(spilled)}")
       assert(inMemory.size == 97 * 3)
-    } finally spark.conf.unset(TopK.SpillThresholdKey)
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.relational
 
 import graft.SparkSpec
+import graft.core.GraftSession.withConfs
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 
 /** Pins that q183's catalog statistics actually CHANGE the plan: with
@@ -27,12 +28,12 @@ class CboJoinReorderSpec extends SparkSpec {
 
   test("ANALYZE'd stats + CBO flip the join order; the answer is unchanged") {
     TableStatsQueries.prepareCboTables(spark, dir)
-    val (cboBottom, cboRows) = TableStatsQueries.withCbo(spark) {
+    val (cboBottom, cboRows) = withConfs(spark, TableStatsQueries.CboConfs: _*) {
       val df = spark.sql(TableStatsQueries.CboJoinSql)
       (bottomJoinTables(df.queryExecution.optimizedPlan),
         df.collect().map(_.toSeq).toSeq)
     }
-    // withCbo restored the session's prior conf, so this is the
+    // withConfs restored the session's prior conf, so this is the
     // statistics-blind default path
     val blind = spark.sql(TableStatsQueries.CboJoinSql)
     val blindBottom = bottomJoinTables(blind.queryExecution.optimizedPlan)

@@ -1,6 +1,7 @@
 package graft.relational
 
 import graft.SparkSpec
+import graft.core.GraftSession.withConfs
 import org.apache.spark.sql.functions._
 
 /** Runtime bloom-filter join pruning — the 100 TB recipe where a
@@ -25,7 +26,7 @@ class RuntimeFilterSpec extends SparkSpec {
   }
 
   test("selective dim filter injects a bloom probe into the fact side") {
-    val confs = Seq(
+    withConfs(spark,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       // sf0.01 plans are far below the 10 GiB default application-side
       // threshold; drop it so the injection fires at test scale
@@ -34,27 +35,18 @@ class RuntimeFilterSpec extends SparkSpec {
       // broadcast join the dim side already prunes at the probe) — turn
       // off auto-broadcast so the test join takes the shuffle path, which
       // is exactly the 100 TB regime the recipe targets
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val withFilter = join()
       val plan = withFilter.queryExecution.optimizedPlan.toString
       assert(plan.contains("might_contain"),
         s"no bloom runtime filter injected; optimized plan:\n$plan")
-      val expected = {
-        spark.conf.set(
-          "spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-        try join().as[(String, Long, Double)].collect().toSet
-        finally spark.conf.set(
-          "spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+      val expected = withConfs(spark,
+          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false") {
+        join().as[(String, Long, Double)].collect().toSet
       }
       val got = withFilter.as[(String, Long, Double)].collect().toSet
       assert(got == expected && got.nonEmpty,
         s"bloom-pruned result diverged: $got vs $expected")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -63,10 +55,12 @@ class RuntimeFilterSpec extends SparkSpec {
       "spark.sql.optimizer.runtime.bloomFilter.enabled",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
       "spark.sql.autoBroadcastJoinThreshold")
-    val before = keys.map(k => spark.conf.getOption(k))
+    // getAll holds only the keys set on the session: a leaked set shows
+    // up here even when it sets a key to its default value
+    val before = keys.map(spark.conf.getAll.get)
     val got = AnalyticalQueries.q99BloomPrunedJoin(spark, dir)
       .as[(String, Long, Double)].collect().toSet
-    assert(keys.map(k => spark.conf.getOption(k)) == before,
+    assert(keys.map(spark.conf.getAll.get) == before,
       "q99 leaked session confs")
     // same answer as the identical aggregate without the bloom confs
     // (decimal-path sum on both sides so the comparison is exact)

@@ -1,6 +1,7 @@
 package graft.relational
 
 import graft.SparkSpec
+import graft.core.GraftSession.withConfs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.when
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
@@ -57,18 +58,10 @@ class ScalePlanSpec extends SparkSpec {
     * auto-broadcast and exchanges are static (AQE off) so the executed
     * plan is inspectable.
     */
-  private def atScaleRegime[A](body: => A): A = {
-    val confs = Seq(
+  private def atScaleRegime[A](body: => A): A =
+    withConfs(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.enabled" -> "false")(body)
 
   test("q04/q82/q83 broadcast only fixed-cardinality dims at scale") {
     atScaleRegime {
@@ -126,15 +119,12 @@ class ScalePlanSpec extends SparkSpec {
     // in the finalized plan. Thresholds are scoped down so a test-sized
     // hot key (one key carrying ~75% of all rows) trips the same logic
     // a multi-GB hot partition trips in production.
-    val confs = Seq(
+    withConfs(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB") {
       val hot = spark.range(0, 200000)
         .select(when($"id" < 150000, 0L).otherwise($"id" % 1000).as("k"),
           $"id".as("payload"))
@@ -148,9 +138,6 @@ class ScalePlanSpec extends SparkSpec {
       val finalPlan = joined.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew=true"),
         s"AQE did not split the hot partition; finalized plan:\n$finalPlan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

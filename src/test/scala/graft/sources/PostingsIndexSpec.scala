@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.core.GraftSession.withConfs
 
 /** The persisted-index contract: a term lookup scans exactly one of
   * the N buckets (pruning visible in the plan), and the served phrase
@@ -16,17 +17,15 @@ class PostingsIndexSpec extends SparkSpec {
     // the auto-bucketed-scan heuristic disables bucketed reading when
     // it sees no JOIN/AGG benefit — for pure lookup pruning the
     // deployment pins it on (the conf a served index would set)
-    spark.conf.set(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    try {
+    withConfs(spark,
+        "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
       val plan = spark.table(t)
         .filter($"tok" === graft.llm.CorpusOps.PhraseFirst)
         .queryExecution.executedPlan.toString
       assert(plan.contains(
         s"SelectedBucketsCount: 1 out of ${PostingsIndex.Buckets}"),
         s"bucket pruning missing from plan:\n$plan")
-    } finally spark.conf.unset(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled")
+    }
   }
 
   test("served phrase counts equal the inline q135 computation") {

@@ -18,18 +18,6 @@ class AnomalyStreamSpec extends SparkSpec {
   private def ckpt(): String =
     java.nio.file.Files.createTempDirectory("anom-ckpt").toString
 
-  /** transformWithState needs the RocksDB provider. */
-  private def withRocksDb[A](body: => A): A = {
-    val k = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(k)
-    spark.conf.set(k,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally saved match {
-      case Some(v) => spark.conf.set(k, v)
-      case None => spark.conf.unset(k)
-    }
-  }
-
   private val dir = "/root/testdata/sf0.001"
 
   private def eventsInOrder: Seq[Event] = {

@@ -16,9 +16,7 @@ class BitmapStreamSpec extends SparkSpec {
   import spark.implicits._
 
   test("streamed shard bitmaps merge to the exact distinct count") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val rows = graft.core.Tables.events(spark, "/root/testdata/sf0.001")
         .select("event_id", "user_id", "event_type", "ts", "value")
@@ -63,8 +61,6 @@ class BitmapStreamSpec extends SparkSpec {
       assert(merged.getLongCardinality == exact.toLong,
         s"merged ${merged.getLongCardinality} != exact $exact")
       spark.catalog.dropTempView("t_rbm")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 }

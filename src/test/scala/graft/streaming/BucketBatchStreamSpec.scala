@@ -48,8 +48,6 @@ class BucketBatchStreamSpec extends SparkSpec {
       "and shard keys") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val W = graft.llm.LengthBucketing.BucketWidth
     val B = graft.llm.LengthBucketing.TokBudget
     val Sh = graft.llm.LengthBucketing.Shards
@@ -67,36 +65,37 @@ class BucketBatchStreamSpec extends SparkSpec {
       .collect().zipWithIndex
       .map { case (r, i) => (r.getLong(0), i.toLong, r.getLong(1)) }
       .toSeq
-    val stream = MemoryStream[(Long, Long, Long)]
-    val q = BucketBatchStream.loaderStates(stream.toDS(), W, B)
-      .toDF("shard", "state")
-      .writeStream.format("memory").queryName("loader_spec")
-      .outputMode("update")
-      .option("checkpointLocation",
-        Files.createTempDirectory("loader-spec-ckpt").toString)
-      .start()
-    rows.grouped(rows.size / 3 + 1).foreach { chunk =>
-      stream.addData(chunk)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    val emissions = spark.table("loader_spec")
-      .select($"shard", $"state").as[(Long, Array[Byte])].collect()
-    spark.catalog.dropTempView("loader_spec")
-    val last = emissions.zipWithIndex
-      .groupBy(_._1._1).map { case (_, es) => es.maxBy(_._2)._1._2 }.toSeq
-    assert(last.size <= Sh, "more shard states than shards")
-    val streamed = BucketBatchStream.mergedLedger(last)
-      .map { case (b, nd, nb, real, padded) =>
-        (b, nd, nb, real, padded, padded - real,
-          (BigInt(padded - real) * 1000000 / BigInt(padded)).toLong)
+    withRocksDb {
+      val stream = MemoryStream[(Long, Long, Long)]
+      val q = BucketBatchStream.loaderStates(stream.toDS(), W, B)
+        .toDF("shard", "state")
+        .writeStream.format("memory").queryName("loader_spec")
+        .outputMode("update")
+        .option("checkpointLocation",
+          Files.createTempDirectory("loader-spec-ckpt").toString)
+        .start()
+      rows.grouped(rows.size / 3 + 1).foreach { chunk =>
+        stream.addData(chunk)
+        q.processAllAvailable()
       }
-    val batch = graft.llm.LengthBucketing.ledger(lens, W, B, Sh)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), r.getLong(6))).toSeq
-    assert(streamed == batch,
-      s"streamed\n$streamed\nvs batch\n$batch")
-    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      q.stop(); q.awaitTermination()
+      val emissions = spark.table("loader_spec")
+        .select($"shard", $"state").as[(Long, Array[Byte])].collect()
+      spark.catalog.dropTempView("loader_spec")
+      val last = emissions.zipWithIndex
+        .groupBy(_._1._1).map { case (_, es) => es.maxBy(_._2)._1._2 }.toSeq
+      assert(last.size <= Sh, "more shard states than shards")
+      val streamed = BucketBatchStream.mergedLedger(last)
+        .map { case (b, nd, nb, real, padded) =>
+          (b, nd, nb, real, padded, padded - real,
+            (BigInt(padded - real) * 1000000 / BigInt(padded)).toLong)
+        }
+      val batch = graft.llm.LengthBucketing.ledger(lens, W, B, Sh)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), r.getLong(6))).toSeq
+      assert(streamed == batch,
+        s"streamed\n$streamed\nvs batch\n$batch")
+    }
   }
 }

@@ -16,9 +16,7 @@ class CmsStreamSpec extends SparkSpec {
   import spark.implicits._
 
   test("streamed shard sketches merge to the exact batch sketch") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val rows = graft.core.Tables.events(spark, "/root/testdata/sf0.001")
         .select("event_id", "user_id", "event_type", "ts", "value")
@@ -59,8 +57,6 @@ class CmsStreamSpec extends SparkSpec {
         assert(merged.estimateCount(u) >= n,
           s"CMS under-counted user $u") // never undercounts
       }
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 }

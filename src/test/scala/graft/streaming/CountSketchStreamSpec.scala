@@ -19,9 +19,7 @@ class CountSketchStreamSpec extends SparkSpec {
 
   test("streamed shard cells sum to the exact batch cells; L2 band " +
       "holds; signs cancel") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val rows = graft.core.Tables.events(spark, "/root/testdata/sf0.001")
         .select("event_id", "user_id", "event_type", "ts", "value")
@@ -70,8 +68,6 @@ class CountSketchStreamSpec extends SparkSpec {
       // NEGATIVE (CMS cells are always >= 0)
       assert(merged.exists(_ < 0L),
         "no negative cell: sign structure not engaged")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 }

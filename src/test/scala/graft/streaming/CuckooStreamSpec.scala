@@ -19,18 +19,6 @@ class CuckooStreamSpec extends SparkSpec {
   private def op(id: Long, user: Long, kind: String): Event =
     Event(id, user, kind, new Timestamp(1700000000000L + id), 0.0)
 
-  /** transformWithState needs the RocksDB provider. */
-  private def withRocksDb[A](body: => A): A = {
-    val k = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(k)
-    spark.conf.set(k,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally saved match {
-      case Some(v) => spark.conf.set(k, v)
-      case None => spark.conf.unset(k)
-    }
-  }
-
   test("streamed add/del/re-add lifecycle: no false negatives on live " +
       "keys, deleted keys read absent, re-adds re-admit") {
     withRocksDb {

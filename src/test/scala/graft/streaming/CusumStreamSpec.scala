@@ -51,9 +51,7 @@ class CusumStreamSpec extends SparkSpec {
     val expected = rows.groupBy(_.event_type).map { case (t, es) =>
       t -> CusumStream.fold(es, ref)
     }
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try for (nBatches <- Seq(1, 5)) {
+    withRocksDb { for (nBatches <- Seq(1, 5)) {
       implicit val sqlCtx = spark.sqlContext
       val stream = MemoryStream[Event]
       val name = s"cusum_spec_$nBatches"
@@ -78,8 +76,6 @@ class CusumStreamSpec extends SparkSpec {
           ((exp.n, exp.sPos, exp.sNeg, exp.nAlarms, exp.firstAlarmN)),
           s"$nBatches batches, type $t: $e != $exp")
       }
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    } }
   }
 }

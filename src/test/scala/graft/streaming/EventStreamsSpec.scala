@@ -328,9 +328,7 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("streaming as-of join equals the batch as-of join") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val rows = eventsOf(dir)
       // unique (user, ts) on the reference side — the as-of tie contract
@@ -369,15 +367,11 @@ class EventStreamsSpec extends SparkSpec {
       assert(batch.nonEmpty, "fixture produced no as-of matches")
       assert(streamed == batch,
         s"streaming as-of mismatch: ${streamed.size} vs ${batch.size} rows")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("streaming as-of matches rights that arrive in a later batch") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val t0 = Timestamp.valueOf("2024-01-01 12:00:00")
       def at(min: Long) = new Timestamp(t0.getTime + min * 60000)
@@ -403,15 +397,11 @@ class EventStreamsSpec extends SparkSpec {
         .as[(Long, Long)].collect().toSet
       assert(got == Set((101L, 202L), (102L, 201L)),
         s"out-of-order as-of wrong: $got")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("left-outer streaming as-of emits unmatched probes with null match") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val t0 = Timestamp.valueOf("2024-01-01 12:00:00")
       def at(min: Long) = new Timestamp(t0.getTime + min * 60000)
@@ -437,15 +427,11 @@ class EventStreamsSpec extends SparkSpec {
         .as[(Long, Option[Long])].collect().toSet
       assert(got == Set((101L, Some(201L)), (102L, None)),
         s"outer as-of wrong: $got")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("streaming funnel equals the batch q94 stage counts") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val rows = eventsOf(dir)
       val maxTs = rows.map(_.ts.getTime).max
@@ -468,15 +454,11 @@ class EventStreamsSpec extends SparkSpec {
         .as[(Int, Long)].collect().toMap
       assert(batch.nonEmpty && streamed == batch,
         s"funnel stream $streamed != batch $batch")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("streaming funnel resolves out-of-order and emits exactly once") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val t0 = Timestamp.valueOf("2024-01-01 12:00:00")
       def at(min: Long) = new Timestamp(t0.getTime + min * 60000)
@@ -498,16 +480,12 @@ class EventStreamsSpec extends SparkSpec {
         .as[EventStreams.FunnelStage].collect().toSeq
       assert(got == Seq(EventStreams.FunnelStage(1L, 3)),
         s"out-of-order funnel wrong: $got")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("bloom dedup: no false negatives across batches, FP within budget, " +
       "state rows bounded by shards while exact dedup's grow per key") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val t0 = Timestamp.valueOf("2024-01-01 12:00:00")
       def at(min: Long) = new Timestamp(t0.getTime + min * 60000)
@@ -552,16 +530,12 @@ class EventStreamsSpec extends SparkSpec {
       drain(qe)
       assert(exactStateRows >= nKeys,
         s"exact dedup state rows $exactStateRows < $nKeys distinct keys")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("epoch bloom dedup: suppresses within current+previous epoch, " +
       "re-admits after two epochs, state stays bounded") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val t0 = Timestamp.valueOf("2024-01-01 12:00:00")
       def at(min: Long) = new Timestamp(t0.getTime + min * 60000)
@@ -592,15 +566,11 @@ class EventStreamsSpec extends SparkSpec {
       assert(stateRows <= numShards,
         s"epoch bloom state rows $stateRows > shard count $numShards")
       drain(q)
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("transformWithState keeps per-user counts across micro-batches") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val t0 = Timestamp.valueOf("2024-01-01 12:00:00")
       def at(min: Long) = new Timestamp(t0.getTime + min * 60000)
@@ -624,8 +594,6 @@ class EventStreamsSpec extends SparkSpec {
         .groupBy(_.user_id).map { case (u, rs) => u -> rs.map(_.n_events).max }
       assert(latest == Map(1L -> 3L, 2L -> 1L),
         s"state not kept across batches: $latest")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 

@@ -52,9 +52,7 @@ class EwmaStreamSpec extends SparkSpec {
     val expected = rows.groupBy(_.event_type).map { case (t, es) =>
       t -> EwmaStream.fold(es, ref)
     }
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try for (nBatches <- Seq(1, 4)) {
+    withRocksDb { for (nBatches <- Seq(1, 4)) {
       implicit val sqlCtx = spark.sqlContext
       val stream = MemoryStream[Event]
       val name = s"ewma_spec_$nBatches"
@@ -79,8 +77,6 @@ class EwmaStreamSpec extends SparkSpec {
           ((exp.n, math.floor(1000000.0 * exp.e).toLong, exp.nAlarms,
             exp.firstAlarmN)), s"$nBatches batches, $t: $e != $exp")
       }
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    } }
   }
 }

@@ -17,9 +17,7 @@ class HllStreamSpec extends SparkSpec {
   import spark.implicits._
 
   test("streamed shard sketches union to the batch union, within HLL error") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val rows = graft.core.Tables.events(spark, "/root/testdata/sf0.001")
         .select("event_id", "user_id", "event_type", "ts", "value")
@@ -67,8 +65,6 @@ class HllStreamSpec extends SparkSpec {
         s"merged estimate ${merged.getEstimate} vs exact $exact " +
           s"(rel err $relErr) outside the lgK=12 band")
       s"ok"
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 }

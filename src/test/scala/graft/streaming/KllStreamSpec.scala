@@ -14,9 +14,7 @@ class KllStreamSpec extends SparkSpec {
   import spark.implicits._
 
   test("shard states merge to a full-stream sketch within the rank bound") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val rows = graft.core.Tables.events(spark, "/root/testdata/sf0.001")
         .select("event_id", "user_id", "event_type", "ts", "value")
@@ -48,8 +46,6 @@ class KllStreamSpec extends SparkSpec {
         assert(math.abs(r - values.length.toDouble * j / 10) <=
           0.05 * values.length, s"decile $j rank error too large")
       }
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 }

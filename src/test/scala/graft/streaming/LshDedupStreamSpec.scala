@@ -23,9 +23,7 @@ class LshDedupStreamSpec extends SparkSpec {
   private val edited = original.replace("t148_1", "EDITED")
 
   test("near-dup sent in a later batch is flagged; unique docs are not") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
     val docs = Seq(
       (1L, original), (2L, words(60, 2)),
@@ -62,8 +60,6 @@ class LshDedupStreamSpec extends SparkSpec {
     assert(dups.contains(10L), s"edited re-send not flagged: $dups")
     assert(!dups.contains(2L) && !dups.contains(11L),
       s"unique docs wrongly flagged: $dups")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 

@@ -25,9 +25,7 @@ class PsiStreamSpec extends SparkSpec {
     */
   private def run(ref: Map[String, Map[Long, Long]], rows: Seq[Event],
       nBatches: Int): Map[String, PsiEmit] = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val stream = MemoryStream[Event]
       val name = s"t_psi_${System.nanoTime()}"
@@ -47,8 +45,6 @@ class PsiStreamSpec extends SparkSpec {
       all.groupBy(_.event_type).map { case (t, es) =>
         t -> es.maxBy(_.n_rows)
       }
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -98,9 +94,7 @@ class PsiStreamSpec extends SparkSpec {
   }
 
   test("state rows stay bounded by occupied (type, bin) cells") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val rows = (0L until 500L).map(i =>
         ev(i, s"t${i % 2}", (i % 5) * 20.0 + 1.0))
@@ -119,8 +113,6 @@ class PsiStreamSpec extends SparkSpec {
       // map-state rows per (grouping key, user key) pair
       assert(progress.numRowsTotal <= 2 * 5 + 2,
         s"state rows ${progress.numRowsTotal} exceed occupied cells")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 }

@@ -17,34 +17,33 @@ class ReservoirStreamSpec extends SparkSpec {
 
   test("streamed sample equals batch bottom-k at any batch slicing") {
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val rows = events(500)
-    val expected = rows.map(_.event_id).distinct
-      .sortBy(id => (ReservoirSample.priority(id), id))
-      .take(ReservoirStream.K)
-    Seq(1, 3, 7).foreach { nBatches =>
-      val stream = MemoryStream[Event]
-      val name = s"rsv_spec_${nBatches}"
-      val q = ReservoirStream.reservoirShards(stream.toDS())
-        .toDF("shard", "sample")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation",
-          Files.createTempDirectory("rsv-spec-ckpt").toString)
-        .start()
-      rows.grouped(rows.size / nBatches + 1).foreach { chunk =>
-        stream.addData(chunk)
-        q.processAllAvailable()
+    withRocksDb {
+      val rows = events(500)
+      val expected = rows.map(_.event_id).distinct
+        .sortBy(id => (ReservoirSample.priority(id), id))
+        .take(ReservoirStream.K)
+      Seq(1, 3, 7).foreach { nBatches =>
+        val stream = MemoryStream[Event]
+        val name = s"rsv_spec_${nBatches}"
+        val q = ReservoirStream.reservoirShards(stream.toDS())
+          .toDF("shard", "sample")
+          .writeStream.format("memory").queryName(name)
+          .outputMode("update")
+          .option("checkpointLocation",
+            Files.createTempDirectory("rsv-spec-ckpt").toString)
+          .start()
+        rows.grouped(rows.size / nBatches + 1).foreach { chunk =>
+          stream.addData(chunk)
+          q.processAllAvailable()
+        }
+        q.stop(); q.awaitTermination()
+        val all = spark.table(name).select($"sample")
+          .as[Array[Byte]].collect()
+        spark.catalog.dropTempView(name)
+        assert(ReservoirStream.merge(all) === expected,
+          s"slicing into $nBatches batches changed the sample")
       }
-      q.stop(); q.awaitTermination()
-      val all = spark.table(name).select($"sample")
-        .as[Array[Byte]].collect()
-      spark.catalog.dropTempView(name)
-      assert(ReservoirStream.merge(all) === expected,
-        s"slicing into $nBatches batches changed the sample")
     }
-    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
   test("state stays bounded at k pairs per shard") {

@@ -22,9 +22,7 @@ class SlidingHllStreamSpec extends SparkSpec {
 
   private def runChunks(chunks: Seq[Seq[Event]],
       extraLate: Seq[Event] = Nil): Seq[SlidingHllEmit] = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sqlCtx = spark.sqlContext
       val stream = MemoryStream[Event]
       val name = s"t_slhll_${System.nanoTime()}"
@@ -52,8 +50,6 @@ class SlidingHllStreamSpec extends SparkSpec {
       val out = spark.table(name).as[SlidingHllEmit].collect().toSeq
       spark.catalog.dropTempView(name)
       out
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 

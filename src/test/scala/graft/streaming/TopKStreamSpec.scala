@@ -16,17 +16,6 @@ class TopKStreamSpec extends SparkSpec {
   private def ckpt(): String =
     java.nio.file.Files.createTempDirectory("topk-ckpt").toString
 
-  private def withRocksDb[A](body: => A): A = {
-    val k = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(k)
-    spark.conf.set(k,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally saved match {
-      case Some(v) => spark.conf.set(k, v)
-      case None => spark.conf.unset(k)
-    }
-  }
-
   private val dir = "/root/testdata/sf0.001"
 
   test("final streamed top-k equals the batch top-k across batch splits") {

@@ -64,9 +64,7 @@ class TtlStateSpec extends SparkSpec {
   }
 
   test("a long TTL keeps state across batches: the count accumulates") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val out = run(Duration.ofHours(1), sleepBetweenMs = 0)
       // batch 1: fresh state for both users
       assert(out.contains((7L, 2L, false)), s"batch-1 user 7: $out")
@@ -74,16 +72,12 @@ class TtlStateSpec extends SparkSpec {
       // batch 2: user 7's state survived — count reads 3, had_state
       assert(out.contains((7L, 3L, true)),
         s"state must survive a 1-hour TTL across back-to-back batches: $out")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("an expired TTL evicts state: the second batch re-enters fresh " +
       "and the count restarts correctly") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val out = run(Duration.ofMillis(50), sleepBetweenMs = 2000)
       assert(out.contains((7L, 2L, false)), s"batch-1 user 7: $out")
       // batch 2 arrives ~2 s after a 50 ms TTL: state MUST be gone —
@@ -92,8 +86,6 @@ class TtlStateSpec extends SparkSpec {
         s"50 ms TTL + 2 s gap must evict user 7's state: $out")
       assert(!out.contains((7L, 3L, true)),
         s"stale counter read after expiry: $out")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 }
