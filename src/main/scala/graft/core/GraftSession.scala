@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** Session + table-loading helpers shared by every graft module.
   *
@@ -25,6 +26,10 @@ object GraftSession {
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet ships TIMESTAMP(NANOS) in some fixture generations;
+      // `Tables.events` reads those as long (the scan reads this conf
+      // again at execution, so it is pinned here, not set per read)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       // ContextCleaner only frees finished broadcasts/shuffles when the
       // SparkContext's JVM runs a GC, and its periodic-GC default
@@ -42,9 +47,9 @@ object GraftSession {
     * the way it was: a key that was set gets its prior value, a key that
     * was not set is unset — also when `body` throws.
     *
-    * A Dataset result is materialised (localCheckpoint) inside the
-    * scope: a lazy plan would otherwise be planned after the restore,
-    * under the session's other settings.
+    * A Dataset result is materialised (`PlanBridge.checkpointResetStats`)
+    * inside the scope: a lazy plan would otherwise be planned after the
+    * restore, under the session's other settings.
     *
     * The scope mutates the shared session conf, not a
     * `spark.newSession()`: a new session starts with empty `experimental`
@@ -55,7 +60,8 @@ object GraftSession {
     val prior = s.conf.getAll
     confs.foreach { case (k, v) => s.conf.set(k, v) }
     try body match {
-      case ds: Dataset[_] => ds.localCheckpoint().asInstanceOf[A]
+      case ds: Dataset[_] =>
+        PlanBridge.checkpointResetStats(ds).asInstanceOf[A]
       case a => a
     } finally confs.foreach { case (k, _) =>
       prior.get(k) match {
@@ -79,18 +85,18 @@ object Tables {
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   /** `events.ts` has shipped as parquet TIMESTAMP(NANOS) in some fixture
-    * generations (which Spark's vectorized reader rejects — read nanos as
-    * long and floor-divide to micros, the same truncation DuckDB applies
-    * casting TIMESTAMP_NS → TIMESTAMP) and as plain TIMESTAMP(MICROS,
-    * isAdjustedToUTC=false) in others (Spark reads TIMESTAMP_NTZ — cast
-    * to session-TZ TimestampType, identical instant under the UTC session
-    * this library pins). Normalizing here keeps every consumer and every
-    * oracle SQL (`CAST(ts AS TIMESTAMP)`) agnostic to the generation.
+    * generations (which Spark's vectorized reader rejects — the
+    * [[GraftSession.local]] session reads nanos as long; floor-divide to
+    * micros, the same truncation DuckDB applies casting TIMESTAMP_NS →
+    * TIMESTAMP) and as plain TIMESTAMP(MICROS, isAdjustedToUTC=false) in
+    * others (Spark reads TIMESTAMP_NTZ — cast to session-TZ TimestampType,
+    * identical instant under the UTC session this library pins).
+    * Normalizing here keeps every consumer and every oracle SQL
+    * (`CAST(ts AS TIMESTAMP)`) agnostic to the generation.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = apply(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType =>

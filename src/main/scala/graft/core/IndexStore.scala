@@ -29,23 +29,23 @@ object IndexStore {
 
   private val Pid = ProcessHandle.current().pid()
 
-  /** Seconds each ensure-build cost this JVM, keyed by table prefix
-    * (insertion-ordered). Surfaced by [[graft.Bench]] as the
-    * `index_build` metric line (r17 verdict: the build runs once per
-    * (JVM, dir) and lands in the bench's DISCARDED warm-up, so the
-    * timed medians of IndexStore-backed entries price a parquet scan
-    * while the real compute is amortized invisibly — this line keeps
-    * both the serve-path medians and the build-path cost visible in
-    * the artifact).
+  /** Seconds each ensure-build cost this JVM, one record per build in
+    * build order (a prefix built for two dirs records twice). Surfaced
+    * by [[graft.Bench]] as the `index_build` metric line (r17 verdict:
+    * the build runs once per (JVM, dir) and lands in the bench's
+    * DISCARDED warm-up, so the timed medians of IndexStore-backed
+    * entries price a parquet scan while the real compute is amortized
+    * invisibly — this line keeps both the serve-path medians and the
+    * build-path cost visible in the artifact).
     */
   private val buildLog =
-    scala.collection.mutable.LinkedHashMap[String, Double]()
+    scala.collection.mutable.ArrayBuffer[(String, Double)]()
 
   def recordBuild(prefix: String, sec: Double): Unit =
-    buildLog.synchronized { buildLog(prefix) = sec }
+    buildLog.synchronized { buildLog += prefix -> sec }
 
   def buildSeconds: Seq[(String, Double)] =
-    buildLog.synchronized { buildLog.toSeq }
+    buildLog.synchronized { buildLog.toList }
 
   /** Sanitized per-(prefix, dir, pid) table name. */
   def tableFor(prefix: String, dir: String): String =

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -167,32 +168,32 @@ object Als {
 
   def fitEval(s: SparkSession, dir: String): Fit = {
     import s.implicits._
-    val ratings = T.lineitem(s, dir)
+    val ratings = PlanBridge.checkpointResetStats(T.lineitem(s, dir)
       .join(T.orders(s, dir), $"l_orderkey" === $"o_orderkey")
       .select($"o_custkey".as("cust"), $"l_partkey".as("part")).distinct()
       .as[(Long, Long)]
       .map { case (c, p) => (c, p, plantedRating(c, p)) }
-      .toDF("cust", "part", "r")
-      .localCheckpoint()
+      .toDF("cust", "part", "r"))
     val nObs = ratings.count()
     val nUsers = ratings.select($"cust").distinct().count()
     val nItems = ratings.select($"part").distinct().count()
 
-    var items = ratings.select($"part".as("k_solve")).distinct()
-      .map { r =>
-        val id = r.getLong(0)
-        (id, Array.tabulate(Rank)(d => hashInit(id, d)))
-      }.toDF("k_solve", "f").localCheckpoint()
+    var items = PlanBridge.checkpointResetStats(
+      ratings.select($"part".as("k_solve")).distinct()
+        .map { r =>
+          val id = r.getLong(0)
+          (id, Array.tabulate(Rank)(d => hashInit(id, d)))
+        }.toDF("k_solve", "f"))
     var users: DataFrame = null
 
     val objs = collection.mutable.ArrayBuffer[Double]()
     for (_ <- 1 to Sweeps) {
-      users = halfSweep(
+      users = PlanBridge.checkpointResetStats(halfSweep(
         ratings.select($"cust".as("k_solve"), $"part".as("k_fixed"), $"r"),
-        items.select($"k_solve".as("k_fixed"), $"f")).localCheckpoint()
-      items = halfSweep(
+        items.select($"k_solve".as("k_fixed"), $"f")))
+      items = PlanBridge.checkpointResetStats(halfSweep(
         ratings.select($"part".as("k_solve"), $"cust".as("k_fixed"), $"r"),
-        users.select($"k_solve".as("k_fixed"), $"f")).localCheckpoint()
+        users.select($"k_solve".as("k_fixed"), $"f")))
       // The REGULARIZED objective — the quantity ALS provably never
       // increases (raw SE alone carries no such guarantee).
       objs += sqErr(ratings, users, items) +

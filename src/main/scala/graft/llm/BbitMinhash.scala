@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -47,11 +48,10 @@ object BbitMinhash {
         $"doc_id" < PairMod * PairCap)
       .select($"doc_id", split($"text", " ").as("toks"))
       .filter(size($"toks") >= 3)
-    val grams = panel.select($"doc_id",
+    val grams = PlanBridge.checkpointResetStats(panel.select($"doc_id",
       explode(transform(sequence(lit(1), size($"toks") - 2),
         i => concat_ws(" ", slice($"toks", i, lit(3))))).as("tg"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val seeds = s.range(1, Seeds + 1).select($"id".cast("int").as("seed"))
     val sigs = grams.crossJoin(broadcast(seeds))
       .select($"doc_id", $"seed",

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -42,12 +43,11 @@ object BinPacking {
       : (Long, Long, Long, Long, Long) = {
     import s.implicits._
     val cap = CorpusOps.SeqLen
-    val items = T.documents(s, dir)
+    val items = PlanBridge.checkpointResetStats(T.documents(s, dir)
       .select($"doc_id",
         size(expr("filter(split(text, ' '), t -> t <> '')"))
           .cast("long").as("len"))
-      .filter($"len" > 0L && $"len" <= cap)
-      .localCheckpoint()
+      .filter($"len" > 0L && $"len" <= cap))
     val nDocs = items.count()
     val total = items.agg(sum($"len")).head().getLong(0)
     val perPart = items

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -47,13 +48,6 @@ object BpeTrain {
 
   val MergeCount = 6
 
-  private def dropCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Learn merges AND return the end-state vocabulary: the learned
     * merge list plus the vocab frame (word, cnt, s) with every word
     * rewritten through all merges — the trained tokenizer's word →
@@ -63,12 +57,11 @@ object BpeTrain {
       : (Seq[(Int, String, String, Long)], DataFrame) = {
     val s = corpus.sparkSession
     import s.implicits._
-    var w = corpus
+    var w = PlanBridge.checkpointResetStats(corpus
       .select(explode(split($"text", " ")).as("word"))
       .filter($"word".rlike("^[a-z0-9]+$"))
       .groupBy($"word").agg(count(lit(1)).as("cnt"))
-      .withColumn("s", concat_ws(" ", split($"word", "")))
-      .localCheckpoint()
+      .withColumn("s", concat_ws(" ", split($"word", ""))))
     val learned = Seq.newBuilder[(Int, String, String, Long)]
     for (rank <- 1 to merges) {
       val sl = split($"s", " ")
@@ -87,15 +80,14 @@ object BpeTrain {
         s"non-alphanumeric symbol escaped the alphabet filter: '$a' '$b'")
       learned += ((rank, a, b, pc))
       val prev = w
-      w = w.withColumn("s",
+      w = PlanBridge.checkpointResetStats(w.withColumn("s",
         aggregate(slice(sl, lit(2), greatest(size(sl) - 1, lit(0))),
           element_at(sl, 1),
           (acc, x) =>
             when(regexp_extract(acc, "([^ ]+)$", 1) === lit(a) && x === lit(b),
               regexp_replace(acc, "[^ ]+$", a + b))
-              .otherwise(concat(acc, lit(" "), x))))
-        .localCheckpoint()
-      dropCheckpoint(prev)
+              .otherwise(concat(acc, lit(" "), x)))))
+      PlanBridge.release(prev)
     }
     (learned.result(), w)
   }
@@ -107,7 +99,7 @@ object BpeTrain {
     val s = corpus.sparkSession
     import s.implicits._
     val (learned, vocab) = trainState(corpus, merges)
-    dropCheckpoint(vocab)
+    PlanBridge.release(vocab)
     s.createDataFrame(learned)
       .toDF("merge_rank", "left_sym", "right_sym", "pair_count")
       .orderBy($"merge_rank")
@@ -136,13 +128,12 @@ object BpeTrain {
     val docs = T.documents(s, dir)
     val (_, vocab) = trainState(docs)
     val words = docs.select($"doc_id", explode(split($"text", " ")).as("word"))
-    val out = words.join(vocab, "word")
+    val out = PlanBridge.checkpointResetStats(words.join(vocab, "word")
       .groupBy($"doc_id")
       .agg(sum(length($"word")).as("n_chars_sym"),
         sum(size(split($"s", " ")).cast("long")).as("n_tokens"))
-      .orderBy($"doc_id")
-      .localCheckpoint()
-    dropCheckpoint(vocab)
+      .orderBy($"doc_id"))
+    PlanBridge.release(vocab)
     out
   }
 

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -37,12 +38,12 @@ object BprTriplets {
   val q505BprTriplets: Q = (s, dir) => {
     import s.implicits._
     val nParts = T.part(s, dir).count()
-    val e = T.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
-      .join(T.orders(s, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .select($"o_custkey".as("u"), $"l_partkey".as("p"))
-      .distinct()
-      .localCheckpoint()
+    val e = PlanBridge.checkpointResetStats(
+      T.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
+        .join(T.orders(s, dir).select($"o_orderkey", $"o_custkey"),
+          $"l_orderkey" === $"o_orderkey")
+        .select($"o_custkey".as("u"), $"l_partkey".as("p"))
+        .distinct())
     val pos = e.filter($"u" % BprUserMod === 0L)
       .select($"u", $"p".as("pos"))
     val cand = pos.select($"u", $"pos",

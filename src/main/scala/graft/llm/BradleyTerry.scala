@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -82,29 +83,29 @@ object BradleyTerry {
     import s.implicits._
     // (i, j, n_ij wins of i over j) with i<j, both directions kept as
     // (winner, loser) counts for the W_i term
-    val counts = matches.groupBy($"i", $"j")
+    val counts = PlanBridge.checkpointResetStats(matches.groupBy($"i", $"j")
       .agg(sum(when($"win" === $"i", 1L).otherwise(0L)).as("wij"),
-        sum(when($"win" === $"j", 1L).otherwise(0L)).as("wji"))
-      .localCheckpoint()
+        sum(when($"win" === $"j", 1L).otherwise(0L)).as("wji")))
     val nMatches = matches.count()
-    val sym = counts.select($"i".as("a"), $"j".as("b"), $"wij".as("w_ab"),
-        ($"wij" + $"wji").as("n_ab"))
-      .unionByName(counts.select($"j".as("a"), $"i".as("b"),
-        $"wji".as("w_ab"), ($"wij" + $"wji").as("n_ab")))
-      .localCheckpoint()
-    val wins = sym.groupBy($"a").agg(sum($"w_ab").as("w")).localCheckpoint()
+    val sym = PlanBridge.checkpointResetStats(
+      counts.select($"i".as("a"), $"j".as("b"), $"wij".as("w_ab"),
+          ($"wij" + $"wji").as("n_ab"))
+        .unionByName(counts.select($"j".as("a"), $"i".as("b"),
+          $"wji".as("w_ab"), ($"wij" + $"wji").as("n_ab"))))
+    val wins = PlanBridge.checkpointResetStats(
+      sym.groupBy($"a").agg(sum($"w_ab").as("w")))
     val nItems = wins.count()
 
-    var pi = wins.select($"a", lit(1.0).as("p")).localCheckpoint()
+    var pi = PlanBridge.checkpointResetStats(
+      wins.select($"a", lit(1.0).as("p")))
     val lls = collection.mutable.ArrayBuffer[Double]()
     // One joined pass per iteration serves BOTH the MM denominator and
     // the LL gate (the q321 fused-collect lesson); the MM update is
     // scale-invariant (π'(cπ) = c·π'(π)), so normalization happens
     // ONCE at the end instead of burning a job every iteration.
-    def joined(cur: DataFrame): DataFrame = sym
+    def joined(cur: DataFrame): DataFrame = PlanBridge.checkpointResetStats(sym
       .join(cur.select($"a", $"p".as("pa")), "a")
-      .join(cur.select($"a".as("b"), $"p".as("pb")), "b")
-      .localCheckpoint()
+      .join(cur.select($"a".as("b"), $"p".as("pb")), "b"))
     def llOf(j: DataFrame): Double = j
       .select(($"w_ab" * log($"pa" / ($"pa" + $"pb"))).as("l"))
       .agg(sum($"l")).head().getDouble(0)
@@ -120,16 +121,15 @@ object BradleyTerry {
       // sum (and log(0) = -Inf into the geometric-mean normalizer).
       // Hunter's condition assumes strong connectivity; the floor keeps
       // the degenerate residue-class-never-wins fixture finite instead.
-      pi = wins.join(denom, "a")
-        .select($"a", greatest($"w" / $"d", lit(1e-12)).as("p"))
-        .localCheckpoint()
+      pi = PlanBridge.checkpointResetStats(wins.join(denom, "a")
+        .select($"a", greatest($"w" / $"d", lit(1e-12)).as("p")))
     }
     lls += llOf(joined(pi))
     // normalize the geometric mean to 1 (BT strengths are scale-free;
     // LL is scale-invariant, so the gate is unaffected)
     val logMean = pi.agg(avg(log($"p"))).head().getDouble(0)
-    pi = pi.select($"a", ($"p" / lit(math.exp(logMean))).as("p"))
-      .localCheckpoint()
+    pi = PlanBridge.checkpointResetStats(
+      pi.select($"a", ($"p" / lit(math.exp(logMean))).as("p")))
 
     // Spearman between fitted and planted ranks (items-bounded frame)
     if (!nRanked) {

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{ExactDiv, Tables => T}
 
@@ -45,9 +46,8 @@ object ConditionalEntropy {
   def conditionalEntropy(bigrams: DataFrame): DataFrame = {
     val s = bigrams.sparkSession
     import s.implicits._
-    val cuv = bigrams.groupBy($"g", $"u", $"v")
-      .agg(count(lit(1)).as("c_uv"))
-      .localCheckpoint()
+    val cuv = PlanBridge.checkpointResetStats(bigrams.groupBy($"g", $"u", $"v")
+      .agg(count(lit(1)).as("c_uv")))
     val cu = cuv.groupBy($"g", $"u").agg(sum($"c_uv").as("c_u"))
     val cv = cuv.groupBy($"g", $"v").agg(sum($"c_uv").as("c_v"))
     val ng = cuv.groupBy($"g").agg(sum($"c_uv").as("n_g"),

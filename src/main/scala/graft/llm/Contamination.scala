@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -83,9 +84,9 @@ object Contamination {
   val q336NgramNovelty: Q = (s, dir) => {
     implicit val sp: SparkSession = s
     import s.implicits._
-    val grams = DedupQueries.triShingles(T.documents(s, dir))
-      .select($"doc_id", xxhash64($"tg").as("tgh"))
-      .localCheckpoint()
+    val grams = PlanBridge.checkpointResetStats(
+      DedupQueries.triShingles(T.documents(s, dir))
+        .select($"doc_id", xxhash64($"tg").as("tgh")))
     val ref = grams.filter($"doc_id" % 2 === 0).select($"tgh").distinct()
     val cand = grams.filter($"doc_id" % 2 =!= 0)
     val novel = cand.join(ref, Seq("tgh"), "left_anti")

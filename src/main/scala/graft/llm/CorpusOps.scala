@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -273,10 +274,10 @@ object CorpusOps {
     */
   val q351SeqPacking: Q = (s, dir) => {
     import s.implicits._
-    val d = T.documents(s, dir)
+    // one source pass feeds both levels
+    val d = PlanBridge.checkpointResetStats(T.documents(s, dir)
       .select($"doc_id", expr(s"doc_id div $PackBlock").as("blk"),
-        size(split($"text", " ")).cast("long").as("n_tok"))
-      .localCheckpoint() // one source pass feeds both levels
+        size(split($"text", " ")).cast("long").as("n_tok")))
     val blockOffsets = d.groupBy($"blk").agg(sum($"n_tok").as("bt"))
       .withColumn("boff",
         coalesce(sum($"bt").over(org.apache.spark.sql.expressions.Window
@@ -542,11 +543,11 @@ object CorpusOps {
     */
   val q360SourceKl: Q = (s, dir) => {
     import s.implicits._
-    val st = T.documents(s, dir)
+    // feeds the marginal and the per-source fold
+    val st = PlanBridge.checkpointResetStats(T.documents(s, dir)
       .select($"source", explode(split($"text", " ")).as("tok"))
       .filter($"tok" =!= "")
-      .groupBy($"source", $"tok").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // feeds the marginal and the per-source fold
+      .groupBy($"source", $"tok").agg(count(lit(1)).as("c")))
     // full (source × vocab) support with +1 smoothing: cross the
     // source list with the vocab so zero cells smooth identically
     val vocab = st.groupBy($"tok").agg(sum($"c").as("ct"))
@@ -762,14 +763,14 @@ object CorpusOps {
     */
   val q238SegmentDedup: Q = (s, dir) => {
     import s.implicits._
-    val segs = T.documents(s, dir)
+    // feeds hot-set, kept, and totals — segment once
+    val segs = PlanBridge.checkpointResetStats(T.documents(s, dir)
       .select($"doc_id", split($"text", " ").as("ws"))
       .select($"doc_id", posexplode(expr(
         s"""transform(sequence(0, (size(ws) - 1) div $SegK),
            |  i -> concat_ws(' ', slice(ws, i * $SegK + 1, $SegK)))"""
           .stripMargin)).as(Seq("idx", "seg")))
-      .withColumn("h", md5($"seg"))
-      .localCheckpoint() // feeds hot-set, kept, and totals — segment once
+      .withColumn("h", md5($"seg")))
     val hot = segs.select($"doc_id", $"h").distinct()
       .groupBy($"h").agg(count(lit(1)).as("n_docs"))
       .filter($"n_docs" >= SegHotDocs).select($"h")
@@ -839,14 +840,14 @@ object CorpusOps {
   val q252PmiCollocations: Q = (s, dir) => {
     import s.implicits._
     val toks = split($"text", " ")
-    val counts = T.documents(s, dir)
+    // feeds marginals, total, and candidates
+    val counts = PlanBridge.checkpointResetStats(T.documents(s, dir)
       .select(explode(
         zip_with(toks, slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
           (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
       .filter($"p.w2".isNotNull)
       .select($"p.w1".as("w1"), $"p.w2".as("w2"))
-      .groupBy($"w1", $"w2").agg(count(lit(1)).as("c_xy"))
-      .localCheckpoint() // feeds marginals, total, and candidates
+      .groupBy($"w1", $"w2").agg(count(lit(1)).as("c_xy")))
     val left = counts.groupBy($"w1").agg(sum($"c_xy").as("c_x"))
     val right = counts.groupBy($"w2").agg(sum($"c_xy").as("c_y"))
     val total = counts.agg(sum($"c_xy").as("n_pairs"))
@@ -1059,9 +1060,8 @@ object CorpusOps {
     // repeats inside the aggregation, so no distinct pre-pass and no
     // self-join re-shuffle; sizes and the C(|sources|,2)-bounded pair
     // explode both come off the per-shingle source-set frame
-    val bySh = st.groupBy($"tgh")
-      .agg(sort_array(collect_set($"source")).as("srcs"))
-      .localCheckpoint()
+    val bySh = PlanBridge.checkpointResetStats(st.groupBy($"tgh")
+      .agg(sort_array(collect_set($"source")).as("srcs")))
     val sizes = bySh.select(explode($"srcs").as("source"))
       .groupBy($"source").agg(count(lit(1)).as("n"))
     val pairs = bySh

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 import graft.llm.ClusterEval.SilScale
@@ -49,12 +50,11 @@ object DaviesBouldin {
       .select($"vec_id", $"label",
         expr(s"CAST(FLOOR($SilScale * embedding[0]) AS BIGINT)").as("x"),
         expr(s"CAST(FLOOR($SilScale * embedding[1]) AS BIGINT)").as("y"))
-    val cent = pts.groupBy($"label")
+    val cent = PlanBridge.checkpointResetStats(pts.groupBy($"label")
       .agg(count(lit(1)).as("n"), sum($"x").as("sx"), sum($"y").as("sy"))
       .select($"label", $"n",
         expr("CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)").as("cx"),
-        expr("CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)").as("cy"))
-      .localCheckpoint()
+        expr("CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)").as("cy")))
     val scatter = pts.join(broadcast(cent.select($"label", $"cx", $"cy")),
         "label")
       .withColumn("d_micro", expr(

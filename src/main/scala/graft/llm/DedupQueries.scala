@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -199,7 +200,7 @@ object DedupQueries {
     // and hands the tiny pair set to each consumer — without it
     // Catalyst re-expands ~8 exchanges per reference (32-exchange
     // plan, 3× the candidate work)
-    val cands = minhashCandidates(spark, docs).localCheckpoint()
+    val cands = PlanBridge.checkpointResetStats(minhashCandidates(spark, docs))
     verifyPairs(spark, docs, cands, minJaccard)
       .orderBy($"doc1", $"doc2")
   }
@@ -904,11 +905,10 @@ object DedupQueries {
     // sf0.1), and at 100 TB materializing it would dominate memory.
     val tri = triShingles(docs).select($"doc_id", xxhash64($"tg").as("tgh"))
     val dfTab = tri.groupBy($"tgh").agg(count(lit(1)).as("df"))
-    val perDoc = tri.join(dfTab, "tgh")
+    val perDoc = PlanBridge.checkpointResetStats(tri.join(dfTab, "tgh")
       .groupBy($"doc_id")
       .agg(sort_array(collect_list(struct($"df", $"tgh"))).as("toks"))
-      .withColumn("n", size($"toks"))
-      .localCheckpoint()
+      .withColumn("n", size($"toks")))
     val prefix = perDoc.select($"doc_id", $"n",
       explode(expr(s"slice(toks, 1, n - (($num * n + ${den - 1}) div $den) + 1)"))
         .as("t"))
@@ -966,11 +966,10 @@ object DedupQueries {
     import s.implicits._
     val tri = triShingles(docs).select($"doc_id", xxhash64($"tg").as("tgh"))
     val dfTab = tri.groupBy($"tgh").agg(count(lit(1)).as("df"))
-    val perDoc = tri.join(dfTab, "tgh")
+    val perDoc = PlanBridge.checkpointResetStats(tri.join(dfTab, "tgh")
       .groupBy($"doc_id")
       .agg(sort_array(collect_list(struct($"df", $"tgh"))).as("toks"))
-      .withColumn("n", size($"toks"))
-      .localCheckpoint()
+      .withColumn("n", size($"toks")))
     // ceil(num*n/den) = (num*n + den-1) div den, exact.
     val probe = perDoc.select($"doc_id", $"n",
       explode(expr(s"slice(toks, 1, n - (($num * n + ${den - 1}) div $den) + 1)"))
@@ -1039,8 +1038,8 @@ object DedupQueries {
     implicit val sp: SparkSession = s
     import s.implicits._
     val docs = T.documents(s, dir)
-    val pairs = verifiedPairs(s, dir)
-      .select($"doc1", $"doc2").localCheckpoint()
+    val pairs = PlanBridge.checkpointResetStats(verifiedPairs(s, dir)
+      .select($"doc1", $"doc2"))
     val posTg = docs
       .join(pairs.select($"doc1".as("doc_id")).distinct(), Seq("doc_id"),
         "left_semi")
@@ -1130,8 +1129,8 @@ object DedupQueries {
     implicit val sp: SparkSession = s
     import s.implicits._
     val docs = T.documents(s, dir)
-    val pairs = verifiedPairs(s, dir)
-      .select($"doc1", $"doc2").localCheckpoint()
+    val pairs = PlanBridge.checkpointResetStats(verifiedPairs(s, dir)
+      .select($"doc1", $"doc2"))
     val toks = docs.select($"doc_id", split($"text", " ").as("ws"))
     pairs
       .join(toks.select($"doc_id".as("doc1"), $"ws".as("ws1")), "doc1")
@@ -1256,8 +1255,8 @@ object DedupQueries {
     implicit val sp: SparkSession = s
     import s.implicits._
     val docs = T.documents(s, dir)
-    val pairs = verifiedPairs(s, dir)
-      .select($"doc1", $"doc2").localCheckpoint()
+    val pairs = PlanBridge.checkpointResetStats(verifiedPairs(s, dir)
+      .select($"doc1", $"doc2"))
     val toks = docs.select($"doc_id", split($"text", " ").as("ws"))
     pairs
       .join(toks.select($"doc_id".as("doc1"), $"ws".as("ws1")), "doc1")
@@ -1343,8 +1342,8 @@ object DedupQueries {
       : DataFrame = {
     import s.implicits._
     val docs = T.documents(s, dir)
-    val pairs = verifiedPairs(s, dir)
-      .select($"doc1", $"doc2").localCheckpoint()
+    val pairs = PlanBridge.checkpointResetStats(verifiedPairs(s, dir)
+      .select($"doc1", $"doc2"))
     val tc = tokenCensus(docs)
     val t1 = pairs.join(tc.select($"doc_id".as("doc1"), $"tok",
       $"c".as("c1")), "doc1")
@@ -1476,16 +1475,16 @@ object DedupQueries {
     */
   val q438CwsCandidates: Q = (s, dir) => {
     import s.implicits._
-    val exact = weightedJaccardPairs(s, dir)
+    val exact = PlanBridge.checkpointResetStats(weightedJaccardPairs(s, dir)
       .filter($"wjaccard_micro" >= CwsTauMicro)
-      .select($"doc1", $"doc2").localCheckpoint()
+      .select($"doc1", $"doc2"))
     val wCap = org.apache.spark.sql.expressions.Window
       .partitionBy($"seed", $"tok", $"tval")
       .orderBy(xxhash64($"doc_id"), $"doc_id")
-    val sk = cwsSketch(tokenCensus(T.documents(s, dir)))
-      .withColumn("slot", row_number().over(wCap))
-      .filter($"slot" <= CwsBucketCap).drop("slot")
-      .localCheckpoint()
+    val sk = PlanBridge.checkpointResetStats(
+      cwsSketch(tokenCensus(T.documents(s, dir)))
+        .withColumn("slot", row_number().over(wCap))
+        .filter($"slot" <= CwsBucketCap).drop("slot"))
     val cands = sk.as("x").join(sk.as("y"),
         $"x.seed" === $"y.seed" && $"x.tok" === $"y.tok" &&
           $"x.tval" === $"y.tval" && $"x.doc_id" < $"y.doc_id")
@@ -1666,11 +1665,11 @@ object DedupQueries {
       .join(tri.select($"doc_id".as("doc2"), $"tg"), "tg")
       .filter($"doc1" < $"doc2")
       .groupBy($"doc1", $"doc2").agg(count(lit(1)).as("inter"))
-    val pairs = inters
+    // one pair frame feeds every threshold
+    val pairs = PlanBridge.checkpointResetStats(inters
       .join(sizes.select($"doc_id".as("doc1"), $"n".as("n1")), "doc1")
       .join(sizes.select($"doc_id".as("doc2"), $"n".as("n2")), "doc2")
-      .select($"inter", ($"n1" + $"n2" - $"inter").as("un"))
-      .localCheckpoint() // one pair frame feeds every threshold
+      .select($"inter", ($"n1" + $"n2" - $"inter").as("un")))
     pairs
       .withColumn("t", explode(expr("sequence(50, 90, 10)")))
       .filter($"inter" * 100L >= $"t" * $"un")
@@ -1788,11 +1787,11 @@ object DedupQueries {
     val batch = docs.filter($"doc_id" % 2 === 1)
     val index = bandedCapped(s, corpus)   // the persisted corpus index
     val probes = bandedCapped(s, batch)
-    val cands = index.as("c").join(probes.as("b"),
-        $"c.band" === $"b.band" && $"c.band_hash" === $"b.band_hash")
-      .select($"c.doc_id".as("cid"), $"b.doc_id".as("bid"))
-      .distinct()
-      .localCheckpoint()
+    val cands = PlanBridge.checkpointResetStats(
+      index.as("c").join(probes.as("b"),
+          $"c.band" === $"b.band" && $"c.band_hash" === $"b.band_hash")
+        .select($"c.doc_id".as("cid"), $"b.doc_id".as("bid"))
+        .distinct())
     val candDocs = cands.select($"cid".as("doc_id"))
       .union(cands.select($"bid".as("doc_id"))).distinct()
     val sets = triShinglesRaw(docs)

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** q434 — DeLong PAIRED AUC comparison (DeLong, DeLong &
   * Clarke-Pearson 1988) of the two trained text classifiers on the
@@ -130,7 +131,7 @@ object DelongAuc {
   def delongStats(s: SparkSession, dir: String)
       : (Long, Long, Long, Long, Long, Boolean, Boolean, Boolean) = {
     import s.implicits._
-    val paired = pairedScores(s, dir).localCheckpoint()
+    val paired = PlanBridge.checkpointResetStats(pairedScores(s, dir))
     val j = components(paired, "sa").withColumnRenamed("v2", "va")
       .join(components(paired, "sb").withColumnRenamed("v2", "vb"),
         Seq("doc_id", "y"))

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -156,11 +157,11 @@ object DiversityStats {
     */
   val q373EntropyJsd: Q = (s, dir) => {
     import s.implicits._
-    val st = T.documents(s, dir)
+    // feeds the marginal and the per-source fold
+    val st = PlanBridge.checkpointResetStats(T.documents(s, dir)
       .select($"source", explode(split($"text", " ")).as("tok"))
       .filter($"tok" =!= "")
-      .groupBy($"source", $"tok").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // feeds the marginal and the per-source fold
+      .groupBy($"source", $"tok").agg(count(lit(1)).as("c")))
     val vocab = st.groupBy($"tok").agg(sum($"c").as("ct"))
     val sources = st.select($"source").distinct()
     val cells = sources.crossJoin(vocab)
@@ -363,14 +364,14 @@ object DiversityStats {
     val docs = T.documents(s, dir)
     val mid = docs.agg((((min($"doc_id") + max($"doc_id") + 1L) / 2L)
       .cast("long")).as("mid"))
-    val tc = docs.crossJoin(broadcast(mid))
+    // totals + vocab + per-token ratios
+    val tc = PlanBridge.checkpointResetStats(docs.crossJoin(broadcast(mid))
       .select(($"doc_id" >= $"mid").as("new_half"),
         explode(split($"text", " ")).as("tok"))
       .filter($"tok" =!= "")
       .groupBy($"tok")
       .agg(sum(when(!$"new_half", 1L).otherwise(0L)).as("c_old"),
-        sum(when($"new_half", 1L).otherwise(0L)).as("c_new"))
-      .localCheckpoint() // totals + vocab + per-token ratios
+        sum(when($"new_half", 1L).otherwise(0L)).as("c_new")))
     val tot = tc.agg(sum($"c_old").as("n_old"), sum($"c_new").as("n_new"),
       count(lit(1)).as("v"))
     tc.crossJoin(broadcast(tot))
@@ -528,12 +529,11 @@ object DiversityStats {
     */
   val q427TheilDecomposition: Q = (s, dir) => {
     import s.implicits._
-    val docs = T.documents(s, dir)
+    val docs = PlanBridge.checkpointResetStats(T.documents(s, dir)
       .select($"source",
         size(expr("filter(split(text, ' '), t -> t <> '')")).cast("long")
           .as("x"))
-      .filter($"x" > 0L)
-      .localCheckpoint() // totals, per-source, and per-doc terms
+      .filter($"x" > 0L)) // totals, per-source, and per-doc terms
     val tot = docs.agg(count(lit(1)).as("nn"), sum($"x").as("xx"))
     val bySrc = docs.groupBy($"source")
       .agg(count(lit(1)).as("n_s"), sum($"x").as("x_s"))

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 import graft.functions.VectorFunctions._
@@ -214,7 +215,8 @@ object EmbeddingDedup {
 
   val q185SemanticDedup: Q = (s, dir) => {
     import s.implicits._
-    val corpus = twinCorpus(T.embeddings(s, dir)).localCheckpoint()
+    val corpus = PlanBridge.checkpointResetStats(
+      twinCorpus(T.embeddings(s, dir)))
     val n = corpus.count()
     val cells = graft.llm.VectorSearch.ivfCellCount(n)
     val codebook = graft.llm.VectorSearch.fitCodebook(corpus, cells)
@@ -223,9 +225,9 @@ object EmbeddingDedup {
       .select($"cell", $"vec_id", $"embedding", norm_q20($"embedding").as("norm"))
     // deterministic per-cell cap — the skew valve; inert at test scale
     val wCap = Window.partitionBy($"cell").orderBy(xxhash64($"vec_id"), $"vec_id")
-    val capped = assigned.withColumn("slot", row_number().over(wCap))
-      .filter($"slot" <= SemDedupCellCap).drop("slot")
-      .localCheckpoint()
+    val capped = PlanBridge.checkpointResetStats(
+      assigned.withColumn("slot", row_number().over(wCap))
+        .filter($"slot" <= SemDedupCellCap).drop("slot"))
     val a = capped.select($"cell", $"vec_id".as("id_a"), $"embedding".as("ea"),
       $"norm".as("na"))
     val b = capped.select($"cell", $"vec_id".as("id_b"), $"embedding".as("eb"),

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -60,14 +61,13 @@ object HeapsLaw {
       .groupBy($"fd").agg(count(lit(1)).as("v_new"))
     val tokDec = tokD.groupBy($"decile").agg(count(lit(1)).as("t_d"))
     val docDec = ranked.groupBy($"decile").agg(count(lit(1)).as("d_d"))
-    val census = docDec
+    val census = PlanBridge.checkpointResetStats(docDec
       .join(tokDec, Seq("decile"), "left")
       .join(firstDec.select($"fd".as("decile"), $"v_new"),
         Seq("decile"), "left")
       .select($"decile", $"d_d",
         coalesce($"t_d", lit(0L)).as("t_d"),
-        coalesce($"v_new", lit(0L)).as("v_new"))
-      .localCheckpoint()
+        coalesce($"v_new", lit(0L)).as("v_new")))
     // bounded 10×10 triangle — the cumulative curve
     val cum = census.as("a").join(census.as("b"),
         $"b.decile" <= $"a.decile")

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -104,11 +105,10 @@ object HuffmanCost {
   def huffmanStats(s: SparkSession, dir: String, cap: Int = HuffCap)
       : (Long, Long, Long, Long, Boolean, Boolean, Boolean) = {
     import s.implicits._
-    val census = T.documents(s, dir)
+    val census = PlanBridge.checkpointResetStats(T.documents(s, dir)
       .select(explode(split($"text", " ")).as("term"))
       .filter($"term" =!= "")
-      .groupBy($"term").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .groupBy($"term").agg(count(lit(1)).as("cnt")))
     // n and V from distributed aggs; the DRIVER sees only the top-cap
     // rows (bounded TakeOrdered), never the Heaps-law census
     val (n, v) = census.agg(sum($"cnt"), count(lit(1)))

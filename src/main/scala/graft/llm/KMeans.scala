@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -74,7 +75,7 @@ object KMeans {
   /** Library form over any (vec_id, embedding) frame. */
   def fitFrom(s: SparkSession, emb: DataFrame): DataFrame = {
     import s.implicits._
-    val q = quantized(s, emb).localCheckpoint()
+    val q = PlanBridge.checkpointResetStats(quantized(s, emb))
 
     // init: the K smallest vec_ids, cell id in vec_id order
     var cents: Array[Array[Long]] = q.orderBy($"vec_id").limit(K)

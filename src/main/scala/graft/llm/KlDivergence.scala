@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -64,8 +65,8 @@ object KlDivergence {
     val s = docs.sparkSession
     import s.implicits._
     val tok = docs.select($"g", explode(split($"text", " ")).as("w"))
-    val cg = tok.groupBy($"g", $"w").agg(count(lit(1)).as("c_g"))
-      .localCheckpoint()
+    val cg = PlanBridge.checkpointResetStats(
+      tok.groupBy($"g", $"w").agg(count(lit(1)).as("c_g")))
     val call = cg.groupBy($"w").agg(sum($"c_g").as("c_all"))
     val ng = cg.groupBy($"g").agg(sum($"c_g").as("n_g"),
       count(lit(1)).as("vocab_g"))
@@ -214,8 +215,8 @@ object KlDivergence {
     val s = docs.sparkSession
     import s.implicits._
     val tok = docs.select($"g", explode(split($"text", " ")).as("w"))
-    val cg = tok.groupBy($"g", $"w").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+    val cg = PlanBridge.checkpointResetStats(
+      tok.groupBy($"g", $"w").agg(count(lit(1)).as("c")))
     val ng = cg.groupBy($"g").agg(sum($"c").as("n"))
     val pairsG = ng.as("x").join(ng.as("y"), $"x.g" < $"y.g")
       .select($"x.g".as("g1"), $"y.g".as("g2"),

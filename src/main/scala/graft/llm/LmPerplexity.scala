@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -132,9 +133,8 @@ object LmPerplexity {
       (conv(substring(md5($"doc_id".cast("string")), 1, 4), 16, 10)
         .cast("long") % 100))
       .withColumn("is_train", $"bucket" < TrainPct)
-    val toks = sp.select($"doc_id", $"is_train",
-      split($"text", " ").as("ts"))
-      .localCheckpoint()
+    val toks = PlanBridge.checkpointResetStats(sp.select($"doc_id", $"is_train",
+      split($"text", " ").as("ts")))
     // train-side statistics: bigram counts, context counts, vocab
     val trainBig = toks.filter($"is_train")
       .select(explode(expr(

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -99,27 +100,25 @@ object LogisticRegression {
     // margin — the rank statistic q434's DeLong comparison quantizes
     // (sigmoid saturates to exactly 1.0 at large |margin|, which would
     // pool distinct ranks into one spurious tie class).
-    val scored = scoredDocs
+    val scored = PlanBridge.checkpointResetStats(scoredDocs
       .select($"doc_id", $"y", ($"dot" + lit(b)).as("m"),
         (lit(1.0) / (lit(1.0) + exp(-($"dot" + lit(b))))).as("p"))
       .unionByName(docs.filter($"doc_id" % 5 === 0)
         .join(scoredDocs.select($"doc_id"), Seq("doc_id"), "left_anti")
         .select($"doc_id", ($"lang" === "pro_join").cast("double").as("y"),
-          lit(b).as("m"), lit(1.0 / (1.0 + math.exp(-b))).as("p")))
-      .localCheckpoint()
+          lit(b).as("m"), lit(1.0 / (1.0 + math.exp(-b))).as("p"))))
     // TRAIN-side probabilities under the SAME final weights — the
     // frame an isotonic recalibrator (q353) fits on; bias-only train
     // docs handled identically to the test path
     val trainScoredDocs = train.groupBy($"doc_id", $"y")
       .agg(sum($"v" * element_at(wCol, $"bucket" + 1)).as("dot"))
-    val trainScored = trainScoredDocs
+    val trainScored = PlanBridge.checkpointResetStats(trainScoredDocs
       .select($"doc_id", $"y", ($"dot" + lit(b)).as("m"),
         (lit(1.0) / (lit(1.0) + exp(-($"dot" + lit(b))))).as("p"))
       .unionByName(docs.filter($"doc_id" % 5 =!= 0)
         .join(trainScoredDocs.select($"doc_id"), Seq("doc_id"), "left_anti")
         .select($"doc_id", ($"lang" === "pro_join").cast("double").as("y"),
-          lit(b).as("m"), lit(1.0 / (1.0 + math.exp(-b))).as("p")))
-      .localCheckpoint()
+          lit(b).as("m"), lit(1.0 / (1.0 + math.exp(-b))).as("p"))))
     Fit(m.nTrain, m.nTest, m.losses, m.weights, m.bias, m.accPermille,
       m.descentOk, m.finiteOk, scored, trainScored)
   }
@@ -162,8 +161,10 @@ object LogisticRegression {
   private def fitModel(s: SparkSession, dir: String): Model = {
     import s.implicits._
     val (docs, feats) = featureFrames(s, dir)
-    val train = feats.filter($"doc_id" % 5 =!= 0).localCheckpoint()
-    val test = feats.filter($"doc_id" % 5 === 0).localCheckpoint()
+    val train = PlanBridge.checkpointResetStats(
+      feats.filter($"doc_id" % 5 =!= 0))
+    val test = PlanBridge.checkpointResetStats(
+      feats.filter($"doc_id" % 5 === 0))
     // Labeled docs always tokenize (they contain a marker token), so
     // the split counts are plain planted-frame counts, as in the SQL.
     val nTrain = docs.filter($"doc_id" % 5 =!= 0).count()
@@ -182,7 +183,8 @@ object LogisticRegression {
         .withColumn("g", lit(1.0) / (lit(1.0) + exp(-$"s")) - $"y")
         .withColumn("loss",
           greatest($"s", lit(0.0)) - $"y" * $"s" + log(lit(1.0) + exp(-abs($"s"))))
-      val gframe = perDoc.select($"doc_id", $"g", $"loss").localCheckpoint()
+      val gframe = PlanBridge.checkpointResetStats(
+        perDoc.select($"doc_id", $"g", $"loss"))
       // Pass 2: per-bucket gradient, with the loss/bias totals riding
       // along as a sentinel bucket −1 — ONE HashDim+1-row collect per
       // iteration instead of separate loss and gradient jobs (the

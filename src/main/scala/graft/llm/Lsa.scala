@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -64,18 +65,17 @@ object Lsa {
       .filter($"term" =!= "" && !$"term".isin(Stop: _*))
     val tf = filt.groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-    val w = tf.join(df, "term")
+    val w = PlanBridge.checkpointResetStats(tf.join(df, "term")
       .select($"doc_id", $"term",
         expr(s"""CAST(FLOOR($WScale * CAST(tf AS DOUBLE)
                 | * ((CAST($nDocs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5)
                 |    / (CAST(df AS DOUBLE) + 0.5))) AS BIGINT)""".stripMargin)
           .as("wq"))
-      .filter($"wq" > 0)
-      .localCheckpoint() // joined once per half-step, 2·Iterations times
+      .filter($"wq" > 0)) // joined once per half-step, 2·Iterations times
     def halfStep(vec: DataFrame, vecKey: String, outKey: String): DataFrame = {
-      val raw = w.join(vec, vecKey)
-        .groupBy(col(outKey)).agg(sum($"wq" * $"sc").as("raw"))
-        .localCheckpoint() // read twice: max branch + normalize branch
+      // read twice: max branch + normalize branch
+      val raw = PlanBridge.checkpointResetStats(w.join(vec, vecKey)
+        .groupBy(col(outKey)).agg(sum($"wq" * $"sc").as("raw")))
       val mx = raw.agg(max($"raw").as("mx"))
       raw.crossJoin(mx)
         .select(col(outKey), expr(s"(raw * $Scale) div mx").as("sc"))

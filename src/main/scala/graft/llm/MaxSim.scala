@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -82,12 +83,12 @@ object MaxSim {
       $"qv".as("qb"))
     // ONE token-dot stage — queries broadcast, corpus streams; both
     // the per-token top-K and the rerank read it
-    val tokdot = dtok.join(broadcast(qtok), $"qid" =!= $"did")
-      .withColumn("dot", expr(
-        "aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L," +
-          " (acc, v) -> acc + v)"))
-      .select($"qid", $"qt", $"did", $"dt", $"dot")
-      .localCheckpoint()
+    val tokdot = PlanBridge.checkpointResetStats(
+      dtok.join(broadcast(qtok), $"qid" =!= $"did")
+        .withColumn("dot", expr(
+          "aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L," +
+            " (acc, v) -> acc + v)"))
+        .select($"qid", $"qt", $"did", $"dt", $"dot"))
     val wTok = Window.partitionBy($"qid", $"qt")
       .orderBy($"dot".desc, $"did".asc, $"dt".asc)
     val cands = tokdot.withColumn("rr", row_number().over(wTok))

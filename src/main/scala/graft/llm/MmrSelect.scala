@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 import graft.functions.VectorFunctions._
@@ -45,18 +46,16 @@ object MmrSelect {
 
   val q484MmrSelect: Q = (s, dir) => {
     import s.implicits._
-    val e = T.embeddings(s, dir)
-      .select($"vec_id", $"embedding", norm_q20($"embedding").as("nrm"))
-      .localCheckpoint()
+    val e = PlanBridge.checkpointResetStats(T.embeddings(s, dir)
+      .select($"vec_id", $"embedding", norm_q20($"embedding").as("nrm")))
     val qs = e.filter($"vec_id" < MmrQueries)
       .select($"vec_id".as("qid"), $"embedding".as("qe"), $"nrm".as("qn"))
     // relevance pool: top-MmrPool per query by ⌊10⁶·cos⌋, bounded heap
     val rel = e.crossJoin(broadcast(qs)).filter($"vec_id" =!= $"qid")
       .select($"qid", $"vec_id".as("did"),
         relMicro(dot_q20($"qe", $"embedding"), $"qn", $"nrm").as("rel"))
-    val pool = graft.plans.TopK.perGroup(rel,
-      Seq("qid"), Seq("rel" -> false, "did" -> true), MmrPool)
-      .localCheckpoint()
+    val pool = PlanBridge.checkpointResetStats(graft.plans.TopK.perGroup(rel,
+      Seq("qid"), Seq("rel" -> false, "did" -> true), MmrPool))
     // pool×pool sims (≤ pool² rows per query), then per-query greedy
     val pe = pool.join(e.select($"vec_id".as("did"), $"embedding", $"nrm"),
       "did")
@@ -94,7 +93,7 @@ object MmrSelect {
     val pairs = "CAST(FLOOR(1000000.0 * (CAST(SUM(x.qv[i] * y.qv[i]) AS " +
       "DOUBLE) / (nx.nrm * ny.nrm))) AS BIGINT)"
     val steps = (2 to MmrK).map { t =>
-      s"""st$t AS (
+      s"""st$t AS MATERIALIZED (
          |  SELECT p.qid, p.did, p.rel - MAX(s.sim) AS score
          |  FROM pool p
          |  JOIN sim s ON s.qid = p.qid AND s.d1 = p.did
@@ -102,11 +101,11 @@ object MmrSelect {
          |  WHERE NOT EXISTS (SELECT 1 FROM sel${t - 1} v2
          |                    WHERE v2.qid = p.qid AND v2.did = p.did)
          |  GROUP BY p.qid, p.did, p.rel),
-         |pk$t AS (
+         |pk$t AS MATERIALIZED (
          |  SELECT qid, did, $t AS step, score FROM (
          |    SELECT qid, did, score, ROW_NUMBER() OVER (PARTITION BY qid
          |      ORDER BY score DESC, did) AS rn FROM st$t) WHERE rn = 1),
-         |sel$t AS (SELECT * FROM sel${t - 1} UNION ALL
+         |sel$t AS MATERIALIZED (SELECT * FROM sel${t - 1} UNION ALL
          |          SELECT * FROM pk$t)""".stripMargin
     }.mkString(",\n")
     s"""WITH q AS (
@@ -137,7 +136,7 @@ object MmrSelect {
       |  JOIN nrm nx ON nx.vec_id = p1.did
       |  JOIN nrm ny ON ny.vec_id = p2.did, range(1, 65) t(i)
       |  GROUP BY p1.qid, p1.did, p2.did, nx.nrm, ny.nrm),
-      |sel1 AS (
+      |sel1 AS MATERIALIZED (
       |  SELECT qid, did, 1 AS step, rel AS score FROM (
       |    SELECT qid, did, rel, ROW_NUMBER() OVER (PARTITION BY qid
       |      ORDER BY rel DESC, did) AS rn FROM pool) WHERE rn = 1),

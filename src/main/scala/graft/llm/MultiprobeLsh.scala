@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 import graft.functions.VectorFunctions._
@@ -53,10 +54,11 @@ object MultiprobeLsh {
   def multiprobeAnn(e0: DataFrame): DataFrame = {
     val s = e0.sparkSession
     import s.implicits._
-    val sigs = e0.select($"vec_id", $"embedding",
-      norm_q20($"embedding").as("norm"),
-      srp_bucket($"embedding", MpPlanes, MpSeed).cast("long").as("bucket"))
-      .localCheckpoint() // index side AND probe side read it
+    // index side AND probe side read it
+    val sigs = PlanBridge.checkpointResetStats(
+      e0.select($"vec_id", $"embedding",
+        norm_q20($"embedding").as("norm"),
+        srp_bucket($"embedding", MpPlanes, MpSeed).cast("long").as("bucket")))
     val wCap = Window.partitionBy($"bucket")
       .orderBy(xxhash64($"vec_id"), $"vec_id")
     val index = sigs

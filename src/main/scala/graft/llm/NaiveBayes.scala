@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -140,8 +141,9 @@ object NaiveBayes {
     val trainTok = train
       .select($"lang", explode(split($"text", " ")).as("term"))
       .filter($"term" =!= "")
-    val counts = trainTok.groupBy($"lang", $"term")
-      .agg(count(lit(1)).as("c")).localCheckpoint()
+    val counts = PlanBridge.checkpointResetStats(
+      trainTok.groupBy($"lang", $"term")
+        .agg(count(lit(1)).as("c")))
     // |langs|-bounded driver frames: token totals and doc priors.
     val totals = counts.groupBy($"lang").agg(sum($"c").as("nc"))
       .as[(String, Long)].collect().toMap
@@ -259,7 +261,7 @@ object NaiveBayes {
     */
   val q323CvFolds: Q = (s, dir) => {
     import s.implicits._
-    val docs = plantedDocs(s, dir).localCheckpoint()
+    val docs = PlanBridge.checkpointResetStats(plantedDocs(s, dir))
     // emit only folds PRESENT in the data (the oracle's GROUP BY
     // doc_id % 5 shape): an empty fold must neither emit a phantom
     // row nor NPE on the null sum an empty frame aggregates to.

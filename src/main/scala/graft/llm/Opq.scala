@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -294,7 +295,8 @@ object Opq {
   val q453OpqRotation: Q = (s, dir) => {
     import s.implicits._
     val e = T.embeddings(s, dir).select($"vec_id", $"embedding")
-    val norm = ProductQuantization.normalized(e).localCheckpoint()
+    val norm = PlanBridge.checkpointResetStats(
+      ProductQuantization.normalized(e))
     // shared bounded sample (smallest xxhash64 first — the PQ fit's)
     val sample: Array[Array[Double]] = norm
       .orderBy(xxhash64($"vec_id"), $"vec_id")
@@ -310,7 +312,7 @@ object Opq {
         .zipWithIndex.map { case (c, code) => (sub, code, c) }
     }
     val (r, cbOpq) = fitOpq(sample, m, k)
-    val rot = rotate(norm, r).localCheckpoint()
+    val rot = PlanBridge.checkpointResetStats(rotate(norm, r))
     val (nPq, pqMicro) = distortionMicro(norm, cbPq)
     val (nOpq, opqMicro) = distortionMicro(rot, cbOpq)
     val ok = nPq == nOpq && nPq > 0L && opqMicro < pqMicro
@@ -342,7 +344,8 @@ object Opq {
     import s.implicits._
     val k = ProductQuantization.CodebookSize
     val e = T.embeddings(s, dir).select($"vec_id", $"embedding")
-    val norm = ProductQuantization.normalized(e).localCheckpoint()
+    val norm = PlanBridge.checkpointResetStats(
+      ProductQuantization.normalized(e))
     val sample: Array[Array[Double]] = norm
       .orderBy(xxhash64($"vec_id"), $"vec_id")
       .limit(ProductQuantization.PqSampleSize)
@@ -372,13 +375,13 @@ object Opq {
     val d2 = aggregate(
       zip_with($"embedding", $"cent", (a, b) => (a - b) * (a - b)),
       lit(0.0), (acc, d) => acc + d)
-    val residuals = norm.crossJoin(broadcast(cb1Df))
-      .groupBy($"vec_id", $"embedding")
-      .agg(min(struct(d2.as("d"), $"code".as("code"), $"cent".as("cent")))
-        .getField("cent").as("c1"))
-      .select($"vec_id",
-        zip_with($"embedding", $"c1", (a, b) => a - b).as("embedding"))
-      .localCheckpoint()
+    val residuals = PlanBridge.checkpointResetStats(
+      norm.crossJoin(broadcast(cb1Df))
+        .groupBy($"vec_id", $"embedding")
+        .agg(min(struct(d2.as("d"), $"code".as("code"), $"cent".as("cent")))
+          .getField("cent").as("c1"))
+        .select($"vec_id",
+          zip_with($"embedding", $"c1", (a, b) => a - b).as("embedding")))
     val (n1, one) = distortionMicro(norm, cb1Rows, m = 1)
     val (n2, two) = distortionMicro(residuals, cb2Rows, m = 1)
     val ok = n1 == n2 && n1 > 0L && two < one

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -60,8 +61,8 @@ object PhoneticBlocking {
   def phoneticTable(dict: DataFrame): DataFrame = {
     val s = dict.sparkSession
     import s.implicits._
-    val coded = dict.select($"w", soundex($"w").as("code"))
-      .localCheckpoint()
+    val coded = PlanBridge.checkpointResetStats(
+      dict.select($"w", soundex($"w").as("code")))
     val sizes = coded.groupBy($"code").agg(count(lit(1)).as("block_n"))
     val best = coded.as("a").join(coded.as("b"),
         $"a.code" === $"b.code" && $"a.w" =!= $"b.w")

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -296,8 +297,9 @@ object ProductQuantization {
     val corpusCells = VectorSearch.centroidCellsJoin(e, cents)
     // PQ leg: subspace codebooks, corpus encoded once
     val pcb = fitPq(e)
-    val indexed = encode(e, pcb).join(corpusCells, "vec_id")
-      .localCheckpoint() // reused by the probe join; one bounded frame
+    // reused by the probe join; one bounded frame
+    val indexed = PlanBridge.checkpointResetStats(
+      encode(e, pcb).join(corpusCells, "vec_id"))
     // queries probe their top-ranked cells
     val twins = VectorSearch.plantedTwins(e)
     val probes = math.min(cents.size, VectorSearch.IvfProbes)

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -40,7 +41,8 @@ object RandomProjection {
 
   val q385JlAudit: Q = (s, dir) => {
     import s.implicits._
-    val e = T.embeddings(s, dir)
+    // both pair sides read the projected frame
+    val e = PlanBridge.checkpointResetStats(T.embeddings(s, dir)
       .filter($"vec_id" < 2L * NPairs)
       .select($"vec_id",
         expr("""transform(embedding,
@@ -49,8 +51,7 @@ object RandomProjection {
       .withColumn("y", expr(
         s"""transform(sequence(0, ${OutDims - 1}),
            |  j -> aggregate(sequence(0, size(qv) - 1), CAST(0 AS BIGINT),
-           |    (acc, i) -> acc + IF($SignSql, qv[i], -qv[i])))""".stripMargin))
-      .localCheckpoint() // both pair sides read the projected frame
+           |    (acc, i) -> acc + IF($SignSql, qv[i], -qv[i])))""".stripMargin)))
     val a = e.select(($"vec_id" / 2).cast("long").as("pair_id"),
       $"qv".as("qa"), $"y".as("ya")).filter($"vec_id" % 2 === 0)
     val b = e.select(($"vec_id" / 2).cast("long").as("pair_id"),

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -58,8 +59,9 @@ object RefinedServe {
       e, VectorSearch.ivfCellCount(e.count()))
     val corpusCells = VectorSearch.centroidCellsJoin(e, cents)
     val pcb = ProductQuantization.fitPq(e)
-    val indexed = ProductQuantization.encode(e, pcb)
-      .join(corpusCells, "vec_id").localCheckpoint()
+    val indexed = PlanBridge.checkpointResetStats(
+      ProductQuantization.encode(e, pcb)
+        .join(corpusCells, "vec_id"))
     val twins = VectorSearch.plantedTwins(e)
     val probes = math.min(cents.size, VectorSearch.IvfProbes)
     val qcells = VectorSearch.ivfRanked(
@@ -69,7 +71,8 @@ object RefinedServe {
     val lut = ProductQuantization.adcLut(queries, pcb)
     val pairs = qcells.join(indexed, "cell")
       .select($"qid", $"vec_id", $"codes")
-    val shortlist = adcTopR(pairs, lut, RefineR).localCheckpoint()
+    val shortlist = PlanBridge.checkpointResetStats(
+      adcTopR(pairs, lut, RefineR))
 
     // plain ADC answer = shortlist head (rank 1 by adc_d2)
     val adcTop1 = graft.plans.TopK.perGroup(shortlist,

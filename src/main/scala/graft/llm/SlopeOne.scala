@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -52,11 +53,10 @@ object SlopeOne {
 
   val q533SlopeOne: Q = (s, dir) => {
     import s.implicits._
-    val ratings = T.lineitem(s, dir)
+    val ratings = PlanBridge.checkpointResetStats(T.lineitem(s, dir)
       .join(T.orders(s, dir), $"l_orderkey" === $"o_orderkey")
       .groupBy($"o_custkey".as("c"), $"l_partkey".as("p"))
-      .agg(sum(expr("CAST(FLOOR(l_quantity) AS BIGINT)")).as("r"))
-      .localCheckpoint()
+      .agg(sum(expr("CAST(FLOOR(l_quantity) AS BIGINT)")).as("r")))
     val holdout = ratings
       .filter(expr("substring(md5(concat(CAST(c AS STRING), ':', " +
         s"CAST(p AS STRING))), 1, 3) < '$SoHoldoutPrefix'"))

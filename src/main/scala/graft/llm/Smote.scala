@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -106,11 +107,10 @@ object Smote {
     // computed once per side" rule — recomputing them inside the |M|²
     // join tripled the per-pair array work, measured 69.8 s → 23.9 s
     // at the sf1 slice's 2k-member minority)
-    val m = e.join(broadcast(minority), "label")
+    val m = PlanBridge.checkpointResetStats(e.join(broadcast(minority), "label")
       .withColumn("nrm", sqrt(expr(
         "aggregate(zip_with(qv, qv, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")
-        .cast("double")))
-      .localCheckpoint()
+        .cast("double"))))
     // one cheap count picks the path — the r15 verdict note: the
     // unconditional broadcast had no size guard, so a huge "minority"
     // OOMed the driver/executors instead of degrading gracefully

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -52,8 +53,6 @@ import graft.core.{Tables => T}
   * log(maxdoc) sort rounds once and then answers ANY threshold.
   */
 object SuffixArray {
-  private def ckpt(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.graftbridge.PlanBridge.checkpointResetStats(df)
 
 
   type Q = (SparkSession, String) => DataFrame
@@ -108,7 +107,7 @@ object SuffixArray {
     val s = stream.sparkSession
     import s.implicits._
     val vocab = denseRank(stream.select($"tok"), Seq("tok"))
-    var ranks = ckpt(stream.join(vocab, "tok")
+    var ranks = PlanBridge.checkpointResetStats(stream.join(vocab, "tok")
       .select($"gpos", $"rank".as("r")))
     var levels = List((1L, ranks))
     var len = 1L
@@ -118,7 +117,7 @@ object SuffixArray {
         .join(shifted, Seq("gpos"), "left")
         .select($"gpos", $"r1", coalesce($"r2", lit(-1L)).as("r2"))
       val rk = denseRank(paired.select($"r1", $"r2"), Seq("r1", "r2"))
-      ranks = ckpt(paired.join(rk, Seq("r1", "r2"))
+      ranks = PlanBridge.checkpointResetStats(paired.join(rk, Seq("r1", "r2"))
         .select($"gpos", $"rank".as("r")))
       len *= 2
       levels ::= (len, ranks)
@@ -146,11 +145,11 @@ object SuffixArray {
       levels: Seq[(Long, DataFrame)]): DataFrame = {
     val s = adj.sparkSession
     import s.implicits._
-    var cur = ckpt(adj.withColumn("lcp", lit(0L)))
+    var cur = PlanBridge.checkpointResetStats(adj.withColumn("lcp", lit(0L)))
     for ((len, rk) <- levels.sortBy(-_._1)) {
       val ri = rk.select($"gpos".as("gi"), $"r".as("ri"))
       val rj = rk.select($"gpos".as("gj"), $"r".as("rj"))
-      cur = ckpt(cur
+      cur = PlanBridge.checkpointResetStats(cur
         .join(ri, cur("i") + cur("lcp") === ri("gi"), "left")
         .join(rj, cur("j") + cur("lcp") === rj("gj"), "left")
         .select(cur("i"), cur("j"),
@@ -178,12 +177,11 @@ object SuffixArray {
         docs.select($"doc_id", (size($"toks") + 1).cast("long").as("ntok")),
         Seq($"doc_id"), "ntok", "cum")
       .select($"doc_id", ($"cum" - $"ntok").as("off"))
-    val stream = docs.join(offs, "doc_id")
+    val stream = PlanBridge.checkpointResetStats(docs.join(offs, "doc_id")
       .select($"doc_id", $"off", posexplode(concat($"toks",
         array(concat(lit("\u0000"), $"doc_id".cast("string")))))
         .as(Seq("pos", "tok")))
-      .select(($"off" + $"pos").as("gpos"), $"doc_id", $"pos", $"tok")
-      .localCheckpoint()
+      .select(($"off" + $"pos").as("gpos"), $"doc_id", $"pos", $"tok"))
     (stream, maxDocLen)
   }
 

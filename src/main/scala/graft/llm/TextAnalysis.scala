@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -374,11 +375,10 @@ object TextAnalysis {
     // one row per distinct (doc, trigram)) where the r7 spelling
     // exploded every OCCURRENCE and shuffled ~4M rows/sf0.1 through a
     // corpus-wide 3-key hash aggregate before reaching this same frame.
-    val tg = docs.filter(length($"text") >= 3)
+    val tg = PlanBridge.checkpointResetStats(docs.filter(length($"text") >= 3)
       .select($"doc_id", $"lang",
         explode(graft.functions.TextFunctions.countValues(tgArr))
-          .as(Seq("tg", "c")))
-      .localCheckpoint() // two consumers (profile, scoring); cut once
+          .as(Seq("tg", "c")))) // two consumers (profile, scoring); cut once
     val prof = tg.groupBy($"lang", $"tg").agg(sum($"c").as("cnt"))
     val wRank = Window.partitionBy($"lang").orderBy($"cnt".desc, $"tg".asc)
     val top = prof
@@ -452,9 +452,9 @@ object TextAnalysis {
     */
   val q250ClassifierEval: Q = (s, dir) => {
     import s.implicits._
-    val cells = classifyCore(s, dir)
-      .groupBy($"lang", $"pred_lang").agg(count(lit(1)).as("n"))
-      .localCheckpoint() // tiny; consumed by four derivations below
+    // tiny; consumed by four derivations below
+    val cells = PlanBridge.checkpointResetStats(classifyCore(s, dir)
+      .groupBy($"lang", $"pred_lang").agg(count(lit(1)).as("n")))
     val rowM = cells.groupBy($"lang").agg(sum($"n").as("n_row"))
     val colM = cells.groupBy($"pred_lang").agg(sum($"n").as("n_col"))
     val pe = rowM.join(colM, rowM("lang") === colM("pred_lang"))

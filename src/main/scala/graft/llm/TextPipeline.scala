@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -226,7 +227,7 @@ object TextPipeline {
       .map(t => tokenize(docs).filter($"term" === t)
         .select($"doc_id").distinct())
       .reduce(_.intersect(_))
-    val relRanks = ranked.join(rel, "doc_id").localCheckpoint()
+    val relRanks = PlanBridge.checkpointResetStats(ranked.join(rel, "doc_id"))
     relRanks.agg(
         count(lit(1)).as("n_relevant"),
         sum(when($"rank" <= 10, 1L).otherwise(0L)).as("hits_at_10"),
@@ -1057,10 +1058,10 @@ object TextPipeline {
     */
   def bm25ScoresMicro(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docs = T.documents(s, dir)
+    // feeds avgdl, tf, and dl
+    val docs = PlanBridge.checkpointResetStats(T.documents(s, dir)
       .select($"doc_id", split($"text", " ").as("ws"))
-      .select($"doc_id", $"ws", size($"ws").cast("long").as("dl"))
-      .localCheckpoint() // feeds avgdl, tf, and dl
+      .select($"doc_id", $"ws", size($"ws").cast("long").as("dl")))
     val stats = docs.agg(count(lit(1)).as("n_docs"),
       sum($"dl").as("sum_dl"))
     val tf = docs
@@ -1154,17 +1155,16 @@ object TextPipeline {
     */
   def qlScoresMicro(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docs = T.documents(s, dir)
+    // feeds |C|, tf, and the candidate dl
+    val docs = PlanBridge.checkpointResetStats(T.documents(s, dir)
       .select($"doc_id", split($"text", " ").as("ws"))
-      .select($"doc_id", $"ws", size($"ws").cast("long").as("dl"))
-      .localCheckpoint() // feeds |C|, tf, and the candidate dl
+      .select($"doc_id", $"ws", size($"ws").cast("long").as("dl")))
     val totals = docs.agg(sum($"dl").as("sum_dl"))
-    val tf = docs
+    val tf = PlanBridge.checkpointResetStats(docs
       .select($"doc_id", $"dl", explode($"ws").as("tok"))
       .filter($"tok".isin(Bm25Query: _*))
       .groupBy($"doc_id", $"dl", $"tok")
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // feeds cf, candidates, and the cells
+      .agg(count(lit(1)).as("tf"))) // feeds cf, candidates, and the cells
     val terms = tf.groupBy($"tok").agg(sum($"tf").as("cf"))
       .crossJoin(totals)
     val cand = tf.select($"doc_id", $"dl").distinct()
@@ -1264,10 +1264,9 @@ object TextPipeline {
     */
   val q460Rm3Feedback: Q = (s, dir) => {
     import s.implicits._
-    val docs = T.documents(s, dir)
+    val docs = PlanBridge.checkpointResetStats(T.documents(s, dir)
       .select($"doc_id", split($"text", " ").as("ws"))
-      .select($"doc_id", $"ws", size($"ws").cast("long").as("dl"))
-      .localCheckpoint()
+      .select($"doc_id", $"ws", size($"ws").cast("long").as("dl")))
     val totals = docs.agg(sum($"dl").as("sum_dl"))
     // feedback set: q374's ranking, top FbDocs
     val fb = qlScoresMicro(s, dir)
@@ -1275,7 +1274,7 @@ object TextPipeline {
       .limit(FbDocs)
       .select($"doc_id")
     // relevance model over the feedback docs (uniform doc weights)
-    val rw = docs.join(fb, "doc_id")
+    val rw = PlanBridge.checkpointResetStats(docs.join(fb, "doc_id")
       .select($"doc_id", $"dl", explode($"ws").as("tok"))
       .groupBy($"doc_id", $"dl", $"tok")
       .agg(count(lit(1)).as("tf"))
@@ -1283,8 +1282,7 @@ object TextPipeline {
       .groupBy($"tok").agg(sum($"r").as("r"))
       .filter(!$"tok".isin(Bm25Query: _*))
       .orderBy($"r".desc, $"tok".asc)
-      .limit(FbTerms)
-      .localCheckpoint()
+      .limit(FbTerms))
     // degenerate guard: if the query-term exclusion leaves NO
     // expansion terms, sum(r) is NULL — coalesce to 0 and fall back to
     // the original query alone (RM3 with an empty relevance model is
@@ -1300,14 +1298,13 @@ object TextPipeline {
           .as("w_micro"))
     val origTerms = Bm25Query.toDF("tok")
       .select($"tok", lit(Rm3AlphaMilli * 1000L / nQ).as("w_micro"))
-    val terms = origTerms.unionByName(expTerms).localCheckpoint()
+    val terms = PlanBridge.checkpointResetStats(origTerms.unionByName(expTerms))
     // corpus statistics for the expanded term set (posting-filtered)
-    val tf = docs
+    val tf = PlanBridge.checkpointResetStats(docs
       .select($"doc_id", $"dl", explode($"ws").as("tok"))
       .join(broadcast(terms.select($"tok")), "tok")
       .groupBy($"doc_id", $"dl", $"tok")
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("tf")))
     val cf = tf.groupBy($"tok").agg(sum($"tf").as("cf")).crossJoin(totals)
     val cand = tf.select($"doc_id", $"dl").distinct()
     cand.crossJoin(broadcast(cf.join(terms, "tok")))
@@ -1489,13 +1486,12 @@ object TextPipeline {
       .select($"doc_id", explode(split($"text", " ")).as("term"))
       .filter($"term".isin(Bm25QueryTerms: _*))
       .groupBy($"doc_id").agg(countDistinct($"term").cast("long").as("g"))
-    val ranked = bm25(docs, Bm25QueryTerms, n)
+    val ranked = PlanBridge.checkpointResetStats(bm25(docs, Bm25QueryTerms, n)
       .filter($"bm25" > 0.0)
       .withColumn("rank", row_number().over(w).cast("long"))
       .join(grades, Seq("doc_id"), "left").na.fill(0L, Seq("g"))
       .withColumn("gain",
-        when($"g" === 2, 3L).when($"g" === 1, 1L).otherwise(0L))
-      .localCheckpoint()
+        when($"g" === 2, 3L).when($"g" === 1, 1L).otherwise(0L)))
     val discDf = broadcast(DcgDiscounts.toDF("rank", "d"))
     val dcg = ranked.filter($"rank" <= DcgK).join(discDf, "rank")
       .agg(coalesce(sum(

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -100,12 +101,11 @@ object UnigramLm {
       : (Seq[(String, Double)], Seq[Double], Long) = {
     val s = corpus.sparkSession
     import s.implicits._
-    val words = corpus
+    val words = PlanBridge.checkpointResetStats(corpus
       .select(explode(split($"text", " ")).as("word"))
       .filter($"word".rlike("^[a-z0-9]+$"))
       .groupBy($"word").agg(count(lit(1)).as("freq"))
-      .as[(String, Long)]
-      .localCheckpoint()
+      .as[(String, Long)])
     val nWords = words.count()
 
     // candidate pieces: all substrings up to MaxPieceLen, weighted by
@@ -114,14 +114,14 @@ object UnigramLm {
     // DISTRIBUTED (TakeOrderedAndProject under orderBy+limit) so the
     // driver materializes ≤ MaxCandidates + |alphabet| rows, never the
     // full substring census.
-    val subCounts = words.flatMap { case (w, f) =>
-      for {
-        i <- 0 until w.length
-        l <- 1 to math.min(MaxPieceLen, w.length - i)
-      } yield (w.substring(i, i + l), f)
-    }.groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _)
-      .map { case (p, f) => (p, f) }
-      .localCheckpoint()
+    val subCounts = PlanBridge.checkpointResetStats(
+      words.flatMap { case (w, f) =>
+        for {
+          i <- 0 until w.length
+          l <- 1 to math.min(MaxPieceLen, w.length - i)
+        } yield (w.substring(i, i + l), f)
+      }.groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _)
+        .map { case (p, f) => (p, f) })
     val singles = subCounts.filter(_._1.length == 1).collect()
     val multis = subCounts.filter(_._1.length > 1)
       .orderBy(org.apache.spark.sql.functions.col("_2").desc,

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 import graft.functions.VectorFunctions._
@@ -578,7 +579,8 @@ object VectorSearch {
     val cells = ivfCellCount(e0.count())
     val centroids = fitCodebook(e0.select($"vec_id", $"embedding"), cells)
     val probes = math.min(centroids.size, math.max(1, minProbes))
-    val ranked = ivfRanked(e, centroids, probes).localCheckpoint()
+    val ranked = PlanBridge.checkpointResetStats(
+      ivfRanked(e, centroids, probes))
     val corpus = ranked.filter($"crank" === 1)
       .select($"cell", $"vec_id".as("nid"), $"embedding".as("eb"),
         $"norm".as("nb"))
@@ -747,11 +749,12 @@ object VectorSearch {
     val maxP = math.min(centroids.size, ProbeCurvePoints.max)
     val e = all.select($"vec_id", $"embedding",
       norm_q20($"embedding").as("norm"))
-    val ranked = ivfRanked(e, centroids, maxP).localCheckpoint()
+    val ranked = PlanBridge.checkpointResetStats(ivfRanked(e, centroids, maxP))
     // generic truth: exact brute-force top-1 over the RAW corpus (the
     // q44 frame the oracle already hash-verifies)
-    val exact = q44CosineTopk(s, dir).filter($"rank" === 1)
-      .select($"qid", $"nid".as("exact_nid")).localCheckpoint()
+    val exact = PlanBridge.checkpointResetStats(
+      q44CosineTopk(s, dir).filter($"rank" === 1)
+        .select($"qid", $"nid".as("exact_nid")))
     val w = Window.partitionBy($"qid").orderBy($"cos_sim".desc, $"nid".asc)
     val recalls = ProbeCurvePoints.map { p =>
       // one candidate frame per p: twin queries see the full planted
@@ -944,10 +947,10 @@ object VectorSearch {
         Seq($"score_micro".desc, $"doc_id".asc), "lex_rank")
       .select($"doc_id", $"lex_rank")
     val ids = T.documents(s, dir).select($"doc_id")
-    val e = T.embeddings(s, dir)
+    // query row + corpus side share the pass
+    val e = PlanBridge.checkpointResetStats(T.embeddings(s, dir)
       .join(ids, $"vec_id" === $"doc_id")
-      .select($"vec_id", $"embedding", norm_q20($"embedding").as("norm"))
-      .localCheckpoint() // query row + corpus side share the pass
+      .select($"vec_id", $"embedding", norm_q20($"embedding").as("norm")))
     val qv = e.filter($"vec_id" === 0L)
       .select($"embedding".as("ea"), $"norm".as("na"))
     val vec = fullRankGlobal(
@@ -1054,10 +1057,10 @@ object VectorSearch {
         Seq($"ql_micro".desc, $"doc_id".asc), "ql_rank")
       .select($"doc_id", $"ql_rank")
     val ids = T.documents(s, dir).select($"doc_id")
-    val e = T.embeddings(s, dir)
+    // query row + corpus side share the pass
+    val e = PlanBridge.checkpointResetStats(T.embeddings(s, dir)
       .join(ids, $"vec_id" === $"doc_id")
-      .select($"vec_id", $"embedding", norm_q20($"embedding").as("norm"))
-      .localCheckpoint() // query row + corpus side share the pass
+      .select($"vec_id", $"embedding", norm_q20($"embedding").as("norm")))
     val qv = e.filter($"vec_id" === 0L)
       .select($"embedding".as("ea"), $"norm".as("na"))
     val vec = fullRankGlobal(
@@ -1173,17 +1176,18 @@ object VectorSearch {
     */
   val q384Mips: Q = (s, dir) => {
     import s.implicits._
-    val e = T.embeddings(s, dir)
+    // query row, corpus side, and M share the pass
+    val e = PlanBridge.checkpointResetStats(T.embeddings(s, dir)
       .select($"vec_id", $"embedding",
         dot_q20($"embedding", $"embedding").as("n2"),
-        expr("aggregate(transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 0D, (a, v) -> a + v)").as("n2d"))
-      .localCheckpoint() // query row, corpus side, and M share the pass
+        expr("aggregate(transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 0D, (a, v) -> a + v)").as("n2d")))
     val qv = e.filter($"vec_id" === 0L)
       .select($"embedding".as("ea"), $"n2d".as("n2da"))
     val m2 = e.agg(max($"n2d").as("m2d"))
-    val dots = e.filter($"vec_id" =!= 0L).crossJoin(broadcast(qv))
-      .withColumn("dot_q", dot_q20($"ea", $"embedding"))
-      .localCheckpoint() // exact and augmented legs rank the same frame
+    // exact and augmented legs rank the same frame
+    val dots = PlanBridge.checkpointResetStats(
+      e.filter($"vec_id" =!= 0L).crossJoin(broadcast(qv))
+        .withColumn("dot_q", dot_q20($"ea", $"embedding")))
     val exact = dots.orderBy($"dot_q".desc, $"vec_id".asc).limit(MipsTake)
       .select($"vec_id", $"dot_q")
     val aug = dots.crossJoin(broadcast(m2))

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -265,10 +266,9 @@ object VectorStats {
           .stripMargin).as("qv"))
     val mid = e.agg((((min($"vec_id") + max($"vec_id") + 1L) / 2L)
       .cast("long")).as("mid"))
-    val halves = e.crossJoin(broadcast(mid))
+    val halves = PlanBridge.checkpointResetStats(e.crossJoin(broadcast(mid))
       .select($"label", ($"vec_id" >= $"mid").as("h"),
-        posexplode($"qv").as(Seq("i", "v")))
-      .localCheckpoint() // dims cells + per-half counts
+        posexplode($"qv").as(Seq("i", "v")))) // dims cells + per-half counts
     val counts = halves.filter($"i" === 0).groupBy($"label", $"h")
       .agg(count(lit(1)).as("n"))
     val cells = halves.groupBy($"label", $"h", $"i")

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -98,11 +99,10 @@ object ViterbiSegment {
 
   val q558ViterbiSegment: Q = (s, dir) => {
     import s.implicits._
-    val words = T(s, dir, "documents")
+    val words = PlanBridge.checkpointResetStats(T(s, dir, "documents")
       .select(explode(split($"text", " ")).as("word"))
       .filter(length($"word") > 0 && length($"word") <= VsMaxWordLen)
-      .groupBy($"word").agg(count(lit(1)).as("freq"))
-      .localCheckpoint()
+      .groupBy($"word").agg(count(lit(1)).as("freq")))
     val pieceSet = fitPieces(words)
       .as[String].collect().toSet // VsTopPieces + |charset| bounded
     val bc = s.sparkContext.broadcast(pieceSet)

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -89,9 +90,10 @@ object Winnowing {
   def winnowPairs(s: SparkSession, dir: String): DataFrame =
     s.table(graft.core.IndexStore.ensure(s, "wpairs", dir) {
       import s.implicits._
-      val fp = fingerprintsOf(T.documents(s, dir)
-          .repartition(s.sparkContext.defaultParallelism))
-        .localCheckpoint() // feeds df + both join sides
+      // feeds df + both join sides
+      val fp = PlanBridge.checkpointResetStats(
+        fingerprintsOf(T.documents(s, dir)
+            .repartition(s.sparkContext.defaultParallelism)))
       val keep = fp.groupBy($"fp").agg(countDistinct($"doc_id").as("df"))
         .filter($"df" <= StopFpDf)
         .select($"fp")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** DEGREE ASSORTATIVITY (Newman PRL'02 — "do hubs attach to hubs?":
   * the Pearson correlation of endpoint degrees over the edge list; the
@@ -41,7 +42,7 @@ object Assortativity {
   def assortativity(edges0: DataFrame): DataFrame = {
     val s = edges0.sparkSession
     import s.implicits._
-    val edges = edges0.localCheckpoint()
+    val edges = PlanBridge.checkpointResetStats(edges0)
     val deg = edges.groupBy($"u").agg(count(lit(1)).as("d"))
     val paired = edges
       .join(deg.select($"u", $"d".as("du")), "u")

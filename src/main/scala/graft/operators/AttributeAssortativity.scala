@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -43,10 +44,9 @@ object AttributeAssortativity {
   def attrAssortativity(edges0: DataFrame, labels: DataFrame): DataFrame = {
     val s = edges0.sparkSession
     import s.implicits._
-    val edges = edges0
+    val edges = PlanBridge.checkpointResetStats(edges0
       .join(labels.select($"v".as("u"), $"attr".as("au")), "u")
-      .join(labels.select($"v", $"attr".as("av")), "v")
-      .localCheckpoint()
+      .join(labels.select($"v", $"attr".as("av")), "v"))
     val (m2, eSame) = edges.agg(count(lit(1)),
       sum(when($"au" === $"av", 1L).otherwise(0L)))
       .as[(Long, Long)].head()

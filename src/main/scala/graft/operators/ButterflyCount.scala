@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -52,7 +53,7 @@ object ButterflyCount {
 
   val q502Butterflies: Q = (s, dir) => {
     import s.implicits._
-    val keep = cappedEdges(s, dir).localCheckpoint()
+    val keep = PlanBridge.checkpointResetStats(cappedEdges(s, dir))
     val nEdges = keep.count()
     // Σw over the pair census equals Σ_p C(d_p, 2) — read it from the
     // degree census, never the 8.7M-row wedge explode

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -88,12 +89,11 @@ object Conductance {
       .join(T.part(s, dir), $"l_partkey" === $"p_partkey")
       .filter($"p_name".like("%gear%"))
       .select($"l_orderkey", $"l_partkey")
-    val edges = gl.as("a").join(gl.as("b"),
+    val edges = PlanBridge.checkpointResetStats(gl.as("a").join(gl.as("b"),
         $"a.l_orderkey" === $"b.l_orderkey" &&
           $"a.l_partkey" =!= $"b.l_partkey")
       .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     conductanceOf(edges, LabelPropagation.propagate(edges))
   }
 

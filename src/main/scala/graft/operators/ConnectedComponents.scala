@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** Connected components over an undirected edge list — the cluster
   * step a dedup pipeline runs AFTER pair detection: near-dup pairs
@@ -25,18 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Free the storage blocks behind a `localCheckpoint`ed frame.
-    * `Dataset.unpersist` only clears cache-manager entries (`.persist`);
-    * checkpoint blocks live under the internal RDD inside the plan's
-    * [[org.apache.spark.sql.execution.LogicalRDD]] leaf.
-    */
-  private def dropCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Labels `(id, comp)` for every node appearing in `edges`
     * (`src`/`dst` columns); `comp` is the minimum node id reachable —
     * a canonical, deterministic component representative. Nodes with
@@ -46,11 +35,11 @@ object ConnectedComponents {
       maxIter: Int = 50): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    val sym = edges.select(col(src).as("id"), col(dst).as("nbr"))
-      .union(edges.select(col(dst).as("id"), col(src).as("nbr")))
-      .localCheckpoint()
-    var labels = sym.select($"id").distinct()
-      .withColumn("comp", $"id").localCheckpoint()
+    val sym = PlanBridge.checkpointResetStats(
+      edges.select(col(src).as("id"), col(dst).as("nbr"))
+        .union(edges.select(col(dst).as("id"), col(src).as("nbr"))))
+    var labels = PlanBridge.checkpointResetStats(sym.select($"id").distinct()
+      .withColumn("comp", $"id"))
     // the frame whose checkpoint blocks may be dropped once the round
     // that superseded it has materialized (labels at round r reads the
     // round-(r-1) checkpoint, so only current + previous may be live —
@@ -71,15 +60,14 @@ object ConnectedComponents {
       // comp because labels only decrease); the previous label rides
       // along so the convergence check below is a filter over the
       // checkpointed frame, not another join against `labels`
-      val next = viaNbr.as("a")
+      val next = PlanBridge.checkpointResetStats(viaNbr.as("a")
         .join(viaNbr.select($"id".as("c0"), $"comp".as("c2")).as("b"),
           $"a.comp" === $"b.c0")
-        .select($"a.id".as("id"), $"a.old".as("old"), $"b.c2".as("comp"))
-        .localCheckpoint()
+        .select($"a.id".as("id"), $"a.old".as("old"), $"b.c2".as("comp")))
       changed = next.filter($"comp" =!= $"old").count()
       // `next` is materialized (the count above); the generation before
       // last can no longer be referenced — release its blocks
-      if (retired ne null) dropCheckpoint(retired)
+      if (retired ne null) PlanBridge.release(retired)
       retired = labels
       labels = next.select($"id", $"comp")
       iter += 1
@@ -88,8 +76,8 @@ object ConnectedComponents {
       s"connected components did not converge in $maxIter rounds")
     // the final labels are their own checkpoint — the symmetric edge
     // frame is no longer reachable through them
-    dropCheckpoint(sym)
-    if (retired ne null) dropCheckpoint(retired)
+    PlanBridge.release(sym)
+    if (retired ne null) PlanBridge.release(retired)
     labels
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** K-MEANS CORESET by SENSITIVITY SAMPLING (Feldman & Langberg
   * STOC'11; the Bachem-Lucic-Krause practical recipe) — the
@@ -54,32 +55,31 @@ object Coreset {
   def coresetStats(s: SparkSession, dir: String)
       : (Long, Long, Double, Double, Double, Double) = {
     import s.implicits._
-    val pts = graft.core.Tables.embeddings(s, dir)
-      .select($"vec_id",
-        expr(s"CAST(FLOOR(${Dbscan.DbScale} * embedding[0]) AS BIGINT)")
-          .as("x"),
-        expr(s"CAST(FLOOR(${Dbscan.DbScale} * embedding[1]) AS BIGINT)")
-          .as("y"))
-      .localCheckpoint()
+    val pts = PlanBridge.checkpointResetStats(
+      graft.core.Tables.embeddings(s, dir)
+        .select($"vec_id",
+          expr(s"CAST(FLOOR(${Dbscan.DbScale} * embedding[0]) AS BIGINT)")
+            .as("x"),
+          expr(s"CAST(FLOOR(${Dbscan.DbScale} * embedding[1]) AS BIGINT)")
+            .as("y")))
     val n = pts.count()
     val g = CellSize
     // rough solution B: occupied grid cells, center at cell middle
     val withCell = pts.select($"vec_id", $"x", $"y",
       expr(s"CAST(FLOOR(CAST(x AS DOUBLE) / $g) AS BIGINT)").as("cx"),
       expr(s"CAST(FLOOR(CAST(y AS DOUBLE) / $g) AS BIGINT)").as("cy"))
-    val cells = withCell.groupBy($"cx", $"cy")
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+    val cells = PlanBridge.checkpointResetStats(withCell.groupBy($"cx", $"cy")
+      .agg(count(lit(1)).as("cnt")))
     val nCells = cells.count()
     // d²(p, its cell center) — exact integers ×4 (center at g/2 off
     // the cell corner: use 2x−(2cx·g+g) halves to stay integral)
-    val withD = withCell.join(cells, Seq("cx", "cy"))
-      .select($"vec_id", $"x", $"y", $"cx", $"cy", $"cnt",
-        ((($"x" * 2 - ($"cx" * (2 * g) + g)) *
-          ($"x" * 2 - ($"cx" * (2 * g) + g))) +
-          (($"y" * 2 - ($"cy" * (2 * g) + g)) *
-            ($"y" * 2 - ($"cy" * (2 * g) + g)))).as("d4"))
-      .localCheckpoint()
+    val withD = PlanBridge.checkpointResetStats(
+      withCell.join(cells, Seq("cx", "cy"))
+        .select($"vec_id", $"x", $"y", $"cx", $"cy", $"cnt",
+          ((($"x" * 2 - ($"cx" * (2 * g) + g)) *
+            ($"x" * 2 - ($"cx" * (2 * g) + g))) +
+            (($"y" * 2 - ($"cy" * (2 * g) + g)) *
+              ($"y" * 2 - ($"cy" * (2 * g) + g)))).as("d4")))
     val costB4 = withD.agg(sum($"d4")).head().getLong(0)
     // sensitivity and keep-probability per point (doubles; the coin
     // threshold is re-derived identically at scoring time)
@@ -91,9 +91,8 @@ object Coreset {
       .withColumn("coin",
         conv(substring(md5(concat(lit("cs:"), $"vec_id".cast("string"))),
           1, 8), 16, 10).cast("double") / 4294967296.0)
-    val core = sens.filter($"coin" < $"q")
-      .select($"vec_id", $"x", $"y", (lit(1.0) / $"q").as("w"))
-      .localCheckpoint()
+    val core = PlanBridge.checkpointResetStats(sens.filter($"coin" < $"q")
+      .select($"vec_id", $"x", $"y", (lit(1.0) / $"q").as("w")))
     val m = core.count()
     // evaluation solutions: grid centers (sol 0) and half-cell shift
     // (sol 1) — cost(P, C) = Σ min-center d²; computed EXACTLY the

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -30,8 +31,6 @@ import graft.core.{Tables => T}
   * q101 label-propagation fixpoint (O(log n) rounds of equi-joins).
   */
 object Dbscan {
-  private def ckpt(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.graftbridge.PlanBridge.checkpointResetStats(df)
 
 
   type Q = (SparkSession, String) => DataFrame
@@ -42,11 +41,10 @@ object Dbscan {
 
   val q340Dbscan: Q = (s, dir) => {
     import s.implicits._
-    val pts = T.embeddings(s, dir)
+    val pts = PlanBridge.checkpointResetStats(T.embeddings(s, dir)
       .select($"vec_id",
         expr(s"CAST(FLOOR($DbScale * embedding[0]) AS BIGINT)").as("x"),
-        expr(s"CAST(FLOOR($DbScale * embedding[1]) AS BIGINT)").as("y"))
-      .localCheckpoint()
+        expr(s"CAST(FLOOR($DbScale * embedding[1]) AS BIGINT)").as("y")))
     cluster(pts, DbEps, DbMinPts)
   }
 
@@ -66,19 +64,18 @@ object Dbscan {
         explode(expr("""transform(sequence(-1, 1), dy -> dy)""")).as("dy"),
         $"cy")
       .select($"a", $"ax", $"ay", $"jx", ($"cy" + $"dy").as("jy"))
-    val nbr = probe.join(
+    val nbr = PlanBridge.checkpointResetStats(probe.join(
         withCell.select($"vec_id".as("b"), $"x".as("bx"), $"y".as("by"),
           $"cx".as("jx"), $"cy".as("jy")),
         Seq("jx", "jy"))
       .filter($"a" =!= $"b" &&
         ($"ax" - $"bx") * ($"ax" - $"bx") +
           ($"ay" - $"by") * ($"ay" - $"by") <= eps * eps)
-      .select($"a", $"b")
-      .localCheckpoint()
-    val core = nbr.groupBy($"a").agg(count(lit(1)).as("deg"))
-      .filter($"deg" + 1 >= minPts)
-      .select($"a".as("vec_id"))
-      .localCheckpoint()
+      .select($"a", $"b"))
+    val core = PlanBridge.checkpointResetStats(
+      nbr.groupBy($"a").agg(count(lit(1)).as("deg"))
+        .filter($"deg" + 1 >= minPts)
+        .select($"a".as("vec_id")))
     val coreEdges = nbr
       .join(core.select($"vec_id".as("a")), "a")
       .join(core.select($"vec_id".as("b")), "b")
@@ -86,9 +83,9 @@ object Dbscan {
     val comps = ConnectedComponents(coreEdges, src = "a", dst = "b")
       .select($"id".as("vec_id"), $"comp")
     // isolated core points (no core neighbor) are their own cluster
-    val coreLabeled = core.join(comps, Seq("vec_id"), "left")
-      .select($"vec_id", coalesce($"comp", $"vec_id").as("cluster"))
-      .localCheckpoint()
+    val coreLabeled = PlanBridge.checkpointResetStats(
+      core.join(comps, Seq("vec_id"), "left")
+        .select($"vec_id", coalesce($"comp", $"vec_id").as("cluster")))
     val borderLabeled = nbr
       .join(core.select($"vec_id".as("a")), Seq("a"), "left_anti")
       .join(coreLabeled.select($"vec_id".as("b"), $"cluster"), "b")
@@ -167,11 +164,10 @@ object Dbscan {
 
   val q345KnnGraph: Q = (s, dir) => {
     import s.implicits._
-    val pts = T.embeddings(s, dir)
+    val pts = PlanBridge.checkpointResetStats(T.embeddings(s, dir)
       .select($"vec_id",
         expr(s"CAST(FLOOR($DbScale * embedding[0]) AS BIGINT)").as("x"),
-        expr(s"CAST(FLOOR($DbScale * embedding[1]) AS BIGINT)").as("y"))
-      .localCheckpoint()
+        expr(s"CAST(FLOOR($DbScale * embedding[1]) AS BIGINT)").as("y")))
     val withCell = pts
       .withColumn("cx", expr(s"x div $DbEps"))
       .withColumn("cy", expr(s"y div $DbEps"))
@@ -235,11 +231,10 @@ object Dbscan {
     */
   private def nndPts(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    T.embeddings(s, dir)
+    PlanBridge.checkpointResetStats(T.embeddings(s, dir)
       .select($"vec_id",
         expr(s"CAST(FLOOR($DbScale * embedding[0]) AS BIGINT)").as("x"),
-        expr(s"CAST(FLOOR($DbScale * embedding[1]) AS BIGINT)").as("y"))
-      .localCheckpoint()
+        expr(s"CAST(FLOOR($DbScale * embedding[1]) AS BIGINT)").as("y")))
   }
 
   /** Hash-ring seed graph: each node's K' successors in xxhash order —
@@ -256,9 +251,8 @@ object Dbscan {
     import s.implicits._
     val wRing = org.apache.spark.sql.expressions.Window
       .orderBy(xxhash64($"vec_id"), $"vec_id")
-    val ring = pts.select($"vec_id")
-      .withColumn("pos", row_number().over(wRing).cast("long") - 1L)
-      .localCheckpoint()
+    val ring = PlanBridge.checkpointResetStats(pts.select($"vec_id")
+      .withColumn("pos", row_number().over(wRing).cast("long") - 1L))
     val succ = (1 to NndSeedK).map(i => ring.select($"vec_id".as("a"),
         (($"pos" + i) % n).as("spos")))
       .reduce(_ unionByName _)
@@ -294,9 +288,9 @@ object Dbscan {
       .withColumn("poff", coalesce(sum($"c").over(
         wP.rowsBetween(Long.MinValue, -1)), lit(0L)))
       .select($"pid", $"poff")
-    val ring = withRn.join(broadcast(offs), "pid")
-      .select($"vec_id", ($"poff" + $"rn" - 1L).as("pos"))
-      .localCheckpoint()
+    val ring = PlanBridge.checkpointResetStats(
+      withRn.join(broadcast(offs), "pid")
+        .select($"vec_id", ($"poff" + $"rn" - 1L).as("pos")))
     val succ = (1 to NndSeedK).map(j => ring.select($"vec_id".as("a"),
         (($"pos" + lit(1L) + pmod(xxhash64($"vec_id", lit(j)), lit(n - 1)))
           % n).as("spos")))
@@ -331,7 +325,7 @@ object Dbscan {
   private def nndRound(pts: DataFrame, working: DataFrame): DataFrame = {
     val s = pts.sparkSession
     import s.implicits._
-    val undirected = ckpt(working
+    val undirected = PlanBridge.checkpointResetStats(working
       .unionByName(working.select($"b".as("a"), $"a".as("b")))
       .distinct())
     val cand = undirected.as("e1")
@@ -360,14 +354,16 @@ object Dbscan {
     // working graph at the WORKING width K' = NndSeedK (the paper
     // over-provisions the working K relative to the target k — the
     // 2-hop frontier is what drives convergence), final answer at KnnK
-    var working = ckpt(nndTopkByDist(pts)(seedEdges, NndSeedK))
+    var working = PlanBridge.checkpointResetStats(
+      nndTopkByDist(pts)(seedEdges, NndSeedK))
     var r = 0
     while (r < rounds) {
-      working = ckpt(nndRound(pts, working))
+      working = PlanBridge.checkpointResetStats(nndRound(pts, working))
       r += 1
     }
     val afterTop = nndTopkByDist(pts)(working, KnnK)
-    val exact = q345KnnGraph(s, dir).select($"a", $"b").localCheckpoint()
+    val exact = PlanBridge.checkpointResetStats(
+      q345KnnGraph(s, dir).select($"a", $"b"))
     val nExact = exact.count()
     val rec = nndRecall(exact, nExact) _
     (n, nExact, rec(nndTopkByDist(pts)(seedEdges, KnnK)), rec(afterTop))
@@ -494,12 +490,12 @@ object Dbscan {
     // see BASELINE.md for the incremental number at sf0.1). The flag
     // is computed by the same left join that counts updates, so the
     // termination test costs no extra pass.
-    var working = ckpt(nndTopkByDist(pts)(seedEdges, NndSeedK)
-      .withColumn("is_new", lit(true)))
+    var working = PlanBridge.checkpointResetStats(
+      nndTopkByDist(pts)(seedEdges, NndSeedK).withColumn("is_new", lit(true)))
     var r = 0
     var converged = false
     while (r < maxRounds && !converged) {
-      val undirected = ckpt(working
+      val undirected = PlanBridge.checkpointResetStats(working
         .unionByName(working.select($"b".as("a"), $"a".as("b"), $"is_new"))
         .groupBy($"a", $"b").agg(max($"is_new").as("is_new")))
       val cand = undirected.as("e1")
@@ -509,10 +505,11 @@ object Dbscan {
         .filter($"a" =!= $"b")
         .unionByName(working.select($"a", $"b"))
         .distinct()
-      val next = ckpt(nndTopkByDist(pts)(cand, NndSeedK)
-        .join(working.select($"a", $"b", lit(false).as("held")),
-          Seq("a", "b"), "left")
-        .select($"a", $"b", coalesce($"held", lit(true)).as("is_new")))
+      val next = PlanBridge.checkpointResetStats(
+        nndTopkByDist(pts)(cand, NndSeedK)
+          .join(working.select($"a", $"b", lit(false).as("held")),
+            Seq("a", "b"), "left")
+          .select($"a", $"b", coalesce($"held", lit(true)).as("is_new")))
       val updates = next.filter($"is_new").count()
       working = next
       r += 1
@@ -531,7 +528,8 @@ object Dbscan {
     import s.implicits._
     val (pts, working, rounds, converged, n) = g
     val afterTop = nndTopkByDist(pts)(working.select($"a", $"b"), KnnK)
-    val exact = q345KnnGraph(s, dir).select($"a", $"b").localCheckpoint()
+    val exact = PlanBridge.checkpointResetStats(
+      q345KnnGraph(s, dir).select($"a", $"b"))
     val nExact = exact.count()
     (n, nExact, rounds, nndRecall(exact, nExact)(afterTop), converged)
   }

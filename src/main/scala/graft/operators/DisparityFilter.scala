@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** DISPARITY-FILTER BACKBONE (Serrano–Boguñá–Vespignani PNAS'09 —
   * the multiscale weighted-graph sparsifier: an edge survives iff its
@@ -66,7 +67,7 @@ object DisparityFilter {
   def backbone(wedges: DataFrame): DataFrame = {
     val s = wedges.sparkSession
     import s.implicits._
-    val edges = wedges.localCheckpoint()
+    val edges = PlanBridge.checkpointResetStats(wedges)
     val strength = edges
       .select($"i".as("n"), $"w")
       .unionAll(edges.select($"j".as("n"), $"w"))

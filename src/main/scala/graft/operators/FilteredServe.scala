@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** FILTERED VECTOR SEARCH (predicate + ANN — the "metadata filter"
   * serving pattern every production vector store exposes; Qdrant/
@@ -51,11 +52,10 @@ object FilteredServe {
       : (Long, Long, Long, Boolean) = {
     import s.implicits._
     val (pts0, graph, converged) = GraphServe.servingGraph(s, dir)
-    val pts = withCat(pts0).localCheckpoint()
+    val pts = PlanBridge.checkpointResetStats(withCat(pts0))
     // each query targets category qid mod Categories
-    val queries = GraphServe.serveQueries(pts0)
-      .withColumn("qcat", pmod($"qid", lit(Categories)))
-      .localCheckpoint()
+    val queries = PlanBridge.checkpointResetStats(GraphServe.serveQueries(pts0)
+      .withColumn("qcat", pmod($"qid", lit(Categories))))
     val nq = queries.count()
     // exact FILTERED truth: predicate pruned before distance work
     val truth = graft.plans.TopK.perGroup(
@@ -100,10 +100,9 @@ object FilteredServe {
       : (Long, Long, Long, Boolean) = {
     import s.implicits._
     val (pts0, _, _) = GraphServe.servingGraph(s, dir)
-    val pts = withCat(pts0).localCheckpoint()
-    val queries = GraphServe.serveQueries(pts0)
-      .withColumn("qcat", pmod($"qid", lit(Categories)))
-      .localCheckpoint()
+    val pts = PlanBridge.checkpointResetStats(withCat(pts0))
+    val queries = PlanBridge.checkpointResetStats(GraphServe.serveQueries(pts0)
+      .withColumn("qcat", pmod($"qid", lit(Categories))))
     val nq = queries.count()
     val truth = graft.plans.TopK.perGroup(
       GraphServe.withDist(pts0, queries)(
@@ -114,9 +113,10 @@ object FilteredServe {
       .select($"qid", $"node".as("t_node"))
     var allConverged = true
     val answers = (0L until Categories).map { c =>
-      val sub = pts.filter($"cat" === c).drop("cat").localCheckpoint()
-      val qs = queries.filter($"qcat" === c)
-        .select($"qid", $"qx", $"qy").localCheckpoint()
+      val sub = PlanBridge.checkpointResetStats(
+        pts.filter($"cat" === c).drop("cat"))
+      val qs = PlanBridge.checkpointResetStats(queries.filter($"qcat" === c)
+        .select($"qid", $"qx", $"qy"))
       val (working, _, conv, _) = Dbscan.nndConvergeFromPts(sub)
       allConverged &&= conv
       val undirected = working.select($"a", $"b")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** INCREMENTAL INSERT into the serving graph — the index-UPDATE leg a
   * real vector-serving system needs (HNSW/NSG insert semantics: new
@@ -90,16 +91,16 @@ object GraphInsert {
   def insertStats(s: SparkSession, dir: String)
       : (Long, Long, Long, Long, Boolean) = {
     import s.implicits._
-    val pts = graft.core.Tables.embeddings(s, dir)
-      .select($"vec_id",
-        expr(s"CAST(FLOOR(${Dbscan.DbScale} * embedding[0]) AS BIGINT)")
-          .as("x"),
-        expr(s"CAST(FLOOR(${Dbscan.DbScale} * embedding[1]) AS BIGINT)")
-          .as("y"))
-      .localCheckpoint()
+    val pts = PlanBridge.checkpointResetStats(
+      graft.core.Tables.embeddings(s, dir)
+        .select($"vec_id",
+          expr(s"CAST(FLOOR(${Dbscan.DbScale} * embedding[0]) AS BIGINT)")
+            .as("x"),
+          expr(s"CAST(FLOOR(${Dbscan.DbScale} * embedding[1]) AS BIGINT)")
+            .as("y")))
     val isDelta = pmod(xxhash64(lit("gins"), $"vec_id"), lit(DeltaMod)) === 0L
-    val base = pts.filter(!isDelta).localCheckpoint()
-    val delta = pts.filter(isDelta).localCheckpoint()
+    val base = PlanBridge.checkpointResetStats(pts.filter(!isDelta))
+    val delta = PlanBridge.checkpointResetStats(pts.filter(isDelta))
     val nDelta = delta.count()
     val n = pts.count()
     // base serving graph, built once per (JVM, dir); convergence read
@@ -108,8 +109,8 @@ object GraphInsert {
     val baseGraph = s.table(bt)
     // INSERT: every delta point walks the base graph as a query and
     // links to its best visited nodes (both directions)
-    val dq = delta.select($"vec_id".as("qid"), $"x".as("qx"), $"y".as("qy"))
-      .localCheckpoint()
+    val dq = PlanBridge.checkpointResetStats(
+      delta.select($"vec_id".as("qid"), $"x".as("qx"), $"y".as("qy")))
     val entries = base.select($"vec_id".as("node"))
       .orderBy(xxhash64($"node"), $"node").limit(GraphServe.Entries)
     val beam0 = graft.plans.TopK.perGroup(

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** BEAM-SEARCH SERVING over the converged NN-Descent graph — the
   * query-time leg the graph-ANN family was missing: q439/q450 BUILD
@@ -29,8 +30,6 @@ import org.apache.spark.sql.functions._
   * on BOTH sides.
   */
 object GraphServe {
-  private def ckpt(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.graftbridge.PlanBridge.checkpointResetStats(df)
 
 
   type Q = (SparkSession, String) => DataFrame
@@ -86,9 +85,8 @@ object GraphServe {
   private[graft] def serveQueries(pts: DataFrame): DataFrame = {
     val s = pts.sparkSession
     import s.implicits._
-    pts.orderBy($"vec_id").limit(QueryCount)
-      .select($"vec_id".as("qid"), $"x".as("qx"), $"y".as("qy"))
-      .localCheckpoint()
+    PlanBridge.checkpointResetStats(pts.orderBy($"vec_id").limit(QueryCount)
+      .select($"vec_id".as("qid"), $"x".as("qx"), $"y".as("qy")))
   }
 
   /** Exact per-query distance of candidate (qid, node) pairs. */
@@ -138,7 +136,7 @@ object GraphServe {
       val all = wd(expanded)
         .unionByName(beam.select($"qid", $"node", $"d2"))
         .groupBy($"qid", $"node").agg(min($"d2").as("d2"))
-      beam = ckpt(graft.plans.TopK.perGroup(all,
+      beam = PlanBridge.checkpointResetStats(graft.plans.TopK.perGroup(all,
         Seq("qid"), Seq("d2" -> true, "node" -> true), beamWidth))
       h += 1
     }
@@ -163,7 +161,7 @@ object GraphServe {
     // hash-spread entries, same for every query
     val entries = pts.select($"vec_id".as("node"))
       .orderBy(xxhash64($"node"), $"node").limit(Entries)
-    val beam0 = ckpt(graft.plans.TopK.perGroup(
+    val beam0 = PlanBridge.checkpointResetStats(graft.plans.TopK.perGroup(
       withDist(pts, queries)(
         queries.select($"qid").crossJoin(broadcast(entries))),
       Seq("qid"), Seq("d2" -> true, "node" -> true), Beam))

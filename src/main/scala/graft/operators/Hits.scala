@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -57,11 +58,10 @@ object Hits {
     */
   val q308Hits: Q = (s, dir) => {
     import s.implicits._
-    val edges = T.lineitem(s, dir)
+    val edges = PlanBridge.checkpointResetStats(T.lineitem(s, dir)
       .join(T.orders(s, dir), $"l_orderkey" === $"o_orderkey")
       .select($"o_custkey".as("u"), $"l_suppkey".as("v"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     var hubs = edges.select($"u".as("id")).distinct()
       .select($"id", lit(Scale).as("sc"))
     var auths: DataFrame = null

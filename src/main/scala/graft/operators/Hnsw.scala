@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** HNSW-STYLE LAYERED ENTRY DESCENT (Malkov & Yashunin TPAMI'18) over
   * the q456 serving graph — the production entry policy GraphServe's
@@ -69,10 +70,9 @@ object Hnsw {
     import s.implicits._
     val t = graft.core.IndexStore.ensure(s, "hnswl", dir) {
       (1 to layers).map { l =>
-        val lp = pts.where(
+        val lp = PlanBridge.checkpointResetStats(pts.where(
           pmod(xxhash64(lit("hnswl"), $"vec_id"),
-            lit(math.pow(LayerFanout.toDouble, l.toDouble).toLong)) === 0L)
-          .localCheckpoint()
+            lit(math.pow(LayerFanout.toDouble, l.toDouble).toLong)) === 0L))
         val (working, _, _, _) = Dbscan.nndConvergeFromPts(lp)
         val undirected = working.select($"a", $"b")
           .unionByName(working.select($"b".as("a"), $"a".as("b")))

@@ -79,10 +79,9 @@ object HyperBall {
       val n = nodes.count()
       hbMeta.put(graft.core.IndexStore.tableFor("hbcnt", dir),
         java.lang.Long.valueOf(n))
-      val sample = nodes
+      val sample = PlanBridge.checkpointResetStats(nodes
         .filter(pmod(xxhash64(lit("hbs"), $"node"), lit(1000L)) <
-          (lit(1000L) * HbSampleSrc / math.max(n, 1L)) + lit(1L))
-        .localCheckpoint()
+          (lit(1000L) * HbSampleSrc / math.max(n, 1L)) + lit(1L)))
       // HyperBall state: per-node sketch of {node}
       var state = PlanBridge.checkpointResetStats(
         nodes.groupBy($"node").agg(hll_sketch_agg($"node", lit(HbLgk))

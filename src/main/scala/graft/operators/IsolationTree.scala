@@ -5,6 +5,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -91,11 +92,10 @@ object IsolationTree {
   def treeStats(s: SparkSession, dir: String)
       : (Long, Long, Long, Long, Long) = {
     import s.implicits._
-    val ev = T.events(s, dir)
+    val ev = PlanBridge.checkpointResetStats(T.events(s, dir)
       .select($"event_id",
         expr("CAST(FLOOR(100 * value) AS BIGINT)").as("v"),
-        hour($"ts").cast("long").as("h"))
-      .localCheckpoint()
+        hour($"ts").cast("long").as("h")))
     val sample = ev
       .orderBy(md5(concat(lit("s:"), $"event_id".cast("string"))),
         $"event_id")
@@ -104,9 +104,8 @@ object IsolationTree {
     val tree = fitExpr(sample)
     val vMax = ev.agg(max($"v")).head().getLong(0)
     val plant = Seq((-1L, vMax * 10L, 0L)).toDF("event_id", "v", "h")
-    val scored = ev.unionByName(plant)
-      .withColumn("score_micro", expr(tree))
-      .localCheckpoint()
+    val scored = PlanBridge.checkpointResetStats(ev.unionByName(plant)
+      .withColumn("score_micro", expr(tree)))
     val plantScore = scored.filter($"event_id" === -1L)
       .select($"score_micro").head().getLong(0)
     val agg = scored.filter($"event_id" =!= -1L)
@@ -150,11 +149,10 @@ object IsolationTree {
     */
   private[graft] def forestFrame(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val ev = T.events(s, dir)
+    val ev = PlanBridge.checkpointResetStats(T.events(s, dir)
       .select($"event_id",
         expr("CAST(FLOOR(100 * value) AS BIGINT)").as("v"),
-        hour($"ts").cast("long").as("h"))
-      .localCheckpoint()
+        hour($"ts").cast("long").as("h")))
     val exprs = (0 until Trees).map { t =>
       val sample = ev
         .orderBy(md5(concat(lit(s"s$t:"), $"event_id".cast("string"))),
@@ -169,9 +167,8 @@ object IsolationTree {
       .map { case (e, i) => expr(e).as(s"t$i") }
     val withTrees = ev.unionByName(plant).select(
       ($"event_id" +: cols): _*)
-    withTrees.withColumn("score_micro",
-      (0 until Trees).map(i => col(s"t$i")).reduce(_ + _))
-      .localCheckpoint()
+    PlanBridge.checkpointResetStats(withTrees.withColumn("score_micro",
+      (0 until Trees).map(i => col(s"t$i")).reduce(_ + _)))
   }
 
   /** (n_events, plant forest score, organic ≤ plant count, min, max)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -43,13 +44,6 @@ object KCore {
   val KCoreRounds = 12
   val SupportMin = 2
 
-  private def dropCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Nodes of the k-core of an undirected simple graph given as
     * canonical edges (u < v, no duplicates), with each node's degree
     * WITHIN the core: `(part, core_deg)`.
@@ -57,27 +51,28 @@ object KCore {
   def kcore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    val e0 = edges.localCheckpoint()
+    val e0 = PlanBridge.checkpointResetStats(edges)
     def surviving(surv: DataFrame): DataFrame =
       e0.join(surv.select($"n".as("u")), Seq("u"), "left_semi")
         .join(surv.select($"n".as("v")), Seq("v"), "left_semi")
-    var surv = e0.select($"u".as("n")).union(e0.select($"v".as("n")))
-      .distinct().localCheckpoint()
+    var surv = PlanBridge.checkpointResetStats(
+      e0.select($"u".as("n")).union(e0.select($"v".as("n")))
+        .distinct())
     var retired: DataFrame = null
     var prevCount = surv.count()
     var converged = false
     var iter = 0
     while (!converged && iter < rounds) {
       val ee = surviving(surv)
-      val next = ee.select($"u".as("n")).union(ee.select($"v".as("n")))
-        .groupBy($"n").agg(count(lit(1)).as("d"))
-        .filter($"d" >= k).select($"n")
-        .localCheckpoint()
+      val next = PlanBridge.checkpointResetStats(
+        ee.select($"u".as("n")).union(ee.select($"v".as("n")))
+          .groupBy($"n").agg(count(lit(1)).as("d"))
+          .filter($"d" >= k).select($"n"))
       val nextCount = next.count()
       // monotone shrinkage: same size ⇒ same SET ⇒ fixpoint
       converged = nextCount == prevCount
       prevCount = nextCount
-      if (retired ne null) dropCheckpoint(retired)
+      if (retired ne null) PlanBridge.release(retired)
       retired = surv
       surv = next
       iter += 1
@@ -89,12 +84,12 @@ object KCore {
     // materialize the (small) core frame BEFORE releasing the edge and
     // round checkpoints it still references — the returned DataFrame is
     // consumed lazily by the caller, after this function exits
-    val out = ef.select($"u".as("part")).union(ef.select($"v".as("part")))
-      .groupBy($"part").agg(count(lit(1)).as("core_deg"))
-      .localCheckpoint()
-    dropCheckpoint(e0)
-    if (retired ne null) dropCheckpoint(retired)
-    dropCheckpoint(surv)
+    val out = PlanBridge.checkpointResetStats(
+      ef.select($"u".as("part")).union(ef.select($"v".as("part")))
+        .groupBy($"part").agg(count(lit(1)).as("core_deg")))
+    PlanBridge.release(e0)
+    if (retired ne null) PlanBridge.release(retired)
+    PlanBridge.release(surv)
     out.orderBy($"part")
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -27,8 +28,6 @@ import graft.core.{Tables => T}
   * Zero driver traffic per round; working set is one row per node.
   */
 object LabelPropagation {
-  private def ckpt(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.graftbridge.PlanBridge.checkpointResetStats(df)
 
 
   type Q = (SparkSession, String) => DataFrame
@@ -48,7 +47,7 @@ object LabelPropagation {
       val votes = edges
         .join(labels.withColumnRenamed("node", "v"), "v")
         .groupBy($"u", $"label").agg(count(lit(1)).as("n"))
-      labels = ckpt(votes
+      labels = PlanBridge.checkpointResetStats(votes
         .groupBy($"u".as("node"))
         .agg(min(struct((-$"n").as("nn"), $"label".as("l")))
           .getField("l").as("label")))
@@ -66,12 +65,11 @@ object LabelPropagation {
       .join(T.part(s, dir), $"l_partkey" === $"p_partkey")
       .filter($"p_name".like("%gear%"))
       .select($"l_orderkey", $"l_partkey")
-    val edges = gl.as("a").join(gl.as("b"),
+    val edges = PlanBridge.checkpointResetStats(gl.as("a").join(gl.as("b"),
         $"a.l_orderkey" === $"b.l_orderkey" &&
           $"a.l_partkey" =!= $"b.l_partkey")
       .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val labels = propagate(edges)
     val sizes = labels.groupBy($"label").agg(count(lit(1)).as("community_n"))
     labels.join(sizes, "label")
@@ -160,12 +158,11 @@ object LabelPropagation {
       .join(T.part(s, dir), $"l_partkey" === $"p_partkey")
       .filter($"p_name".like("%gear%"))
       .select($"l_orderkey", $"l_partkey")
-    val edges = gl.as("a").join(gl.as("b"),
+    val edges = PlanBridge.checkpointResetStats(gl.as("a").join(gl.as("b"),
         $"a.l_orderkey" === $"b.l_orderkey" &&
           $"a.l_partkey" =!= $"b.l_partkey")
       .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     modularityOf(edges, propagate(edges))
   }
 

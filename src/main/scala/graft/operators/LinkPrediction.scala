@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** LINK PREDICTION with the RESOURCE-ALLOCATION index + an EXACT AUC
   * readout (Zhou–Lü–Zhang EPJ-B'09 for RA; Lü–Zhou Physica-A'11
@@ -74,15 +75,15 @@ object LinkPrediction {
   val q512LinkPrediction: Q = (s, dir) => {
     import s.implicits._
     val n = graft.core.Tables.customer(s, dir).count()
-    val e = lpEdges(s, dir).localCheckpoint()
+    val e = PlanBridge.checkpointResetStats(lpEdges(s, dir))
     val canon = e.filter($"u" < $"v")
     val held = expr(s"CAST(conv(substring(md5(concat('lp:', " +
       s"CAST(u AS STRING), ':', CAST(v AS STRING))), 1, 4), 16, 10) " +
       s"AS INT) % $LpHoldMod = 0")
-    val pos = canon.filter(held).localCheckpoint()
+    val pos = PlanBridge.checkpointResetStats(canon.filter(held))
     val trainCanon = canon.filter(!held)
-    val train = trainCanon.unionAll(
-      trainCanon.select($"v".as("u"), $"u".as("v"))).localCheckpoint()
+    val train = PlanBridge.checkpointResetStats(trainCanon.unionAll(
+      trainCanon.select($"v".as("u"), $"u".as("v"))))
     val deg = train.groupBy($"u").agg(count(lit(1)).as("d"))
     // negatives: one GLOBAL md5 candidate per held edge, kept iff NOT
     // an edge of the full graph (q505 rejection discipline)
@@ -92,9 +93,9 @@ object LinkPrediction {
       .filter($"w" =!= $"u")
       .select($"u", $"w".as("v"))
     val neg = negRaw.join(e, Seq("u", "v"), "left_anti").distinct()
-    val pairs = pos.select($"u", $"v", lit(1L).as("lbl"))
-      .unionAll(neg.select($"u", $"v", lit(0L).as("lbl")))
-      .localCheckpoint()
+    val pairs = PlanBridge.checkpointResetStats(
+      pos.select($"u", $"v", lit(1L).as("lbl"))
+        .unionAll(neg.select($"u", $"v", lit(0L).as("lbl"))))
     // RA score over the train graph
     val a = train.select($"u", $"v".as("w"))
     val b = train.select($"u".as("v"), $"v".as("w"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** LOCAL CLUSTERING COEFFICIENT census + GLOBAL TRANSITIVITY
   * (Watts–Strogatz Nature'98 / Newman SIAM'03 — "how clique-ish is
@@ -32,7 +33,7 @@ object LocalClustering {
   def localClustering(canonEdges: DataFrame): DataFrame = {
     val s = canonEdges.sparkSession
     import s.implicits._
-    val edges = canonEdges.localCheckpoint()
+    val edges = PlanBridge.checkpointResetStats(canonEdges)
     val deg = edges.select($"u".as("n"))
       .unionAll(edges.select($"v".as("n")))
       .groupBy($"n").agg(count(lit(1)).as("d"))

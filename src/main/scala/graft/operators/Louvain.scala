@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -35,8 +36,6 @@ import graft.core.{Tables => T}
   * (scaladoc'd, the q422 budget discipline).
   */
 object Louvain {
-  private def ckpt(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.graftbridge.PlanBridge.checkpointResetStats(df)
 
 
   type Q = (SparkSession, String) => DataFrame
@@ -99,13 +98,14 @@ object Louvain {
   def refine(edges: DataFrame, labels0: DataFrame,
       rounds: Int = Rounds): (DataFrame, Long, Long, Long) = {
     val twoM = edges.count()
-    var labels = ckpt(labels0)
+    var labels = PlanBridge.checkpointResetStats(labels0)
     val start = qScore(edges, labels, twoM)
     var best = start
     var accepted = 0L
     var r = 0
     while (r < rounds) {
-      val next = ckpt(movePass(edges, labels, twoM, r % 2))
+      val next =
+        PlanBridge.checkpointResetStats(movePass(edges, labels, twoM, r % 2))
       val sc = qScore(edges, next, twoM)
       if (sc > best) { labels = next; best = sc; accepted += 1 }
       r += 1
@@ -135,12 +135,11 @@ object Louvain {
       .join(T.part(s, dir), $"l_partkey" === $"p_partkey")
       .filter($"p_name".like("%gear%"))
       .select($"l_orderkey", $"l_partkey")
-    val edges = gl.as("a").join(gl.as("b"),
+    val edges = PlanBridge.checkpointResetStats(gl.as("a").join(gl.as("b"),
         $"a.l_orderkey" === $"b.l_orderkey" &&
           $"a.l_partkey" =!= $"b.l_partkey")
       .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // r17 optimization (guide §2.6 "overlap independent jobs"): the
     // two initializations are independent local-search chains of
     // small sequential driver actions; running them from two threads

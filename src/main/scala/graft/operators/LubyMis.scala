@@ -67,7 +67,7 @@ object LubyMis {
     while (n > 0L) {
       r += 1
       require(r <= MisMaxRounds, s"Luby did not drain in $r rounds")
-      val pl = live.withColumn("p", prio(r)).localCheckpoint()
+      val pl = PlanBridge.checkpointResetStats(live.withColumn("p", prio(r)))
       // strictest live neighbor per node under (p, id)
       val nbrMin = liveEdges
         .join(pl.select($"v".as("w"), $"p".as("pw")), $"w" === $"v")

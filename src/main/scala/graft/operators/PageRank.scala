@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -49,9 +50,10 @@ object PageRank {
   def ranks(halfEdges: DataFrame, iterations: Int = Iterations): DataFrame = {
     val s = halfEdges.sparkSession
     import s.implicits._
-    val ed = halfEdges.select($"u", $"v")
-      .union(halfEdges.select($"v".as("u"), $"u".as("v"))).localCheckpoint()
-    val deg = ed.groupBy($"u").agg(count(lit(1)).as("d")).localCheckpoint()
+    val ed = PlanBridge.checkpointResetStats(halfEdges.select($"u", $"v")
+      .union(halfEdges.select($"v".as("u"), $"u".as("v"))))
+    val deg = PlanBridge.checkpointResetStats(
+      ed.groupBy($"u").agg(count(lit(1)).as("d")))
     var r = deg.select($"u", lit(1000000L).as("r"))
     for (_ <- 1 to iterations) {
       val contrib = ed.join(r, "u").join(deg, "u")
@@ -133,19 +135,19 @@ object PageRank {
       .join(T.orders(s, dir), $"l_orderkey" === $"o_orderkey")
       .select($"o_custkey".as("u"), ($"l_suppkey" + SupplierOffset).as("v"))
       .distinct()
-    val seeds = T.customer(s, dir)
+    val seeds = PlanBridge.checkpointResetStats(T.customer(s, dir)
       .filter($"c_nationkey" === PprSeedNation)
-      .select($"c_custkey".as("u")).localCheckpoint()
+      .select($"c_custkey".as("u")))
     val nSeeds = seeds.count()
-    val ed = half.select($"u", $"v")
-      .union(half.select($"v".as("u"), $"u".as("v"))).localCheckpoint()
-    val deg = ed.groupBy($"u").agg(count(lit(1)).as("d")).localCheckpoint()
-    val e = deg.select($"u")
+    val ed = PlanBridge.checkpointResetStats(half.select($"u", $"v")
+      .union(half.select($"v".as("u"), $"u".as("v"))))
+    val deg = PlanBridge.checkpointResetStats(
+      ed.groupBy($"u").agg(count(lit(1)).as("d")))
+    val e = PlanBridge.checkpointResetStats(deg.select($"u")
       .join(seeds.select($"u", lit(1L).as("is_seed")), Seq("u"), "left")
       .select($"u",
         when($"is_seed".isNotNull, lit(1000000L / nSeeds))
-          .otherwise(lit(0L)).as("e"))
-      .localCheckpoint()
+          .otherwise(lit(0L)).as("e")))
     var r = e.select($"u", $"e".as("r"))
     for (_ <- 1 to Iterations) {
       val contrib = ed.join(r, "u").join(deg, "u")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -52,9 +53,9 @@ object RandIndex {
   def ari(la: DataFrame, lb: DataFrame): DataFrame = {
     val s = la.sparkSession
     import s.implicits._
-    val joined = la.select($"node", $"label".as("lab_a"))
-      .join(lb.select($"node", $"label".as("lab_b")), "node")
-      .localCheckpoint()
+    val joined = PlanBridge.checkpointResetStats(
+      la.select($"node", $"label".as("lab_a"))
+        .join(lb.select($"node", $"label".as("lab_b")), "node"))
     val cells = joined.groupBy($"lab_a", $"lab_b")
       .agg(count(lit(1)).as("nij"))
     val sumNij = cells.agg(
@@ -77,12 +78,11 @@ object RandIndex {
       .join(T.part(s, dir), $"l_partkey" === $"p_partkey")
       .filter($"p_name".like("%gear%"))
       .select($"l_orderkey", $"l_partkey")
-    val edges = gl.as("a").join(gl.as("b"),
+    val edges = PlanBridge.checkpointResetStats(gl.as("a").join(gl.as("b"),
         $"a.l_orderkey" === $"b.l_orderkey" &&
           $"a.l_partkey" =!= $"b.l_partkey")
       .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     ari(LabelPropagation.propagate(edges, 2),
       LabelPropagation.propagate(edges, 3))
   }

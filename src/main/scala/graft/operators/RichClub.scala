@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** RICH-CLUB COEFFICIENT curve (Zhou–Mondragón IEEE Comm. Lett.'04 —
   * "do the high-degree nodes form a club?": for every degree cutoff
@@ -30,11 +31,10 @@ object RichClub {
   def richClub(canonEdges: DataFrame): DataFrame = {
     val s = canonEdges.sparkSession
     import s.implicits._
-    val edges = canonEdges.localCheckpoint()
-    val deg = edges.select($"u".as("n"))
+    val edges = PlanBridge.checkpointResetStats(canonEdges)
+    val deg = PlanBridge.checkpointResetStats(edges.select($"u".as("n"))
       .unionAll(edges.select($"v".as("n")))
-      .groupBy($"n").agg(count(lit(1)).as("d"))
-      .localCheckpoint()
+      .groupBy($"n").agg(count(lit(1)).as("d")))
     // DENSIFY both censuses over the full degree domain so every
     // cutoff's suffix aligns exactly (a sparse key join would read 0
     // edges for a cutoff whose next PRESENT min-degree is higher)

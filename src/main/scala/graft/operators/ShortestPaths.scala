@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -55,9 +56,9 @@ object ShortestPaths {
     for (_ <- 1 to hops) {
       val relaxed = dist.join(ed, dist("node") === ed("u"))
         .select(ed("v").as("node"), (dist("dist") + ed("w")).as("dist"))
-      dist = dist.union(relaxed)
-        .groupBy($"node").agg(min($"dist").as("dist"))
-        .localCheckpoint() // cut the lineage; each round is one join+agg
+      // cut the lineage; each round is one join+agg
+      dist = PlanBridge.checkpointResetStats(dist.union(relaxed)
+        .groupBy($"node").agg(min($"dist").as("dist")))
     }
     dist
   }
@@ -71,12 +72,12 @@ object ShortestPaths {
       .join(T.part(s, dir), $"l_partkey" === $"p_partkey")
       .filter($"p_name".like("%gear%"))
       .select($"l_orderkey", $"l_partkey")
-    val edges = gl.as("a").join(gl.as("b"),
+    // computed once; every BF round re-joins it
+    val edges = PlanBridge.checkpointResetStats(gl.as("a").join(gl.as("b"),
         $"a.l_orderkey" === $"b.l_orderkey" &&
           $"a.l_partkey" =!= $"b.l_partkey")
       .groupBy($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-      .agg(countDistinct($"a.l_orderkey").as("w"))
-      .localCheckpoint() // computed once; every BF round re-joins it
+      .agg(countDistinct($"a.l_orderkey").as("w")))
     val src = edges.agg(min($"u")).head().getLong(0) // 1 scalar, bounded
     boundedSssp(edges, src)
       .select($"node", $"dist")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** SUBMODULAR DATA SELECTION by greedy FACILITY LOCATION (Nemhauser–
   * Wolsey–Fisher '78 greedy on the classic coverage objective; the
@@ -30,8 +31,6 @@ import org.apache.spark.sql.functions._
   * final Σ cover).
   */
 object SubmodularSelect {
-  private def ckpt(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftbridge.PlanBridge.checkpointResetStats(df)
 
   type Q = (SparkSession, String) => DataFrame
 
@@ -45,19 +44,18 @@ object SubmodularSelect {
   def selectStats(s: SparkSession, dir: String)
       : (Long, Long, Long, Seq[Long]) = {
     import s.implicits._
-    val pts = graft.core.Tables.embeddings(s, dir)
-      .select($"vec_id",
-        expr(s"CAST(FLOOR(${Dbscan.DbScale} * embedding[0]) AS BIGINT)")
-          .as("x"),
-        expr(s"CAST(FLOOR(${Dbscan.DbScale} * embedding[1]) AS BIGINT)")
-          .as("y"))
-      .localCheckpoint()
+    val pts = PlanBridge.checkpointResetStats(
+      graft.core.Tables.embeddings(s, dir)
+        .select($"vec_id",
+          expr(s"CAST(FLOOR(${Dbscan.DbScale} * embedding[0]) AS BIGINT)")
+            .as("x"),
+          expr(s"CAST(FLOOR(${Dbscan.DbScale} * embedding[1]) AS BIGINT)")
+            .as("y")))
     val n = pts.count()
-    val pool = pts
+    val pool = PlanBridge.checkpointResetStats(pts
       .orderBy(md5(concat(lit("sub:"), $"vec_id".cast("string"))), $"vec_id")
       .limit(PoolSize)
-      .select($"vec_id".as("c"), $"x".as("cx"), $"y".as("cy"))
-      .localCheckpoint()
+      .select($"vec_id".as("c"), $"x".as("cx"), $"y".as("cy")))
     def simTo(sel: DataFrame): DataFrame = pts.crossJoin(broadcast(sel))
       .select($"vec_id",
         greatest(lit(0L), lit(Cap) -
@@ -66,7 +64,8 @@ object SubmodularSelect {
       .groupBy($"vec_id").agg(max($"sim").as("sim"))
     // greedy rounds: marginal gain of every pool candidate vs the
     // running coverage, pick the max (ties to smaller id)
-    var cover = pts.select($"vec_id", lit(0L).as("cov")).localCheckpoint()
+    var cover = PlanBridge.checkpointResetStats(
+      pts.select($"vec_id", lit(0L).as("cov")))
     var picked = Vector.empty[Long]
     var gains = Vector.empty[Long]
     for (_ <- 1 to SelectK) {
@@ -84,11 +83,12 @@ object SubmodularSelect {
       picked :+= gain._1
       gains :+= gain._2
       val pickDf = pool.filter($"c" === gain._1)
-      cover = ckpt(pts.join(cover, "vec_id").crossJoin(broadcast(pickDf))
-        .select($"vec_id",
-          greatest($"cov", greatest(lit(0L), lit(Cap) -
-            (($"x" - $"cx") * ($"x" - $"cx") +
-              ($"y" - $"cy") * ($"y" - $"cy")))).as("cov")))
+      cover = PlanBridge.checkpointResetStats(
+        pts.join(cover, "vec_id").crossJoin(broadcast(pickDf))
+          .select($"vec_id",
+            greatest($"cov", greatest(lit(0L), lit(Cap) -
+              (($"x" - $"cx") * ($"x" - $"cx") +
+                ($"y" - $"cy") * ($"y" - $"cy")))).as("cov")))
     }
     val fGreedy = cover.agg(sum($"cov")).head().getLong(0)
     // random baseline: the PoolSize-hash pool's FIRST K by a different

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -88,13 +89,12 @@ object TriangleCount {
     import s.implicits._
     val op = T.lineitem(s, dir)
       .select($"l_orderkey", $"l_partkey").distinct()
-    val edges = op.as("a").join(op.as("b"),
+    val edges = PlanBridge.checkpointResetStats(op.as("a").join(op.as("b"),
         $"a.l_orderkey" === $"b.l_orderkey" && $"a.l_partkey" < $"b.l_partkey")
       .groupBy($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
       .agg(count(lit(1)).as("supp"))
       .filter($"supp" >= SupportMin)
-      .select($"u", $"v")
-      .localCheckpoint() // reused by 4 downstream counts; one generation
+      .select($"u", $"v")) // reused by 4 downstream counts; one generation
     triangles(edges)
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** WEISFEILER–LEMAN COLOR REFINEMENT (1-WL / color refinement —
   * Weisfeiler–Leman 1968; the node-signature iteration under graph
@@ -37,7 +38,7 @@ object WlRefinement {
 
   val q510WlRefinement: Q = (s, dir) => {
     import s.implicits._
-    val edges = KTruss.ktEdges(s, dir).localCheckpoint()
+    val edges = PlanBridge.checkpointResetStats(KTruss.ktEdges(s, dir))
     // color_0 = degree
     var colors = edges.groupBy($"u".as("node"))
       .agg(count(lit(1)).cast("string").as("color"))

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -174,7 +175,7 @@ object JoinElimination extends Rule[LogicalPlan] {
       }.flatten
       require(scans.nonEmpty && scans.forall(_.endsWith("lineitem.parquet")),
         s"join elimination did not fire; scans: $scans")
-      df.localCheckpoint() // materialize under the scoped rule
+      PlanBridge.checkpointResetStats(df) // materialize under the scoped rule
     } finally s.experimental.extraOptimizations = prev
   }
 

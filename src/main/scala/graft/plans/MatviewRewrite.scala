@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Proj
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** Optimizer rule #3 (next to TopKFilterPushdown and DistinctToBitmap):
   * MATERIALIZED-VIEW AGGREGATE REWRITE — the classic rollup-
@@ -207,7 +208,7 @@ object MatviewRewrite extends Rule[LogicalPlan] {
         s"matview rewrite did not fire; scans: $scans")
       require(!scans.exists(_.contains("graft_mvbase_")),
         s"base table still scanned: $scans")
-      df.localCheckpoint() // materialize under the scoped rule
+      PlanBridge.checkpointResetStats(df) // materialize under the scoped rule
     } finally s.experimental.extraOptimizations = prev
   }
 

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types._
 
 import graft.core.{GraftSession, Tables => T, dsl, OracleDsl => O}
@@ -657,7 +658,7 @@ object AnalyticalQueries {
     */
   val q188RecursiveReach: Q = (s, dir) => {
     registerViews(s, dir)
-    s.sql(
+    PlanBridge.checkpointResetStats(s.sql(
       """WITH gl AS (
         |  SELECT l_orderkey, l_partkey FROM lineitem
         |  JOIN part ON l_partkey = p_partkey
@@ -665,8 +666,7 @@ object AnalyticalQueries {
         |SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
         |FROM gl a JOIN gl b
         |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey"""
-        .stripMargin)
-      .localCheckpoint()
+        .stripMargin))
       .createOrReplaceTempView("copurchase_edges")
     s.sql(
       """WITH RECURSIVE reach(node, depth) AS (
@@ -742,12 +742,12 @@ object AnalyticalQueries {
     */
   val q248RfmSegments: Q = (s, dir) => {
     import s.implicits._
-    val perCust = T.orders(s, dir)
+    // three rank passes + the count share it
+    val perCust = PlanBridge.checkpointResetStats(T.orders(s, dir)
       .groupBy($"o_custkey")
       .agg(max($"o_orderdate").as("last_order"),
         count(lit(1)).as("n_orders"),
-        graft.core.dsl.dsum($"o_totalprice").as("spend"))
-      .localCheckpoint() // three rank passes + the count share it
+        graft.core.dsl.dsum($"o_totalprice").as("spend")))
     // r18 (verdict item 5): NTILE(4) under a bare global order ran the
     // whole customer frame through ONE task per metric (guide §2.5);
     // each quartile now derives from fullRankGlobal's two-level rank

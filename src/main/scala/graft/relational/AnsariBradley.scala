@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -56,11 +57,11 @@ object AnsariBradley {
   def abTest(rowsIn: DataFrame): DataFrame = {
     val s = rowsIn.sparkSession
     import s.implicits._
-    val rows = rowsIn.localCheckpoint()
+    val rows = PlanBridge.checkpointResetStats(rowsIn)
     val n = rows.count()
-    val scored = SpearmanCorr.withDoubledRank(rows, "v", "rd")
-      .withColumn("a2", least($"rd", lit(2L * (n + 1)) - $"rd"))
-      .localCheckpoint()
+    val scored = PlanBridge.checkpointResetStats(
+      SpearmanCorr.withDoubledRank(rows, "v", "rd")
+        .withColumn("a2", least($"rd", lit(2L * (n + 1)) - $"rd")))
     val (ab2, n1) = scored.filter($"g" === 1L)
       .agg(sum($"a2"), count(lit(1))).as[(Long, Long)].head()
     val (s2, q2) = scored

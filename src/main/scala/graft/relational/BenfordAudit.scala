@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -39,9 +40,8 @@ object BenfordAudit {
       .select(substring(
         expr("CAST(CAST(FLOOR(l_extendedprice) AS BIGINT) AS STRING)"),
         1, 1).cast("int").as("digit"))
-    val census = digits.groupBy($"digit")
-      .agg(count(lit(1)).as("n_obs"))
-      .localCheckpoint()
+    val census = PlanBridge.checkpointResetStats(digits.groupBy($"digit")
+      .agg(count(lit(1)).as("n_obs")))
     val n = census.agg(sum($"n_obs")).head().getLong(0)
     val exp = BenfordMicro.toDF("digit", "c_micro")
     census.join(broadcast(exp), Seq("digit"), "right")

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 import graft.functions.GraftFunctions
@@ -151,7 +152,7 @@ object BitmapQueries {
         s"DistinctToBitmap did not fire; plan:\n$plan")
       require(!plan.toLowerCase.contains("distinct"),
         s"distinct machinery survived the rewrite; plan:\n$plan")
-      df.localCheckpoint() // materialize under the scoped rule
+      PlanBridge.checkpointResetStats(df) // materialize under the scoped rule
     } finally s.experimental.extraOptimizations = prev
   }
 

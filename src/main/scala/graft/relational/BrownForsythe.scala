@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -70,7 +71,7 @@ object BrownForsythe {
   def bfTest(rowsIn: DataFrame): DataFrame = {
     val s = rowsIn.sparkSession
     import s.implicits._
-    val rows = rowsIn.localCheckpoint()
+    val rows = PlanBridge.checkpointResetStats(rowsIn)
     val ranked = QuantileNormalize.fullRank(rows, Seq("grp"),
       Seq("v", "uid"), "r")
     val ng = rows.groupBy($"grp").agg(count(lit(1)).as("n_g"))
@@ -82,9 +83,8 @@ object BrownForsythe {
           "+ IF(r = (n_g + 2) div 2, 1L, 0L)"))
       .filter($"hits" > 0L)
       .groupBy($"grp").agg(sum($"v" * $"hits").as("med2"))
-    val z = rows.join(broadcast(med), "grp")
-      .select($"grp", abs(lit(2L) * $"v" - $"med2").as("z2"))
-      .localCheckpoint()
+    val z = PlanBridge.checkpointResetStats(rows.join(broadcast(med), "grp")
+      .select($"grp", abs(lit(2L) * $"v" - $"med2").as("z2")))
     val g = z.groupBy($"grp")
       .agg(sum($"z2").as("s"), count(lit(1)).as("cnt"))
     val (sTot, qSum, k) = g

@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -44,12 +45,11 @@ object Changepoints {
   def segment(dailyIn: DataFrame): DataFrame = {
     val s = dailyIn.sparkSession
     import s.implicits._
-    val daily = dailyIn.localCheckpoint()
+    val daily = PlanBridge.checkpointResetStats(dailyIn)
     val w = Window.orderBy($"d") // calendar-bounded frame (q292 rule)
-    val idx = daily.select($"d", $"v",
+    val idx = PlanBridge.checkpointResetStats(daily.select($"d", $"v",
       row_number().over(w).cast("long").as("i"),
-      sum($"v").over(w.rowsBetween(Window.unboundedPreceding, 0)).as("cs"))
-      .localCheckpoint()
+      sum($"v").over(w.rowsBetween(Window.unboundedPreceding, 0)).as("cs")))
     val (n, sTot) = idx.agg(max($"i"), max($"cs")).as[(Long, Long)].head()
     require(n >= 4, "binary segmentation needs at least 4 days")
     def best(lo: Long, loCs: Long, hi: Long, hiCs: Long): (Long, Long) =

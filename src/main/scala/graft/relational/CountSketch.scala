@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types.LongType
 
 import graft.core.{Tables => T}
@@ -130,12 +131,11 @@ object CountSketch {
   val q501CountSketch: Q = (s, dir) => {
     import s.implicits._
     // the one corpus scan: per-key half counts
-    val counts = T.lineitem(s, dir)
+    val counts = PlanBridge.checkpointResetStats(T.lineitem(s, dir)
       .select($"l_suppkey".as("k"), $"l_linenumber")
       .groupBy($"k").agg(
         sum(when($"l_linenumber" <= 3, 1L).otherwise(0L)).as("fn"),
-        sum(when($"l_linenumber" >= 4, 1L).otherwise(0L)).as("gn"))
-      .localCheckpoint()
+        sum(when($"l_linenumber" >= 4, 1L).otherwise(0L)).as("gn")))
     // both half sketches from one explode over the key census
     val halfCells = counts
       .select($"k", $"fn", $"gn",

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -53,7 +54,7 @@ object CramerVonMises {
   def cvmTest(rowsIn: DataFrame): DataFrame = {
     val s = rowsIn.sparkSession
     import s.implicits._
-    val rows = rowsIn.localCheckpoint()
+    val rows = PlanBridge.checkpointResetStats(rowsIn)
     val pooled = SpearmanCorr.withDoubledRank(rows, "v", "rd")
     val ranked = QuantileNormalize.fullRank(pooled, Seq("g"),
       Seq("v", "uid"), "i")

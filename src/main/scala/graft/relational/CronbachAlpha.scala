@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -47,12 +48,11 @@ object CronbachAlpha {
   def alpha(dailyIn: DataFrame): DataFrame = {
     val s = dailyIn.sparkSession
     import s.implicits._
-    val daily = dailyIn.localCheckpoint()
-    val grid = daily.select($"d").distinct()
+    val daily = PlanBridge.checkpointResetStats(dailyIn)
+    val grid = PlanBridge.checkpointResetStats(daily.select($"d").distinct()
       .crossJoin(daily.select($"t").distinct())
       .join(daily, Seq("d", "t"), "left")
-      .select($"d", $"t", coalesce($"v", lit(0L)).as("v"))
-      .localCheckpoint()
+      .select($"d", $"t", coalesce($"v", lit(0L)).as("v")))
     val n = grid.select($"d").distinct().count()
     val items = grid.groupBy($"t")
       .agg(sum($"v").as("si"),

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -57,14 +58,14 @@ object CrossCorrelation {
   def ccf(daily: DataFrame): DataFrame = {
     val s = daily.sparkSession
     import s.implicits._
-    val grid = daily.select($"d").distinct()
+    // calendar-bounded; two join branches below
+    val grid = PlanBridge.checkpointResetStats(daily.select($"d").distinct()
       .join(daily.filter($"event_type" === CcfLeadType)
         .select($"d", $"c".as("x")), Seq("d"), "left")
       .join(daily.filter($"event_type" === CcfLagType)
         .select($"d", $"c".as("y")), Seq("d"), "left")
       .select($"d", coalesce($"x", lit(0L)).as("x"),
-        coalesce($"y", lit(0L)).as("y"))
-      .localCheckpoint() // calendar-bounded; two join branches below
+        coalesce($"y", lit(0L)).as("y")))
     val lags = s.range(-CcfMaxLag.toLong, CcfMaxLag + 1L)
       .select($"id".as("lag"))
     val a = grid.select($"d", $"x")

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -33,10 +34,10 @@ object DictionaryEncode {
 
   val q506DictEncode: Q = (s, dir) => {
     import s.implicits._
-    val names = T.part(s, dir).select($"p_name".as("name"))
-      .localCheckpoint()
-    val dict = QuantileNormalize.fullRank(
-      names.distinct(), Seq(), Seq("name"), "code").localCheckpoint()
+    val names = PlanBridge.checkpointResetStats(
+      T.part(s, dir).select($"p_name".as("name")))
+    val dict = PlanBridge.checkpointResetStats(QuantileNormalize.fullRank(
+      names.distinct(), Seq(), Seq("name"), "code"))
     val n = dict.count()
     val q1 = n / 4 + 1
     val q3 = 3 * n / 4 + 1

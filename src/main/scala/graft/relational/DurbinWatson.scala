@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -72,9 +73,8 @@ object DurbinWatson {
     val s = dailyIn.sparkSession
     import s.implicits._
     val wDay = Window.partitionBy($"t").orderBy($"d")
-    val idx = dailyIn
-      .withColumn("i", row_number().over(wDay).cast("long"))
-      .localCheckpoint()
+    val idx = PlanBridge.checkpointResetStats(dailyIn
+      .withColumn("i", row_number().over(wDay).cast("long")))
     val moments = idx.groupBy($"t")
       .agg(count(lit(1)).as("n"), sum($"i").as("st"),
         sum($"i" * $"i").as("stt"), sum($"x").as("sx"),

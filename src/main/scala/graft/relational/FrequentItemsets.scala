@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -44,10 +45,9 @@ object FrequentItemsets {
 
   val q563Itemsets4: Q = (s, dir) => {
     import s.implicits._
-    val op = T.lineitem(s, dir)
+    val op = PlanBridge.checkpointResetStats(T.lineitem(s, dir)
       .join(T.part(s, dir), $"l_partkey" === $"p_partkey")
-      .select($"l_orderkey", $"p_brand").distinct()
-      .localCheckpoint()
+      .select($"l_orderkey", $"p_brand").distinct())
     // Apriori level-1 prune: items in ≥ MinSupport orders
     val freq1 = op.groupBy($"p_brand")
       .agg(count(lit(1)).as("df")).filter($"df" >= MinSupport)

@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -53,13 +54,12 @@ object FriedmanTest {
   private[relational] def rankedCells(dailyIn: DataFrame): DataFrame = {
     val s = dailyIn.sparkSession
     import s.implicits._
-    val daily = dailyIn.localCheckpoint()
+    val daily = PlanBridge.checkpointResetStats(dailyIn)
     // dense complete blocks: every (day, type) cell, 0 when absent
-    val grid = daily.select($"d").distinct()
+    val grid = PlanBridge.checkpointResetStats(daily.select($"d").distinct()
       .crossJoin(daily.select($"t").distinct())
       .join(daily, Seq("d", "t"), "left")
-      .select($"d", $"t", coalesce($"v", lit(0L)).as("v"))
-      .localCheckpoint()
+      .select($"d", $"t", coalesce($"v", lit(0L)).as("v")))
     // doubled rank within each day block (tie-averaged ×2)
     val census = grid.groupBy($"d", $"v").agg(count(lit(1)).as("cnt"))
     val wDay = Window.partitionBy($"d").orderBy($"v")
@@ -77,7 +77,7 @@ object FriedmanTest {
   def friedman(dailyIn: DataFrame): DataFrame = {
     val s = dailyIn.sparkSession
     import s.implicits._
-    val cells = rankedCells(dailyIn).localCheckpoint()
+    val cells = PlanBridge.checkpointResetStats(rankedCells(dailyIn))
     val (nDays, k) = cells.agg(countDistinct($"d"), countDistinct($"t"))
       .as[(Long, Long)].head()
     val sums = cells.groupBy($"t").agg(sum($"rd").as("sj"))

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -50,12 +51,11 @@ object FunnelProportionTest {
         max(when($"event_type" === "view", 1L).otherwise(0L)).as("v"),
         max(when($"event_type" === "purchase", 1L).otherwise(0L)).as("p"))
       .withColumn("cohort", pmod($"user_id", lit(2L)))
-    val census = flags.groupBy($"cohort")
+    val census = PlanBridge.checkpointResetStats(flags.groupBy($"cohort")
       .agg(sum($"s").as("n_signup"),
         sum($"s" * $"v").as("k_signup_view"),
         sum($"v").as("n_view"),
-        sum($"v" * $"p").as("k_view_purchase"))
-      .localCheckpoint() // 2 rows; read twice below
+        sum($"v" * $"p").as("k_view_purchase"))) // 2 rows; read twice below
     def stage(name: String, nCol: String, kCol: String): DataFrame = {
       val c0 = census.filter($"cohort" === 0L)
         .select(col(nCol).as("n1"), col(kCol).as("k1"))

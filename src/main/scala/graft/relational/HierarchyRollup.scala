@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -39,13 +40,12 @@ object HierarchyRollup {
 
   val q325BomRollup: Q = (s, dir) => {
     import s.implicits._
-    val parts = T.part(s, dir)
+    val parts = PlanBridge.checkpointResetStats(T.part(s, dir)
       .select(($"p_partkey" + 1).as("k"),
         expr("(p_partkey + 1) div 10").as("parent"),
         (($"p_partkey" + 1) % 3 + 1).as("qty"),
         expr("CAST(FLOOR(100 * p_retailprice) AS BIGINT)").as("price"))
-      .withColumn("depth", length($"k".cast("string")))
-      .localCheckpoint()
+      .withColumn("depth", length($"k".cast("string"))))
     val maxDepth = parts.agg(max($"depth")).head().getInt(0)
 
     var level = parts.filter($"depth" === maxDepth)
@@ -54,11 +54,10 @@ object HierarchyRollup {
     for (d <- (maxDepth - 1) to 1 by -1) {
       val childSum = level.groupBy($"parent".as("ck"))
         .agg(sum($"qty" * $"ext").as("child_ext"))
-      level = parts.filter($"depth" === d)
+      level = PlanBridge.checkpointResetStats(parts.filter($"depth" === d)
         .join(childSum, $"k" === $"ck", "left")
         .na.fill(0L, Seq("child_ext"))
-        .select($"k", $"parent", $"qty", ($"price" + $"child_ext").as("ext"))
-        .localCheckpoint()
+        .select($"k", $"parent", $"qty", ($"price" + $"child_ext").as("ext")))
       out = out.unionAll(level.select($"k", $"ext"))
     }
     out.select(($"k" - 1).as("p_partkey"), $"ext".as("ext_cost_cents"))

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -71,14 +72,15 @@ object HodgesLehmann {
       : DataFrame = {
     val s = rowsIn.sparkSession
     import s.implicits._
-    val rows = rowsIn.localCheckpoint()
-    val cx = rows.filter($"g" === 1L).groupBy($"v")
-      .agg(count(lit(1)).as("c")).localCheckpoint()
+    val rows = PlanBridge.checkpointResetStats(rowsIn)
+    val cx = PlanBridge.checkpointResetStats(
+      rows.filter($"g" === 1L).groupBy($"v")
+        .agg(count(lit(1)).as("c")))
     val cyRaw = rows.filter($"g" === 2L).groupBy($"v")
       .agg(count(lit(1)).as("c"))
     // Y census with inclusive cumulative counts (two-level scan)
-    val cy = QuantileNormalize.fullCumSum(cyRaw, Seq(col("v")), "c", "cum")
-      .localCheckpoint()
+    val cy = PlanBridge.checkpointResetStats(
+      QuantileNormalize.fullCumSum(cyRaw, Seq(col("v")), "c", "cum"))
     val (n1, minX, maxX) = cx
       .agg(sum($"c"), min($"v"), max($"v")).as[(Long, Long, Long)].head()
     val (n2, minY, maxY) = cy

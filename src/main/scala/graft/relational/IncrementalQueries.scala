@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T, dsl, OracleDsl => O}
 
@@ -423,11 +424,11 @@ object IncrementalQueries {
     */
   val q429MergeMatrix: Q = (s, dir) => {
     import s.implicits._
-    val base = T.orders(s, dir)
+    // merge side + the insert-key shift bound
+    val base = PlanBridge.checkpointResetStats(T.orders(s, dir)
       .select($"o_orderkey".as("k"),
         expr("CAST(FLOOR(100.0 * o_totalprice) AS BIGINT)").as("p"),
-        ($"o_orderpriority" === "1-URGENT").as("urgent"))
-      .localCheckpoint() // merge side + the insert-key shift bound
+        ($"o_orderpriority" === "1-URGENT").as("urgent")))
     val maxK = base.agg(max($"k").as("maxk"))
     val changes = base.filter($"k" % 5 === 0)
       .select($"k",

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -55,7 +56,7 @@ object IntraclassCorrelation {
   def iccTest(rowsIn: DataFrame): DataFrame = {
     val s = rowsIn.sparkSession
     import s.implicits._
-    val rows = rowsIn.localCheckpoint()
+    val rows = PlanBridge.checkpointResetStats(rowsIn)
     val g = rows.groupBy($"grp")
       .agg(sum($"v").as("sg"), count(lit(1)).as("cnt"))
     val (k, sTot, nsq, qSum) = g.agg(

@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -101,7 +102,7 @@ object JonckheereTerpstra {
   def jtTest(rowsIn: DataFrame, k: Int): DataFrame = {
     val s = rowsIn.sparkSession
     import s.implicits._
-    val rows = rowsIn.localCheckpoint()
+    val rows = PlanBridge.checkpointResetStats(rowsIn)
     val ns = (1 to k).map(i => s"n$i")
     val census = rows.groupBy($"v").agg(
       sum(when($"g" === 1, 1L).otherwise(0L)).as("n1"),

@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -286,7 +287,8 @@ object JourneyQueries {
       .select($"user_id", $"event_id", unix_micros($"ts").as("t_us"),
         substring($"event_type", 1, 1).as("code"))
     val wSeq = Window.partitionBy($"user_id").orderBy($"t_us", $"event_id")
-    val paths = ev
+    // sessionize once, scan per pattern
+    val paths = PlanBridge.checkpointResetStats(ev
       .withColumn("prev_us", lag($"t_us", 1).over(wSeq))
       .withColumn("new_sess",
         when($"prev_us".isNull || $"t_us" - $"prev_us" > SessionGapUs, 1L)
@@ -297,8 +299,7 @@ object JourneyQueries {
       .agg(array_join(
         transform(
           array_sort(collect_list(struct($"t_us", $"event_id", $"code"))),
-          e => e.getField("code")), "").as("path"))
-      .localCheckpoint() // sessionize once, scan per pattern
+          e => e.getField("code")), "").as("path")))
     Patterns.map { case (name, re) =>
       paths.filter($"path".rlike(re))
         .agg(count(lit(1)).as("n_sessions"),
@@ -428,12 +429,11 @@ object JourneyQueries {
   val q305MarkovBaseline: Q = (s, dir) => {
     import s.implicits._
     val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-    val trans = T.events(s, dir)
+    val trans = PlanBridge.checkpointResetStats(T.events(s, dir)
       .select($"user_id", $"ts", $"event_id", $"event_type".as("cur"))
       .withColumn("nxt", lead($"cur", 1).over(w))
       .filter($"nxt".isNotNull)
-      .select($"cur", $"nxt")
-      .localCheckpoint() // consumed by both the fit and the eval
+      .select($"cur", $"nxt")) // consumed by both the fit and the eval
     val wArg = Window.partitionBy($"cur").orderBy($"n".desc, $"nxt".asc)
     val model = trans.groupBy($"cur", $"nxt")
       .agg(count(lit(1)).as("n"))
@@ -538,9 +538,10 @@ object JourneyQueries {
       .withColumn("rn", row_number().over(w))
     val firstConv = ev.filter($"st" === "CONV")
       .groupBy($"user_id").agg(min($"rn").as("rp"))
-    val kept = ev.join(firstConv, Seq("user_id"), "left")
-      .filter($"rp".isNull || $"rn" <= $"rp")
-      .localCheckpoint() // feeds START rows and the lead window
+    // feeds START rows and the lead window
+    val kept = PlanBridge.checkpointResetStats(
+      ev.join(firstConv, Seq("user_id"), "left")
+        .filter($"rp".isNull || $"rn" <= $"rp"))
     val wk = Window.partitionBy($"user_id").orderBy($"rn")
     val trans = kept.filter($"rn" === 1)
       .select(lit("START").as("from_state"), $"st".as("to_state"))
@@ -628,10 +629,11 @@ object JourneyQueries {
     val firstConv = ev.filter($"event_type" === "purchase")
       .groupBy($"user_id").agg(min($"rn").as("rp"))
     // converted users' distinct pre-purchase channels
-    val touched = ev.join(firstConv, Seq("user_id"))
-      .filter($"rn" < $"rp" && $"event_type" =!= "purchase")
-      .select($"user_id", $"event_type".as("channel")).distinct()
-      .localCheckpoint() // feeds the channel index and the masks
+    // feeds the channel index and the masks
+    val touched = PlanBridge.checkpointResetStats(
+      ev.join(firstConv, Seq("user_id"))
+        .filter($"rn" < $"rp" && $"event_type" =!= "purchase")
+        .select($"user_id", $"event_type".as("channel")).distinct())
     val chan = touched.select($"channel").distinct()
       .withColumn("i", row_number().over(Window.orderBy($"channel")) - 1)
     val k = chan.count().toInt
@@ -642,12 +644,13 @@ object JourneyQueries {
             .as("m")),
         Seq("user_id"), "left")
       .na.fill(0L, Seq("m"))
-    val hist = tmask.groupBy($"m").agg(count(lit(1)).as("n_conv"))
-      .localCheckpoint() // ≤2^k rows; feeds every v(S) probe
+    // ≤2^k rows; feeds every v(S) probe
+    val hist = PlanBridge.checkpointResetStats(
+      tmask.groupBy($"m").agg(count(lit(1)).as("n_conv")))
     val masks = s.range(0, 1L << k).select($"id".as("smask"))
-    val v = masks.join(hist, expr("(m & ~smask) = 0"), "left")
-      .groupBy($"smask").agg(coalesce(sum($"n_conv"), lit(0L)).as("v"))
-      .localCheckpoint()
+    val v = PlanBridge.checkpointResetStats(
+      masks.join(hist, expr("(m & ~smask) = 0"), "left")
+        .groupBy($"smask").agg(coalesce(sum($"n_conv"), lit(0L)).as("v")))
     val phi = broadcast(chan)
       .join(v.select($"smask", $"v".as("v_s")),
         expr("(smask & CAST(pow(2, i) AS BIGINT)) = 0"))
@@ -738,12 +741,13 @@ object JourneyQueries {
       .select($"user_id", unix_micros($"ts").as("t_us"), $"event_type")
     val firstTouch = ev.filter($"event_type".isin("signup", "view", "click"))
       .groupBy($"user_id").agg(min($"t_us").as("t0"))
-    val durs = ev.filter($"event_type" === "purchase")
-      .join(firstTouch, "user_id")
-      .filter($"t_us" >= $"t0")
-      .groupBy($"user_id", $"t0").agg(min($"t_us").as("tp"))
-      .select($"user_id", ($"tp" - $"t0").as("dur_us"))
-      .localCheckpoint() // count + two rank probes
+    // count + two rank probes
+    val durs = PlanBridge.checkpointResetStats(
+      ev.filter($"event_type" === "purchase")
+        .join(firstTouch, "user_id")
+        .filter($"t_us" >= $"t0")
+        .groupBy($"user_id", $"t0").agg(min($"t_us").as("tp"))
+        .select($"user_id", ($"tp" - $"t0").as("dur_us")))
     val n = durs.count()
     // r18 (verdict item 5): the global rank over the per-user duration
     // frame was a one-task window at scale — two-level scan instead

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** KENDALL τ-b at ROW scale via DISTRIBUTED INVERSION COUNTING (Kendall
   * 1938; Knight JASA'66 for the O(n log n) inversion form) — the
@@ -93,12 +94,11 @@ object KendallTau {
     val n = df.count()
     require(n > 1, "tau needs at least two rows")
     val b = TauBuckets
-    val ranked = QuantileNormalize.fullRank(
+    val ranked = PlanBridge.checkpointResetStats(QuantileNormalize.fullRank(
       QuantileNormalize.fullRank(df, Seq(), Seq("x", "y", "uid"), "rx"),
       Seq(), Seq("y", "x", "uid"), "ry")
       .withColumn("bx", expr(s"((rx - 1) * $b) div ${n}L"))
-      .withColumn("by", expr(s"((ry - 1) * $b) div ${n}L"))
-      .localCheckpoint()
+      .withColumn("by", expr(s"((ry - 1) * $b) div ${n}L")))
     // same-bx inversions: sorted by (x, y, uid), strict y-inversions
     val dX = ranked.select($"bx", $"x", $"y", $"uid")
       .as[(Long, Long, Long, Long)]

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -54,7 +55,7 @@ object KruskalWallis {
   def kwTest(rowsIn: DataFrame): DataFrame = {
     val s = rowsIn.sparkSession
     import s.implicits._
-    val rows = rowsIn.localCheckpoint()
+    val rows = PlanBridge.checkpointResetStats(rowsIn)
     val ranked = SpearmanCorr.withDoubledRank(rows, "v", "rd")
     val (qSum, k) = ranked.groupBy($"grp")
       .agg(sum($"rd").as("s"), count(lit(1)).as("cnt"))

@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{ExactDiv, Tables => T}
 
@@ -57,7 +58,7 @@ object LadRegression {
   def fit(series: DataFrame, wPos: Int, wNeg: Int): DataFrame = {
     val s = series.sparkSession
     import s.implicits._
-    val pts = series.localCheckpoint()
+    val pts = PlanBridge.checkpointResetStats(series)
     val lines = pts.as("a").join(pts.as("b"),
         $"a.g" === $"b.g" && $"a.t" < $"b.t")
       .select($"a.g".as("g"), $"a.t".as("i"), $"b.t".as("j"),
@@ -78,12 +79,11 @@ object LadRegression {
         sum($"resid".cast("decimal(38,0)")).as("lossnum"))
     val wShort = Window.partitionBy($"g")
       .orderBy($"ld", $"lossnum", $"den", $"i", $"j")
-    val short = loss
+    val short = PlanBridge.checkpointResetStats(loss
       .withColumn("ld", expr(
         "CAST(lossnum AS DOUBLE) / CAST(den AS DOUBLE)"))
       .withColumn("rk", row_number().over(wShort))
-      .filter($"rk" <= ShortK)
-      .localCheckpoint()
+      .filter($"rk" <= ShortK))
     // exact winner inside the shortlist: no rival with a strictly
     // smaller cross-multiplied loss, nor an equal loss at a smaller
     // (i, j) anchor

@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -59,14 +60,13 @@ object MatrixProfile {
   def profile(dailyIn: DataFrame): DataFrame = {
     val s = dailyIn.sparkSession
     import s.implicits._
-    val daily = dailyIn.localCheckpoint()
+    val daily = PlanBridge.checkpointResetStats(dailyIn)
     val wDay = Window.partitionBy($"t").orderBy($"d")
-    val win = daily.select($"t", $"d", $"v",
+    val win = PlanBridge.checkpointResetStats(daily.select($"t", $"d", $"v",
       row_number().over(wDay).cast("long").as("i"),
       array(($"v" +: (1 until MpLen).map(k => lead($"v", k).over(wDay))): _*)
         .as("a"))
-      .filter(element_at($"a", MpLen).isNotNull)
-      .localCheckpoint()
+      .filter(element_at($"a", MpLen).isNotNull))
     val x = win.select($"t", $"i", $"d", $"a")
     val y = win.select($"t", $"i".as("j"), $"a".as("b"))
     x.join(y, Seq("t"))

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -50,7 +51,7 @@ object MoodMedian {
   def moodTest(rowsIn: DataFrame): DataFrame = {
     val s = rowsIn.sparkSession
     import s.implicits._
-    val rows = rowsIn.localCheckpoint()
+    val rows = PlanBridge.checkpointResetStats(rowsIn)
     val n = rows.count()
     val med2 = QuantileNormalize.fullRank(rows.select($"v", $"uid"),
       Seq(), Seq("v", "uid"), "r")
@@ -63,7 +64,8 @@ object MoodMedian {
       .withColumn("above", (lit(2L) * $"v" > lit(med2)).cast("long"))
       .groupBy($"grp")
       .agg(count(lit(1)).as("n_g"), sum($"above").as("a_g"))
-    val censusP = census.localCheckpoint() // k rows; two reads below
+    val censusP = PlanBridge.checkpointResetStats(
+      census) // k rows; two reads below
     val (k, aTot) = censusP.agg(count(lit(1)), sum($"a_g"))
       .as[(Long, Long)].head()
     // second fold over the k-row census once A is known

@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -57,7 +58,8 @@ object PageTrend {
   def page(dailyIn: DataFrame): DataFrame = {
     val s = dailyIn.sparkSession
     import s.implicits._
-    val cells = FriedmanTest.rankedCells(dailyIn).localCheckpoint()
+    val cells = PlanBridge.checkpointResetStats(
+      FriedmanTest.rankedCells(dailyIn))
     val (nDays, k) = cells.agg(countDistinct($"d"), countDistinct($"t"))
       .as[(Long, Long)].head()
     // k-row frame: the window is treatment-count-bounded by definition

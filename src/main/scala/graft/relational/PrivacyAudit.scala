@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -77,10 +78,12 @@ object PrivacyAudit {
     val cust = T.customer(s, dir).select($"c_custkey")
     val ords = T.orders(s, dir).select($"o_orderkey", $"o_custkey")
     val lines = T.lineitem(s, dir).select($"l_orderkey")
-    val doomedC = cust.filter($"c_custkey" % ForgetMod === 0)
-      .localCheckpoint() // tiny key frame; feeds both hops + audit
-    val doomedO = ords.join(doomedC, $"o_custkey" === $"c_custkey")
-      .select($"o_orderkey").localCheckpoint()
+    // tiny key frame; feeds both hops + audit
+    val doomedC = PlanBridge.checkpointResetStats(
+      cust.filter($"c_custkey" % ForgetMod === 0))
+    val doomedO = PlanBridge.checkpointResetStats(
+      ords.join(doomedC, $"o_custkey" === $"c_custkey")
+        .select($"o_orderkey"))
     val afterC = cust.join(doomedC, Seq("c_custkey"), "left_anti")
     val afterO = ords.join(doomedO, Seq("o_orderkey"), "left_anti")
     val afterL = lines.join(doomedO, $"l_orderkey" === $"o_orderkey",

@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -150,11 +151,10 @@ object QuantileNormalize {
 
   val q487QuantileNorm: Q = (s, dir) => {
     import s.implicits._
-    val rows = T.lineitem(s, dir).select(
+    val rows = PlanBridge.checkpointResetStats(T.lineitem(s, dir).select(
       $"l_returnflag".as("grp"),
       expr("CAST(FLOOR(100 * l_extendedprice) AS BIGINT)").as("y"),
-      ($"l_orderkey" * 8L + $"l_linenumber").as("uid"))
-      .localCheckpoint()
+      ($"l_orderkey" * 8L + $"l_linenumber").as("uid")))
     val n = rows.count()
     val ranked = fullRank(rows, Seq("grp"), Seq("y", "uid"), "r")
     val ng = rows.groupBy($"grp").agg(count(lit(1)).as("n_g"))

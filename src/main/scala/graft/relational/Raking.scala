@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -45,9 +46,8 @@ object Raking {
 
   val q491Raking: Q = (s, dir) => {
     import s.implicits._
-    val cells = T.documents(s, dir)
-      .groupBy($"lang", $"source").agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+    val cells = PlanBridge.checkpointResetStats(T.documents(s, dir)
+      .groupBy($"lang", $"source").agg(count(lit(1)).as("n")))
     val nDocs = cells.agg(sum($"n")).as[Long].head()
     val nLang = cells.select($"lang").distinct().count()
     val nSrc = cells.select($"source").distinct().count()

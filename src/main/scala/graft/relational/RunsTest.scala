@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -54,7 +55,7 @@ object RunsTest {
   def runsTest(dailyIn: DataFrame): DataFrame = {
     val s = dailyIn.sparkSession
     import s.implicits._
-    val daily = dailyIn.localCheckpoint()
+    val daily = PlanBridge.checkpointResetStats(dailyIn)
     val wRank = Window.partitionBy($"t").orderBy($"v", $"d")
     val wAll = Window.partitionBy($"t")
     val med = daily

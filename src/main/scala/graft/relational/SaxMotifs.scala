@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -35,10 +36,9 @@ object SaxMotifs {
 
   val q511SaxMotifs: Q = (s, dir) => {
     import s.implicits._
-    val daily = T.events(s, dir)
+    val daily = PlanBridge.checkpointResetStats(T.events(s, dir)
       .groupBy($"event_type".as("t"), to_date($"ts").as("d"))
-      .agg(sum(expr("CAST(FLOOR(100 * value) AS BIGINT)")).as("v"))
-      .localCheckpoint()
+      .agg(sum(expr("CAST(FLOOR(100 * value) AS BIGINT)")).as("v")))
     // empirical quartile breakpoints: values at ranks ceil(n/4),
     // ceil(n/2), ceil(3n/4) per type (ties broken by day — total order)
     val wRank = Window.partitionBy($"t").orderBy($"v", $"d")

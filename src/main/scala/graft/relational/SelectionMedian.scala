@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -44,10 +45,10 @@ object SelectionMedian {
     */
   val q307SelectionMedian: Q = (s, dir) => {
     import s.implicits._
-    val base = T.lineitem(s, dir)
+    // two passes over the same frame
+    val base = PlanBridge.checkpointResetStats(T.lineitem(s, dir)
       .select($"l_returnflag".as("g"),
-        expr("CAST(FLOOR(100 * l_extendedprice) AS BIGINT)").as("x"))
-      .localCheckpoint() // two passes over the same frame
+        expr("CAST(FLOOR(100 * l_extendedprice) AS BIGINT)").as("x")))
     val hist = base
       .withColumn("b", expr(s"x div $BucketCents"))
       .groupBy($"g", $"b").agg(count(lit(1)).as("c"))
@@ -104,10 +105,9 @@ object SelectionMedian {
     */
   val q310SelectionPercentiles: Q = (s, dir) => {
     import s.implicits._
-    val base = T.events(s, dir)
+    val base = PlanBridge.checkpointResetStats(T.events(s, dir)
       .select($"event_type".as("g"),
-        expr("CAST(FLOOR(100 * value) AS BIGINT)").as("x"))
-      .localCheckpoint()
+        expr("CAST(FLOOR(100 * value) AS BIGINT)").as("x")))
     val hist = base
       .withColumn("b", expr(s"x div $BucketCents"))
       .groupBy($"g", $"b").agg(count(lit(1)).as("c"))
@@ -158,10 +158,9 @@ object SelectionMedian {
     */
   val q356TrimmedMean: Q = (s, dir) => {
     import s.implicits._
-    val base = T.orders(s, dir)
+    val base = PlanBridge.checkpointResetStats(T.orders(s, dir)
       .select($"o_orderpriority".as("g"),
-        expr("CAST(FLOOR(100 * o_totalprice) AS BIGINT)").as("x"))
-      .localCheckpoint()
+        expr("CAST(FLOOR(100 * o_totalprice) AS BIGINT)").as("x")))
     val hist = base
       .withColumn("b", expr(s"x div $BucketCents"))
       .groupBy($"g", $"b").agg(count(lit(1)).as("c"))
@@ -252,10 +251,9 @@ object SelectionMedian {
     */
   val q366MadOutliers: Q = (s, dir) => {
     import s.implicits._
-    val base = T.lineitem(s, dir)
+    val base = PlanBridge.checkpointResetStats(T.lineitem(s, dir)
       .select($"l_returnflag".as("g"),
-        expr("CAST(FLOOR(100 * l_extendedprice) AS BIGINT)").as("x"))
-      .localCheckpoint()
+        expr("CAST(FLOOR(100 * l_extendedprice) AS BIGINT)").as("x")))
     def medianOf(df: org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame = {
       val hist = df.withColumn("b", expr(s"x div $BucketCents"))
@@ -278,9 +276,8 @@ object SelectionMedian {
         .select($"g", $"x".as("med"))
     }
     val med = medianOf(base)
-    val devs = base.join(broadcast(med), "g")
-      .select($"g", abs($"x" - $"med").as("x"))
-      .localCheckpoint()
+    val devs = PlanBridge.checkpointResetStats(base.join(broadcast(med), "g")
+      .select($"g", abs($"x" - $"med").as("x")))
     val mad = medianOf(devs).withColumnRenamed("med", "mad")
     base.join(broadcast(med), "g").join(broadcast(mad), "g")
       .groupBy($"g")

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -43,11 +44,11 @@ object SequentialPairs {
     val li = T.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
     val o = T.orders(s, dir)
       .select($"o_orderkey", $"o_custkey", to_date($"o_orderdate").as("d"))
-    val bought = li.join(o, $"l_orderkey" === $"o_orderkey")
-      .select($"o_custkey".as("c"), $"l_partkey".as("p"), $"d",
-        $"l_orderkey".as("ok"))
-      .distinct()
-      .localCheckpoint()
+    val bought = PlanBridge.checkpointResetStats(
+      li.join(o, $"l_orderkey" === $"o_orderkey")
+        .select($"o_custkey".as("c"), $"l_partkey".as("p"), $"d",
+          $"l_orderkey".as("ok"))
+        .distinct())
     def binOf(ud: Column): Column = floor(ud / SeqWindowDays)
     val earlier = bought
       .select($"c", $"p".as("p1"), $"d".as("d1"), $"ok".as("ok1"),

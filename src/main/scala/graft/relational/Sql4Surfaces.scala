@@ -1,6 +1,7 @@
 package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -393,8 +394,8 @@ object Sql4Surfaces {
     val n2 = bern(7).count()
     // same seed ⇒ identical row set: two INDEPENDENT executions of the
     // seed-42 sample must have an empty difference in both directions
-    val runA = bern(42).localCheckpoint()
-    val runB = bern(42).localCheckpoint()
+    val runA = PlanBridge.checkpointResetStats(bern(42))
+    val runB = PlanBridge.checkpointResetStats(bern(42))
     val diff = runA.exceptAll(runB).count() + runB.exceptAll(runA).count()
     val nRows = s.sql(
       """SELECT o_orderkey FROM q455_orders TABLESAMPLE (500 ROWS)""")

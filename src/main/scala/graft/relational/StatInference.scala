@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -755,11 +756,10 @@ object StatInference {
     // parallelizes the replicate hashing; hash-repartition on the key
     // (not round-robin) skips sortBeforeRepartition. Same rows, same
     // coins, same medians — only the placement changes.
-    val base = T.orders(s, dir)
+    val base = PlanBridge.checkpointResetStats(T.orders(s, dir)
       .select($"o_orderkey",
         expr("CAST(FLOOR(o_totalprice) AS BIGINT) div 100").as("yh"))
-      .repartition(s.sparkContext.defaultParallelism, $"o_orderkey")
-      .localCheckpoint()
+      .repartition(s.sparkContext.defaultParallelism, $"o_orderkey"))
     val momRow = base.agg(count(lit(1)).as("n"), sum($"yh").as("t")).head()
     val n = momRow.getLong(0); val t = momRow.getLong(1)
     val c = t / n; val rho = t - n * c
@@ -911,14 +911,14 @@ object StatInference {
   def theilSenOn(daysIn: DataFrame): (Long, Long, Long, Long) = {
     val s = daysIn.sparkSession
     import s.implicits._
-    val days = daysIn.localCheckpoint()
+    val days = PlanBridge.checkpointResetStats(daysIn)
     val nDays = days.count()
-    val pairs = days.as("a").join(days.as("b"), $"a.d" < $"b.d")
-      .select($"a.d".as("da"), $"b.d".as("db"), $"a.r".as("ra"), $"b.r".as("rb"))
-      .select($"da", $"db", expr(
-        """CAST(FLOOR(1000000.0 * CAST(rb - ra AS DOUBLE)
-          |  / CAST(db - da AS DOUBLE)) AS BIGINT)""".stripMargin).as("sm"))
-      .localCheckpoint()
+    val pairs = PlanBridge.checkpointResetStats(
+      days.as("a").join(days.as("b"), $"a.d" < $"b.d")
+        .select($"a.d".as("da"), $"b.d".as("db"), $"a.r".as("ra"), $"b.r".as("rb"))
+        .select($"da", $"db", expr(
+          """CAST(FLOOR(1000000.0 * CAST(rb - ra AS DOUBLE)
+            |  / CAST(db - da AS DOUBLE)) AS BIGINT)""".stripMargin).as("sm")))
     val nPairs = pairs.count()
     val k = (nPairs + 1) / 2
     // bucketed selection for the k-th smallest slope
@@ -1304,11 +1304,11 @@ object StatInference {
     */
   val q357MannKendall: Q = (s, dir) => {
     import s.implicits._
-    val daily = T.events(s, dir)
+    // feeds pairs, ties, and n
+    val daily = PlanBridge.checkpointResetStats(T.events(s, dir)
       .select($"event_type", expr("CAST(ts AS DATE)").as("day"),
         expr("CAST(FLOOR(100 * value) AS BIGINT)").as("qv"))
-      .groupBy($"event_type", $"day").agg(sum($"qv").as("v"))
-      .localCheckpoint() // feeds pairs, ties, and n
+      .groupBy($"event_type", $"day").agg(sum($"qv").as("v")))
     val pairs = daily.as("a").join(daily.as("b"),
         $"a.event_type" === $"b.event_type" && $"a.day" < $"b.day")
       .groupBy($"a.event_type".as("event_type"))
@@ -1376,15 +1376,15 @@ object StatInference {
     */
   val q386KendallTau: Q = (s, dir) => {
     import s.implicits._
-    val daily = T.events(s, dir)
+    // both pair-join sides and the tie census
+    val daily = PlanBridge.checkpointResetStats(T.events(s, dir)
       .filter($"event_type".isin("click", "purchase"))
       .groupBy(date_trunc("day", $"ts").as("day"))
       .agg(
         sum(when($"event_type" === "click",
           expr("CAST(FLOOR(100 * value) AS BIGINT)")).otherwise(0L)).as("a"),
         sum(when($"event_type" === "purchase",
-          expr("CAST(FLOOR(100 * value) AS BIGINT)")).otherwise(0L)).as("b"))
-      .localCheckpoint() // both pair-join sides and the tie census
+          expr("CAST(FLOOR(100 * value) AS BIGINT)")).otherwise(0L)).as("b")))
     val l = daily.select($"day".as("di"), $"a".as("ai"), $"b".as("bi"))
     val r = daily.select($"day".as("dj"), $"a".as("aj"), $"b".as("bj"))
     val pairs = l.join(r, $"di" < $"dj")
@@ -1460,11 +1460,11 @@ object StatInference {
     */
   val q388PermTest: Q = (s, dir) => {
     import s.implicits._
-    val units = T.events(s, dir)
+    // observed stat + all R replicates
+    val units = PlanBridge.checkpointResetStats(T.events(s, dir)
       .filter($"event_type" === "purchase")
       .groupBy($"user_id")
-      .agg(sum(expr("CAST(FLOOR(100 * value) AS BIGINT)")).as("x"))
-      .localCheckpoint() // observed stat + all R replicates
+      .agg(sum(expr("CAST(FLOOR(100 * value) AS BIGINT)")).as("x")))
     val obs = units
       .agg(
         sum(when($"user_id" % 2 === 0, 1L).otherwise(0L)).as("n_a"),
@@ -1549,12 +1549,12 @@ object StatInference {
     */
   val q393EmdDrift: Q = (s, dir) => {
     import s.implicits._
-    val binned = T.events(s, dir)
+    // feeds pooled marginal, totals, and cells
+    val binned = PlanBridge.checkpointResetStats(T.events(s, dir)
       .select($"event_type",
         expr(s"CAST(FLOOR(100 * value) AS BIGINT) div $PsiBinCents")
           .as("bin"))
-      .groupBy($"event_type", $"bin").agg(count(lit(1)).as("n"))
-      .localCheckpoint() // feeds pooled marginal, totals, and cells
+      .groupBy($"event_type", $"bin").agg(count(lit(1)).as("n")))
     val pooled = binned.groupBy($"bin").agg(sum($"n").as("n_c"))
     val totT = binned.groupBy($"event_type").agg(sum($"n").as("n_t"))
     val totC = pooled.agg(sum($"n_c").as("n_cc"))
@@ -1636,10 +1636,10 @@ object StatInference {
     */
   val q396BhFdr: Q = (s, dir) => {
     import s.implicits._
-    val units = T.events(s, dir)
+    // observed stats + all R replicates
+    val units = PlanBridge.checkpointResetStats(T.events(s, dir)
       .groupBy($"event_type", $"user_id")
-      .agg(sum(expr("CAST(FLOOR(100 * value) AS BIGINT)")).as("x"))
-      .localCheckpoint() // observed stats + all R replicates
+      .agg(sum(expr("CAST(FLOOR(100 * value) AS BIGINT)")).as("x")))
     val obs = units
       .groupBy($"event_type")
       .agg(
@@ -1752,10 +1752,10 @@ object StatInference {
     */
   val q397Conformal: Q = (s, dir) => {
     import s.implicits._
-    val ev = T.events(s, dir)
+    // train moments, cal ranks, test coverage
+    val ev = PlanBridge.checkpointResetStats(T.events(s, dir)
       .select($"event_type", $"event_id", $"user_id" % 4L as "b",
-        expr("CAST(FLOOR(100 * value) AS BIGINT)").as("xc"))
-      .localCheckpoint() // train moments, cal ranks, test coverage
+        expr("CAST(FLOOR(100 * value) AS BIGINT)").as("xc")))
     val tr = ev.filter($"b" <= 1L).groupBy($"event_type")
       .agg(count(lit(1)).as("n_tr"), sum($"xc").as("s_tr"))
     val cal = ev.filter($"b" === 2L).join(broadcast(tr), "event_type")
@@ -2136,13 +2136,13 @@ object StatInference {
     */
   val q422TwoWayAnova: Q = (s, dir) => {
     import s.implicits._
-    val cells = T.events(s, dir)
+    // all four SS folds read this a·b-row frame
+    val cells = PlanBridge.checkpointResetStats(T.events(s, dir)
       .select($"event_type".as("a"), ($"user_id" % 2 === 0).as("b"),
         expr("CAST(FLOOR(100 * value) AS BIGINT)").as("x"))
       .groupBy($"a", $"b")
       .agg(count(lit(1)).as("n"), sum($"x").as("s1"),
-        sum($"x" * $"x").as("s2"))
-      .localCheckpoint() // all four SS folds read this a·b-row frame
+        sum($"x" * $"x").as("s2")))
     // every squared-sum term is micro-quantized at ITS OWN level
     // before any summation — a double SUM over cells would be
     // engine-order-dependent (the q230/q314 fold, applied to ANOVA)
@@ -2287,15 +2287,15 @@ object StatInference {
     */
   val q423MedianOfMeans: Q = (s, dir) => {
     import s.implicits._
-    val blocks = T.events(s, dir)
+    // the rank selection and the global mean
+    val blocks = PlanBridge.checkpointResetStats(T.events(s, dir)
       .select(expr(
         s"""CAST(conv(substring(md5(concat('mom:', CAST(event_id AS STRING))),
            |  1, 8), 16, 10) AS BIGINT) % $MomGroups""".stripMargin).as("blk"),
         expr("CAST(FLOOR(100 * value) AS BIGINT)").as("x"))
       .groupBy($"blk")
       .agg(count(lit(1)).as("n"), sum($"x").as("s1"))
-      .withColumn("mean", expr("CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)"))
-      .localCheckpoint() // the rank selection and the global mean
+      .withColumn("mean", expr("CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)")))
     val w = Window.orderBy($"mean", $"blk")
     val mom = blocks
       .withColumn("rk", row_number().over(w))
@@ -2348,7 +2348,8 @@ object StatInference {
     */
   val q433PostStratification: Q = (s, dir) => {
     import s.implicits._
-    val cells = T.events(s, dir)
+    // totals + the weighted fold
+    val cells = PlanBridge.checkpointResetStats(T.events(s, dir)
       .select($"event_type".as("st"), ($"user_id" % 2 === 0).as("arm_a"),
         expr("CAST(FLOOR(100 * value) AS BIGINT)").as("x"))
       .groupBy($"st")
@@ -2356,8 +2357,7 @@ object StatInference {
         sum(when($"arm_a", 1L).otherwise(0L)).as("n_a"),
         sum(when($"arm_a", $"x").otherwise(0L)).as("s_a"),
         sum(when(!$"arm_a", 1L).otherwise(0L)).as("n_b"),
-        sum(when(!$"arm_a", $"x").otherwise(0L)).as("s_b"))
-      .localCheckpoint() // totals + the weighted fold
+        sum(when(!$"arm_a", $"x").otherwise(0L)).as("s_b")))
     val tot = cells.agg(sum($"n_a" + $"n_b").as("nn"),
       sum($"s_a").as("ta"), sum($"n_a").as("na"),
       sum($"s_b").as("tb"), sum($"n_b").as("nb"))
@@ -2438,14 +2438,13 @@ object StatInference {
     val conv = ev.filter($"event_type" === "purchase")
       .groupBy($"user_id").agg(min($"ts".cast("date")).as("dp"))
     val horizon = ev.agg(max($"ts".cast("date")).as("dmax"))
-    val lifetimes = first
+    val lifetimes = PlanBridge.checkpointResetStats(first
       .join(conv, Seq("user_id"), "left")
       .crossJoin(broadcast(horizon))
       .select(($"user_id" % 2).as("grp"),
         when($"dp".isNotNull, datediff($"dp", $"d0").cast("long"))
           .otherwise(datediff($"dmax", $"d0").cast("long")).as("dur"),
-        $"dp".isNull.as("censored"))
-      .localCheckpoint()
+        $"dp".isNull.as("censored")))
     // merged event-time axis: durations with ≥1 uncensored event
     val axis = lifetimes.filter(!$"censored")
       .groupBy($"dur").agg(count(lit(1)).as("d_all"))

@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -41,11 +42,11 @@ object SurrogateKeys {
     // (counts, final numbering) would otherwise re-execute the exchange
     // with DIFFERENT boundaries — offsets from one layout applied to
     // ranks from another silently corrupts the numbering.
-    val parted = T.customer(s, dir).select($"c_custkey", $"c_name")
-      .repartitionByRange(SkPartitions, $"c_custkey")
-      .sortWithinPartitions($"c_custkey")
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
+    val parted = PlanBridge.checkpointResetStats(
+      T.customer(s, dir).select($"c_custkey", $"c_name")
+        .repartitionByRange(SkPartitions, $"c_custkey")
+        .sortWithinPartitions($"c_custkey")
+        .withColumn("pid", spark_partition_id()))
     // bounded triangular join, not a pid-ordered window (r18, verdict
     // item 5 — see QuantileNormalize.exclusivePrefix)
     val offsets = QuantileNormalize.exclusivePrefix(

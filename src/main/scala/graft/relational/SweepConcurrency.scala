@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -34,18 +35,16 @@ object SweepConcurrency {
 
   val q525SweepConcurrency: Q = (s, dir) => {
     import s.implicits._
-    val iv = T.events(s, dir)
+    val iv = PlanBridge.checkpointResetStats(T.events(s, dir)
       .groupBy($"user_id".as("u"), to_date($"ts").as("d"))
-      .agg(min($"ts").as("st"), max($"ts").as("en"))
-      .localCheckpoint()
+      .agg(min($"ts").as("st"), max($"ts").as("en")))
     val pts = iv.select($"u", $"st".as("ts"), lit(1L).as("delta"))
       .unionAll(iv.select($"u", $"en".as("ts"), lit(-1L).as("delta")))
       // starts sort before ends at the same instant: dsort = -delta
       .withColumn("dsort", -$"delta")
-    val cum = QuantileNormalize.fullCumSum(pts,
+    val cum = PlanBridge.checkpointResetStats(QuantileNormalize.fullCumSum(pts,
       Seq(col("ts"), col("dsort"), col("u")), "delta", "cc")
-      .withColumn("d", to_date($"ts"))
-      .localCheckpoint()
+      .withColumn("d", to_date($"ts")))
     val mx = cum.groupBy($"d").agg(max($"cc").as("max_cc"))
     cum.join(broadcast(mx), Seq("d"))
       .filter($"cc" === $"max_cc")

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{GraftSession, Tables => T}
 
@@ -98,9 +99,8 @@ object TableStatsQueries {
 
   val q334AssocRules: Q = (s, dir) => {
     import s.implicits._
-    val ob = T.lineitem(s, dir)
-      .select($"l_orderkey", ($"l_partkey" % 100).as("item")).distinct()
-      .localCheckpoint()
+    val ob = PlanBridge.checkpointResetStats(T.lineitem(s, dir)
+      .select($"l_orderkey", ($"l_partkey" % 100).as("item")).distinct())
     val nBaskets = ob.select($"l_orderkey").distinct().count()
     val single = ob.groupBy($"item").agg(count(lit(1)).as("sup"))
     val pair = ob.as("a").join(ob.as("b"),
@@ -196,17 +196,15 @@ object TableStatsQueries {
     // materialized once: it feeds the degree agg AND both self-join
     // sides — without the checkpoint Spark recomputes the distinct
     // (scan + shuffle) four times (measured in the formatted plan)
-    val op = T.lineitem(s, dir)
-      .select($"l_orderkey", $"l_partkey").distinct()
-      .localCheckpoint()
+    val op = PlanBridge.checkpointResetStats(T.lineitem(s, dir)
+      .select($"l_orderkey", $"l_partkey").distinct())
     val deg = op.groupBy($"l_partkey".as("p")).agg(count(lit(1)).as("n"))
     // materialized: the undirected expansion reads it twice
-    val co = op.as("a").join(op.as("b"),
+    val co = PlanBridge.checkpointResetStats(op.as("a").join(op.as("b"),
         $"a.l_orderkey" === $"b.l_orderkey" && $"a.l_partkey" < $"b.l_partkey")
       .groupBy($"a.l_partkey".as("p1"), $"b.l_partkey".as("p2"))
       .agg(count(lit(1)).as("c"))
-      .filter($"c" >= 2)
-      .localCheckpoint()
+      .filter($"c" >= 2))
     val und = co.select($"p1".as("item"), $"p2".as("nb"), $"c")
       .unionByName(co.select($"p2".as("item"), $"p1".as("nb"), $"c"))
     val scored = und

@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -673,10 +674,10 @@ object TimeSeriesQueries {
       .groupBy($"event_type", date_trunc("day", $"ts").as("day"))
       .agg(sum(expr("CAST(FLOOR(100 * value) AS BIGINT)")).as("x"))
     val wd = Window.partitionBy($"event_type").orderBy($"day")
-    val idx = daily
+    // tiny (types × days); three consumers below
+    val idx = PlanBridge.checkpointResetStats(daily
       .withColumn("t", row_number().over(wd))
-      .select($"event_type", $"t", $"x")
-      .localCheckpoint() // tiny (types × days); three consumers below
+      .select($"event_type", $"t", $"x"))
     val glob = idx.groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum($"x").as("sx"),
         sum($"x" * $"x").as("sxx"))
@@ -1392,9 +1393,9 @@ object TimeSeriesQueries {
     */
   val q426Stickiness: Q = (s, dir) => {
     import s.implicits._
-    val du = T.events(s, dir)
-      .select(to_date($"ts").as("day"), $"user_id").distinct()
-      .localCheckpoint() // DAU side and MAU expansion share it
+    // DAU side and MAU expansion share it
+    val du = PlanBridge.checkpointResetStats(T.events(s, dir)
+      .select(to_date($"ts").as("day"), $"user_id").distinct())
     val days = du.select($"day").distinct()
     val dau = du.groupBy($"day").agg(count(lit(1)).as("dau"))
     val offsets = s.range(0, MauWindowDays).select($"id".as("off"))

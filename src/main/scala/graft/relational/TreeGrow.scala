@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -95,7 +96,7 @@ object TreeGrow {
 
   val q333TreeDepth2: Q = (s, dir) => {
     import s.implicits._
-    val df = base(s, dir).localCheckpoint()
+    val df = PlanBridge.checkpointResetStats(base(s, dir))
     // global bounds → one bin COLUMN per feature (bins are fixed once;
     // children never re-bin — the hist-algorithm contract)
     val b = df.agg(
@@ -108,13 +109,13 @@ object TreeGrow {
       expr(s"CAST((f_$name - $lo) * $SplitBins div (${hi - lo + 1}) AS BIGINT)")
         .as(s"b_$name")
     }
-    val binned = df.select($"y" +: Features.map { case (n, _) => binCol(n) }: _*)
-      .localCheckpoint()
+    val binned = PlanBridge.checkpointResetStats(
+      df.select($"y" +: Features.map { case (n, _) => binCol(n) }: _*))
     val meltRoot = binned.select(lit("root").as("node"), $"y", expr(
       """stack(4, 'quantity', b_quantity, 'price', b_price,
         |  'discount', b_discount, 'tax', b_tax)""".stripMargin)
       .as(Seq("feature", "bin")))
-    val rootBest = bestSplits(meltRoot).localCheckpoint()
+    val rootBest = PlanBridge.checkpointResetStats(bestSplits(meltRoot))
     val rootRow = rootBest.head()
     val rootFeat = rootRow.getAs[String]("feature")
     val rootBin = rootRow.getAs[Long]("split_bin")

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{ExactDiv, Tables => T}
 
@@ -47,10 +48,9 @@ object TukeyHsd {
   def hsd(values: DataFrame): DataFrame = {
     val s = values.sparkSession
     import s.implicits._
-    val grp = values.groupBy($"g")
+    val grp = PlanBridge.checkpointResetStats(values.groupBy($"g")
       .agg(count(lit(1)).as("n"), sum($"x").as("sx"),
-        sum($"x" * $"x").as("ss"))
-      .localCheckpoint()
+        sum($"x" * $"x").as("ss")))
     // Πn over the k-bounded frame + the exact scaled SSW:
     // SSWP = Πn·Σss − Σ sx²·(Πn/n)  (every term integral)
     val tot = grp.agg(sum($"n").as("nn"), count(lit(1)).as("k"))

@@ -2,6 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Tables => T}
 
@@ -101,12 +102,11 @@ object VOptimalHistogram {
   /** (n_values, vopt_score, equiwidth_score) — public for the spec. */
   def histStats(s: SparkSession, dir: String): (Long, Long, Long) = {
     import s.implicits._
-    val census = T.lineitem(s, dir)
+    val census = PlanBridge.checkpointResetStats(T.lineitem(s, dir)
       .select(expr(
         "CAST(FLOOR(100 * l_extendedprice) AS BIGINT) div 100000")
         .as("v"))
-      .groupBy($"v").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .groupBy($"v").agg(count(lit(1)).as("cnt")))
     val vals = census.orderBy($"v").select($"v", $"cnt")
       .as[(Long, Long)].collect()
     val ends = vopt(vals.map(_._2).toSeq, HistB)

@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{GraftSession, Tables => T}
 
@@ -593,9 +594,9 @@ object StreamBench {
     // harness bound (the BenchRows convention): 1000 docs × 16 bands
     // ≈ 16k state keys — enough that per-key state work dominates,
     // small enough that the 2-run bench stays a bounded slice
-    val docs = T.documents(s, dir).select($"doc_id", $"text")
-      .filter($"doc_id" < 1000L)
-      .localCheckpoint()
+    val docs = PlanBridge.checkpointResetStats(
+      T.documents(s, dir).select($"doc_id", $"text")
+        .filter($"doc_id" < 1000L))
     val rows = LshDedupStream.bandRows(docs)
       .as[(Long, Int, Long)].collect().toSeq.sortBy(r => (r._1, r._2))
     val stream = MemoryStream[(Long, Int, Long)]
@@ -614,9 +615,8 @@ object StreamBench {
     q.stop(); q.awaitTermination()
     // min only decreases -> the per-bucket MIN over all emissions is
     // the final owner (no last-batch bookkeeping needed)
-    val streamed = s.table(name)
-      .groupBy($"band", $"band_hash").agg(min($"owner").as("owner"))
-      .localCheckpoint()
+    val streamed = PlanBridge.checkpointResetStats(s.table(name)
+      .groupBy($"band", $"band_hash").agg(min($"owner").as("owner")))
     s.catalog.dropTempView(name)
     val batch = LshDedupStream.batchOwners(docs)
     val diff = streamed.join(batch.withColumnRenamed("owner", "b_owner"),
@@ -929,9 +929,9 @@ object StreamBench {
     val (pts, graph, _) = GraphServe.servingGraph(s, dir)
     val allQueries = GraphServe.serveQueries(pts)
     val qRows = allQueries.as[BenchServeQuery].collect().toSeq.sortBy(_.qid)
-    val entries = pts.select($"vec_id".as("node"))
-      .orderBy(xxhash64($"node"), $"node").limit(GraphServe.Entries)
-      .localCheckpoint()
+    val entries = PlanBridge.checkpointResetStats(
+      pts.select($"vec_id".as("node"))
+        .orderBy(xxhash64($"node"), $"node").limit(GraphServe.Entries))
     def serve(queries: DataFrame): Map[Long, Long] = {
       val beam0 = graft.plans.TopK.perGroup(
         GraphServe.withDist(pts, queries)(
@@ -948,7 +948,8 @@ object StreamBench {
       .option("checkpointLocation",
         Files.createTempDirectory("bench-serve-ckpt").toString)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) streamed ++= serve(batch.localCheckpoint())
+        if (!batch.isEmpty)
+          streamed ++= serve(PlanBridge.checkpointResetStats(batch))
         ()
       }
       .start()
@@ -1018,26 +1019,25 @@ object StreamBench {
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     import graft.operators.{Dbscan, GraphInsert, GraphServe}
-    val pts = graft.core.Tables.embeddings(s, dir)
-      .select($"vec_id",
-        expr(s"CAST(FLOOR(${Dbscan.DbScale} * embedding[0]) AS BIGINT)")
-          .as("x"),
-        expr(s"CAST(FLOOR(${Dbscan.DbScale} * embedding[1]) AS BIGINT)")
-          .as("y"))
-      .localCheckpoint()
+    val pts = PlanBridge.checkpointResetStats(
+      graft.core.Tables.embeddings(s, dir)
+        .select($"vec_id",
+          expr(s"CAST(FLOOR(${Dbscan.DbScale} * embedding[0]) AS BIGINT)")
+            .as("x"),
+          expr(s"CAST(FLOOR(${Dbscan.DbScale} * embedding[1]) AS BIGINT)")
+            .as("y")))
     val isDelta =
       pmod(xxhash64(lit("gins"), $"vec_id"), lit(GraphInsert.DeltaMod)) === 0L
-    val base = pts.filter(!isDelta).localCheckpoint()
+    val base = PlanBridge.checkpointResetStats(pts.filter(!isDelta))
     val delta = pts.filter(isDelta)
     // base serving graph: the SAME build-once IndexStore table as q477,
     // through the shared builder so convergence memoizes JVM-wide
     val (bt, baseConverged) = GraphInsert.ensureBaseGraph(s, dir, base)
     require(baseConverged, "qs22 base graph build must converge")
-    var graph = org.apache.spark.sql.graftbridge.PlanBridge
-      .checkpointResetStats(s.table(bt))
-    val entries = base.select($"vec_id".as("node"))
-      .orderBy(xxhash64($"node"), $"node").limit(GraphServe.Entries)
-      .localCheckpoint()
+    var graph = PlanBridge.checkpointResetStats(s.table(bt))
+    val entries = PlanBridge.checkpointResetStats(
+      base.select($"vec_id".as("node"))
+        .orderBy(xxhash64($"node"), $"node").limit(GraphServe.Entries))
     def recap(edges: DataFrame): DataFrame =
       graft.plans.TopK.perGroup(
         edges
@@ -1060,7 +1060,7 @@ object StreamBench {
         Files.createTempDirectory("bench-gins-ckpt").toString)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
-          val dq = batch.localCheckpoint()
+          val dq = PlanBridge.checkpointResetStats(batch)
           val beam0 = graft.plans.TopK.perGroup(
             GraphServe.withDist(pts, dq)(
               dq.select($"qid").crossJoin(broadcast(entries))),
@@ -1068,11 +1068,10 @@ object StreamBench {
           val beam = GraphServe.walk(pts, dq, graph, beam0,
             GraphServe.Beam, GraphServe.Hops)
           val newEdges = beam.select($"qid".as("a"), $"node".as("b"))
-          graph = org.apache.spark.sql.graftbridge.PlanBridge
-            .checkpointResetStats(recap(
-              graph.unionByName(newEdges)
-                .unionByName(newEdges.select($"b".as("a"), $"a".as("b")))
-                .distinct()))
+          graph = PlanBridge.checkpointResetStats(recap(
+            graph.unionByName(newEdges)
+              .unionByName(newEdges.select($"b".as("a"), $"a".as("b")))
+              .distinct()))
         }
         ()
       }
@@ -1318,10 +1317,9 @@ object StreamBench {
     val W = graft.llm.LengthBucketing.BucketWidth
     val B = graft.llm.LengthBucketing.TokBudget
     val Sh = graft.llm.LengthBucketing.Shards
-    val lens = T.documents(s, dir)
+    val lens = PlanBridge.checkpointResetStats(T.documents(s, dir)
       .select($"doc_id", size(split($"text", " ")).cast("long").as("len"))
-      .filter($"doc_id" < 2000L)
-      .localCheckpoint()
+      .filter($"doc_id" < 2000L))
     // q581's exact shard + order: the sequenced feed IS the loader's
     // consumption contract
     val rows = lens

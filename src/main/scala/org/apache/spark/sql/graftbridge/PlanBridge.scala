@@ -33,7 +33,12 @@ object PlanBridge {
       exp.extraOptimizations = exp.extraOptimizations :+ rule
   }
 
-  /** localCheckpoint + TRUTHFUL SIZE STATS for iterative join loops.
+  /** THE checkpoint of this library: Spark's own `localCheckpoint`,
+    * with the checkpoint's `LogicalRDD` copied so that only its
+    * `originStats` change — to the MEASURED size of the
+    * just-materialized blocks. Declared output partitioning, output
+    * ordering and constraints stay exactly what Spark declared, and a
+    * typed `Dataset[T]` keeps its encoder.
     *
     * `Dataset.localCheckpoint` builds its `LogicalRDD` with
     * `originStats = optimizedPlan.stats`, so the size estimate of the
@@ -44,41 +49,46 @@ object PlanBridge {
     * O(cᵏ) bits — measured on the NN-Descent serve loop: per-hop
     * driver time grew 0.7 s → 127 s purely in BigInteger
     * multiplications inside stats estimation, with every executor
-    * idle. Rebuilding the frame from the checkpointed RDD through a
-    * FRESH LogicalRDD breaks the chain; the data is the same
-    * materialized blocks, no recompute, no extra job.
-    *
-    * Round 12: the fresh LogicalRDD now carries the MEASURED size of
-    * the just-materialized checkpoint blocks (BlockManager
-    * memSize+diskSize) instead of `None`→defaultSizeInBytes. Round
-    * 11's plain reset was estimate-free, so every checkpointed frame
-    * looked huge and the prefix-doubling/NN-Descent loops lost their
-    * pre-AQE broadcast-hash picks (q451 11.0→14.2 s at sf0.1,
-    * BASELINE.md:141 — the accepted regression this closes). Measured
-    * bytes cannot compound (each checkpoint re-reads its own blocks,
-    * never the previous estimate), stay honest at ANY scale (a 100 TB
-    * frame reports 100 TB and is never broadcast), and if the storage
-    * info is missing the stats fall back to None = round 11 behavior.
+    * idle. Measured bytes (BlockManager memSize + diskSize) cannot
+    * compound — each checkpoint re-reads its own blocks, never the
+    * previous estimate — and stay honest at ANY scale (a 100 TB frame
+    * reports 100 TB and is never broadcast, a small one keeps its
+    * broadcast-hash pick). If the storage info is missing the stats
+    * fall back to None (`defaultSizeInBytes`). Same blocks, no
+    * recompute, no extra job.
     */
-  def checkpointResetStats(df: Dataset[Row]): DataFrame = {
-    val cp = df.asInstanceOf[classic.Dataset[Row]].localCheckpoint()
-    val spark = cp.sparkSession
-    val qe = cp.queryExecution
-    ofRows(spark, execution.LogicalRDD(qe.analyzed.output, qe.toRdd)(
-      spark, measuredStats(cp), None))
-  }
+  def checkpointResetStats[T](ds: Dataset[T]): Dataset[T] =
+    checkpoint(ds)(_.outputPartitioning)
 
-  /** Size stats read from a just-materialized checkpoint's blocks
-    * (BlockManager memSize + diskSize); None when the storage info is
-    * missing.
+  /** Free the storage blocks behind a checkpointed frame.
+    * `Dataset.unpersist` only clears cache-manager entries (`.persist`);
+    * checkpoint blocks live under the RDD inside the plan's `LogicalRDD`
+    * leaves.
     */
-  private def measuredStats(cp: classic.Dataset[Row])
-      : Option[catalyst.plans.logical.Statistics] =
-    cp.queryExecution.analyzed.collectFirst {
-      case lr: execution.LogicalRDD => lr.rdd.id
-    }.flatMap(id => cp.sparkSession.sparkContext.getRDDStorageInfo.find(_.id == id))
+  def release(df: Dataset[_]): Unit =
+    df.queryExecution.analyzed.collectLeaves().foreach {
+      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
+  /** `localCheckpoint`, then rebuild the frame over a copy of its
+    * `LogicalRDD` whose `originStats` are the measured size of its blocks
+    * (read for this one RDD, not for every persisted one) and whose
+    * partitioning is `declare`d; ordering and constraints stay Spark's.
+    */
+  private def checkpoint[T](ds: Dataset[T])(
+      declare: execution.LogicalRDD => catalyst.plans.physical.Partitioning)
+      : Dataset[T] = {
+    val cp = ds.asInstanceOf[classic.Dataset[T]].localCheckpoint()
+    val spark = cp.sparkSession
+    val lr = cp.logicalPlan.asInstanceOf[execution.LogicalRDD]
+    val id = lr.rdd.id
+    val stats = spark.sparkContext.getRDDStorageInfo(_.id == id).headOption
       .map(i => BigInt(i.memSize + i.diskSize)).filter(_ > 0)
       .map(s => catalyst.plans.logical.Statistics(sizeInBytes = s))
+    classic.Dataset(spark, lr.copy(outputPartitioning = declare(lr))(
+      spark, stats, Some(lr.constraints)))(cp.encoder)
+  }
 
   /** localCheckpoint that KEEPS a hash clustering (r17 optimization,
     * guide §2.4 "two operations keyed the same way can share one
@@ -122,20 +132,15 @@ object PlanBridge {
         s"${if (n == 0) "missing" else "ambiguous"} in " +
         df.schema.fieldNames.mkString("[", ", ", "]"))
     }
-    val cp = df.repartition(numParts, cols.map(df.col): _*)
-      .asInstanceOf[classic.Dataset[Row]].localCheckpoint()
-    val spark = cp.sparkSession
-    val qe = cp.queryExecution
-    val out = qe.analyzed.output
-    val exprs = cols.map { c =>
-      val hits = out.filter(_.name == c)
-      require(hits.size == 1,
-        s"column $c is ${if (hits.isEmpty) "missing" else "ambiguous"} " +
-          s"in ${out.map(_.name)}")
-      hits.head
+    checkpoint(df.repartition(numParts, cols.map(df.col): _*)) { lr =>
+      val exprs = cols.map { c =>
+        val hits = lr.output.filter(_.name == c)
+        require(hits.size == 1,
+          s"column $c is ${if (hits.isEmpty) "missing" else "ambiguous"} " +
+            s"in ${lr.output.map(_.name)}")
+        hits.head
+      }
+      catalyst.plans.physical.HashPartitioning(exprs, numParts)
     }
-    val part = catalyst.plans.physical.HashPartitioning(exprs, numParts)
-    ofRows(spark, execution.LogicalRDD(out, qe.toRdd, part, Nil, false)(
-      spark, measuredStats(cp), None))
   }
 }

@@ -7,13 +7,17 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One way to do each thing: sessions come from `GraftSession.local`,
-  * temporary confs go through `GraftSession.withConfs`, and the only
-  * mains are the three entry points. Scans every Scala file under `src/`
-  * (mains under `src/main`).
+  * session confs are set only in `GraftSession`, frames are checkpointed
+  * only through `PlanBridge.checkpointResetStats` and released only
+  * through `PlanBridge.release`, and the only mains are the three entry
+  * points. Scans every Scala file under `src/` (mains and checkpoints
+  * under `src/main`).
   */
 class SessionGuardSpec extends AnyFunSuite {
 
   private val factory = Paths.get("src/main/scala/graft/core/GraftSession.scala")
+  private val bridge =
+    Paths.get("src/main/scala/org/apache/spark/sql/graftbridge/PlanBridge.scala")
 
   private val sources: Seq[(Path, Seq[String])] = {
     val walk = Files.walk(Paths.get("src"))
@@ -55,5 +59,26 @@ class SessionGuardSpec extends AnyFunSuite {
       .collect { case (p, _) if p.startsWith("src/main") => p.getFileName.toString }
     assert(mains.sorted == Seq("Bench.scala", "Explain.scala", "Verify.scala"),
       s"mains: $mains")
+  }
+
+  test("session confs are set only in GraftSession") {
+    val found = hits("""conf\s*\.\s*set\(""").filterNot(_._1 == factory)
+    assert(found.isEmpty, s"conf.set outside GraftSession: $found")
+  }
+
+  test("localCheckpoint is called only inside the checkpoint primitive") {
+    val found = hits("""\.localCheckpoint\(""")
+      .filter(_._1.startsWith("src/main"))
+    assert(found.map(_._1) == Seq(bridge), s"localCheckpoint at: $found")
+  }
+
+  test("checkpoint blocks are released only by PlanBridge.release") {
+    val lines = sources.find(_._1 == bridge).get._2
+    val start = lines.indexWhere(_.contains("def release"))
+    val end = lines.indexWhere(_.trim.isEmpty, start)
+    assert(start >= 0 && end > start, "release not found in PlanBridge")
+    val found = hits("""\.rdd\s*\.\s*unpersist\b|def\s+dropCheckpoint\b""")
+      .filterNot { case (p, i) => p == bridge && i > start && i < end }
+    assert(found.isEmpty, s"leaf-walk unpersist outside release: $found")
   }
 }

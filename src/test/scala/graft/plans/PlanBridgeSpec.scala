@@ -1,10 +1,16 @@
 package graft.plans
 
 import graft.SparkSpec
+import graft.core.GraftSession
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-/** Pins for [[PlanBridge.checkpointKeepHashPartitioning]] (r17 advice):
+/** Pins for the checkpoint primitive [[PlanBridge.checkpointResetStats]]
+  * (only its size statistics differ from Spark's own `localCheckpoint`;
+  * they are measured and do not compound; [[PlanBridge.release]] frees
+  * the blocks) and for [[PlanBridge.checkpointKeepHashPartitioning]] (r17 advice):
   * the helper DECLARES HashPartitioning over the checkpointed RDD as
   * ground truth — if that claim were ever false (an AQE change
   * rewriting REPARTITION_BY_NUM shuffles, a column binding slip),
@@ -73,5 +79,54 @@ class PlanBridgeSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       PlanBridge.checkpointKeepHashPartitioning(dup, Seq("k"), 8)
     }
+  }
+
+  private def leaf(df: DataFrame): LogicalRDD =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l }.get
+
+  private def storedBytes(df: DataFrame): BigInt = {
+    val id = leaf(df).rdd.id
+    val i = spark.sparkContext.getRDDStorageInfo.find(_.id == id).get
+    BigInt(i.memSize + i.diskSize)
+  }
+
+  test("the primitive declares what Spark's localCheckpoint declares on a " +
+      "sorted, filtered frame") {
+    import spark.implicits._
+    for (aqe <- Seq("true", "false")) {
+      val (own, ours) = GraftSession.withConfs(spark,
+          "spark.sql.adaptive.enabled" -> aqe) {
+        val df = skewed.filter($"v" > 3).orderBy($"k", $"v")
+        (leaf(df.localCheckpoint()), leaf(PlanBridge.checkpointResetStats(df)))
+      }
+      assert(own.constraints.nonEmpty, s"no constraints to keep (aqe=$aqe)")
+      assert(ours.outputPartitioning == own.outputPartitioning, s"aqe=$aqe")
+      assert(ours.outputOrdering == own.outputOrdering, s"aqe=$aqe")
+      assert(ours.constraints == own.constraints, s"aqe=$aqe")
+    }
+  }
+
+  test("size stats stay the measured bytes across 8 checkpointed " +
+      "self-join rounds") {
+    import spark.implicits._
+    var f = PlanBridge.checkpointResetStats(
+      spark.range(0, 2000).select($"id".as("k"), ($"id" % 7).as("v")))
+    val first = storedBytes(f)
+    for (round <- 1 to 8) {
+      f = PlanBridge.checkpointResetStats(f.as("a").join(f.as("b"), "k")
+        .select($"k", (($"a.v" + $"b.v") % 7).as("v")))
+      assert(f.queryExecution.optimizedPlan.stats.sizeInBytes ==
+        storedBytes(f), s"round $round")
+    }
+    assert(storedBytes(f) <= first * 2, "same-shape frames, compounded size")
+  }
+
+  test("release frees the checkpoint's blocks") {
+    val cp = PlanBridge.checkpointResetStats(skewed)
+    val id = leaf(cp).rdd.id
+    assert(spark.sparkContext.getPersistentRDDs.contains(id))
+    PlanBridge.release(cp.select("k"))
+    assert(!spark.sparkContext.getPersistentRDDs.contains(id),
+      s"rdd $id still persisted after release")
   }
 }
