@@ -1,5 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.PlanBridge
+
 import graft.core.GraftSession
 
 /** Benchmark main. Each query runs [[Bench.Warmups]] discarded warm-up
@@ -17,6 +19,10 @@ import graft.core.GraftSession
 object Bench {
   val Warmups = 1
   val Reps = 3
+  /** The environment sentinel's four entries (see `runSentinel`). */
+  val SentinelQueries =
+    Seq("q01_pricing_summary", "q41_minhash_lsh",
+      "q312_recsys_holdout", "q361_deletion_join")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -40,9 +46,7 @@ object Bench {
       // otherwise fill the block manager and late-alphabet queries pay
       // eviction churn that isn't theirs (r5: q81/q99 3-6× slower in the
       // full run than in isolation).
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      PlanBridge.sweep(spark)
       (t, ok)
     }
 
@@ -67,12 +71,7 @@ object Bench {
 
     // optional local-iteration filter (driver runs with it unset = full)
     val filterEnv = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
-    val nameFilter: String => Boolean =
-      filterEnv match {
-        case Some(pats) =>
-          val ps = pats.split(',').toSeq; n => ps.exists(n.contains)
-        case None => _ => true
-      }
+    val nameFilter = SparkEntry.selected(filterEnv)
 
     // ENVIRONMENT SENTINEL (r14 verdict ask #1): the bench adjudicates
     // its own box state. The standing 4-query sentinel (BASELINE.md,
@@ -85,9 +84,6 @@ object Bench {
     // re-measuring by hand (r14: driver read 671.8 s vs the builder's
     // same-commit 502.2 s purely from box drift). Skipped under a
     // local-iteration filter (the driver always runs unfiltered).
-    val SentinelQueries =
-      Seq("q01_pricing_summary", "q41_minhash_lsh",
-        "q312_recsys_holdout", "q361_deletion_join")
     // A renamed/mistyped sentinel entry must FAIL the bench, not be
     // silently dropped from the box-state baseline (r15 advice note):
     // queries(name) throws NoSuchElementException on a missing key.

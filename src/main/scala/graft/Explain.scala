@@ -8,10 +8,10 @@ import graft.core.GraftSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val pats = args(1).split(',').toSeq
+    val nameFilter = SparkEntry.selected(Some(args(1)))
     val spark = GraftSession.local("graft-explain")
     SparkEntry.queries
-      .filter(kv => pats.exists(kv._1.contains)).toSeq.sortBy(_._1)
+      .filter(kv => nameFilter(kv._1)).toSeq.sortBy(_._1)
       .foreach { case (name, fn) =>
         println(s"==== $name ====")
         try fn(spark, sfDir).explain("formatted")

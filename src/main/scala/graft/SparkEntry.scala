@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
 import graft.catalog.CatalogOracle
+import graft.core.Entry
 import graft.llm.{Als, BinaryQuantization, BradleyTerry, Calibration, ClusterEval, CdcChunking, BpeTrain, CompressionSignal, DiversityStats, Lsa, Pca, UnigramLm, Contamination, CorpusOps, DedupQueries, EmbeddingDedup, ImportanceWeights, KMeans, Matryoshka, MultimodalOracle, PerceptualHash, LogisticRegression, NaiveBayes, PiiRedaction, ProductQuantization, TextAnalysis, TextPipeline, VectorSearch, VectorStats}
 import graft.relational.{AllocationQueries, BenfordAudit, SlidingDistinct, VariantQueries, Sql4Surfaces, HierarchyRollup, SplitFinding, TreeGrow, AnalyticalQueries, BitemporalQueries, BitmapQueries, BucketedQueries, FeaturePrepQueries, IncrementalQueries, JourneyQueries, PrivacyAudit, RelationalQueries, ReplicaReconcile, NullSemantics, ReshapeStatsQueries, ScalarQueries, SelectionMedian, SketchAggregates, StatInference, SurrogateKeys, TableStatsQueries, TimeSeriesQueries, TpchCompletionQueries, TpchShapeQueries, WindowAggQueries}
 import graft.operators.{Dbscan, GeoGridJoin, Hits, IntervalJoin, Isotonic, KCore, LabelPropagation, PageRank, ShortestPaths, Skyline, TriangleCount}
@@ -10,246 +11,261 @@ import graft.streaming.StreamShapeQueries
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Aggregates the per-module query maps; every entry here is an operator
-  * from SURVEY.md §2.b, and every oracle-checkable one has a matching
-  * DuckDB SQL string with identical output column names.
+  * Collects the entries each module declares; every entry here is an
+  * operator from SURVEY.md §2.b with a matching DuckDB SQL string with
+  * identical output column names. `queries` and `oracleSql` are built
+  * once from them.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     RelationalQueries.q01PricingSummary(spark, "/root/testdata/sf0.001")
 
-  private val modules = Seq(
-    (RelationalQueries.queries, RelationalQueries.oracleSql),
-    (WindowAggQueries.queries, WindowAggQueries.oracleSql),
-    (ScalarQueries.queries, ScalarQueries.oracleSql),
-    (StreamShapeQueries.queries, StreamShapeQueries.oracleSql),
-    (DedupQueries.queries, DedupQueries.oracleSql),
-    (EmbeddingDedup.queries, EmbeddingDedup.oracleSql),
-    (TextAnalysis.queries, TextAnalysis.oracleSql),
-    (VectorSearch.queries, VectorSearch.oracleSql),
-    (TextPipeline.queries, TextPipeline.oracleSql),
-    (CsvScan.queries, CsvScan.oracleSql),
-    (CatalogOracle.queries, CatalogOracle.oracleSql),
-    (K8sObjects.queries, K8sObjects.oracleSql),
-    (BucketedQueries.queries, BucketedQueries.oracleSql),
-    (AnalyticalQueries.queries, AnalyticalQueries.oracleSql),
-    (ReshapeStatsQueries.queries, ReshapeStatsQueries.oracleSql),
-    (IncrementalQueries.queries, IncrementalQueries.oracleSql),
-    (TimeSeriesQueries.queries, TimeSeriesQueries.oracleSql),
-    (graft.relational.QualityAuditQueries.queries, graft.relational.QualityAuditQueries.oracleSql),
-    (LayoutQueries.queries, LayoutQueries.oracleSql),
-    (IntervalJoin.queries, IntervalJoin.oracleSql),
-    (OrcSource.queries, OrcSource.oracleSql),
-    (ZOrderQueries.queries, ZOrderQueries.oracleSql),
-    (TableStatsQueries.queries, TableStatsQueries.oracleSql),
-    (QuarantineIngest.queries, QuarantineIngest.oracleSql),
-    (CorpusOps.queries, CorpusOps.oracleSql),
-    (VectorStats.queries, VectorStats.oracleSql),
-    (PageRank.queries, PageRank.oracleSql),
-    (BpeTrain.queries, BpeTrain.oracleSql),
-    (SchemaEvolution.queries, SchemaEvolution.oracleSql),
-    (TriangleCount.queries, TriangleCount.oracleSql),
-    (ProductQuantization.queries, ProductQuantization.oracleSql),
-    (graft.plans.TopK.queries, graft.plans.TopK.oracleSql),
-    (BinaryFiles.queries, BinaryFiles.oracleSql),
-    (Federation.queries, Federation.oracleSql),
-    (DynamicOverwrite.queries, DynamicOverwrite.oracleSql),
-    (MultimodalOracle.queries, MultimodalOracle.oracleSql),
-    (graft.plans.SortedRuns.queries, graft.plans.SortedRuns.oracleSql),
-    (graft.sources.DeletionVectors.queries, graft.sources.DeletionVectors.oracleSql),
-    (TpchShapeQueries.queries, TpchShapeQueries.oracleSql),
-    (Skyline.queries, Skyline.oracleSql),
-    (XmlSource.queries, XmlSource.oracleSql),
-    (TpchCompletionQueries.queries, TpchCompletionQueries.oracleSql),
-    (Contamination.queries, Contamination.oracleSql),
-    (PiiRedaction.queries, PiiRedaction.oracleSql),
-    (NullSemantics.queries, NullSemantics.oracleSql),
-    (SketchAggregates.queries, SketchAggregates.oracleSql),
-    (ImportanceWeights.queries, ImportanceWeights.oracleSql),
-    (PrivacyAudit.queries, PrivacyAudit.oracleSql),
-    (Matryoshka.queries, Matryoshka.oracleSql),
-    (PerceptualHash.queries, PerceptualHash.oracleSql),
-    (BitemporalQueries.queries, BitemporalQueries.oracleSql),
-    (HilbertLayout.queries, HilbertLayout.oracleSql),
-    (graft.plans.AsOfMergeJoin.queries, graft.plans.AsOfMergeJoin.oracleSql),
-    (JourneyQueries.queries, JourneyQueries.oracleSql),
-    (StatInference.queries, StatInference.oracleSql),
-    (ShortestPaths.queries, ShortestPaths.oracleSql),
-    (VariantQueries.queries, VariantQueries.oracleSql),
-    (Sql4Surfaces.queries, Sql4Surfaces.oracleSql),
-    (BinaryQuantization.queries, BinaryQuantization.oracleSql),
-    (KMeans.queries, KMeans.oracleSql),
-    (FbcSource.queries, FbcSource.oracleSql),
-    (LabelPropagation.queries, LabelPropagation.oracleSql),
-    (Dbscan.queries, Dbscan.oracleSql),
-    (graft.plans.PlanLineage.queries, graft.plans.PlanLineage.oracleSql),
-    (graft.plans.PlanMetrics.queries, graft.plans.PlanMetrics.oracleSql),
-    (BitmapQueries.queries, BitmapQueries.oracleSql),
-    (Pca.queries, Pca.oracleSql),
-    (UnigramLm.queries, UnigramLm.oracleSql),
-    (CompressionSignal.queries, CompressionSignal.oracleSql),
-    (Isotonic.queries, Isotonic.oracleSql),
-    (KCore.queries, KCore.oracleSql),
-    (FeaturePrepQueries.queries, FeaturePrepQueries.oracleSql),
-    (GeoGridJoin.queries, GeoGridJoin.oracleSql),
-    (AllocationQueries.queries, AllocationQueries.oracleSql),
-    (FixedWidthScan.queries, FixedWidthScan.oracleSql),
-    (SurrogateKeys.queries, SurrogateKeys.oracleSql),
-    (SelectionMedian.queries, SelectionMedian.oracleSql),
-    (Hits.queries, Hits.oracleSql),
-    (Lsa.queries, Lsa.oracleSql),
-    (ReplicaReconcile.queries, ReplicaReconcile.oracleSql),
-    (NaiveBayes.queries, NaiveBayes.oracleSql),
-    (LogisticRegression.queries, LogisticRegression.oracleSql),
-    (HierarchyRollup.queries, HierarchyRollup.oracleSql),
-    (CdcChunking.queries, CdcChunking.oracleSql),
-    (Als.queries, Als.oracleSql),
-    (SplitFinding.queries, SplitFinding.oracleSql),
-    (TreeGrow.queries, TreeGrow.oracleSql),
-    (BradleyTerry.queries, BradleyTerry.oracleSql),
-    (ClusterEval.queries, ClusterEval.oracleSql),
-    (Calibration.queries, Calibration.oracleSql),
-    (DiversityStats.queries, DiversityStats.oracleSql),
-    (graft.llm.Winnowing.queries, graft.llm.Winnowing.oracleSql),
-    (graft.sources.Sharding.queries, graft.sources.Sharding.oracleSql),
-    (graft.llm.FeatureHashing.queries, graft.llm.FeatureHashing.oracleSql),
-    (graft.llm.RandomProjection.queries, graft.llm.RandomProjection.oracleSql),
-    (graft.llm.ClassifierAgreement.queries, graft.llm.ClassifierAgreement.oracleSql),
-    (SlidingDistinct.queries, SlidingDistinct.oracleSql),
-    (graft.sources.PostingsIndex.queries, graft.sources.PostingsIndex.oracleSql),
-    (graft.llm.DelongAuc.queries, graft.llm.DelongAuc.oracleSql),
-    (graft.llm.WordPieceQuery.queries, graft.llm.WordPieceQuery.oracleSql),
-    (graft.llm.SuffixArray.queries, graft.llm.SuffixArray.oracleSql),
-    (graft.operators.Louvain.queries, graft.operators.Louvain.oracleSql),
-    (graft.llm.Opq.queries, graft.llm.Opq.oracleSql),
-    (graft.operators.GraphServe.queries, graft.operators.GraphServe.oracleSql),
-    (graft.llm.BbitMinhash.queries, graft.llm.BbitMinhash.oracleSql),
-    (graft.llm.PmiFeatures.queries, graft.llm.PmiFeatures.oracleSql),
-    (graft.operators.IsolationTree.queries, graft.operators.IsolationTree.oracleSql),
-    (graft.operators.Hnsw.queries, graft.operators.Hnsw.oracleSql),
-    (graft.operators.RecordLinkage.queries, graft.operators.RecordLinkage.oracleSql),
-    (graft.operators.Coreset.queries, graft.operators.Coreset.oracleSql),
-    (graft.operators.SubmodularSelect.queries, graft.operators.SubmodularSelect.oracleSql),
-    (BenfordAudit.queries, BenfordAudit.oracleSql),
-    (graft.operators.GraphInsert.queries, graft.operators.GraphInsert.oracleSql),
-    (graft.llm.BinPacking.queries, graft.llm.BinPacking.oracleSql),
-    (graft.operators.FilteredServe.queries, graft.operators.FilteredServe.oracleSql),
-    (graft.llm.RefinedServe.queries, graft.llm.RefinedServe.oracleSql),
-    (graft.operators.FunctionalScc.queries, graft.operators.FunctionalScc.oracleSql),
-    (graft.llm.MmrSelect.queries, graft.llm.MmrSelect.oracleSql),
-    (graft.relational.QuantileNormalize.queries, graft.relational.QuantileNormalize.oracleSql),
-    (graft.llm.Word2vecPrep.queries, graft.llm.Word2vecPrep.oracleSql),
-    (graft.relational.CausalStratification.queries, graft.relational.CausalStratification.oracleSql),
-    (graft.relational.Raking.queries, graft.relational.Raking.oracleSql),
-    (graft.relational.SpearmanCorr.queries, graft.relational.SpearmanCorr.oracleSql),
-    (graft.relational.KendallTau.queries, graft.relational.KendallTau.oracleSql),
-    (graft.relational.CountSketch.queries, graft.relational.CountSketch.oracleSql),
-    (graft.operators.ButterflyCount.queries, graft.operators.ButterflyCount.oracleSql),
-    (graft.relational.DynamicPivot.queries, graft.relational.DynamicPivot.oracleSql),
-    (graft.llm.BprTriplets.queries, graft.llm.BprTriplets.oracleSql),
-    (graft.relational.DictionaryEncode.queries, graft.relational.DictionaryEncode.oracleSql),
-    (graft.llm.BlocklistScan.queries, graft.llm.BlocklistScan.oracleSql),
-    (graft.relational.SequentialPairs.queries, graft.relational.SequentialPairs.oracleSql),
-    (graft.operators.KTruss.queries, graft.operators.KTruss.oracleSql),
-    (graft.operators.WlRefinement.queries, graft.operators.WlRefinement.oracleSql),
-    (graft.relational.SaxMotifs.queries, graft.relational.SaxMotifs.oracleSql),
-    (graft.operators.LinkPrediction.queries, graft.operators.LinkPrediction.oracleSql),
-    (graft.relational.TableFingerprint.queries, graft.relational.TableFingerprint.oracleSql),
-    (graft.relational.Changepoints.queries, graft.relational.Changepoints.oracleSql),
-    (graft.llm.HuffmanCost.queries, graft.llm.HuffmanCost.oracleSql),
-    (graft.llm.RankOverlap.queries, graft.llm.RankOverlap.oracleSql),
-    (graft.operators.HyperBall.queries, graft.operators.HyperBall.oracleSql),
-    (graft.operators.RandomWalks.queries, graft.operators.RandomWalks.oracleSql),
-    (graft.relational.VOptimalHistogram.queries, graft.relational.VOptimalHistogram.oracleSql),
-    (graft.relational.MatrixProfile.queries, graft.relational.MatrixProfile.oracleSql),
-    (graft.operators.LubyMis.queries, graft.operators.LubyMis.oracleSql),
-    (graft.relational.SystematicSample.queries, graft.relational.SystematicSample.oracleSql),
-    (graft.relational.KruskalWallis.queries, graft.relational.KruskalWallis.oracleSql),
-    (graft.relational.FriedmanTest.queries, graft.relational.FriedmanTest.oracleSql),
-    (graft.operators.Coreness.queries, graft.operators.Coreness.oracleSql),
-    (graft.operators.JpColoring.queries, graft.operators.JpColoring.oracleSql),
-    (graft.plans.MatviewRewrite.queries, graft.plans.MatviewRewrite.oracleSql),
-    (graft.relational.DtwDistance.queries, graft.relational.DtwDistance.oracleSql),
-    (graft.relational.SweepConcurrency.queries, graft.relational.SweepConcurrency.oracleSql),
-    (graft.relational.EmpiricalBayes.queries, graft.relational.EmpiricalBayes.oracleSql),
-    (graft.relational.WaveletSynopsis.queries, graft.relational.WaveletSynopsis.oracleSql),
-    (graft.relational.BrownForsythe.queries, graft.relational.BrownForsythe.oracleSql),
-    (graft.relational.JonckheereTerpstra.queries, graft.relational.JonckheereTerpstra.oracleSql),
-    (graft.relational.PageTrend.queries, graft.relational.PageTrend.oracleSql),
-    (graft.operators.Assortativity.queries, graft.operators.Assortativity.oracleSql),
-    (graft.operators.Betweenness.queries, graft.operators.Betweenness.oracleSql),
-    (graft.relational.CrossCorrelation.queries, graft.relational.CrossCorrelation.oracleSql),
-    (graft.llm.SlopeOne.queries, graft.llm.SlopeOne.oracleSql),
-    (graft.llm.Readability.queries, graft.llm.Readability.oracleSql),
-    (graft.relational.AnsariBradley.queries, graft.relational.AnsariBradley.oracleSql),
-    (graft.plans.JoinElimination.queries, graft.plans.JoinElimination.oracleSql),
-    (graft.relational.HodgesLehmann.queries, graft.relational.HodgesLehmann.oracleSql),
-    (graft.relational.CramerVonMises.queries, graft.relational.CramerVonMises.oracleSql),
-    (graft.relational.RunsTest.queries, graft.relational.RunsTest.oracleSql),
-    (graft.relational.DurbinWatson.queries, graft.relational.DurbinWatson.oracleSql),
-    (graft.relational.CochranArmitage.queries, graft.relational.CochranArmitage.oracleSql),
-    (graft.relational.MoodMedian.queries, graft.relational.MoodMedian.oracleSql),
-    (graft.llm.MultiprobeLsh.queries, graft.llm.MultiprobeLsh.oracleSql),
-    (graft.operators.LocalClustering.queries, graft.operators.LocalClustering.oracleSql),
-    (graft.relational.PpsSample.queries, graft.relational.PpsSample.oracleSql),
-    (graft.relational.PartialCorrelation.queries, graft.relational.PartialCorrelation.oracleSql),
-    (graft.relational.IntraclassCorrelation.queries, graft.relational.IntraclassCorrelation.oracleSql),
-    (graft.llm.ImageHistogram.queries, graft.llm.ImageHistogram.oracleSql),
-    (graft.relational.CronbachAlpha.queries, graft.relational.CronbachAlpha.oracleSql),
-    (graft.operators.RichClub.queries, graft.operators.RichClub.oracleSql),
-    (graft.relational.WilsonInterval.queries, graft.relational.WilsonInterval.oracleSql),
-    (graft.relational.FunnelProportionTest.queries, graft.relational.FunnelProportionTest.oracleSql),
-    (graft.operators.KatzCentrality.queries, graft.operators.KatzCentrality.oracleSql),
-    (graft.operators.DisparityFilter.queries, graft.operators.DisparityFilter.oracleSql),
-    (graft.operators.AttributeAssortativity.queries, graft.operators.AttributeAssortativity.oracleSql),
-    (graft.operators.EdgeBetweenness.queries, graft.operators.EdgeBetweenness.oracleSql),
-    (graft.llm.PassAtK.queries, graft.llm.PassAtK.oracleSql),
-    (graft.llm.ViterbiSegment.queries, graft.llm.ViterbiSegment.oracleSql),
-    (graft.operators.BoruvkaMst.queries, graft.operators.BoruvkaMst.oracleSql),
-    (graft.operators.Conductance.queries, graft.operators.Conductance.oracleSql),
-    (graft.relational.ReqSketch.queries, graft.relational.ReqSketch.oracleSql),
-    (graft.operators.SimRank.queries, graft.operators.SimRank.oracleSql),
-    (graft.relational.FrequentItemsets.queries, graft.relational.FrequentItemsets.oracleSql),
-    (graft.llm.Smote.queries, graft.llm.Smote.oracleSql),
-    (graft.llm.Ssim.queries, graft.llm.Ssim.oracleSql),
-    (graft.operators.RandIndex.queries, graft.operators.RandIndex.oracleSql),
-    (graft.llm.DaviesBouldin.queries, graft.llm.DaviesBouldin.oracleSql),
-    (graft.relational.GorillaCost.queries, graft.relational.GorillaCost.oracleSql),
-    (graft.llm.LmPerplexity.queries, graft.llm.LmPerplexity.oracleSql),
-    (graft.operators.SccColoring.queries, graft.operators.SccColoring.oracleSql),
-    (graft.operators.Bridges.queries, graft.operators.Bridges.oracleSql),
-    (graft.llm.KlDivergence.queries, graft.llm.KlDivergence.oracleSql),
-    (graft.llm.HeapsLaw.queries, graft.llm.HeapsLaw.oracleSql),
-    (graft.llm.MaxSim.queries, graft.llm.MaxSim.oracleSql),
-    (graft.sources.EqualityDeletes.queries,
-      graft.sources.EqualityDeletes.oracleSql),
-    (graft.relational.HigherMoments.queries,
-      graft.relational.HigherMoments.oracleSql),
-    (graft.llm.LengthBucketing.queries,
-      graft.llm.LengthBucketing.oracleSql),
-    (graft.llm.BleuScore.queries,
-      graft.llm.BleuScore.oracleSql),
-    (graft.relational.WilcoxonSignedRank.queries,
-      graft.relational.WilcoxonSignedRank.oracleSql),
-    (graft.relational.LadRegression.queries,
-      graft.relational.LadRegression.oracleSql),
-    (graft.llm.ConditionalEntropy.queries,
-      graft.llm.ConditionalEntropy.oracleSql),
-    (graft.llm.TokenDispersion.queries,
-      graft.llm.TokenDispersion.oracleSql),
-    (graft.relational.TukeyHsd.queries,
-      graft.relational.TukeyHsd.oracleSql),
-    (graft.llm.PhoneticBlocking.queries,
-      graft.llm.PhoneticBlocking.oracleSql))
-  // q586 rides LadRegression.queries (same module map as q584)
+  private val modules: Seq[Seq[Entry]] = Seq(
+    RelationalQueries.entries,
+    WindowAggQueries.entries,
+    ScalarQueries.entries,
+    StreamShapeQueries.entries,
+    DedupQueries.entries,
+    EmbeddingDedup.entries,
+    TextAnalysis.entries,
+    VectorSearch.entries,
+    TextPipeline.entries,
+    CsvScan.entries,
+    CatalogOracle.entries,
+    K8sObjects.entries,
+    BucketedQueries.entries,
+    AnalyticalQueries.entries,
+    ReshapeStatsQueries.entries,
+    IncrementalQueries.entries,
+    TimeSeriesQueries.entries,
+    graft.relational.QualityAuditQueries.entries,
+    LayoutQueries.entries,
+    IntervalJoin.entries,
+    OrcSource.entries,
+    ZOrderQueries.entries,
+    TableStatsQueries.entries,
+    QuarantineIngest.entries,
+    CorpusOps.entries,
+    VectorStats.entries,
+    PageRank.entries,
+    BpeTrain.entries,
+    SchemaEvolution.entries,
+    TriangleCount.entries,
+    ProductQuantization.entries,
+    graft.plans.TopK.entries,
+    BinaryFiles.entries,
+    Federation.entries,
+    DynamicOverwrite.entries,
+    MultimodalOracle.entries,
+    graft.plans.SortedRuns.entries,
+    graft.sources.DeletionVectors.entries,
+    TpchShapeQueries.entries,
+    Skyline.entries,
+    XmlSource.entries,
+    TpchCompletionQueries.entries,
+    Contamination.entries,
+    PiiRedaction.entries,
+    NullSemantics.entries,
+    SketchAggregates.entries,
+    ImportanceWeights.entries,
+    PrivacyAudit.entries,
+    Matryoshka.entries,
+    PerceptualHash.entries,
+    BitemporalQueries.entries,
+    HilbertLayout.entries,
+    graft.plans.AsOfMergeJoin.entries,
+    JourneyQueries.entries,
+    StatInference.entries,
+    ShortestPaths.entries,
+    VariantQueries.entries,
+    Sql4Surfaces.entries,
+    BinaryQuantization.entries,
+    KMeans.entries,
+    FbcSource.entries,
+    LabelPropagation.entries,
+    Dbscan.entries,
+    graft.plans.PlanLineage.entries,
+    graft.plans.PlanMetrics.entries,
+    BitmapQueries.entries,
+    Pca.entries,
+    UnigramLm.entries,
+    CompressionSignal.entries,
+    Isotonic.entries,
+    KCore.entries,
+    FeaturePrepQueries.entries,
+    GeoGridJoin.entries,
+    AllocationQueries.entries,
+    FixedWidthScan.entries,
+    SurrogateKeys.entries,
+    SelectionMedian.entries,
+    Hits.entries,
+    Lsa.entries,
+    ReplicaReconcile.entries,
+    NaiveBayes.entries,
+    LogisticRegression.entries,
+    HierarchyRollup.entries,
+    CdcChunking.entries,
+    Als.entries,
+    SplitFinding.entries,
+    TreeGrow.entries,
+    BradleyTerry.entries,
+    ClusterEval.entries,
+    Calibration.entries,
+    DiversityStats.entries,
+    graft.llm.Winnowing.entries,
+    graft.sources.Sharding.entries,
+    graft.llm.FeatureHashing.entries,
+    graft.llm.RandomProjection.entries,
+    graft.llm.ClassifierAgreement.entries,
+    SlidingDistinct.entries,
+    graft.sources.PostingsIndex.entries,
+    graft.llm.DelongAuc.entries,
+    graft.llm.WordPieceQuery.entries,
+    graft.llm.SuffixArray.entries,
+    graft.operators.Louvain.entries,
+    graft.llm.Opq.entries,
+    graft.operators.GraphServe.entries,
+    graft.llm.BbitMinhash.entries,
+    graft.llm.PmiFeatures.entries,
+    graft.operators.IsolationTree.entries,
+    graft.operators.Hnsw.entries,
+    graft.operators.RecordLinkage.entries,
+    graft.operators.Coreset.entries,
+    graft.operators.SubmodularSelect.entries,
+    BenfordAudit.entries,
+    graft.operators.GraphInsert.entries,
+    graft.llm.BinPacking.entries,
+    graft.operators.FilteredServe.entries,
+    graft.llm.RefinedServe.entries,
+    graft.operators.FunctionalScc.entries,
+    graft.llm.MmrSelect.entries,
+    graft.relational.QuantileNormalize.entries,
+    graft.llm.Word2vecPrep.entries,
+    graft.relational.CausalStratification.entries,
+    graft.relational.Raking.entries,
+    graft.relational.SpearmanCorr.entries,
+    graft.relational.KendallTau.entries,
+    graft.relational.CountSketch.entries,
+    graft.operators.ButterflyCount.entries,
+    graft.relational.DynamicPivot.entries,
+    graft.llm.BprTriplets.entries,
+    graft.relational.DictionaryEncode.entries,
+    graft.llm.BlocklistScan.entries,
+    graft.relational.SequentialPairs.entries,
+    graft.operators.KTruss.entries,
+    graft.operators.WlRefinement.entries,
+    graft.relational.SaxMotifs.entries,
+    graft.operators.LinkPrediction.entries,
+    graft.relational.TableFingerprint.entries,
+    graft.relational.Changepoints.entries,
+    graft.llm.HuffmanCost.entries,
+    graft.llm.RankOverlap.entries,
+    graft.operators.HyperBall.entries,
+    graft.operators.RandomWalks.entries,
+    graft.relational.VOptimalHistogram.entries,
+    graft.relational.MatrixProfile.entries,
+    graft.operators.LubyMis.entries,
+    graft.relational.SystematicSample.entries,
+    graft.relational.KruskalWallis.entries,
+    graft.relational.FriedmanTest.entries,
+    graft.operators.Coreness.entries,
+    graft.operators.JpColoring.entries,
+    graft.plans.MatviewRewrite.entries,
+    graft.relational.DtwDistance.entries,
+    graft.relational.SweepConcurrency.entries,
+    graft.relational.EmpiricalBayes.entries,
+    graft.relational.WaveletSynopsis.entries,
+    graft.relational.BrownForsythe.entries,
+    graft.relational.JonckheereTerpstra.entries,
+    graft.relational.PageTrend.entries,
+    graft.operators.Assortativity.entries,
+    graft.operators.Betweenness.entries,
+    graft.relational.CrossCorrelation.entries,
+    graft.llm.SlopeOne.entries,
+    graft.llm.Readability.entries,
+    graft.relational.AnsariBradley.entries,
+    graft.plans.JoinElimination.entries,
+    graft.relational.HodgesLehmann.entries,
+    graft.relational.CramerVonMises.entries,
+    graft.relational.RunsTest.entries,
+    graft.relational.DurbinWatson.entries,
+    graft.relational.CochranArmitage.entries,
+    graft.relational.MoodMedian.entries,
+    graft.llm.MultiprobeLsh.entries,
+    graft.operators.LocalClustering.entries,
+    graft.relational.PpsSample.entries,
+    graft.relational.PartialCorrelation.entries,
+    graft.relational.IntraclassCorrelation.entries,
+    graft.llm.ImageHistogram.entries,
+    graft.relational.CronbachAlpha.entries,
+    graft.operators.RichClub.entries,
+    graft.relational.WilsonInterval.entries,
+    graft.relational.FunnelProportionTest.entries,
+    graft.operators.KatzCentrality.entries,
+    graft.operators.DisparityFilter.entries,
+    graft.operators.AttributeAssortativity.entries,
+    graft.operators.EdgeBetweenness.entries,
+    graft.llm.PassAtK.entries,
+    graft.llm.ViterbiSegment.entries,
+    graft.operators.BoruvkaMst.entries,
+    graft.operators.Conductance.entries,
+    graft.relational.ReqSketch.entries,
+    graft.operators.SimRank.entries,
+    graft.relational.FrequentItemsets.entries,
+    graft.llm.Smote.entries,
+    graft.llm.Ssim.entries,
+    graft.operators.RandIndex.entries,
+    graft.llm.DaviesBouldin.entries,
+    graft.relational.GorillaCost.entries,
+    graft.llm.LmPerplexity.entries,
+    graft.operators.SccColoring.entries,
+    graft.operators.Bridges.entries,
+    graft.llm.KlDivergence.entries,
+    graft.llm.HeapsLaw.entries,
+    graft.llm.MaxSim.entries,
+    graft.sources.EqualityDeletes.entries,
+    graft.relational.HigherMoments.entries,
+    graft.llm.LengthBucketing.entries,
+    graft.llm.BleuScore.entries,
+    graft.relational.WilcoxonSignedRank.entries,
+    graft.relational.LadRegression.entries,
+    graft.llm.ConditionalEntropy.entries,
+    graft.llm.TokenDispersion.entries,
+    graft.relational.TukeyHsd.entries,
+    graft.llm.PhoneticBlocking.entries)
+
+  /** Every oracle-checked entry, each declared once in its module. */
+  val entries: Seq[Entry] =
+    registry(modules.flatten, graft.streaming.StreamBench.benchOnly.keys)
+
+  /** `entries`, after checking that no name is declared twice among them
+    * or in `others`; throws naming every name that is.
+    */
+  private[graft] def registry(entries: Seq[Entry],
+      others: Iterable[String]): Seq[Entry] = {
+    val twice = (entries.map(_.name) ++ others).groupBy(identity)
+      .collect { case (n, ns) if ns.size > 1 => n }.toSeq.sorted
+    require(twice.isEmpty,
+      s"entry names declared twice: ${twice.mkString(", ")}")
+    entries
+  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.iterator.map(_._1).reduce(_ ++ _)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    entries.map(e => e.name -> e.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    modules.iterator.map(_._2).reduce(_ ++ _)
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] = entries.map(e => e.name -> e.sql).toMap
+
+  /** The entry-name selector of Bench, Verify and Explain: a
+    * comma-separated list of substrings selects every name containing
+    * any of them; no list selects every name.
+    */
+  def selected(patterns: Option[String]): String => Boolean =
+    patterns.fold((_: String) => true) { p =>
+      val ps = p.split(',').toSeq
+      n => ps.exists(n.contains)
+    }
 }

@@ -1,6 +1,7 @@
 package graft
 import graft.core.GraftSession
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.graftbridge.PlanBridge
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -8,10 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name substrings to run a
     // subset locally (the driver always passes 2 args = full run)
-    val nameFilter: String => Boolean =
-      if (args.length > 2) { val pats = args(2).split(',').toSeq
-        (n: String) => pats.exists(n.contains)
-      } else _ => true
+    val nameFilter = SparkEntry.selected(args.lift(2))
     val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => nameFilter(kv._1)).foreach { case (name, fn) =>
@@ -23,9 +21,7 @@ object Verify {
       // Free localCheckpoint blocks between queries (the Bench rule): a
       // 120-query run otherwise accumulates every query's checkpoint
       // blocks in the one block manager.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      PlanBridge.sweep(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

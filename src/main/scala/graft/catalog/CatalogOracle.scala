@@ -2,6 +2,8 @@ package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.Entry
+
 /** Oracle-checkable bindings of the catalog query surface (R10–R14) —
   * [[CatalogQueries]] run over a parquet snapshot materialized from the
   * checked-in FBC fixture through the REAL ingest path
@@ -15,7 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object CatalogOracle {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Fixed paths so the static oracle SQL can address them. */
   val FixtureSource = "/root/repo/src/test/resources/fbc/all.jsonl"
@@ -217,21 +219,11 @@ object CatalogOracle {
        |GROUP BY package
        |ORDER BY package""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q169_time_travel" -> q169TimeTravel,
-    "q70_catalog_packages" -> q70CatalogPackages,
-    "q71_catalog_schemas" -> q71CatalogSchemas,
-    "q72_catalog_objects" -> q72CatalogObjects,
-    "q73_catalog_icon" -> q73CatalogIcon,
-    "q91_snapshot_gc" -> q91SnapshotGc,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q169_time_travel" -> q169Sql,
-    "q70_catalog_packages" -> q70Sql,
-    "q71_catalog_schemas" -> q71Sql,
-    "q72_catalog_objects" -> q72Sql,
-    "q73_catalog_icon" -> q73Sql,
-    "q91_snapshot_gc" -> q91Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q169_time_travel", q169TimeTravel, q169Sql),
+    Entry("q70_catalog_packages", q70CatalogPackages, q70Sql),
+    Entry("q71_catalog_schemas", q71CatalogSchemas, q71Sql),
+    Entry("q72_catalog_objects", q72CatalogObjects, q72Sql),
+    Entry("q73_catalog_icon", q73CatalogIcon, q73Sql),
+    Entry("q91_snapshot_gc", q91SnapshotGc, q91Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Alternating least squares matrix factorization (Koren/Bell/Volinsky
   * 2009; Zhou et al. 2008 — THE canonical distributed-Spark workload)
@@ -34,7 +34,7 @@ import graft.core.{Tables => T}
   */
 object Als {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val Rank = 8
   val Lambda = 0.01
@@ -241,6 +241,5 @@ object Als {
        |  (SELECT COUNT(*) FROM r) AS n_obs,
        |  CAST($Rank AS BIGINT) AS rank, TRUE AS ok""".stripMargin
 
-  val queries: Map[String, Q] = Map("q328_als_gate" -> q328AlsGate)
-  val oracleSql: Map[String, String] = Map("q328_als_gate" -> q328Sql)
+  val entries: Seq[Entry] = Seq(Entry("q328_als_gate", q328AlsGate, q328Sql))
 }

@@ -1,10 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** b-BIT MINWISE HASHING (Li & König, WWW 2010): store only the
   * lowest b bits of each minhash — a 64-permutation signature drops
@@ -33,7 +32,7 @@ import graft.core.{Tables => T}
   */
 object BbitMinhash {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val Seeds = 64
   val Bits = 2
@@ -130,8 +129,6 @@ object BbitMinhash {
        |ORDER BY doc_a, doc_b""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q459_bbit_minhash" -> q459BbitMinhash)
-  val oracleSql: Map[String, String] = Map(
-    "q459_bbit_minhash" -> q459Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q459_bbit_minhash", q459BbitMinhash, q459Sql))
 }

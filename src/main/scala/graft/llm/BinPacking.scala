@@ -1,10 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** FIRST-FIT-DECREASING SEQUENCE PACKING (the NO-SPLIT packer: q351's
   * concat-and-chunk splits documents across sequence boundaries;
@@ -35,7 +35,7 @@ import graft.core.{Tables => T}
   */
 object BinPacking {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** (n_docs, total_tokens, bins, max_fill, packed_tokens) — public
     * for the spec. */
@@ -95,8 +95,6 @@ object BinPacking {
        |WHERE n_tok > 0 AND n_tok <= $cap""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q479_ffd_packing" -> q479FfdPacking)
-  val oracleSql: Map[String, String] = Map(
-    "q479_ffd_packing" -> q479Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q479_ffd_packing", q479FfdPacking, q479Sql))
 }

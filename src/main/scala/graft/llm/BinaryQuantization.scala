@@ -1,10 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 import graft.functions.VectorFunctions._
 
 /** Binary (1-bit sign) vector quantization with Hamming-band candidate
@@ -40,7 +40,7 @@ import graft.functions.VectorFunctions._
   */
 object BinaryQuantization {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val Bands = 4
   val BandBits = 16
@@ -130,8 +130,6 @@ object BinaryQuantization {
     s"""SELECT COUNT(*) AS n_queries, TRUE AS ok
        |FROM embeddings WHERE vec_id < ${VectorSearch.QuerySetSize}""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q232_binary_hamming_recall" -> q232BinaryHammingRecall)
-  val oracleSql: Map[String, String] = Map(
-    "q232_binary_hamming_recall" -> q232Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q232_binary_hamming_recall", q232BinaryHammingRecall, q232Sql))
 }

@@ -1,9 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{ExactDiv, Tables => T}
+import graft.core.{Entry, ExactDiv, Tables => T}
 
 /** BLEU-4 between near-duplicate pairs (Papineni et al. ACL'02 — THE
   * machine-translation/generation overlap metric: per n ∈ 1..4 the
@@ -40,7 +40,7 @@ import graft.core.{ExactDiv, Tables => T}
   */
 object BleuScore {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Per-n clipped-match expression over token-array columns `ca`
     * (candidate) and `ra` (reference): Σ over DISTINCT candidate
@@ -168,6 +168,5 @@ object BleuScore {
        |ORDER BY doc1, doc2""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map("q582_bleu" -> q582Bleu)
-  val oracleSql: Map[String, String] = Map("q582_bleu" -> q582Sql)
+  val entries: Seq[Entry] = Seq(Entry("q582_bleu", q582Bleu, q582Sql))
 }

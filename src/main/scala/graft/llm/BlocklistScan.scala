@@ -1,9 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 import graft.functions.AcMatchCounts
 
 /** BLOCKLIST / LEXICON SCAN over the corpus via the [[AcMatchCounts]]
@@ -25,7 +24,7 @@ import graft.functions.AcMatchCounts
   */
 object BlocklistScan {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Borderless pattern set, present in the fixture text as token
     * substrings and across-token fragments. */
@@ -57,8 +56,6 @@ object BlocklistScan {
       |FROM per GROUP BY 1 ORDER BY pattern""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q507_blocklist_scan" -> q507BlocklistScan)
-  val oracleSql: Map[String, String] = Map(
-    "q507_blocklist_scan" -> q507Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q507_blocklist_scan", q507BlocklistScan, q507Sql))
 }

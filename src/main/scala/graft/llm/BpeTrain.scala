@@ -1,10 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Distributed BPE merge learning (Sennrich et al. 2016, public
   * algorithm) — the tokenizer-training leg of the LLM-data pipeline:
@@ -44,7 +44,7 @@ import graft.core.{Tables => T}
   */
 object BpeTrain {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val MergeCount = 6
 
@@ -183,12 +183,7 @@ object BpeTrain {
        |ORDER BY merge_rank""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q140_bpe_train" -> q140BpeTrain,
-    "q145_bpe_encode" -> q145BpeEncode,
-  )
-  val oracleSql: Map[String, String] = Map(
-    "q140_bpe_train" -> q140Sql,
-    "q145_bpe_encode" -> q145Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q140_bpe_train", q140BpeTrain, q140Sql),
+    Entry("q145_bpe_encode", q145BpeEncode, q145Sql))
 }

@@ -1,10 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** BPR TRAINING-TRIPLET GENERATION (Rendle et al. UAI'09 — Bayesian
   * Personalized Ranking trains on (user, positive, negative) triples;
@@ -30,7 +29,7 @@ import graft.core.{Tables => T}
   */
 object BprTriplets {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val BprUserMod = 100L
   val BprCands = 8
@@ -82,8 +81,6 @@ object BprTriplets {
       |FROM valid v JOIN pick USING (u, pos, k)
       |ORDER BY custkey, pos_item""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q505_bpr_triplets" -> q505BprTriplets)
-  val oracleSql: Map[String, String] = Map(
-    "q505_bpr_triplets" -> q505Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q505_bpr_triplets", q505BprTriplets, q505Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Bradley–Terry pairwise-preference model fit by Hunter's MM
   * algorithm (Hunter, Annals of Statistics 2004) — the
@@ -35,7 +35,7 @@ import graft.core.{Tables => T}
   */
 object BradleyTerry {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val Items = 100
   val MmIters = 10
@@ -187,6 +187,6 @@ object BradleyTerry {
        |  (SELECT COUNT(*) FROM m) AS n_matches,
        |  TRUE AS ok""".stripMargin
 
-  val queries: Map[String, Q] = Map("q329_bradley_terry" -> q329BradleyTerry)
-  val oracleSql: Map[String, String] = Map("q329_bradley_terry" -> q329Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q329_bradley_terry", q329BradleyTerry, q329Sql))
 }

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Entry
+
 /** Probability CALIBRATION audit (Brier score + reliability bins) of
   * the q321 logistic filter's held-out scores — the eval-loop closer
   * next to q342's ROC-AUC: AUC certifies DISCRIMINATION (ranking),
@@ -38,7 +40,7 @@ import org.apache.spark.sql.functions._
   */
 object Calibration {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val Bins = 10
   /** Measured 136‰ (sf0.001) / 140‰ (sf0.01); base-rate ~245-251‰. */
@@ -489,16 +491,10 @@ object Calibration {
 
   val q398Sql: String = q347Sql
 
-  val queries: Map[String, Q] = Map(
-    "q347_calibration" -> q347Calibration,
-    "q353_isotonic_cal" -> q353IsotonicCal,
-    "q376_calibrated_filter" -> q376CalibratedFilter,
-    "q398_decile_lift" -> q398DecileLift,
-    "q447_platt_scaling" -> q447PlattScaling)
-  val oracleSql: Map[String, String] = Map(
-    "q347_calibration" -> q347Sql,
-    "q353_isotonic_cal" -> q353Sql,
-    "q376_calibrated_filter" -> q376Sql,
-    "q398_decile_lift" -> q398Sql,
-    "q447_platt_scaling" -> q447Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q347_calibration", q347Calibration, q347Sql),
+    Entry("q353_isotonic_cal", q353IsotonicCal, q353Sql),
+    Entry("q376_calibrated_filter", q376CalibratedFilter, q376Sql),
+    Entry("q398_decile_lift", q398DecileLift, q398Sql),
+    Entry("q447_platt_scaling", q447PlattScaling, q447Sql))
 }

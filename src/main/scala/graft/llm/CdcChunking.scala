@@ -1,9 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** CONTENT-DEFINED CHUNKING (the LBFS/rsync/restic storage-dedup
   * primitive, Muthitacharoen et al. SOSP'01): chunk boundaries are
@@ -31,7 +31,7 @@ import graft.core.{Tables => T}
   */
 object CdcChunking {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val CdcWindow = 8
 
@@ -101,6 +101,6 @@ object CdcChunking {
        |  (SELECT COUNT(*) FROM census) AS n_distinct,
        |  (SELECT CAST(MAX(c) AS BIGINT) FROM census) AS max_reuse""".stripMargin
 
-  val queries: Map[String, Q] = Map("q327_cdc_chunking" -> q327CdcChunking)
-  val oracleSql: Map[String, String] = Map("q327_cdc_chunking" -> q327Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q327_cdc_chunking", q327CdcChunking, q327Sql))
 }

@@ -1,7 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.Entry
 
 /** Inter-classifier AGREEMENT audit — Cohen's κ (1960) + McNemar's
   * paired test (1947) between the two independent detectors of the
@@ -25,7 +27,7 @@ import org.apache.spark.sql.functions._
   */
 object ClassifierAgreement {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** (n, bothPos, nbOnly, lrOnly, bothNeg) on the held-out split. */
   def cells(s: SparkSession, dir: String): (Long, Long, Long, Long, Long) = {
@@ -87,6 +89,6 @@ object ClassifierAgreement {
        |SELECT CAST(COUNT(*) AS BIGINT) AS n_test, TRUE AS ok
        |FROM planted WHERE doc_id % 5 = 0""".stripMargin
 
-  val queries: Map[String, Q] = Map("q387_classifier_agreement" -> q387Agreement)
-  val oracleSql: Map[String, String] = Map("q387_classifier_agreement" -> q387Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q387_classifier_agreement", q387Agreement, q387Sql))
 }

@@ -1,9 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Centroid-based SILHOUETTE score of the embedding table's label
   * partition (the simplified/medoidless silhouette — "how coherent is
@@ -29,7 +28,7 @@ import graft.core.{Tables => T}
   */
 object ClusterEval {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val SilScale = 1000
 
@@ -161,10 +160,7 @@ object ClusterEval {
       |    AS auc
       |FROM pre""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q341_silhouette" -> q341Silhouette,
-    "q342_roc_auc" -> q342RocAuc)
-  val oracleSql: Map[String, String] = Map(
-    "q341_silhouette" -> q341Sql,
-    "q342_roc_auc" -> q342Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q341_silhouette", q341Silhouette, q341Sql),
+    Entry("q342_roc_auc", q342RocAuc, q342Sql))
 }

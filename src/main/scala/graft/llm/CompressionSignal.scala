@@ -1,9 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 import graft.functions.GraftFunctions
 
 /** Compression-ratio degeneracy screening over the documents corpus —
@@ -15,7 +14,7 @@ import graft.functions.GraftFunctions
   */
 object CompressionSignal {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Ratio quantization: ⌊10⁴·clen/olen⌋ as an exact integer — the
     * comparison currency for thresholds and ordering.
@@ -71,8 +70,6 @@ object CompressionSignal {
     """SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs, TRUE AS ok
       |FROM documents GROUP BY source ORDER BY source""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q269_compression_screen" -> q269CompressionScreen)
-  val oracleSql: Map[String, String] = Map(
-    "q269_compression_screen" -> q269Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q269_compression_screen", q269CompressionScreen, q269Sql))
 }

@@ -1,10 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{ExactDiv, Tables => T}
+import graft.core.{Entry, ExactDiv, Tables => T}
 
 /** CONDITIONAL BIGRAM ENTROPY per source — H(next | previous) in
   * exact micro-nats (Shannon BSTJ'48 §7's printed-English estimate;
@@ -38,7 +38,7 @@ import graft.core.{ExactDiv, Tables => T}
   */
 object ConditionalEntropy {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Per-group conditional/marginal entropy off a `(g, u, v)` bigram
     * frame.
@@ -131,8 +131,6 @@ object ConditionalEntropy {
       |FROM f
       |ORDER BY g""".stripMargin
 
-  val queries: Map[String, Q] =
-    Map("q585_conditional_entropy" -> q585ConditionalEntropy)
-  val oracleSql: Map[String, String] =
-    Map("q585_conditional_entropy" -> q585Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q585_conditional_entropy", q585ConditionalEntropy, q585Sql))
 }

@@ -1,10 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Benchmark-contamination detection — the decontamination pass every
   * serious training pipeline runs before training: find corpus
@@ -29,7 +29,7 @@ import graft.core.{Tables => T}
   */
 object Contamination {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** q212 — per-document contamination report: every train-slice doc
     * sharing at least one 3-gram with the eval slice, with the number
@@ -120,13 +120,7 @@ object Contamination {
       |ORDER BY novelty ASC, t.doc_id ASC
       |LIMIT 10""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q336_ngram_novelty" -> q336NgramNovelty,
-    "q212_contamination" -> q212Contamination,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q336_ngram_novelty" -> q336Sql,
-    "q212_contamination" -> q212Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q336_ngram_novelty", q336NgramNovelty, q336Sql),
+    Entry("q212_contamination", q212Contamination, q212Sql))
 }

@@ -1,11 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Corpus-construction operators beyond dedup/scoring: positional
   * phrase search, token-budget data mixing, and span-level duplication
@@ -36,7 +36,7 @@ import graft.core.{Tables => T}
   */
 object CorpusOps {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** q135 phrase — two adjacent whitespace tokens. */
   val PhraseFirst = "table"
@@ -1095,43 +1095,22 @@ object CorpusOps {
       |           JOIN sizes n2 ON pairs.src2 = n2.source
       |ORDER BY src1, src2""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q324_source_overlap" -> q324SourceOverlap,
-    "q303_textrank_keywords" -> q303TextrankKeywords,
-    "q278_vocab_drift" -> q278VocabDrift,
-    "q252_pmi_collocations" -> q252PmiCollocations,
-    "q238_segment_dedup" -> q238SegmentDedup,
-    "q202_lm_score" -> q202LmScore,
-    "q135_phrase_search" -> q135PhraseSearch,
-    "q136_token_budget_mix" -> q136TokenBudgetMix,
-    "q139_dup_spans" -> q139DupSpans,
-    "q350_substring_spans" -> q350SubstringSpans,
-    "q351_seq_packing" -> q351SeqPacking,
-    "q352_temperature_mix" -> q352TemperatureMix,
-    "q354_zipf_slope" -> q354ZipfSlope,
-    "q355_heaps_law" -> q355HeapsLaw,
-    "q360_source_kl" -> q360SourceKl,
-    "q142_source_interleave" -> q142SourceInterleave,
-    "q143_bigram_stats" -> q143BigramStats,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q324_source_overlap" -> q324Sql,
-    "q303_textrank_keywords" -> q303Sql,
-    "q278_vocab_drift" -> q278Sql,
-    "q252_pmi_collocations" -> q252Sql,
-    "q238_segment_dedup" -> q238Sql,
-    "q135_phrase_search" -> q135Sql,
-    "q136_token_budget_mix" -> q136Sql,
-    "q139_dup_spans" -> q139Sql,
-    "q350_substring_spans" -> q350Sql,
-    "q351_seq_packing" -> q351Sql,
-    "q352_temperature_mix" -> q352Sql,
-    "q354_zipf_slope" -> q354Sql,
-    "q355_heaps_law" -> q355Sql,
-    "q360_source_kl" -> q360Sql,
-    "q142_source_interleave" -> q142Sql,
-    "q143_bigram_stats" -> q143Sql,
-    "q202_lm_score" -> q202Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q324_source_overlap", q324SourceOverlap, q324Sql),
+    Entry("q303_textrank_keywords", q303TextrankKeywords, q303Sql),
+    Entry("q278_vocab_drift", q278VocabDrift, q278Sql),
+    Entry("q252_pmi_collocations", q252PmiCollocations, q252Sql),
+    Entry("q238_segment_dedup", q238SegmentDedup, q238Sql),
+    Entry("q202_lm_score", q202LmScore, q202Sql),
+    Entry("q135_phrase_search", q135PhraseSearch, q135Sql),
+    Entry("q136_token_budget_mix", q136TokenBudgetMix, q136Sql),
+    Entry("q139_dup_spans", q139DupSpans, q139Sql),
+    Entry("q350_substring_spans", q350SubstringSpans, q350Sql),
+    Entry("q351_seq_packing", q351SeqPacking, q351Sql),
+    Entry("q352_temperature_mix", q352TemperatureMix, q352Sql),
+    Entry("q354_zipf_slope", q354ZipfSlope, q354Sql),
+    Entry("q355_heaps_law", q355HeapsLaw, q355Sql),
+    Entry("q360_source_kl", q360SourceKl, q360Sql),
+    Entry("q142_source_interleave", q142SourceInterleave, q142Sql),
+    Entry("q143_bigram_stats", q143BigramStats, q143Sql))
 }

@@ -1,10 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 import graft.llm.ClusterEval.SilScale
 
 /** DAVIES–BOULDIN cluster separation (Davies & Bouldin PAMI'79 — the
@@ -34,7 +33,7 @@ import graft.llm.ClusterEval.SilScale
   */
 object DaviesBouldin {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** R_ij from the exact pieces — shared verbatim. */
   val DbFormula: String =
@@ -110,8 +109,6 @@ object DaviesBouldin {
        |  MAX($DbFormula) AS r_max
        |FROM pairs GROUP BY li ORDER BY label""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q567_davies_bouldin" -> q567DaviesBouldin)
-  val oracleSql: Map[String, String] = Map(
-    "q567_davies_bouldin" -> q567Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q567_davies_bouldin", q567DaviesBouldin, q567Sql))
 }

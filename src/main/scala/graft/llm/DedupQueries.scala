@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Deduplication family over `documents` (SURVEY.md §2.b north-star):
   * exact, MinHash-LSH, SimHash, and exact n-gram Jaccard.
@@ -25,7 +25,7 @@ import graft.core.{Tables => T}
   */
 object DedupQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   private def tokens(c: Column): Column = split(c, " ")
 
@@ -1847,59 +1847,30 @@ object DedupQueries {
        |WHERE d.doc_id % 2 = 1
        |ORDER BY d.doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q243_incremental_near_dup" -> q243IncrementalNearDup,
-    "q40_dedup_exact" -> q40DedupExact,
-    "q41_minhash_lsh" -> q41MinhashLsh,
-    "q42_simhash" -> q42SimhashGate,
-    "q43_ngram_jaccard" -> q43NgramJaccard,
-    "q101_dup_clusters" -> q101DupClusters,
-    "q141_cluster_split" -> q141ClusterSplit,
-    "q163_keep_best" -> q163KeepBest,
-    "q109_fuzzy_match" -> q109FuzzyMatch,
-    "q127_decontaminate" -> q127Decontaminate,
-    "q131_incremental_ingest" -> q131IncrementalIngest,
-    "q197_jaro_pairs" -> q197JaroPairs,
-    "q233_prefix_join" -> q233PrefixJoin,
-    "q322_containment_join" -> q322ContainmentJoin,
-    "q344_dup_spans_explain" -> q344DupSpansExplain,
-    "q392_weighted_jaccard" -> q392WeightedJaccard,
-    "q438_cws_candidates" -> q438CwsCandidates,
-    "q448_smith_waterman" -> q448SmithWaterman,
-    "q414_soft_dedup" -> q414SoftDedup,
-    "q417_cluster_sizes" -> q417ClusterSizes,
-    "q430_source_contamination" -> q430SourceContamination,
-    "q432_threshold_sweep" -> q432ThresholdSweep,
-    "q348_dup_lcs" -> q348DupLcs,
-    "q361_deletion_join" -> q361DeletionJoin,
-    "q346_dedup_savings" -> q346DedupSavings,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q243_incremental_near_dup" -> q243Sql,
-    "q40_dedup_exact" -> q40Sql,
-    "q41_minhash_lsh" -> q41Sql,
-    "q42_simhash" -> q42Sql,
-    "q43_ngram_jaccard" -> q43Sql,
-    "q101_dup_clusters" -> q101Sql,
-    "q141_cluster_split" -> q141Sql,
-    "q163_keep_best" -> q163Sql,
-    "q109_fuzzy_match" -> q109Sql,
-    "q127_decontaminate" -> q127Sql,
-    "q131_incremental_ingest" -> q131Sql,
-    "q197_jaro_pairs" -> q197Sql,
-    "q233_prefix_join" -> q233Sql,
-    "q322_containment_join" -> q322Sql,
-    "q344_dup_spans_explain" -> q344Sql,
-    "q392_weighted_jaccard" -> q392Sql,
-    "q438_cws_candidates" -> q438Sql,
-    "q448_smith_waterman" -> q448Sql,
-    "q414_soft_dedup" -> q414Sql,
-    "q417_cluster_sizes" -> q417Sql,
-    "q430_source_contamination" -> q430Sql,
-    "q432_threshold_sweep" -> q432Sql,
-    "q348_dup_lcs" -> q348Sql,
-    "q361_deletion_join" -> q361Sql,
-    "q346_dedup_savings" -> q346Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q243_incremental_near_dup", q243IncrementalNearDup, q243Sql),
+    Entry("q40_dedup_exact", q40DedupExact, q40Sql),
+    Entry("q41_minhash_lsh", q41MinhashLsh, q41Sql),
+    Entry("q42_simhash", q42SimhashGate, q42Sql),
+    Entry("q43_ngram_jaccard", q43NgramJaccard, q43Sql),
+    Entry("q101_dup_clusters", q101DupClusters, q101Sql),
+    Entry("q141_cluster_split", q141ClusterSplit, q141Sql),
+    Entry("q163_keep_best", q163KeepBest, q163Sql),
+    Entry("q109_fuzzy_match", q109FuzzyMatch, q109Sql),
+    Entry("q127_decontaminate", q127Decontaminate, q127Sql),
+    Entry("q131_incremental_ingest", q131IncrementalIngest, q131Sql),
+    Entry("q197_jaro_pairs", q197JaroPairs, q197Sql),
+    Entry("q233_prefix_join", q233PrefixJoin, q233Sql),
+    Entry("q322_containment_join", q322ContainmentJoin, q322Sql),
+    Entry("q344_dup_spans_explain", q344DupSpansExplain, q344Sql),
+    Entry("q392_weighted_jaccard", q392WeightedJaccard, q392Sql),
+    Entry("q438_cws_candidates", q438CwsCandidates, q438Sql),
+    Entry("q448_smith_waterman", q448SmithWaterman, q448Sql),
+    Entry("q414_soft_dedup", q414SoftDedup, q414Sql),
+    Entry("q417_cluster_sizes", q417ClusterSizes, q417Sql),
+    Entry("q430_source_contamination", q430SourceContamination, q430Sql),
+    Entry("q432_threshold_sweep", q432ThresholdSweep, q432Sql),
+    Entry("q348_dup_lcs", q348DupLcs, q348Sql),
+    Entry("q361_deletion_join", q361DeletionJoin, q361Sql),
+    Entry("q346_dedup_savings", q346DedupSavings, q346Sql))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
+import graft.core.Entry
+
 /** q434 — DeLong PAIRED AUC comparison (DeLong, DeLong &
   * Clarke-Pearson 1988) of the two trained text classifiers on the
   * SHARED held-out split: the score-level complement of q387's
@@ -54,7 +56,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object DelongAuc {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Both AUCs must clear this (micro units). Measured: NB 1000000µ
     * everywhere; LR 965838µ / 997198µ / 987317µ at sf0.001/0.01/0.1.
@@ -202,6 +204,6 @@ object DelongAuc {
        |    AS n_neg,
        |  TRUE AS ok""".stripMargin
 
-  val queries: Map[String, Q] = Map("q434_delong_paired_auc" -> q434DelongPairedAuc)
-  val oracleSql: Map[String, String] = Map("q434_delong_paired_auc" -> q434Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q434_delong_paired_auc", q434DelongPairedAuc, q434Sql))
 }

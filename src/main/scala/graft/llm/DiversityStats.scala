@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Lexical-diversity and distribution-distance statistics over the
   * corpus — the "how much MORE data is out there and how different is
@@ -47,7 +47,7 @@ import graft.core.{Tables => T}
   */
 object DiversityStats {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Token-trigram species frame: (g, c) — one row per distinct
     * trigram with its corpus count. The split() is hoisted once per
@@ -605,27 +605,14 @@ object DiversityStats {
       |  between_micro, within_weighted_micro
       |FROM tot CROSS JOIN tt CROSS JOIN tb CROSS JOIN tw""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q427_theil_decomposition" -> q427TheilDecomposition,
-    "q416_vocab_coverage" -> q416VocabCoverage,
-    "q415_hill_tail" -> q415HillTail,
-    "q402_pretokenizer" -> q402Pretokenizer,
-    "q403_surging_tokens" -> q403SurgingTokens,
-    "q379_gini" -> q379Gini,
-    "q371_good_turing" -> q371GoodTuring,
-    "q372_chao1" -> q372Chao1,
-    "q373_entropy_jsd" -> q373EntropyJsd,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q427_theil_decomposition" -> q427Sql,
-    "q416_vocab_coverage" -> q416Sql,
-    "q415_hill_tail" -> q415Sql,
-    "q402_pretokenizer" -> q402Sql,
-    "q403_surging_tokens" -> q403Sql,
-    "q379_gini" -> q379Sql,
-    "q371_good_turing" -> q371Sql,
-    "q372_chao1" -> q372Sql,
-    "q373_entropy_jsd" -> q373Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q427_theil_decomposition", q427TheilDecomposition, q427Sql),
+    Entry("q416_vocab_coverage", q416VocabCoverage, q416Sql),
+    Entry("q415_hill_tail", q415HillTail, q415Sql),
+    Entry("q402_pretokenizer", q402Pretokenizer, q402Sql),
+    Entry("q403_surging_tokens", q403SurgingTokens, q403Sql),
+    Entry("q379_gini", q379Gini, q379Sql),
+    Entry("q371_good_turing", q371GoodTuring, q371Sql),
+    Entry("q372_chao1", q372Chao1, q372Sql),
+    Entry("q373_entropy_jsd", q373EntropyJsd, q373Sql))
 }

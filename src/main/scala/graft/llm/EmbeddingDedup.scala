@@ -1,11 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 import graft.functions.VectorFunctions._
 
 /** Embedding-cosine near-duplicate detection — the fifth dedup mode next
@@ -45,7 +45,7 @@ import graft.functions.VectorFunctions._
   */
 object EmbeddingDedup {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Verify threshold τ: pairs at or above this cosine are duplicates.
     * On the fixture, planted twins sit at ≥ 0.869 and the closest
@@ -255,13 +255,7 @@ object EmbeddingDedup {
     """SELECT CAST(2 * COUNT(*) AS BIGINT) AS n_vectors, TRUE AS ok
       |FROM embeddings""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q112_embedding_near_dup" -> q112EmbeddingNearDup,
-    "q185_semantic_dedup" -> q185SemanticDedup,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q112_embedding_near_dup" -> q112Sql,
-    "q185_semantic_dedup" -> q185Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q112_embedding_near_dup", q112EmbeddingNearDup, q112Sql),
+    Entry("q185_semantic_dedup", q185SemanticDedup, q185Sql))
 }

@@ -1,9 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** FEATURE HASHING (the "hashing trick", Weinberger et al. ICML'09):
   * bag-of-words → fixed-width vector with NO vocabulary table — token t
@@ -25,7 +24,7 @@ import graft.core.{Tables => T}
   */
 object FeatureHashing {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val Dims = 16
 
@@ -65,6 +64,6 @@ object FeatureHashing {
        |FROM h GROUP BY source, dim
        |ORDER BY source, dim""".stripMargin
 
-  val queries: Map[String, Q] = Map("q383_feature_hash" -> q383FeatureHash)
-  val oracleSql: Map[String, String] = Map("q383_feature_hash" -> q383Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q383_feature_hash", q383FeatureHash, q383Sql))
 }

@@ -1,10 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** HEAPS'-LAW VOCABULARY GROWTH CURVE (Heaps 1978 §7.5 / Herdan's
   * law: V(T) ≈ k·T^β — the sublinearity every tokenizer-vocab and
@@ -33,7 +33,7 @@ import graft.core.{Tables => T}
   */
 object HeapsLaw {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val HeapsScale = 1000000L
   val HeapsDeciles = 10L
@@ -130,8 +130,6 @@ object HeapsLaw {
       |FROM cum CROSS JOIN f1
       |ORDER BY decile""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q577_heaps_growth" -> q577HeapsGrowth)
-  val oracleSql: Map[String, String] = Map(
-    "q577_heaps_growth" -> q577Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q577_heaps_growth", q577HeapsGrowth, q577Sql))
 }

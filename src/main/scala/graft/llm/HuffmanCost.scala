@@ -1,10 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** HUFFMAN ENTROPY-CODING COST of the token stream (Huffman 1952) —
   * the corpus-compression estimate next to the lexical-stats family
@@ -45,7 +45,7 @@ import graft.core.{Tables => T}
   */
 object HuffmanCost {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Driver-model cap: top symbols kept as distinct leaves; everything
     * below collapses into the OOV leaf. Far above the fixture vocab
@@ -160,8 +160,6 @@ object HuffmanCost {
       |  TRUE AS ok
       |FROM toks WHERE term <> ''""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q493_huffman_cost" -> q493HuffmanCost)
-  val oracleSql: Map[String, String] = Map(
-    "q493_huffman_cost" -> q493Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q493_huffman_cost", q493HuffmanCost, q493Sql))
 }

@@ -1,9 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** IMAGE LUMINANCE HISTOGRAM + HISTOGRAM EQUALIZATION (Gonzalez–Woods
   * ch. 3, the textbook contrast normalization — the FEATURE-EXTRACT
@@ -29,7 +28,7 @@ import graft.core.{Tables => T}
   */
 object ImageHistogram {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val HistBins = 16
 
@@ -130,8 +129,6 @@ object ImageHistogram {
        |FROM documents WHERE doc_id < ${MultimodalOracle.MediaDocBound}"""
       .stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q548_image_histogram" -> q548ImageHistogram)
-  val oracleSql: Map[String, String] = Map(
-    "q548_image_histogram" -> q548Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q548_image_histogram", q548ImageHistogram, q548Sql))
 }

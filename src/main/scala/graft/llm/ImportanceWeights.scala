@@ -1,9 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** DSIR-style importance weighting for target-domain data selection
   * (Xie et al. 2023, "Data Selection for Language Models via Importance
@@ -26,7 +25,7 @@ import graft.core.{Tables => T}
   */
 object ImportanceWeights {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Quantization scale for the per-token probability ratio. 1e4 keeps
     * the full product S·(c_t+1)·(N_r+V) under ~1e17 at sf1 corpus
@@ -104,11 +103,6 @@ object ImportanceWeights {
        |ORDER BY score_q DESC, s.doc_id
        |LIMIT $DsirTake""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q216_dsir_weights" -> q216DsirWeights,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q216_dsir_weights" -> q216Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q216_dsir_weights", q216DsirWeights, q216Sql))
 }

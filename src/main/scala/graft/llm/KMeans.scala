@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Distributed Lloyd's k-means over the FULL embedding corpus — the
   * cluster-scale sibling of the bounded-sample fits behind the IVF and
@@ -39,7 +39,7 @@ import graft.core.{Tables => T}
   */
 object KMeans {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val K = 4
   val Iters = 3
@@ -162,6 +162,5 @@ object KMeans {
        |ORDER BY c.cell, dim""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map("q234_kmeans" -> q234KMeans)
-  val oracleSql: Map[String, String] = Map("q234_kmeans" -> q234Sql)
+  val entries: Seq[Entry] = Seq(Entry("q234_kmeans", q234KMeans, q234Sql))
 }

@@ -1,10 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** PER-GROUP KL DIVERGENCE from the corpus unigram distribution
   * (Kullback–Leibler Ann.Math.Stat'51; the corpus-BALANCE diagnostic
@@ -48,7 +48,7 @@ import graft.core.{Tables => T}
   */
 object KlDivergence {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Micro-nat quantization scale (the q569 constant). */
   val KlScale = 1000000L
@@ -335,10 +335,7 @@ object KlDivergence {
           "CAST(np AS HUGEINT)", "CAST(nq AS HUGEINT)")} AS js_micronats
       |FROM agg ORDER BY g1, g2""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q575_kl_divergence" -> q575KlDivergence,
-    "q576_js_matrix" -> q576JsMatrix)
-  val oracleSql: Map[String, String] = Map(
-    "q575_kl_divergence" -> q575Sql,
-    "q576_js_matrix" -> q576Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q575_kl_divergence", q575KlDivergence, q575Sql),
+    Entry("q576_js_matrix", q576JsMatrix, q576Sql))
 }

@@ -1,9 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{ExactDiv, Tables => T}
+import graft.core.{Entry, ExactDiv, Tables => T}
 
 /** LENGTH-BUCKETED BATCHING with exact padding-waste accounting (the
   * bucket_by_sequence_length training-loader recipe — Variable-length
@@ -39,7 +39,7 @@ import graft.core.{ExactDiv, Tables => T}
   */
 object LengthBucketing {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val BucketWidth = 16
   val TokBudget   = 256
@@ -133,6 +133,6 @@ object LengthBucketing {
       |ORDER BY bucket""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map("q581_length_bucketing" -> q581LengthBucketing)
-  val oracleSql: Map[String, String] = Map("q581_length_bucketing" -> q581Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q581_length_bucketing", q581LengthBucketing, q581Sql))
 }

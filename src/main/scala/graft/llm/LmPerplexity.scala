@@ -1,10 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** BIGRAM-LM PERPLEXITY document scoring — the CCNet quality filter
   * (Wenzek et al. LREC'20 §3: score every document by the
@@ -50,7 +50,7 @@ import graft.core.{Tables => T}
   */
 object LmPerplexity {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Micro-nat quantization scale for the per-bigram weight. */
   val LmScale = 1000000L
@@ -250,8 +250,6 @@ object LmPerplexity {
       |        JOIN scored ON sp.doc_id = scored.doc_id
       |ORDER BY sp.doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q569_lm_perplexity" -> q569LmPerplexity)
-  val oracleSql: Map[String, String] = Map(
-    "q569_lm_perplexity" -> q569Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q569_lm_perplexity", q569LmPerplexity, q569Sql))
 }

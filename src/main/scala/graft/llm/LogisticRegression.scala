@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Distributed full-batch logistic regression on hashed bag-of-words
   * features — the TRAINED quality/domain filter of the corpus pipeline
@@ -36,7 +36,7 @@ import graft.core.{Tables => T}
   */
 object LogisticRegression {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val HashDim = 64
   /** 20 iterations reach the same held-out accuracy as 30 at both
@@ -251,6 +251,6 @@ object LogisticRegression {
        |  (SELECT COUNT(*) FROM planted WHERE doc_id % 5 = 0) AS n_test,
        |  CAST($HashDim AS BIGINT) AS dim, TRUE AS ok""".stripMargin
 
-  val queries: Map[String, Q] = Map("q321_logreg_gate" -> q321LogregGate)
-  val oracleSql: Map[String, String] = Map("q321_logreg_gate" -> q321Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q321_logreg_gate", q321LogregGate, q321Sql))
 }

@@ -1,10 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** LSA dominant topic direction by POWER ITERATION over the sparse
   * TF-IDF matrix — distributed sparse linear algebra as plain
@@ -41,7 +41,7 @@ import graft.core.{Tables => T}
   */
 object Lsa {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val Scale = 1000000L
   val WScale = 1000L
@@ -136,6 +136,5 @@ object Lsa {
        |LIMIT $TopK""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map("q309_lsa_power" -> q309LsaPower)
-  val oracleSql: Map[String, String] = Map("q309_lsa_power" -> q309Sql)
+  val entries: Seq[Entry] = Seq(Entry("q309_lsa_power", q309LsaPower, q309Sql))
 }

@@ -1,10 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 import graft.functions.VectorFunctions._
 
 /** Matryoshka adaptive retrieval (Kusupati et al. 2022, "Matryoshka
@@ -24,7 +23,7 @@ import graft.functions.VectorFunctions._
   */
 object Matryoshka {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val MatryoshkaFullDim = 64
   val MatryoshkaPrefixDim = 16
@@ -95,11 +94,6 @@ object Matryoshka {
     s"""SELECT COUNT(*) AS n_queries, TRUE AS ok
        |FROM embeddings WHERE vec_id < ${VectorSearch.QuerySetSize}""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q218_matryoshka_gate" -> q218MatryoshkaGate,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q218_matryoshka_gate" -> q218Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q218_matryoshka_gate", q218MatryoshkaGate, q218Sql))
 }

@@ -1,11 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** LATE-INTERACTION MaxSim scoring (Khattab & Zaharia SIGIR'20
   * ColBERT §3.2 — the token-level multi-vector rerank every modern
@@ -42,7 +42,7 @@ import graft.core.{Tables => T}
   */
 object MaxSim {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Consecutive embedding rows per multi-vector doc. */
   val TokPerDoc = 8L
@@ -137,8 +137,5 @@ object MaxSim {
       |  FROM score) z
       |WHERE rank <= $TopR ORDER BY qid, rank""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q578_maxsim" -> q578MaxSim)
-  val oracleSql: Map[String, String] = Map(
-    "q578_maxsim" -> q578Sql)
+  val entries: Seq[Entry] = Seq(Entry("q578_maxsim", q578MaxSim, q578Sql))
 }

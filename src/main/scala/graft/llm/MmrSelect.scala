@@ -1,10 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 import graft.functions.VectorFunctions._
 
 /** MAXIMAL MARGINAL RELEVANCE selection (Carbonell & Goldstein
@@ -30,7 +29,7 @@ import graft.functions.VectorFunctions._
   */
 object MmrSelect {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Queries = vectors with vec_id < MmrQueries. */
   val MmrQueries = 8L
@@ -147,8 +146,6 @@ object MmrSelect {
       |ORDER BY qid, step""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q484_mmr_select" -> q484MmrSelect)
-  val oracleSql: Map[String, String] = Map(
-    "q484_mmr_select" -> q484Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q484_mmr_select", q484MmrSelect, q484Sql))
 }

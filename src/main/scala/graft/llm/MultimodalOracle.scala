@@ -3,10 +3,10 @@ package graft.llm
 import java.nio.charset.StandardCharsets.US_ASCII
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 import graft.llm.Multimodal.{GvidMime, MediaRecord, PpmMime, WavMime}
 
 /** q180 — the multimodal decode seam as a DRIVER-CHECKED row (the
@@ -30,7 +30,7 @@ import graft.llm.Multimodal.{GvidMime, MediaRecord, PpmMime, WavMime}
   */
 object MultimodalOracle {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Same id bound as q164's blob fixture. */
   val MediaDocBound = 25L
@@ -513,18 +513,10 @@ object MultimodalOracle {
     (0L until MediaDocBound)
       .map(id => voicedRuns(frameRmsExpected(id), SegTheta)._3.toLong).sum
 
-  val queries: Map[String, Q] = Map(
-    "q180_multimodal_decode" -> q180MultimodalDecode,
-    "q412_media_headers" -> q412MediaHeaders,
-    "q190_multimodal_transforms" -> q190MultimodalTransforms,
-    "q260_scene_cuts" -> q260SceneCuts,
-    "q326_audio_segments" -> q326AudioSegments,
-  )
-  val oracleSql: Map[String, String] = Map(
-    "q180_multimodal_decode" -> q180Sql,
-    "q412_media_headers" -> q180Sql,
-    "q190_multimodal_transforms" -> q190Sql,
-    "q260_scene_cuts" -> q260Sql,
-    "q326_audio_segments" -> q326Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q180_multimodal_decode", q180MultimodalDecode, q180Sql),
+    Entry("q412_media_headers", q412MediaHeaders, q180Sql),
+    Entry("q190_multimodal_transforms", q190MultimodalTransforms, q190Sql),
+    Entry("q260_scene_cuts", q260SceneCuts, q260Sql),
+    Entry("q326_audio_segments", q326AudioSegments, q326Sql))
 }

@@ -1,11 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 import graft.functions.VectorFunctions._
 
 /** MULTI-PROBE LSH ANN (Lv et al. VLDB'07 — the memory-side of the LSH
@@ -34,7 +34,7 @@ import graft.functions.VectorFunctions._
   */
 object MultiprobeLsh {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val MpPlanes = 12
   val MpProbeRadius = 2
@@ -113,8 +113,6 @@ object MultiprobeLsh {
        |FROM embeddings WHERE vec_id < ${VectorSearch.QuerySetSize}"""
       .stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q543_multiprobe_recall" -> q543MultiprobeRecall)
-  val oracleSql: Map[String, String] = Map(
-    "q543_multiprobe_recall" -> q543Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q543_multiprobe_recall", q543MultiprobeRecall, q543Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Multinomial Naive Bayes text classifier (McCallum & Nigam 1998) —
   * the PROBABILISTIC member of the classifier family next to q146's
@@ -44,7 +44,7 @@ import graft.core.{Tables => T}
   */
 object NaiveBayes {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Held-out accuracy floor, permille — pinned after measuring
     * (sf0.001 and sf0.01 both measure 1000‰; chance is ~500‰).
@@ -313,10 +313,7 @@ object NaiveBayes {
        |  TRUE AS ok
        |FROM planted GROUP BY 1 ORDER BY fold""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q319_naive_bayes" -> q319NaiveBayes,
-    "q323_cv_folds" -> q323CvFolds)
-  val oracleSql: Map[String, String] = Map(
-    "q319_naive_bayes" -> q319Sql,
-    "q323_cv_folds" -> q323Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q319_naive_bayes", q319NaiveBayes, q319Sql),
+    Entry("q323_cv_folds", q323CvFolds, q323Sql))
 }

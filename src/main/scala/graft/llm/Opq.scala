@@ -1,10 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** OPTIMIZED Product Quantization (Ge, He, Ke & Sun, CVPR 2013 — the
   * non-parametric alternation): the one PQ upgrade a serving index
@@ -38,7 +38,7 @@ import graft.core.{Tables => T}
   */
 object Opq {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val OpqIters = 8
   /** Micro-quantization scale for distortion terms. */
@@ -390,10 +390,7 @@ object Opq {
 
   val q457Sql: String = q453Sql
 
-  val queries: Map[String, Q] = Map(
-    "q453_opq_rotation" -> q453OpqRotation,
-    "q457_residual_quantization" -> q457ResidualQuantization)
-  val oracleSql: Map[String, String] = Map(
-    "q453_opq_rotation" -> q453Sql,
-    "q457_residual_quantization" -> q457Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q453_opq_rotation", q453OpqRotation, q453Sql),
+    Entry("q457_residual_quantization", q457ResidualQuantization, q457Sql))
 }

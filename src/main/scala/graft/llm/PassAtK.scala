@@ -1,9 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** PASS@K — the unbiased any-of-k success estimator (Chen et al.
   * arXiv:2107.03374 eq. 1, the HumanEval estimator: "if k samples are
@@ -29,7 +29,7 @@ import graft.core.{Tables => T}
   */
 object PassAtK {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val PakK = 5
 
@@ -72,8 +72,5 @@ object PassAtK {
       |FROM census WHERE n >= $PakK
       |ORDER BY task""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q557_pass_at_k" -> q557PassAtK)
-  val oracleSql: Map[String, String] = Map(
-    "q557_pass_at_k" -> q557Sql)
+  val entries: Seq[Entry] = Seq(Entry("q557_pass_at_k", q557PassAtK, q557Sql))
 }

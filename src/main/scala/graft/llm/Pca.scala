@@ -1,9 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Distributed PCA over the embedding table — the classic
   * dimensionality-reduction / whitening step of an embedding pipeline
@@ -41,7 +41,7 @@ import graft.core.{Tables => T}
   */
 object Pca {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val TopK = 8
 
@@ -210,6 +210,5 @@ object Pca {
        |  CAST(len(embedding) AS INTEGER) AS dim, $TopK AS k, TRUE AS ok
        |FROM embeddings GROUP BY len(embedding)""".stripMargin
 
-  val queries: Map[String, Q] = Map("q267_pca_gate" -> q267PcaGate)
-  val oracleSql: Map[String, String] = Map("q267_pca_gate" -> q267Sql)
+  val entries: Seq[Entry] = Seq(Entry("q267_pca_gate", q267PcaGate, q267Sql))
 }

@@ -2,10 +2,9 @@ package graft.llm
 
 import java.nio.charset.StandardCharsets.US_ASCII
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Perceptual near-duplicate detection for IMAGES — the multimodal twin
   * of the text near-dup family (q41 MinHash, q42 SimHash): an 8×8
@@ -28,7 +27,7 @@ import graft.core.{Tables => T}
   */
 object PerceptualHash {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Bounded media set (the q164/q180 fixture convention): one synthetic
     * 16×16 P6 image per doc_id below the bound, payload a pure function
@@ -152,11 +151,6 @@ object PerceptualHash {
     s"""SELECT CAST(3 * COUNT(*) AS BIGINT) AS n_images, TRUE AS ok
        |FROM documents WHERE doc_id < $MediaBound""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q219_perceptual_dedup" -> q219PerceptualDedup,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q219_perceptual_dedup" -> q219Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q219_perceptual_dedup", q219PerceptualDedup, q219Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** PHONETIC BLOCKING via SOUNDEX (Russell patent 1918; Knuth TAOCP
   * vol. 3 §6: the classical sound-alike code) — the PHONETIC blocking
@@ -38,7 +38,7 @@ import graft.core.{Tables => T}
   */
 object PhoneticBlocking {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val MaxEdit = 2
 
@@ -133,8 +133,6 @@ object PhoneticBlocking {
       |LEFT JOIN best ON c.w = best.w
       |ORDER BY c.w""".stripMargin
 
-  val queries: Map[String, Q] =
-    Map("q589_phonetic_blocking" -> q589PhoneticBlocking)
-  val oracleSql: Map[String, String] =
-    Map("q589_phonetic_blocking" -> q589Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q589_phonetic_blocking", q589PhoneticBlocking, q589Sql))
 }

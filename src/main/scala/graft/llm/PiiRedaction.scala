@@ -1,9 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** PII detection + redaction — the scrubbing pass training pipelines
   * run before text leaves curation (emails, IPv4 addresses, phone
@@ -27,7 +26,7 @@ import graft.core.{Tables => T}
   */
 object PiiRedaction {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   private val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
   private val Ipv4Re = "\\b(?:[0-9]{1,3}\\.){3}[0-9]{1,3}\\b"
@@ -89,11 +88,6 @@ object PiiRedaction {
       |WHERE n_email + n_ip + n_phone > 0
       |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q213_pii_redaction" -> q213PiiRedaction,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q213_pii_redaction" -> q213Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q213_pii_redaction", q213PiiRedaction, q213Sql))
 }

@@ -1,7 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.Entry
 
 /** PMI FEATURE SELECTION (Church & Hanks 1990 pointwise mutual
   * information, the feature-ranking workhorse of classic text
@@ -26,7 +27,7 @@ import org.apache.spark.sql.functions._
   */
 object PmiFeatures {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val MinDocs = 5L
   val TopK = 15
@@ -79,8 +80,6 @@ object PmiFeatures {
        |ORDER BY pmi_micro DESC, tok ASC
        |LIMIT $TopK""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q461_pmi_features" -> q461PmiFeatures)
-  val oracleSql: Map[String, String] = Map(
-    "q461_pmi_features" -> q461Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q461_pmi_features", q461PmiFeatures, q461Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Product quantization (Jégou, Douze & Schmid, "Product Quantization
   * for Nearest Neighbor Search", TPAMI 2011 — public literature): the
@@ -43,7 +43,7 @@ import graft.core.{Tables => T}
   */
 object ProductQuantization {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val SubspaceCount = 8
   val CodebookSize = 16
@@ -321,12 +321,7 @@ object ProductQuantization {
     s"""SELECT COUNT(*) AS n_queries, TRUE AS ok
        |FROM embeddings WHERE vec_id < ${VectorSearch.QuerySetSize}""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q155_pq_recall" -> q155PqRecall,
-    "q157_ivf_adc_recall" -> q157IvfAdcRecall,
-  )
-  val oracleSql: Map[String, String] = Map(
-    "q155_pq_recall" -> q155Sql,
-    "q157_ivf_adc_recall" -> q157Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q155_pq_recall", q155PqRecall, q155Sql),
+    Entry("q157_ivf_adc_recall", q157IvfAdcRecall, q157Sql))
 }

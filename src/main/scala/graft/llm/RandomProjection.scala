@@ -1,10 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** JOHNSON–LINDENSTRAUSS random projection with a ±1 (Achlioptas 2003)
   * matrix — the dimensionality-reduction workhorse: database-friendly
@@ -29,7 +28,7 @@ import graft.core.{Tables => T}
   */
 object RandomProjection {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val OutDims = 16
   val NPairs = 50
@@ -102,6 +101,5 @@ object RandomProjection {
        |FROM pairs
        |ORDER BY pair_id""".stripMargin
 
-  val queries: Map[String, Q] = Map("q385_jl_audit" -> q385JlAudit)
-  val oracleSql: Map[String, String] = Map("q385_jl_audit" -> q385Sql)
+  val entries: Seq[Entry] = Seq(Entry("q385_jl_audit", q385JlAudit, q385Sql))
 }

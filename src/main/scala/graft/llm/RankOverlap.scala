@@ -1,8 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.core.Entry
 
 /** RANK-BIASED OVERLAP between two retrieval systems (Webber, Moffat &
   * Zobel TOIS'10 — the top-weighted, prefix-truncation-safe similarity
@@ -29,7 +31,7 @@ import org.apache.spark.sql.functions._
   */
 object RankOverlap {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val RboP = BigDecimal("0.9")
   val RboDepth = 10
@@ -104,8 +106,6 @@ object RankOverlap {
        |FROM ar JOIN br USING (doc_id)""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q494_rank_overlap" -> q494RankOverlap)
-  val oracleSql: Map[String, String] = Map(
-    "q494_rank_overlap" -> q494Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q494_rank_overlap", q494RankOverlap, q494Sql))
 }

@@ -1,9 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** READABILITY SCORING (Flesch'48 reading ease + Kincaid'75 grade
   * level — the classic curation signals a training-data pipeline cuts
@@ -34,7 +34,7 @@ import graft.core.{Tables => T}
   */
 object Readability {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** FK grade from the exact integer pieces — shared verbatim. */
   val GradeFormula: String =
@@ -90,8 +90,6 @@ object Readability {
       |  $GradeFormula AS fk_grade, $EaseFormula AS ease
       |FROM pieces ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q534_readability" -> q534Readability)
-  val oracleSql: Map[String, String] = Map(
-    "q534_readability" -> q534Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q534_readability", q534Readability, q534Sql))
 }

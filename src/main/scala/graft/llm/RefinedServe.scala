@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** IVF-PQ SERVE WITH EXACT RE-RANK (the FAISS `IndexRefineFlat`
   * architecture; Jégou et al. TPAMI'11 §V.C's "re-ranking with source
@@ -29,7 +29,7 @@ import graft.core.{Tables => T}
   */
 object RefinedServe {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Shortlist depth handed to the exact re-ranker. */
   val RefineR = 16
@@ -107,8 +107,6 @@ object RefinedServe {
 
   val q482Sql: String = ProductQuantization.q157Sql
 
-  val queries: Map[String, Q] = Map(
-    "q482_refined_serve" -> q482RefinedServe)
-  val oracleSql: Map[String, String] = Map(
-    "q482_refined_serve" -> q482Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q482_refined_serve", q482RefinedServe, q482Sql))
 }

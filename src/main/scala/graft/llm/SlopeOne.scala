@@ -1,10 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** WEIGHTED SLOPE ONE rating prediction (Lemire–Maclachlan SDM'05 —
   * the closed-form collaborative-filtering predictor: "customer c's
@@ -35,7 +35,7 @@ import graft.core.{Tables => T}
   */
 object SlopeOne {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Minimum co-rater support for a usable deviation. */
   val SoMinSupport = 2
@@ -124,8 +124,5 @@ object SlopeOne {
       |SELECT c, i, actual, num, den, $PredFormula AS pred
       |FROM preds ORDER BY c, i""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q533_slope_one" -> q533SlopeOne)
-  val oracleSql: Map[String, String] = Map(
-    "q533_slope_one" -> q533Sql)
+  val entries: Seq[Entry] = Seq(Entry("q533_slope_one", q533SlopeOne, q533Sql))
 }

@@ -1,10 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** SMOTE — synthetic minority oversampling (Chawla, Bowyer, Hall &
   * Kegelmeyer JAIR'02: THE class-rebalancing data op — when the label
@@ -51,7 +51,7 @@ import graft.core.{Tables => T}
   */
 object Smote {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Broadcast budget for the exact |M|² path, in minority rows. A Q20
     * vector row ships ~64×8 B of longs plus array/row overhead ≈ 600 B,
@@ -201,8 +201,5 @@ object Smote {
       |GROUP BY 1, 2, 3, 4
       |ORDER BY nn.qid""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q564_smote" -> q564Smote)
-  val oracleSql: Map[String, String] = Map(
-    "q564_smote" -> q564Sql)
+  val entries: Seq[Entry] = Seq(Entry("q564_smote", q564Smote, q564Sql))
 }

@@ -1,9 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 import graft.llm.Multimodal.{parsePpmHeader, PpmMime}
 
 /** SSIM — structural similarity between image pairs (Wang, Bovik,
@@ -35,7 +34,7 @@ import graft.llm.Multimodal.{parsePpmHeader, PpmMime}
   */
 object Ssim {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** dims(id) = dims(id + [[SsimStride]]) by the generator's closed
     * form (width cycle 5 × height cycle 4).
@@ -127,8 +126,5 @@ object Ssim {
       |FROM mom ORDER BY id_a""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q565_ssim" -> q565Ssim)
-  val oracleSql: Map[String, String] = Map(
-    "q565_ssim" -> q565Sql)
+  val entries: Seq[Entry] = Seq(Entry("q565_ssim", q565Ssim, q565Sql))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** SUFFIX-ARRAY construction over the corpus token stream (Lee et al.
   * ACL'22 "Deduplicating Training Data Makes Language Models Better" —
@@ -55,7 +55,7 @@ import graft.core.{Tables => T}
 object SuffixArray {
 
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Dense rank (1-based) of the distinct rows of `keys` under the
     * lexicographic order of `cols` — the two-level scan: range
@@ -366,10 +366,7 @@ object SuffixArray {
        |  ${censusSql(CorpusOps.SubK)})
        |ORDER BY k, doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q451_suffix_array_dedup" -> q451SuffixArrayDedup,
-    "q471_lcp_dedup_spans" -> q471LcpDedupSpans)
-  val oracleSql: Map[String, String] = Map(
-    "q451_suffix_array_dedup" -> CorpusOps.q350Sql,
-    "q471_lcp_dedup_spans" -> q471Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q451_suffix_array_dedup", q451SuffixArrayDedup, CorpusOps.q350Sql),
+    Entry("q471_lcp_dedup_spans", q471LcpDedupSpans, q471Sql))
 }

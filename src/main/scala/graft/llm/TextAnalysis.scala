@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Text analysis over `documents` (SURVEY.md §2.b north-star): language
   * ID, quality scoring, token counting, fingerprinting, and the binary
@@ -14,7 +14,7 @@ import graft.core.{Tables => T}
   */
 object TextAnalysis {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Stopword-hit heuristic language ID. Rule-based and deterministic
     * so the oracle can replicate it exactly: count hits from small
@@ -817,37 +817,19 @@ object TextAnalysis {
       |FROM ranked JOIN ref USING (rn)
       |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q437_quantile_normalize" -> q437QuantileNormalize,
-    "q247_curation_rank" -> q247CurationRank,
-    "q250_classifier_eval" -> q250ClassifierEval,
-    "q241_truncation_loss" -> q241TruncationLoss,
-    "q172_rolling_fingerprint" -> q172RollingFingerprint,
-    "q177_corpus_health" -> q177CorpusHealth,
-    "q46_lang_id" -> q46LangId,
-    "q47_quality_score" -> q47QualityScore,
-    "q48_token_count" -> q48TokenCount,
-    "q49_fingerprint" -> q49Fingerprint,
-    "q50_binary_columns" -> q50BinaryColumns,
-    "q126_repetition_metrics" -> q126RepetitionMetrics,
-    "q129_rare_token_filter" -> q129RareTokenFilter,
-    "q146_lang_ngram_classify" -> q146LangNgramClassify,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q437_quantile_normalize" -> q437Sql,
-    "q247_curation_rank" -> q247Sql,
-    "q250_classifier_eval" -> q250Sql,
-    "q241_truncation_loss" -> q241Sql,
-    "q172_rolling_fingerprint" -> q172Sql,
-    "q177_corpus_health" -> q177Sql,
-    "q46_lang_id" -> q46Sql,
-    "q47_quality_score" -> q47Sql,
-    "q48_token_count" -> q48Sql,
-    "q49_fingerprint" -> q49Sql,
-    "q50_binary_columns" -> q50Sql,
-    "q126_repetition_metrics" -> q126Sql,
-    "q129_rare_token_filter" -> q129Sql,
-    "q146_lang_ngram_classify" -> q146Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q437_quantile_normalize", q437QuantileNormalize, q437Sql),
+    Entry("q247_curation_rank", q247CurationRank, q247Sql),
+    Entry("q250_classifier_eval", q250ClassifierEval, q250Sql),
+    Entry("q241_truncation_loss", q241TruncationLoss, q241Sql),
+    Entry("q172_rolling_fingerprint", q172RollingFingerprint, q172Sql),
+    Entry("q177_corpus_health", q177CorpusHealth, q177Sql),
+    Entry("q46_lang_id", q46LangId, q46Sql),
+    Entry("q47_quality_score", q47QualityScore, q47Sql),
+    Entry("q48_token_count", q48TokenCount, q48Sql),
+    Entry("q49_fingerprint", q49Fingerprint, q49Sql),
+    Entry("q50_binary_columns", q50BinaryColumns, q50Sql),
+    Entry("q126_repetition_metrics", q126RepetitionMetrics, q126Sql),
+    Entry("q129_rare_token_filter", q129RareTokenFilter, q129Sql),
+    Entry("q146_lang_ngram_classify", q146LangNgramClassify, q146Sql))
 }

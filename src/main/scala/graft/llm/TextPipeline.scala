@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Reusable tokenize → stopword-filter → term-weight pipeline over a
   * text corpus (SURVEY.md §2.b LLM row "tokenize/stopwords/TF-IDF") —
@@ -25,7 +25,7 @@ import graft.core.{Tables => T}
   */
 object TextPipeline {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Default stopword list (matches the marker set used by the quality
     * and lang-id queries).
@@ -1559,52 +1559,27 @@ object TextPipeline {
        |FROM cnt, dcg, idcg""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q444_ndcg" -> q444Ndcg,
-    "q436_porter_stem" -> q436PorterStem,
-    "q374_query_likelihood" -> q374QueryLikelihood,
-    "q460_rm3_feedback" -> q460Rm3Feedback,
-    "q364_bm25" -> q364Bm25,
-    "q200_weighted_sample" -> q200WeightedSample,
-    "q76_tfidf" -> q76Tfidf,
-    "q92_chunking" -> q92Chunking,
-    "q93_pii_scrub" -> q93PiiScrub,
-    "q95_train_split" -> q95TrainSplit,
-    "q255_shard_manifest" -> q255ShardManifest,
-    "q97_corpus_prep" -> q97CorpusPrep,
-    "q100_stratified_sample" -> q100StratifiedSample,
-    "q116_group_sample" -> q116GroupSample,
-    "q124_text_normalize" -> q124TextNormalize,
-    "q256_html_extract" -> q256HtmlExtract,
-    "q235_nfc_normalize" -> q235NfcNormalize,
-    "q240_span_corrupt" -> q240SpanCorrupt,
-    "q103_sequence_packing" -> q103SequencePacking,
-    "q108_bm25" -> q108Bm25,
-    "q337_ir_eval" -> q337IrEval,
-    "q158_temperature_mix" -> q158TemperatureMix,
-  )
-  val oracleSql: Map[String, String] = Map(
-    "q444_ndcg" -> q444Sql,
-    "q436_porter_stem" -> q436Sql,
-    "q374_query_likelihood" -> q374Sql,
-    "q460_rm3_feedback" -> q460Sql,
-    "q200_weighted_sample" -> q200Sql,
-    "q364_bm25" -> q364Sql,
-    "q76_tfidf" -> q76Sql,
-    "q92_chunking" -> q92Sql,
-    "q93_pii_scrub" -> q93Sql,
-    "q95_train_split" -> q95Sql,
-    "q255_shard_manifest" -> q255Sql,
-    "q256_html_extract" -> q256Sql,
-    "q97_corpus_prep" -> q97Sql,
-    "q100_stratified_sample" -> q100Sql,
-    "q116_group_sample" -> q116Sql,
-    "q124_text_normalize" -> q124Sql,
-    "q235_nfc_normalize" -> q235Sql,
-    "q240_span_corrupt" -> q240Sql,
-    "q103_sequence_packing" -> q103Sql,
-    "q108_bm25" -> q108Sql,
-    "q337_ir_eval" -> q337Sql,
-    "q158_temperature_mix" -> q158Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q444_ndcg", q444Ndcg, q444Sql),
+    Entry("q436_porter_stem", q436PorterStem, q436Sql),
+    Entry("q374_query_likelihood", q374QueryLikelihood, q374Sql),
+    Entry("q460_rm3_feedback", q460Rm3Feedback, q460Sql),
+    Entry("q364_bm25", q364Bm25, q364Sql),
+    Entry("q200_weighted_sample", q200WeightedSample, q200Sql),
+    Entry("q76_tfidf", q76Tfidf, q76Sql),
+    Entry("q92_chunking", q92Chunking, q92Sql),
+    Entry("q93_pii_scrub", q93PiiScrub, q93Sql),
+    Entry("q95_train_split", q95TrainSplit, q95Sql),
+    Entry("q255_shard_manifest", q255ShardManifest, q255Sql),
+    Entry("q97_corpus_prep", q97CorpusPrep, q97Sql),
+    Entry("q100_stratified_sample", q100StratifiedSample, q100Sql),
+    Entry("q116_group_sample", q116GroupSample, q116Sql),
+    Entry("q124_text_normalize", q124TextNormalize, q124Sql),
+    Entry("q256_html_extract", q256HtmlExtract, q256Sql),
+    Entry("q235_nfc_normalize", q235NfcNormalize, q235Sql),
+    Entry("q240_span_corrupt", q240SpanCorrupt, q240Sql),
+    Entry("q103_sequence_packing", q103SequencePacking, q103Sql),
+    Entry("q108_bm25", q108Bm25, q108Sql),
+    Entry("q337_ir_eval", q337IrEval, q337Sql),
+    Entry("q158_temperature_mix", q158TemperatureMix, q158Sql))
 }

@@ -1,9 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{ExactDiv, Tables => T}
+import graft.core.{Entry, ExactDiv, Tables => T}
 
 /** TOKEN BURSTINESS — the variance-to-mean dispersion index of
   * per-document token counts (Church–Gale CL'95 "Poisson mixtures";
@@ -33,7 +33,7 @@ import graft.core.{ExactDiv, Tables => T}
   */
 object TokenDispersion {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Minimum corpus occurrences before a token's D is read — the
     * Church–Gale low-frequency guard (a singleton's D is pure noise).
@@ -96,8 +96,6 @@ object TokenDispersion {
       |ORDER BY CAST(num AS DOUBLE) / CAST(den AS DOUBLE) DESC, tok
       |LIMIT $TopK""".stripMargin
 
-  val queries: Map[String, Q] =
-    Map("q587_token_dispersion" -> q587TokenDispersion)
-  val oracleSql: Map[String, String] =
-    Map("q587_token_dispersion" -> q587Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q587_token_dispersion", q587TokenDispersion, q587Sql))
 }

@@ -1,10 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Unigram language-model tokenizer training (Kudo 2018, the
   * SentencePiece unigram algorithm — public) — the second
@@ -36,7 +36,7 @@ import graft.core.{Tables => T}
   */
 object UnigramLm {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val MaxPieceLen = 4
   val MaxCandidates = 4096
@@ -219,6 +219,6 @@ object UnigramLm {
        |FROM (SELECT UNNEST(string_split(text, ' ')) AS word FROM documents)
        |WHERE regexp_matches(word, '^[a-z0-9]+$$')""".stripMargin
 
-  val queries: Map[String, Q] = Map("q268_unigram_lm" -> q268UnigramLm)
-  val oracleSql: Map[String, String] = Map("q268_unigram_lm" -> q268Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q268_unigram_lm", q268UnigramLm, q268Sql))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 import graft.functions.VectorFunctions._
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.b
@@ -26,7 +26,7 @@ import graft.functions.VectorFunctions._
   */
 object VectorSearch {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Size of the bounded query set for the exact path: the vectors with
     * `vec_id < QuerySetSize` are the "queries", the full table is the
@@ -1226,39 +1226,23 @@ object VectorSearch {
        |ORDER BY dot_q DESC, vec_id ASC
        |LIMIT $MipsTake""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q384_mips" -> q384Mips,
-    "q375_rrf3" -> q375Rrf3,
-    "q365_rrf_fusion" -> q365RrfFusion,
-    "q44_cosine_topk" -> q44CosineTopk,
-    "q254_knn_label_audit" -> q254KnnLabelAudit,
-    "q176_hard_negatives" -> q176HardNegatives,
-    "q45_lsh_ann" -> q45LshAnnGate,
-    "q81_ivf_ann" -> q81IvfAnnGate,
-    "q85_lsh_recall" -> q85LshRecall,
-    "q86_ivf_recall" -> q86IvfRecall,
-    "q435_ivf_probe_curve" -> q435IvfProbeCurve,
-    "q123_int8_quantize" -> q123Int8Quantize,
-  )
-
   /** q45/q81's bucket/cell picks are engine-internal (no SQL analogue),
     * so their driver rows are the [[annSoundnessGate]] (answers are
     * recomputed-correct + coverage) and their QUALITY is oracle-gated
     * through q85/q86; determinism and planted-duplicate recall are
     * additionally property-tested in VectorSearchSpec.
     */
-  val oracleSql: Map[String, String] = Map(
-    "q384_mips" -> q384Sql,
-    "q375_rrf3" -> q375Sql,
-    "q365_rrf_fusion" -> q365Sql,
-    "q44_cosine_topk" -> q44Sql,
-    "q254_knn_label_audit" -> q254Sql,
-    "q176_hard_negatives" -> q176Sql,
-    "q45_lsh_ann" -> soundnessSql,
-    "q81_ivf_ann" -> soundnessSql,
-    "q85_lsh_recall" -> recallSql,
-    "q86_ivf_recall" -> recallSql,
-    "q435_ivf_probe_curve" -> probeCurveSql,
-    "q123_int8_quantize" -> q123Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q384_mips", q384Mips, q384Sql),
+    Entry("q375_rrf3", q375Rrf3, q375Sql),
+    Entry("q365_rrf_fusion", q365RrfFusion, q365Sql),
+    Entry("q44_cosine_topk", q44CosineTopk, q44Sql),
+    Entry("q254_knn_label_audit", q254KnnLabelAudit, q254Sql),
+    Entry("q176_hard_negatives", q176HardNegatives, q176Sql),
+    Entry("q45_lsh_ann", q45LshAnnGate, soundnessSql),
+    Entry("q81_ivf_ann", q81IvfAnnGate, soundnessSql),
+    Entry("q85_lsh_recall", q85LshRecall, recallSql),
+    Entry("q86_ivf_recall", q86IvfRecall, recallSql),
+    Entry("q435_ivf_probe_curve", q435IvfProbeCurve, probeCurveSql),
+    Entry("q123_int8_quantize", q123Int8Quantize, q123Sql))
 }

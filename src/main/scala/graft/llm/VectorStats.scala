@@ -1,10 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Grouped vector aggregation — per-label centroid sums over the
   * embedding column, the building block behind class centroids,
@@ -27,7 +26,7 @@ import graft.core.{Tables => T}
   */
 object VectorStats {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val QuantScale = 1000000.0
 
@@ -347,18 +346,10 @@ object VectorStats {
       |FROM t GROUP BY label
       |ORDER BY label""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q431_centroid_drift" -> q431CentroidDrift,
-    "q262_quantile_bins" -> q262QuantileBins,
-    "q137_group_centroid" -> q137GroupCentroid,
-    "q151_embedding_covariance" -> q151EmbeddingCovariance,
-    "q249_vector_audit" -> q249VectorAudit,
-  )
-  val oracleSql: Map[String, String] = Map(
-    "q431_centroid_drift" -> q431Sql,
-    "q262_quantile_bins" -> q262Sql,
-    "q137_group_centroid" -> q137Sql,
-    "q151_embedding_covariance" -> q151Sql,
-    "q249_vector_audit" -> q249Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q431_centroid_drift", q431CentroidDrift, q431Sql),
+    Entry("q262_quantile_bins", q262QuantileBins, q262Sql),
+    Entry("q137_group_centroid", q137GroupCentroid, q137Sql),
+    Entry("q151_embedding_covariance", q151EmbeddingCovariance, q151Sql),
+    Entry("q249_vector_audit", q249VectorAudit, q249Sql))
 }

@@ -1,10 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** VITERBI OPTIMAL SEGMENTATION (the DP core of SentencePiece's
   * unigram LM, Kudo ACL'18, run under the DEFINED min-pieces integer
@@ -42,7 +42,7 @@ import graft.core.{Tables => T}
   */
 object ViterbiSegment {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val VsMaxPieceLen = 4
   val VsTopPieces = 50
@@ -166,8 +166,6 @@ object ViterbiSegment {
       |ORDER BY words.word""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q558_viterbi_segment" -> q558ViterbiSegment)
-  val oracleSql: Map[String, String] = Map(
-    "q558_viterbi_segment" -> q558Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q558_viterbi_segment", q558ViterbiSegment, q558Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Robust WINNOWING document fingerprinting (Schleimer, Wilkerson &
   * Aiken SIGMOD'03 — the MOSS algorithm): hash every k-token shingle,
@@ -34,7 +34,7 @@ import graft.core.{Tables => T}
   */
 object Winnowing {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Shingle size k and window w: guarantees detection of shared runs
     * of ≥ w+k−1 = 6 tokens, density ~2/(w+1).
@@ -208,10 +208,7 @@ object Winnowing {
        |FROM k GROUP BY source
        |ORDER BY source""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q377_winnowing" -> q377Winnowing,
-    "q410_winnow_release" -> q410WinnowRelease)
-  val oracleSql: Map[String, String] = Map(
-    "q377_winnowing" -> q377Sql,
-    "q410_winnow_release" -> q410Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q377_winnowing", q377Winnowing, q377Sql),
+    Entry("q410_winnow_release", q410WinnowRelease, q410Sql))
 }

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** WORD2VEC TRAINING-DATA PREP (Mikolov et al. NIPS'13) — the two
   * artifacts an embedding trainer consumes, as data ops:
@@ -35,7 +35,7 @@ import graft.core.{Tables => T}
   */
 object Word2vecPrep {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Skip-gram window: |pos_center − pos_context| ≤ 2, ≠ 0. */
   val SgWindow = 2
@@ -151,10 +151,7 @@ object Word2vecPrep {
       |ORDER BY w_micro DESC, term
       |LIMIT $NegTop""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q488_skipgram_pairs" -> q488SkipGrams,
-    "q489_negsample_table" -> q489NegSampleTable)
-  val oracleSql: Map[String, String] = Map(
-    "q488_skipgram_pairs" -> q488Sql,
-    "q489_negsample_table" -> q489Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q488_skipgram_pairs", q488SkipGrams, q488Sql),
+    Entry("q489_negsample_table", q489NegSampleTable, q489Sql))
 }

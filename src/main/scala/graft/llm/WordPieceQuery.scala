@@ -1,9 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** q440 — WORDPIECE ENCODE over the corpus vocabulary
   * ([[graft.functions.WordPieceTokens]]): the BERT-tokenizer leg of
@@ -29,7 +28,7 @@ import graft.core.{Tables => T}
   */
 object WordPieceQuery {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** The designed vocab: intended first pieces, continuations, and
     * greedy decoys (`a` under `ag`, `##t` under `##ter`, `##er` under
@@ -89,6 +88,5 @@ object WordPieceQuery {
        |ORDER BY tok""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map("q440_wordpiece" -> q440WordPiece)
-  val oracleSql: Map[String, String] = Map("q440_wordpiece" -> q440Sql)
+  val entries: Seq[Entry] = Seq(Entry("q440_wordpiece", q440WordPiece, q440Sql))
 }

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.core.Entry
 
 /** DEGREE ASSORTATIVITY (Newman PRL'02 — "do hubs attach to hubs?":
   * the Pearson correlation of endpoint degrees over the edge list; the
@@ -27,7 +29,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object Assortativity {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Edge-degree Pearson from the exact pieces — shared verbatim. */
   val RFormula: String =
@@ -83,8 +85,6 @@ object Assortativity {
       |  $RFormula > 0.0 AS assortative
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q530_assortativity" -> q530Assortativity)
-  val oracleSql: Map[String, String] = Map(
-    "q530_assortativity" -> q530Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q530_assortativity", q530Assortativity, q530Sql))
 }

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** CATEGORICAL (attribute) ASSORTATIVITY (Newman PRE'03 eq. 2 — "do
   * nodes link to their own KIND?": the mixing-matrix coefficient
@@ -26,7 +26,7 @@ import graft.core.{Tables => T}
   */
 object AttributeAssortativity {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Categorical r from the exact pieces — shared verbatim. */
   val RFormula: String =
@@ -88,8 +88,6 @@ object AttributeAssortativity {
       |  $RFormula > 0.0 AS homophilous
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q555_attr_assortativity" -> q555AttrAssortativity)
-  val oracleSql: Map[String, String] = Map(
-    "q555_attr_assortativity" -> q555Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q555_attr_assortativity", q555AttrAssortativity, q555Sql))
 }

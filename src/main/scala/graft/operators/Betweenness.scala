@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.core.Entry
 
 /** EXACT BETWEENNESS CENTRALITY + ECCENTRICITY (Freeman'77 via the
   * Brandes JMS'01 pair-dependency identity — "which nodes sit on the
@@ -38,7 +40,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object Betweenness {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** ≥ measured max(ecc) + 1 at every oracle SF (4/5 measured). */
   val BcUnrolledRounds = 7
@@ -168,8 +170,6 @@ object Betweenness {
       |ORDER BY ecc.v""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q531_betweenness" -> q531Betweenness)
-  val oracleSql: Map[String, String] = Map(
-    "q531_betweenness" -> q531Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q531_betweenness", q531Betweenness, q531Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** BORŮVKA MINIMUM SPANNING TREE + SINGLE-LINKAGE MERGE ORDER
   * (Borůvka 1926; the O(log n)-round distributed MST — each round
@@ -61,7 +61,7 @@ import graft.core.{Tables => T}
   */
 object BoruvkaMst {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Outer-round unroll: measured max 2 at sf0.001/0.01/0.1
     * (+margin). Engine REQUIREs ≤ this; the SQL unrolls exactly this
@@ -298,8 +298,6 @@ object BoruvkaMst {
       |FROM mst ORDER BY sl_rank""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q559_boruvka_mst" -> q559BoruvkaMst)
-  val oracleSql: Map[String, String] = Map(
-    "q559_boruvka_mst" -> q559Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q559_boruvka_mst", q559BoruvkaMst, q559Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** BRIDGES AND ARTICULATION POINTS of an undirected graph — the
   * graph-robustness leg next to k-truss/coreness/conductance (which
@@ -67,7 +67,7 @@ import graft.core.{Tables => T}
   */
 object Bridges {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Round budget shared by the label/BFS/climb/parts loops — all
     * depth- or diameter-bounded; measured max 3 (near-dup) / 5
@@ -428,12 +428,8 @@ object Bridges {
       |    AS is_articulation
       |FROM deg d ORDER BY d.node""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q571_bridges" -> q571Bridges,
-    "q572_articulation" -> q572Articulation,
-    "q573_two_edge_cc" -> q573TwoEdgeCc)
-  val oracleSql: Map[String, String] = Map(
-    "q571_bridges" -> q571Sql,
-    "q572_articulation" -> q572Sql,
-    "q573_two_edge_cc" -> q573Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q571_bridges", q571Bridges, q571Sql),
+    Entry("q572_articulation", q572Articulation, q572Sql),
+    Entry("q573_two_edge_cc", q573TwoEdgeCc, q573Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** BUTTERFLY COUNTING on the bipartite customer×part co-purchase
   * graph (Wang–Fu–Cheng VLDB'14; Sanei-Mehri et al. KDD'18) — the
@@ -31,7 +31,7 @@ import graft.core.{Tables => T}
   */
 object ButterflyCount {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Support cap on part degree (distinct customers) — the p99 of the
     * fixture degree distribution, so the cap path is exercised at
@@ -94,8 +94,6 @@ object ButterflyCount {
       |  (SELECT CAST(COALESCE(SUM(w * (w - 1) // 2), 0) AS BIGINT) FROM w)
       |    AS n_butterflies""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q502_butterflies" -> q502Butterflies)
-  val oracleSql: Map[String, String] = Map(
-    "q502_butterflies" -> q502Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q502_butterflies", q502Butterflies, q502Sql))
 }

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** CONDUCTANCE / NORMALIZED CUT per community (Kannan–Vempala–Vetta
   * JACM'04 for conductance; Shi–Malik PAMI'00 for the normalized cut —
@@ -37,7 +37,7 @@ import graft.core.{Tables => T}
   */
 object Conductance {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Normalized-cut score from the exact census — shared verbatim.
     * ncut(c) = cut/vol(c) + cut/vol(V∖c); both denominators NULLIF-
@@ -143,8 +143,6 @@ object Conductance {
        |FROM m ORDER BY community""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q560_conductance" -> q560Conductance)
-  val oracleSql: Map[String, String] = Map(
-    "q560_conductance" -> q560Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q560_conductance", q560Conductance, q560Sql))
 }

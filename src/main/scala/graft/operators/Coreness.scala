@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.core.Entry
 
 /** CORENESS DECOMPOSITION (max k per node — Seidman'83; generalizes
   * q294's fixed k=3 core exactly the way q515's trussness generalizes
@@ -39,7 +41,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object Coreness {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** ≥ measured rounds-to-fixpoint + margin at the oracle SFs
     * (5 / 10 at sf0.001 / sf0.01; 15 at sf0.1 — BASELINE.md,
@@ -122,8 +124,5 @@ object Coreness {
       |ORDER BY v""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q520_coreness" -> q520Coreness)
-  val oracleSql: Map[String, String] = Map(
-    "q520_coreness" -> q520Sql)
+  val entries: Seq[Entry] = Seq(Entry("q520_coreness", q520Coreness, q520Sql))
 }

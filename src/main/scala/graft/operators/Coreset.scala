@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
+import graft.core.Entry
+
 /** K-MEANS CORESET by SENSITIVITY SAMPLING (Feldman & Langberg
   * STOC'11; the Bachem-Lucic-Krause practical recipe) — the
   * summarization operator that makes clustering 100 TB tractable: a
@@ -40,7 +42,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object Coreset {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Grid cell edge on the q340 integer plane (2× the DBSCAN eps —
     * coarse is fine: B only needs to be a constant-factor rough
@@ -131,8 +133,6 @@ object Coreset {
     """SELECT CAST(COUNT(*) AS BIGINT) AS n_points, TRUE AS ok
       |FROM embeddings""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q473_coreset_sample" -> q473CoresetSample)
-  val oracleSql: Map[String, String] = Map(
-    "q473_coreset_sample" -> q473Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q473_coreset_sample", q473CoresetSample, q473Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Grid-accelerated DBSCAN (Ester, Kriegel, Sander & Xu, KDD'96) over
   * the embedding table's first two coordinates — DENSITY clustering,
@@ -33,7 +33,7 @@ import graft.core.{Tables => T}
 object Dbscan {
 
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val DbScale = 1000
   val DbEps = 30L
@@ -606,14 +606,9 @@ object Dbscan {
 
   val q450Sql: String = q439Sql
 
-  val queries: Map[String, Q] = Map(
-    "q340_dbscan" -> q340Dbscan,
-    "q345_knn_graph" -> q345KnnGraph,
-    "q439_nn_descent" -> q439NnDescent,
-    "q450_nn_descent_converged" -> q450NnDescentConverged)
-  val oracleSql: Map[String, String] = Map(
-    "q340_dbscan" -> q340Sql,
-    "q345_knn_graph" -> q345Sql,
-    "q439_nn_descent" -> q439Sql,
-    "q450_nn_descent_converged" -> q450Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q340_dbscan", q340Dbscan, q340Sql),
+    Entry("q345_knn_graph", q345KnnGraph, q345Sql),
+    Entry("q439_nn_descent", q439NnDescent, q439Sql),
+    Entry("q450_nn_descent_converged", q450NnDescentConverged, q450Sql))
 }

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.core.Entry
 
 /** DISPARITY-FILTER BACKBONE (Serrano–Boguñá–Vespignani PNAS'09 —
   * the multiscale weighted-graph sparsifier: an edge survives iff its
@@ -29,7 +31,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object DisparityFilter {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** 1/α for the significance level (α = 1/16). */
   val DfAlphaInv = 16L
@@ -140,8 +142,6 @@ object DisparityFilter {
       |   OR ${sigExpr("sj", "dj", "w")}
       |ORDER BY i, j""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q554_disparity_backbone" -> q554DisparityBackbone)
-  val oracleSql: Map[String, String] = Map(
-    "q554_disparity_backbone" -> q554Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q554_disparity_backbone", q554DisparityBackbone, q554Sql))
 }

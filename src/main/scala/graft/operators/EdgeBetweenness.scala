@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.core.Entry
 
 /** EDGE BETWEENNESS over deterministic source PIVOTS (Girvan–Newman
   * PNAS'02's community-cutting primitive — "which EDGES carry the
@@ -33,7 +35,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object EdgeBetweenness {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** md5 first-hex-digit prefix bound ⟹ ≈ 1/16 pivot rate. */
   val EbPivotPrefix = "1"
@@ -132,8 +134,6 @@ object EdgeBetweenness {
       |ORDER BY eu, ev""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q556_edge_betweenness" -> q556EdgeBetweenness)
-  val oracleSql: Map[String, String] = Map(
-    "q556_edge_betweenness" -> q556Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q556_edge_betweenness", q556EdgeBetweenness, q556Sql))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
+import graft.core.Entry
+
 /** FILTERED VECTOR SEARCH (predicate + ANN — the "metadata filter"
   * serving pattern every production vector store exposes; Qdrant/
   * Vespa/pgvector all document the same post-vs-pre-filter tradeoff):
@@ -32,7 +34,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object FilteredServe {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val Categories = 4L
   val FilterBeam = 32
@@ -158,8 +160,6 @@ object FilteredServe {
 
   val q480Sql: String = GraphServe.q456Sql
 
-  val queries: Map[String, Q] = Map(
-    "q480_filtered_serve" -> q480FilteredServe)
-  val oracleSql: Map[String, String] = Map(
-    "q480_filtered_serve" -> q480Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q480_filtered_serve", q480FilteredServe, q480Sql))
 }

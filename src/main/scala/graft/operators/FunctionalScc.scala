@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** SCC OF A FUNCTIONAL GRAPH (every node has exactly ONE out-edge —
   * the random-mapping "rho" structure behind Pollard's rho, hash-chain
@@ -44,7 +44,7 @@ import graft.core.{Tables => T}
   */
 object FunctionalScc {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** (node, nxt) — the functional edge table over customer keys. */
   def edges(s: SparkSession, dir: String): (DataFrame, Long) = {
@@ -113,8 +113,6 @@ object FunctionalScc {
       |FROM ans a
       |ORDER BY a.node""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q483_functional_scc" -> q483FunctionalScc)
-  val oracleSql: Map[String, String] = Map(
-    "q483_functional_scc" -> q483Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q483_functional_scc", q483FunctionalScc, q483Sql))
 }

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Grid-bucketed SPATIAL nearest-neighbor join — the standard
   * scalable recipe for "nearest facility" / geo-enrichment queries
@@ -40,7 +40,7 @@ import graft.core.{Tables => T}
   */
 object GeoGridJoin {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Grid cell edge in millidegrees (30° cells: 4×12 grid over the
     * synthetic ±60°/±180° domain — sized so the sf0.01 supplier side
@@ -122,6 +122,6 @@ object GeoGridJoin {
        |FROM cand WHERE rn = 1 ORDER BY c_custkey""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map("q297_geo_nearest" -> q297GeoNearest)
-  val oracleSql: Map[String, String] = Map("q297_geo_nearest" -> q297Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q297_geo_nearest", q297GeoNearest, q297Sql))
 }

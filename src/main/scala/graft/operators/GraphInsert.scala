@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.core.Entry
 
 /** INCREMENTAL INSERT into the serving graph — the index-UPDATE leg a
   * real vector-serving system needs (HNSW/NSG insert semantics: new
@@ -30,7 +32,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object GraphInsert {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** 1-in-10 hash split for the delta batch. */
   val DeltaMod = 10L
@@ -169,8 +171,6 @@ object GraphInsert {
     """SELECT CAST(COUNT(*) AS BIGINT) AS n_points, TRUE AS ok
       |FROM embeddings""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q477_graph_insert" -> q477GraphInsert)
-  val oracleSql: Map[String, String] = Map(
-    "q477_graph_insert" -> q477Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q477_graph_insert", q477GraphInsert, q477Sql))
 }

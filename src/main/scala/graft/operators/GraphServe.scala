@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
+import graft.core.Entry
+
 /** BEAM-SEARCH SERVING over the converged NN-Descent graph — the
   * query-time leg the graph-ANN family was missing: q439/q450 BUILD
   * the K'-NN graph, this ANSWERS nearest-neighbor queries by walking
@@ -32,7 +34,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
 object GraphServe {
 
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val Entries = 32
   val Beam = 8
@@ -186,8 +188,6 @@ object GraphServe {
        |  TRUE AS ok
        |FROM embeddings""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q456_graph_serve" -> q456GraphServe)
-  val oracleSql: Map[String, String] = Map(
-    "q456_graph_serve" -> q456Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q456_graph_serve", q456GraphServe, q456Sql))
 }

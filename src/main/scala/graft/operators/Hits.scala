@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** HITS hubs-and-authorities (Kleinberg 1999) over the bipartite
   * customer→supplier purchase graph — the DIRECTED-importance
@@ -30,7 +30,7 @@ import graft.core.{Tables => T}
   */
 object Hits {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val Scale = 1000000L
   val Iterations = 2
@@ -98,6 +98,5 @@ object Hits {
        |ORDER BY authority DESC, s_suppkey ASC
        |LIMIT $TopK""".stripMargin
 
-  val queries: Map[String, Q] = Map("q308_hits" -> q308Hits)
-  val oracleSql: Map[String, String] = Map("q308_hits" -> q308Sql)
+  val entries: Seq[Entry] = Seq(Entry("q308_hits", q308Hits, q308Sql))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
+import graft.core.Entry
+
 /** HNSW-STYLE LAYERED ENTRY DESCENT (Malkov & Yashunin TPAMI'18) over
   * the q456 serving graph — the production entry policy GraphServe's
   * scaladoc names: a flat K'-NN graph has no long links, so a greedy
@@ -32,7 +34,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object Hnsw {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Node-count thinning per layer (HNSW's 1/M level probability). */
   val LayerFanout = 8L
@@ -139,8 +141,6 @@ object Hnsw {
 
   val q470Sql: String = GraphServe.q456Sql
 
-  val queries: Map[String, Q] = Map(
-    "q470_hnsw_serve" -> q470HnswServe)
-  val oracleSql: Map[String, String] = Map(
-    "q470_hnsw_serve" -> q470Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q470_hnsw_serve", q470HnswServe, q470Sql))
 }

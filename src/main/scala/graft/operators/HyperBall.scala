@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** HYPERBALL neighborhood function (Boldi–Vigna WebSci'13; the
   * HyperANF successor — "how many nodes are within t hops", the input
@@ -30,7 +30,7 @@ import graft.core.{Tables => T}
   */
 object HyperBall {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val HbRounds = 4
   val HbLgk = 12
@@ -200,10 +200,7 @@ object HyperBall {
        |  CAST($HbRounds AS BIGINT) AS n_rounds, TRUE AS ok
        |FROM customer""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q495_hyperball" -> q495HyperBall,
-    "q499_harmonic_centrality" -> q499HarmonicCentrality)
-  val oracleSql: Map[String, String] = Map(
-    "q495_hyperball" -> q495Sql,
-    "q499_harmonic_centrality" -> q499Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q495_hyperball", q495HyperBall, q495Sql),
+    Entry("q499_harmonic_centrality", q499HarmonicCentrality, q499Sql))
 }

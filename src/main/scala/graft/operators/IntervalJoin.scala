@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Batch interval (range) join — for each left row, every right row of
   * the same key whose timestamp falls in [left_ts − window, left_ts):
@@ -31,7 +31,7 @@ import graft.core.{Tables => T}
   */
 object IntervalJoin {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Pairs of (`left` row, `right` row) with equal `key` and
     * right.`rightTs` ∈ [left.`leftTs` − `windowSec`, left.`leftTs`).
@@ -89,11 +89,6 @@ object IntervalJoin {
        |GROUP BY p.user_id, purchase_id, p_ts
        |ORDER BY p.user_id, purchase_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q115_interval_join" -> q115IntervalJoin,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q115_interval_join" -> q115Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q115_interval_join", q115IntervalJoin, q115Sql))
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** ISOLATION TREE anomaly scoring (Liu, Ting & Zhou ICDM'08 — the
   * anomaly-detection family's unsupervised leg next to the streaming
@@ -34,7 +34,7 @@ import graft.core.{Tables => T}
   */
 object IsolationTree {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val SampleN = 256
   val MaxDepth = 8
@@ -220,10 +220,7 @@ object IsolationTree {
 
   val q469Sql: String = q462Sql
 
-  val queries: Map[String, Q] = Map(
-    "q462_isolation_tree" -> q462IsolationTree,
-    "q469_isolation_forest" -> q469IsolationForest)
-  val oracleSql: Map[String, String] = Map(
-    "q462_isolation_tree" -> q462Sql,
-    "q469_isolation_forest" -> q469Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q462_isolation_tree", q462IsolationTree, q462Sql),
+    Entry("q469_isolation_forest", q469IsolationForest, q469Sql))
 }

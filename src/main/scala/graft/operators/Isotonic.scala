@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Grouped ISOTONIC regression via pool-adjacent-violators (PAVA,
   * Barlow et al. 1972 — the public textbook algorithm): fit the best
@@ -28,7 +27,7 @@ import graft.core.{Tables => T}
   */
 object Isotonic {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** PAVA over (x, y) pairs sorted by x: returns blocks as
     * (sum, count) with strictly increasing means. Pure and
@@ -120,6 +119,6 @@ object Isotonic {
       |  TRUE AS ok
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, Q] = Map("q277_isotonic_gate" -> q277IsotonicGate)
-  val oracleSql: Map[String, String] = Map("q277_isotonic_gate" -> q277Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q277_isotonic_gate", q277IsotonicGate, q277Sql))
 }

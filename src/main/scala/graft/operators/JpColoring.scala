@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.core.Entry
 
 /** JONES–PLASSMANN GREEDY GRAPH COLORING (Jones–Plassmann SISC'93 —
   * the distributed coloring workhorse: schedule conflict-free
@@ -42,7 +44,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object JpColoring {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** ≥ measured rounds-to-drain + margin at the oracle SFs (measured
     * via the emitted round column: max 12 / 14 at sf0.001 / sf0.01 —
@@ -162,8 +164,6 @@ object JpColoring {
       |ORDER BY v""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q522_jp_coloring" -> q522JpColoring)
-  val oracleSql: Map[String, String] = Map(
-    "q522_jp_coloring" -> q522Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q522_jp_coloring", q522JpColoring, q522Sql))
 }

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** k-core decomposition (fixed k) — the fourth graph operator next to
   * [[ConnectedComponents]] (connectivity), [[PageRank]] (importance)
@@ -38,7 +38,7 @@ import graft.core.{Tables => T}
   */
 object KCore {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val KCoreK = 3
   val KCoreRounds = 12
@@ -147,6 +147,5 @@ object KCore {
        |GROUP BY n ORDER BY part""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map("q294_kcore" -> q294KCore)
-  val oracleSql: Map[String, String] = Map("q294_kcore" -> q294Sql)
+  val entries: Seq[Entry] = Seq(Entry("q294_kcore", q294KCore, q294Sql))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** K-TRUSS DECOMPOSITION (Cohen NSA-TR'08; Wang–Cheng VLDB'12) — the
   * triangle-density subgraph family member between q294's k-core
@@ -35,7 +35,7 @@ import graft.core.{Tables => T}
   */
 object KTruss {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val TrussK = 4
   val KtBlock = 32
@@ -234,10 +234,7 @@ object KTruss {
       |ORDER BY e.u, e.v""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q509_ktruss" -> q509KTruss,
-    "q515_trussness" -> q515Trussness)
-  val oracleSql: Map[String, String] = Map(
-    "q509_ktruss" -> q509Sql,
-    "q515_trussness" -> q515Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q509_ktruss", q509KTruss, q509Sql),
+    Entry("q515_trussness", q515Trussness, q515Sql))
 }

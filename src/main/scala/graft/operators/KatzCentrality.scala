@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.core.Entry
 
 /** KATZ CENTRALITY, truncated dyadic form (Katz Psychometrika'53 —
   * the walk-counting centrality that interpolates between degree
@@ -32,7 +34,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object KatzCentrality {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** 1/α — a power of two, so every attenuated term is dyadic. */
   val KzAlphaInv = 4L
@@ -104,8 +106,5 @@ object KatzCentrality {
       |ORDER BY n.v""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q553_katz" -> q553Katz)
-  val oracleSql: Map[String, String] = Map(
-    "q553_katz" -> q553Sql)
+  val entries: Seq[Entry] = Seq(Entry("q553_katz", q553Katz, q553Sql))
 }

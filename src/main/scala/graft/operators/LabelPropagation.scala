@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Synchronous label-propagation COMMUNITY detection (Raghavan et al.
   * 2007) — the density-structure sibling of the connectivity fixpoints:
@@ -30,7 +30,7 @@ import graft.core.{Tables => T}
 object LabelPropagation {
 
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val Rounds = 3
 
@@ -211,10 +211,7 @@ object LabelPropagation {
        |ORDER BY s.community""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q239_lpa_communities" -> q239Communities,
-    "q318_modularity" -> q318Modularity)
-  val oracleSql: Map[String, String] = Map(
-    "q239_lpa_communities" -> q239Sql,
-    "q318_modularity" -> q318Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q239_lpa_communities", q239Communities, q239Sql),
+    Entry("q318_modularity", q318Modularity, q318Sql))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
+import graft.core.Entry
+
 /** LINK PREDICTION with the RESOURCE-ALLOCATION index + an EXACT AUC
   * readout (Zhou–Lü–Zhang EPJ-B'09 for RA; Lü–Zhou Physica-A'11
   * survey — RA is the common-neighbor family's strongest simple
@@ -38,7 +40,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object LinkPrediction {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val LpHoldMod = 10
   val LpBand = 3
@@ -186,8 +188,6 @@ object LinkPrediction {
       |FROM (SELECT n_pos, n_neg, sum_rd,
       |  sum_rd - n_pos * (n_pos + 1) AS u2 FROM m)""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q512_link_prediction" -> q512LinkPrediction)
-  val oracleSql: Map[String, String] = Map(
-    "q512_link_prediction" -> q512Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q512_link_prediction", q512LinkPrediction, q512Sql))
 }

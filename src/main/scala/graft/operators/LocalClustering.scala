@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.core.Entry
 
 /** LOCAL CLUSTERING COEFFICIENT census + GLOBAL TRANSITIVITY
   * (Watts–Strogatz Nature'98 / Newman SIAM'03 — "how clique-ish is
@@ -27,7 +29,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object LocalClustering {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** (v, deg, tri, cc_ppm) census over canonical (u < v) edges. */
   def localClustering(canonEdges: DataFrame): DataFrame = {
@@ -110,8 +112,6 @@ object LocalClustering {
       |FROM deg LEFT JOIN per ON per.n = deg.n
       |ORDER BY v""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q544_local_clustering" -> q544LocalClustering)
-  val oracleSql: Map[String, String] = Map(
-    "q544_local_clustering" -> q544Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q544_local_clustering", q544LocalClustering, q544Sql))
 }

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** LOUVAIN one-level community refinement (Blondel et al. 2008 phase
   * 1) — the community family's OPTIMIZER: q239's LPA proposes a
@@ -38,7 +38,7 @@ import graft.core.{Tables => T}
 object Louvain {
 
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val Rounds = 4
 
@@ -288,8 +288,6 @@ object Louvain {
        |ORDER BY s.community""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q452_louvain_one_level" -> q452Louvain)
-  val oracleSql: Map[String, String] = Map(
-    "q452_louvain_one_level" -> q452Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q452_louvain_one_level", q452Louvain, q452Sql))
 }

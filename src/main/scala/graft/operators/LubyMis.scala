@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.core.Entry
 
 /** LUBY'S MAXIMAL INDEPENDENT SET (Luby SICOMP'86 — the classic
   * O(log n)-round symmetry-breaking primitive; completes the iterative
@@ -36,7 +38,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object LubyMis {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** ≥ measured rounds-to-empty + 1 at every oracle SF (measured via
     * max(r) of the emitted membership: 4 rounds at both sf0.001 and
@@ -144,8 +146,5 @@ object LubyMis {
       |ORDER BY v""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q517_luby_mis" -> q517LubyMis)
-  val oracleSql: Map[String, String] = Map(
-    "q517_luby_mis" -> q517Sql)
+  val entries: Seq[Entry] = Seq(Entry("q517_luby_mis", q517LubyMis, q517Sql))
 }

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Integer-arithmetic PageRank over the customer–supplier co-purchase
   * graph — the second iterative graph operator next to
@@ -36,7 +36,7 @@ import graft.core.{Tables => T}
   */
 object PageRank {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val SupplierOffset = 10000000L
   val Iterations = 3
@@ -201,10 +201,7 @@ object PageRank {
        |ORDER BY ppr DESC, node_id ASC
        |LIMIT $TopK""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q138_pagerank" -> q138PageRank,
-    "q474_personalized_pagerank" -> q474PersonalizedPageRank)
-  val oracleSql: Map[String, String] = Map(
-    "q138_pagerank" -> q138Sql,
-    "q474_personalized_pagerank" -> q474Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q138_pagerank", q138PageRank, q138Sql),
+    Entry("q474_personalized_pagerank", q474PersonalizedPageRank, q474Sql))
 }

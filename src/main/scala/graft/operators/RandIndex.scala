@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** ADJUSTED RAND INDEX between two labelings (Hubert–Arabie J.
   * Classification'85 — THE chance-corrected EXTERNAL clustering
@@ -36,7 +36,7 @@ import graft.core.{Tables => T}
   */
 object RandIndex {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** ARI from the exact pair-count pieces — shared verbatim. */
   val AriFormula: String =
@@ -131,8 +131,5 @@ object RandIndex {
        |FROM m""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q566_ari_lpa" -> q566AriLpa)
-  val oracleSql: Map[String, String] = Map(
-    "q566_ari_lpa" -> q566Sql)
+  val entries: Seq[Entry] = Seq(Entry("q566_ari_lpa", q566AriLpa, q566Sql))
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
+import graft.core.Entry
+
 /** RANDOM-WALK CORPUS GENERATION (DeepWalk, Perozzi et al. KDD'14 /
   * node2vec p=q=1 — the sentence generator for graph embeddings: walks
   * become "sentences", nodes become "words", and q488's skip-gram
@@ -28,7 +30,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object RandomWalks {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val WalkLen = 8
 
@@ -105,8 +107,6 @@ object RandomWalks {
        |ORDER BY wid, step""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q496_random_walks" -> q496RandomWalks)
-  val oracleSql: Map[String, String] = Map(
-    "q496_random_walks" -> q496Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q496_random_walks", q496RandomWalks, q496Sql))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** FELLEGI–SUNTER PROBABILISTIC RECORD LINKAGE (JASA 1969 — the
   * canonical entity-resolution model; Splink/dedupe ship exactly this)
@@ -40,7 +40,7 @@ import graft.core.{Tables => T}
   */
 object RecordLinkage {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Corruption rates as exact 2^32-scale md5 thresholds. */
   val NameThr: Long = (BigInt(3) * BigInt(4294967296L) / 10).toLong
@@ -156,8 +156,6 @@ object RecordLinkage {
       |  CAST((SELECT COUNT(*) FROM customer) AS BIGINT) AS n_true,
       |  TRUE AS ok""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q472_fellegi_sunter" -> q472FellegiSunter)
-  val oracleSql: Map[String, String] = Map(
-    "q472_fellegi_sunter" -> q472Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q472_fellegi_sunter", q472FellegiSunter, q472Sql))
 }

@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.core.Entry
 
 /** RICH-CLUB COEFFICIENT curve (Zhou–Mondragón IEEE Comm. Lett.'04 —
   * "do the high-degree nodes form a club?": for every degree cutoff
@@ -25,7 +27,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object RichClub {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** (k, n_k, e_k, phi_ppm) over canonical (u < v) edges. */
   def richClub(canonEdges: DataFrame): DataFrame = {
@@ -119,8 +121,5 @@ object RichClub {
       |WHERE n_k >= 2
       |ORDER BY nk.k""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q550_rich_club" -> q550RichClub)
-  val oracleSql: Map[String, String] = Map(
-    "q550_rich_club" -> q550Sql)
+  val entries: Seq[Entry] = Seq(Entry("q550_rich_club", q550RichClub, q550Sql))
 }

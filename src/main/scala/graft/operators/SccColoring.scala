@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** GENERAL SCC OVER A DIRECTED EDGE LIST — coloring / forward-backward
   * peeling (Orzan'04 / Hong-Rodia-Olukotun PPoPP'13 "On fast parallel
@@ -59,7 +59,7 @@ import graft.core.{Tables => T}
   */
 object SccColoring {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Outer peel budget — measured 1 at the sf0.001/sf0.01 fixtures
     * (the giant SCC harvests in the first peel, the tail trims).
@@ -364,10 +364,7 @@ object SccColoring {
       |FROM sizes s JOIN lvl l ON s.scc_id = l.scc_id
       |ORDER BY s.scc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q570_scc" -> q570Scc,
-    "q574_scc_levels" -> q574SccLevels)
-  val oracleSql: Map[String, String] = Map(
-    "q570_scc" -> q570Sql,
-    "q574_scc_levels" -> q574Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q570_scc", q570Scc, q570Sql),
+    Entry("q574_scc_levels", q574SccLevels, q574Sql))
 }

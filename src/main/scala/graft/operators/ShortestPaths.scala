@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Bounded-hop weighted single-source shortest paths (Bellman–Ford) —
   * the MIN-PLUS semiring fixpoint that completes the iterative-graph
@@ -38,7 +38,7 @@ import graft.core.{Tables => T}
   */
 object ShortestPaths {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val Hops = 3
 
@@ -108,6 +108,5 @@ object ShortestPaths {
        |FROM walk GROUP BY node
        |ORDER BY node""".stripMargin
 
-  val queries: Map[String, Q] = Map("q231_weighted_sssp" -> q231Sssp)
-  val oracleSql: Map[String, String] = Map("q231_weighted_sssp" -> q231Sql)
+  val entries: Seq[Entry] = Seq(Entry("q231_weighted_sssp", q231Sssp, q231Sql))
 }

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.core.Entry
 
 /** SIMRANK, truncated fixed-point form (Jeh–Widom KDD'02 — "two
   * objects are similar if they are referenced by similar objects":
@@ -40,7 +42,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object SimRank {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Fixed-point scale 2^20 — scores are multiples of 2^−20. */
   val SrScale = 1048576L
@@ -138,8 +140,5 @@ object SimRank {
       |ORDER BY a, b""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q562_simrank" -> q562SimRank)
-  val oracleSql: Map[String, String] = Map(
-    "q562_simrank" -> q562Sql)
+  val entries: Seq[Entry] = Seq(Entry("q562_simrank", q562SimRank, q562Sql))
 }

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** 2-D skyline (Pareto frontier) — the "best tradeoff" operator: keep
   * rows no other row dominates, where q dominates p iff q is ≤ on the
@@ -32,7 +32,7 @@ import graft.core.{Tables => T}
   */
 object Skyline {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** One linear frontier scan over (id, minAxis, maxAxis) tuples.
     * Survivors: within each minAxis group, the rows carrying the group
@@ -105,6 +105,5 @@ object Skyline {
       |    AND (q.p_retailprice < p.p_retailprice OR q.p_size > p.p_size))
       |ORDER BY p_partkey""".stripMargin
 
-  val queries: Map[String, Q] = Map("q198_skyline" -> q198Skyline)
-  val oracleSql: Map[String, String] = Map("q198_skyline" -> q198Sql)
+  val entries: Seq[Entry] = Seq(Entry("q198_skyline", q198Skyline, q198Sql))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
+import graft.core.Entry
+
 /** SUBMODULAR DATA SELECTION by greedy FACILITY LOCATION (Nemhauser–
   * Wolsey–Fisher '78 greedy on the classic coverage objective; the
   * training-data-subset-selection recipe of CRAIG/GLISTER-style
@@ -32,7 +34,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object SubmodularSelect {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val SelectK = 8
   val PoolSize = 64
@@ -115,8 +117,6 @@ object SubmodularSelect {
     """SELECT CAST(COUNT(*) AS BIGINT) AS n_points, TRUE AS ok
       |FROM embeddings""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q475_submodular_select" -> q475SubmodularSelect)
-  val oracleSql: Map[String, String] = Map(
-    "q475_submodular_select" -> q475Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q475_submodular_select", q475SubmodularSelect, q475Sql))
 }

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Distributed triangle counting — the third graph operator next to
   * [[ConnectedComponents]] (connectivity) and [[PageRank]] (importance):
@@ -39,7 +39,7 @@ import graft.core.{Tables => T}
   */
 object TriangleCount {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val SupportMin = 2
 
@@ -129,6 +129,5 @@ object TriangleCount {
        |  (SELECT COUNT(*) FROM wedges) AS n_wedges,
        |  (SELECT COUNT(*) FROM closed) AS n_triangles""".stripMargin
 
-  val queries: Map[String, Q] = Map("q147_triangles" -> q147Triangles)
-  val oracleSql: Map[String, String] = Map("q147_triangles" -> q147Sql)
+  val entries: Seq[Entry] = Seq(Entry("q147_triangles", q147Triangles, q147Sql))
 }

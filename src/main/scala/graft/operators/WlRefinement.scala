@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.core.Entry
 
 /** WEISFEILER–LEMAN COLOR REFINEMENT (1-WL / color refinement —
   * Weisfeiler–Leman 1968; the node-signature iteration under graph
@@ -31,7 +32,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object WlRefinement {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val WlRounds = 2
   val WlTop = 20
@@ -94,8 +95,6 @@ object WlRefinement {
       |LIMIT $WlTop""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q510_wl_refinement" -> q510WlRefinement)
-  val oracleSql: Map[String, String] = Map(
-    "q510_wl_refinement" -> q510Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q510_wl_refinement", q510WlRefinement, q510Sql))
 }

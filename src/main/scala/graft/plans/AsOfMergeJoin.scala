@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.graftbridge.PlanBridge
 
+import graft.core.Entry
+
 /** Whole-operator custom plan #3: the as-of join as a NATIVE merge
   * operator (after the top-k heap, TopKPerGroup, and the order-carrying
   * scan, SortedRuns — this one is the missing JOIN leg).
@@ -207,7 +209,7 @@ object AsOfMergeJoin {
     PlanBridge.ofRows(spark, Project(keep, node))
   }
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** q224 — q31's as-of query (purchases ← latest same-user signup at
     * or before) through [[AsOfMergeJoinExec]] instead of the
@@ -329,10 +331,7 @@ object AsOfMergeJoin {
     }
   }
 
-  val queries: Map[String, Q] = Map(
-    "q224_asof_native" -> q224AsofNative,
-    "q266_asof_bucketed" -> q266AsofBucketed)
-  val oracleSql: Map[String, String] = Map(
-    "q224_asof_native" -> q224Sql,
-    "q266_asof_bucketed" -> q224Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q224_asof_native", q224AsofNative, q224Sql),
+    Entry("q266_asof_bucketed", q266AsofBucketed, q224Sql))
 }

@@ -7,10 +7,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, Log
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Optimizer rule #4 (next to TopKFilterPushdown, DistinctToBitmap and
   * MatviewRewrite): PRIMARY-KEY / FOREIGN-KEY JOIN ELIMINATION — the
@@ -142,7 +141,7 @@ object JoinElimination extends Rule[LogicalPlan] {
   // q536 — the elimination under the driver gate
   // ---------------------------------------------------------------
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** q536 — the BI-layer shape: revenue per returnflag THROUGH joins
     * to orders (inner, on its pk) and part (left, on its pk) that
@@ -190,8 +189,6 @@ object JoinElimination extends Rule[LogicalPlan] {
       |GROUP BY 1
       |ORDER BY 1""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q536_join_elimination" -> q536JoinElimination)
-  val oracleSql: Map[String, String] = Map(
-    "q536_join_elimination" -> q536Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q536_join_elimination", q536JoinElimination, q536Sql))
 }

@@ -7,8 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.core.Entry
 
 /** Optimizer rule #3 (next to TopKFilterPushdown and DistinctToBitmap):
   * MATERIALIZED-VIEW AGGREGATE REWRITE — the classic rollup-
@@ -134,7 +136,7 @@ object MatviewRewrite extends Rule[LogicalPlan] {
   // q523 — the rewrite under the driver gate
   // ---------------------------------------------------------------
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Build-once EXACT-CENTS fact table (the house decimal-cents
     * discipline: the fixture's DOUBLE measures cannot be hash-gated
@@ -225,8 +227,6 @@ object MatviewRewrite extends Rule[LogicalPlan] {
       |GROUP BY 1, 2
       |ORDER BY 1, 2""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q523_matview_rewrite" -> q523MatviewRewrite)
-  val oracleSql: Map[String, String] = Map(
-    "q523_matview_rewrite" -> q523Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q523_matview_rewrite", q523MatviewRewrite, q523Sql))
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 
 /** COLUMN-LEVEL LINEAGE extracted from the ANALYZED Catalyst plan — for
   * every output column of a query, the set of physical leaf columns
@@ -43,7 +43,7 @@ import graft.core.{Tables => T, dsl, OracleDsl => O}
   */
 object PlanLineage {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   private type M = Map[ExprId, Set[(String, String)]]
 
@@ -162,6 +162,6 @@ object PlanLineage {
       |) AS t(out_col, src_table, src_col)
       |ORDER BY out_col, src_table, src_col""".stripMargin
 
-  val queries: Map[String, Q] = Map("q251_column_lineage" -> q251ColumnLineage)
-  val oracleSql: Map[String, String] = Map("q251_column_lineage" -> q251Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q251_column_lineage", q251ColumnLineage, q251Sql))
 }

@@ -1,13 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
-import graft.core.{GraftSession, Tables => T}
+import graft.core.{Entry, GraftSession, Tables => T}
 
 /** RUNTIME plan instrumentation — per-operator ACTUAL row counts read
   * back from the executed plan's SQLMetrics. This is the observability
@@ -28,7 +28,7 @@ import graft.core.{GraftSession, Tables => T}
   */
 object PlanMetrics {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Final physical plan after execution (AQE unwrapped). */
   def finalPlan(df: DataFrame): SparkPlan =
@@ -139,10 +139,7 @@ object PlanMetrics {
       |        WHERE o_orderpriority = '1-URGENT') AS BIGINT) AS n_urgent
       |FROM orders""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q253_plan_metrics" -> q253PlanMetrics,
-    "q370_observed_metrics" -> q370ObservedMetrics)
-  val oracleSql: Map[String, String] = Map(
-    "q253_plan_metrics" -> q253Sql,
-    "q370_observed_metrics" -> q370Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q253_plan_metrics", q253PlanMetrics, q253Sql),
+    Entry("q370_observed_metrics", q370ObservedMetrics, q370Sql))
 }

@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitio
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.PlanBridge
 
+import graft.core.Entry
+
 /** Whole-operator custom plan #2: an ORDER-CARRYING scan over a
   * total-order layout (q130's terasort shape — every file owns a
   * disjoint key range, rows sorted within).
@@ -71,7 +73,7 @@ object SortedRuns {
     PlanBridge.ofRows(s, SortedRunsNode(order, byFile.size, child))
   }
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** q184 — the sorted-runs scan as a driver row. Three contracts:
     *   - PLAN: an explicit global `orderBy` over the operator must
@@ -197,12 +199,9 @@ object SortedRuns {
       |    AS BIGINT) AS sum_cents
       |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q184_sorted_runs" -> q184SortedRuns,
-    "q263_sorted_agg" -> q263SortedAgg)
-  val oracleSql: Map[String, String] = Map(
-    "q184_sorted_runs" -> q184Sql,
-    "q263_sorted_agg" -> q263Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q184_sorted_runs", q184SortedRuns, q184Sql),
+    Entry("q263_sorted_agg", q263SortedAgg, q263Sql))
 }
 
 /** Logical marker: `child` (the per-file union) produces `sortOrder`

@@ -4,13 +4,15 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.core.Entry
 
 /** Whole-operator custom plan: bounded-heap per-group top-k.
   *
@@ -319,7 +321,7 @@ object TopK {
     PlanBridge.ofRows(spark, TopKPerGroupNode(groupExprs, order, k, child))
   }
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** q156 — the q18 shape on the custom operator: top-3 orders per
     * customer by (totalprice desc, orderkey asc — the unique tiebreak
@@ -353,6 +355,5 @@ object TopK {
       |WHERE rn <= 3
       |ORDER BY o_custkey ASC, o_totalprice DESC, o_orderkey ASC""".stripMargin
 
-  val queries: Map[String, Q] = Map("q156_topk_heap" -> q156TopkHeap)
-  val oracleSql: Map[String, String] = Map("q156_topk_heap" -> q156Sql)
+  val entries: Seq[Entry] = Seq(Entry("q156_topk_heap", q156TopkHeap, q156Sql))
 }

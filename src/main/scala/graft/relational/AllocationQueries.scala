@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Sequential-allocation operators — the ETL shapes where each row's
   * answer depends on an ORDERED matching against other rows, which
@@ -22,7 +22,7 @@ import graft.core.{Tables => T}
   */
 object AllocationQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** q298 — FIFO lot matching via CUMULATIVE-INTERVAL overlap: per
     * part, 'N' lineitems are acquisition lots and 'R' lineitems are
@@ -350,17 +350,9 @@ object AllocationQueries {
       assignSql("bb", "ring_b", "s_after") + "\n" + tail
   }
 
-  val queries: Map[String, Q] = Map(
-    "q317_consistent_hash" -> q317ConsistentHash,
-    "q298_fifo_match" -> q298FifoMatch,
-    "q299_position_attribution" -> q299PositionAttribution,
-    "q300_gap_audit" -> q300GapAudit,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q317_consistent_hash" -> q317Sql,
-    "q298_fifo_match" -> q298Sql,
-    "q299_position_attribution" -> q299Sql,
-    "q300_gap_audit" -> q300Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q317_consistent_hash", q317ConsistentHash, q317Sql),
+    Entry("q298_fifo_match", q298FifoMatch, q298Sql),
+    Entry("q299_position_attribution", q299PositionAttribution, q299Sql),
+    Entry("q300_gap_audit", q300GapAudit, q300Sql))
 }

@@ -1,11 +1,11 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types._
 
-import graft.core.{GraftSession, Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, GraftSession, Tables => T, dsl, OracleDsl => O}
 
 /** Multi-join analytical headliners (TPC-H Q3/Q5 shapes) — the
   * join-ordering / broadcast-chain stress tests of the relational
@@ -26,7 +26,7 @@ import graft.core.{GraftSession, Tables => T, dsl, OracleDsl => O}
   */
 object AnalyticalQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Q3 shape — shipping-priority revenue: segment-filtered customers'
     * orders before a cutoff, lines shipped after it, top-10 orders by
@@ -840,43 +840,22 @@ object AnalyticalQueries {
       |  LIMIT 2) l
       |ORDER BY c.c_custkey, l.cents DESC, l.o_orderkey""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q362_lateral_topk" -> q362LateralTopk,
-    "q248_rfm_segments" -> q248RfmSegments,
-    "q82_shipping_priority" -> q82ShippingPriority,
-    "q83_local_supplier_volume" -> q83LocalSupplierVolume,
-    "q94_funnel" -> q94Funnel,
-    "q99_bloom_pruned_join" -> q99BloomPrunedJoin,
-    "q119_cohort_retention" -> q119CohortRetention,
-    "q148_last_touch_attribution" -> q148LastTouchAttribution,
-    "q150_event_transitions" -> q150EventTransitions,
-    "q152_activity_streaks" -> q152ActivityStreaks,
-    "q153_returned_items" -> q153ReturnedItems,
-    "q165_large_volume" -> q165LargeVolume,
-    "q173_sole_fault" -> q173SoleFault,
-    "q181_min_cost_supplier" -> q181MinCostSupplier,
-    "q182_excess_volume" -> q182ExcessVolume,
-    "q188_recursive_reach" -> q188RecursiveReach,
-    "q189_lateral_topk" -> q189LateralTopk,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q362_lateral_topk" -> q362Sql,
-    "q248_rfm_segments" -> q248Sql,
-    "q181_min_cost_supplier" -> q181Sql,
-    "q182_excess_volume" -> q182Sql,
-    "q188_recursive_reach" -> q188Sql,
-    "q189_lateral_topk" -> q189Sql,
-    "q82_shipping_priority" -> q82Sql,
-    "q83_local_supplier_volume" -> q83Sql,
-    "q94_funnel" -> q94Sql,
-    "q99_bloom_pruned_join" -> q99Sql,
-    "q119_cohort_retention" -> q119Sql,
-    "q148_last_touch_attribution" -> q148Sql,
-    "q150_event_transitions" -> q150Sql,
-    "q152_activity_streaks" -> q152Sql,
-    "q153_returned_items" -> q153Sql,
-    "q165_large_volume" -> q165Sql,
-    "q173_sole_fault" -> q173Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q362_lateral_topk", q362LateralTopk, q362Sql),
+    Entry("q248_rfm_segments", q248RfmSegments, q248Sql),
+    Entry("q82_shipping_priority", q82ShippingPriority, q82Sql),
+    Entry("q83_local_supplier_volume", q83LocalSupplierVolume, q83Sql),
+    Entry("q94_funnel", q94Funnel, q94Sql),
+    Entry("q99_bloom_pruned_join", q99BloomPrunedJoin, q99Sql),
+    Entry("q119_cohort_retention", q119CohortRetention, q119Sql),
+    Entry("q148_last_touch_attribution", q148LastTouchAttribution, q148Sql),
+    Entry("q150_event_transitions", q150EventTransitions, q150Sql),
+    Entry("q152_activity_streaks", q152ActivityStreaks, q152Sql),
+    Entry("q153_returned_items", q153ReturnedItems, q153Sql),
+    Entry("q165_large_volume", q165LargeVolume, q165Sql),
+    Entry("q173_sole_fault", q173SoleFault, q173Sql),
+    Entry("q181_min_cost_supplier", q181MinCostSupplier, q181Sql),
+    Entry("q182_excess_volume", q182ExcessVolume, q182Sql),
+    Entry("q188_recursive_reach", q188RecursiveReach, q188Sql),
+    Entry("q189_lateral_topk", q189LateralTopk, q189Sql))
 }

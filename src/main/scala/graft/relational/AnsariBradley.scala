@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** ANSARI–BRADLEY SCALE TEST (Ansari–Bradley AMS'60 — the rank test
   * for equality of DISPERSION: every two-sample member of the family
@@ -30,7 +30,7 @@ import graft.core.{Tables => T}
   */
 object AnsariBradley {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Two-sided normal 95% critical value, pinned literal. */
   val ZCrit2 = "1.959963984540054"
@@ -103,8 +103,6 @@ object AnsariBradley {
       |  ABS($ZFormula) > $ZCrit2 AS reject_95
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q535_ansari_bradley" -> q535AnsariBradley)
-  val oracleSql: Map[String, String] = Map(
-    "q535_ansari_bradley" -> q535Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q535_ansari_bradley", q535AnsariBradley, q535Sql))
 }

@@ -1,10 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** BENFORD'S-LAW FIRST-DIGIT AUDIT (Newcomb 1881 / Benford 1938; the
   * forensic-accounting screen every data-quality suite ships —
@@ -27,7 +26,7 @@ import graft.core.{Tables => T}
   */
 object BenfordAudit {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Pinned micro-scaled Benford proportions log10(1+1/d), d=1..9. */
   val BenfordMicro: Seq[(Int, Long)] =
@@ -73,8 +72,6 @@ object BenfordAudit {
        |ORDER BY digit""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q476_benford_audit" -> q476BenfordAudit)
-  val oracleSql: Map[String, String] = Map(
-    "q476_benford_audit" -> q476Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q476_benford_audit", q476BenfordAudit, q476Sql))
 }

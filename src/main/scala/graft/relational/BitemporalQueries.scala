@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Bitemporal point-in-time queries — "what did we BELIEVE at
   * transaction time T about the state VALID at time V". One-axis
@@ -16,7 +16,7 @@ import graft.core.{Tables => T}
   */
 object BitemporalQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Valid-time point probed by both scenarios. */
   val ValidAt = "1995-06-30"
@@ -87,11 +87,6 @@ object BitemporalQueries {
        |FROM resolve WHERE rn = 1
        |ORDER BY scenario, o_custkey""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q221_bitemporal_asof" -> q221BitemporalAsOf,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q221_bitemporal_asof" -> q221Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q221_bitemporal_asof", q221BitemporalAsOf, q221Sql))
 }

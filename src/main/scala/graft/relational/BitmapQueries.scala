@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 import graft.functions.GraftFunctions
 
 /** Exact audience-overlap analytics on the native Roaring bitmap
@@ -18,7 +18,7 @@ import graft.functions.GraftFunctions
   */
 object BitmapQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** q265 — exact pairwise audience overlap via bitmap algebra: per
     * event type, the exact distinct-user bitmap (`rbm_agg`), plus
@@ -204,14 +204,9 @@ object BitmapQueries {
        |JOIN d s ON s.day BETWEEN t.day - ${RollingDays - 1} AND t.day
        |GROUP BY t.day ORDER BY day""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q265_bitmap_overlap" -> q265BitmapOverlap,
-    "q271_bitmap_ivm" -> q271BitmapIvm,
-    "q279_distinct_rewrite" -> q279DistinctRewrite,
-    "q287_rolling_distinct" -> q287RollingDistinct)
-  val oracleSql: Map[String, String] = Map(
-    "q265_bitmap_overlap" -> q265Sql,
-    "q271_bitmap_ivm" -> q271Sql,
-    "q279_distinct_rewrite" -> q279Sql,
-    "q287_rolling_distinct" -> q287Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q265_bitmap_overlap", q265BitmapOverlap, q265Sql),
+    Entry("q271_bitmap_ivm", q271BitmapIvm, q271Sql),
+    Entry("q279_distinct_rewrite", q279DistinctRewrite, q279Sql),
+    Entry("q287_rolling_distinct", q287RollingDistinct, q287Sql))
 }

@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** BROWN–FORSYTHE TEST (Brown–Forsythe JASA'74 — the robust Levene-type
   * variance-homogeneity test: "do the k groups have the same SPREAD?",
@@ -41,7 +41,7 @@ import graft.core.{Tables => T}
   */
 object BrownForsythe {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** F(k−1=4, ∞) 95% critical value = χ²₄crit / 4, pinned literal. */
   val F4InfCrit = "2.3719322591952886"
@@ -134,8 +134,6 @@ object BrownForsythe {
       |  $FFormula > $F4InfCrit AS reject_95
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q527_brown_forsythe" -> q527BrownForsythe)
-  val oracleSql: Map[String, String] = Map(
-    "q527_brown_forsythe" -> q527Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q527_brown_forsythe", q527BrownForsythe, q527Sql))
 }

@@ -3,10 +3,10 @@ package graft.relational
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 import graft.operators.SaltedJoin
 
 /** The two explicit shuffle-management recipes from SURVEY.md §4 /
@@ -24,7 +24,7 @@ import graft.operators.SaltedJoin
   */
 object BucketedQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val Buckets = 16
 
@@ -193,17 +193,9 @@ object BucketedQueries {
        |GROUP BY o_orderstatus
        |ORDER BY o_orderstatus""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q79_bucketed_join" -> q79BucketedJoin,
-    "q80_salted_join" -> q80SaltedJoin,
-    "q315_salted_agg" -> q315SaltedAgg,
-    "q276_shuffle_hash_join" -> q276ShuffleHashJoin,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q79_bucketed_join" -> q79Sql,
-    "q80_salted_join" -> q80Sql,
-    "q315_salted_agg" -> q315Sql,
-    "q276_shuffle_hash_join" -> q276Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q79_bucketed_join", q79BucketedJoin, q79Sql),
+    Entry("q80_salted_join", q80SaltedJoin, q80Sql),
+    Entry("q315_salted_agg", q315SaltedAgg, q315Sql),
+    Entry("q276_shuffle_hash_join", q276ShuffleHashJoin, q276Sql))
 }

@@ -3,7 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** PROPENSITY-SCORE STRATIFICATION ATE (Rosenbaum–Rubin 1983/84
   * subclassification — the observational-causal leg completing the
@@ -38,7 +38,7 @@ import graft.core.{Tables => T}
   */
 object CausalStratification {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Planted uniform treatment effect, in cents. */
   val TauCents = 1000000L
@@ -126,8 +126,6 @@ object CausalStratification {
       |FROM agg
       |ORDER BY stratum""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q490_stratified_ate" -> q490StratifiedAte)
-  val oracleSql: Map[String, String] = Map(
-    "q490_stratified_ate" -> q490Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q490_stratified_ate", q490StratifiedAte, q490Sql))
 }

@@ -1,11 +1,11 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** MULTIPLE-CHANGEPOINT detection by BINARY SEGMENTATION (Scott–Knott
   * '74; Killick–Fearnhead–Eckley JASA'12 frame it as the standard
@@ -31,7 +31,7 @@ import graft.core.{Tables => T}
   */
 object Changepoints {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Binary segmentation (depth 2) over a `(d, v)` daily frame.
     * Boundary-degenerate level-2 splits — the level-1 argmax landing at
@@ -125,8 +125,6 @@ object Changepoints {
       |  FROM idx, s1, s2l, s2r)
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q514_changepoints" -> q514Changepoints)
-  val oracleSql: Map[String, String] = Map(
-    "q514_changepoints" -> q514Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q514_changepoints", q514Changepoints, q514Sql))
 }

@@ -1,9 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** COCHRAN–ARMITAGE TREND TEST (Cochran Biometrics'54 / Armitage'55 —
   * "does a BINARY rate trend across the ordered groups?": the
@@ -25,7 +25,7 @@ import graft.core.{Tables => T}
   */
 object CochranArmitage {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Two-sided normal 95% critical value (q535's). */
   val ZCrit2 = AnsariBradley.ZCrit2
@@ -85,8 +85,6 @@ object CochranArmitage {
       |  ABS($ZFormula) > $ZCrit2 AS reject_95
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q541_cochran_armitage" -> q541CochranArmitage)
-  val oracleSql: Map[String, String] = Map(
-    "q541_cochran_armitage" -> q541Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q541_cochran_armitage", q541CochranArmitage, q541Sql))
 }

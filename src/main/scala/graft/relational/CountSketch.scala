@@ -1,12 +1,12 @@
 package graft.relational
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types.LongType
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** COUNT-SKETCH — the SIGNED frequency sketch (Charikar–Chen–
   * Farach-Colton ICALP'02) next to q96's Count-Min: each of
@@ -38,7 +38,7 @@ import graft.core.{Tables => T}
   */
 object CountSketch {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val Depth = 5
   val Width = 256
@@ -179,8 +179,6 @@ object CountSketch {
       |ORDER BY n_exact DESC, l_suppkey ASC
       |LIMIT 10""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q501_count_sketch" -> q501CountSketch)
-  val oracleSql: Map[String, String] = Map(
-    "q501_count_sketch" -> q501Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q501_count_sketch", q501CountSketch, q501Sql))
 }

@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** CRAMÉR–VON MISES TWO-SAMPLE TEST (Anderson AMS'62 rank form — the
   * L2-norm EDF test: where KS q290 reacts to the single worst ECDF
@@ -28,7 +28,7 @@ import graft.core.{Tables => T}
   */
 object CramerVonMises {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Asymptotic CvM 95% critical value (Anderson–Darling table),
     * pinned literal.
@@ -106,8 +106,6 @@ object CramerVonMises {
       |  $TFormula > $CvmCrit AS reject_95
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q538_cramer_von_mises" -> q538CramerVonMises)
-  val oracleSql: Map[String, String] = Map(
-    "q538_cramer_von_mises" -> q538Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q538_cramer_von_mises", q538CramerVonMises, q538Sql))
 }

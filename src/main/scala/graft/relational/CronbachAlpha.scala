@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** CRONBACH'S ALPHA (Cronbach Psychometrika'51 — internal-consistency
   * reliability: "do these k parallel measurements move together enough
@@ -29,7 +29,7 @@ import graft.core.{Tables => T}
   */
 object CronbachAlpha {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** α from the exact pieces — shared verbatim. */
   val AlphaFormula: String =
@@ -96,8 +96,6 @@ object CronbachAlpha {
       |SELECT n_days, k, v_items, v_total, $AlphaFormula AS alpha
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q549_cronbach_alpha" -> q549CronbachAlpha)
-  val oracleSql: Map[String, String] = Map(
-    "q549_cronbach_alpha" -> q549Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q549_cronbach_alpha", q549CronbachAlpha, q549Sql))
 }

@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** LEAD–LAG CROSS-CORRELATION FUNCTION (Box–Jenkins'70 CCF — "does one
   * series LEAD the other, and by how many days?": the bivariate
@@ -30,7 +30,7 @@ import graft.core.{Tables => T}
   */
 object CrossCorrelation {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val CcfMaxLag = 7
   val CcfLeadType = "view"
@@ -112,8 +112,6 @@ object CrossCorrelation {
       |  $CcfFormula AS r
       |FROM pairs ORDER BY lag""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q532_cross_correlation" -> q532CrossCorrelation)
-  val oracleSql: Map[String, String] = Map(
-    "q532_cross_correlation" -> q532Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q532_cross_correlation", q532CrossCorrelation, q532Sql))
 }

@@ -1,10 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** ORDER-PRESERVING DICTIONARY ENCODING — the string-storage leg next
   * to the numeric compression ops (int8 q123, binary q232, PQ q155):
@@ -28,7 +27,7 @@ import graft.core.{Tables => T}
   */
 object DictionaryEncode {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val DictHead = 20
 
@@ -72,8 +71,6 @@ object DictionaryEncode {
       |SELECT code, name, (SELECT n_mid FROM cnt) AS n_mid_range
       |FROM d ORDER BY code LIMIT $DictHead""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q506_dict_encode" -> q506DictEncode)
-  val oracleSql: Map[String, String] = Map(
-    "q506_dict_encode" -> q506Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q506_dict_encode", q506DictEncode, q506Sql))
 }

@@ -1,9 +1,8 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** DYNAMIC TIME WARPING distance between the event types' daily
   * series (Sakoe–Chiba ASSP'78; Berndt–Clifford KDD'94 brought it to
@@ -36,7 +35,7 @@ import graft.core.{Tables => T}
   */
 object DtwDistance {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** ≥ longest alignment-DAG path (2·days − 2 = 58 measured at every
     * fixture SF — the day count is calendar-bounded) + margin.
@@ -134,8 +133,6 @@ object DtwDistance {
     */
   private def Inf: String = "170141183460469231731687303715884105"
 
-  val queries: Map[String, Q] = Map(
-    "q524_dtw_distance" -> q524DtwDistance)
-  val oracleSql: Map[String, String] = Map(
-    "q524_dtw_distance" -> q524Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q524_dtw_distance", q524DtwDistance, q524Sql))
 }

@@ -1,11 +1,11 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** DURBIN–WATSON STATISTIC (Durbin–Watson Biometrika'50 — "are the
   * regression residuals serially correlated?": the diagnostic that
@@ -50,7 +50,7 @@ import graft.core.{Tables => T}
   */
 object DurbinWatson {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** ⌊10⁶·num/den⌋ off the exact wide-integer pieces — the shared
     * [[graft.core.ExactDiv.microFloor]] digit-group long division,
@@ -161,8 +161,6 @@ object DurbinWatson {
       |  ${dwMicroFormula("//")} AS dw_micro
       |FROM m2 ORDER BY t""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q540_durbin_watson" -> q540DurbinWatson)
-  val oracleSql: Map[String, String] = Map(
-    "q540_durbin_watson" -> q540Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q540_durbin_watson", q540DurbinWatson, q540Sql))
 }

@@ -1,9 +1,8 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** DYNAMIC PIVOT — the discovered-value-list form of q87's static
   * pivot (the spreadsheet-user expectation: "one column per priority,
@@ -27,7 +26,7 @@ import graft.core.{Tables => T}
   */
 object DynamicPivot {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val q503DynamicPivot: Q = (s, dir) => {
     import s.implicits._
@@ -49,8 +48,6 @@ object DynamicPivot {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q503_dynamic_pivot" -> q503DynamicPivot)
-  val oracleSql: Map[String, String] = Map(
-    "q503_dynamic_pivot" -> q503Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q503_dynamic_pivot", q503DynamicPivot, q503Sql))
 }

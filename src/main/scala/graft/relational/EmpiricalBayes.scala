@@ -1,9 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** EMPIRICAL-BAYES RATE SHRINKAGE (Robbins'56 / Efron–Morris JASA'75
   * parametric EB; the beta-binomial moment fit every ranking system
@@ -29,7 +29,7 @@ import graft.core.{Tables => T}
   */
 object EmpiricalBayes {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val EbTop = 25
 
@@ -96,8 +96,6 @@ object EmpiricalBayes {
       |ORDER BY post_micro DESC, p
       |LIMIT $EbTop""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q526_empirical_bayes" -> q526EmpiricalBayes)
-  val oracleSql: Map[String, String] = Map(
-    "q526_empirical_bayes" -> q526Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q526_empirical_bayes", q526EmpiricalBayes, q526Sql))
 }

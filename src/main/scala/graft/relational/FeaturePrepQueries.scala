@@ -1,9 +1,8 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Tabular feature engineering for model training — the encodings a
   * training-data pipeline applies to categorical and text columns
@@ -23,7 +22,7 @@ import graft.core.{Tables => T}
   */
 object FeaturePrepQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** q295 smoothing prior weight: the encoding shrinks toward the
     * global mean with the strength of `TePrior` virtual rows — the
@@ -206,15 +205,8 @@ object FeaturePrepQueries {
        |WHERE n_views + n_clicks + spend_cents + n_active_days > 0
        |ORDER BY user_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q405_pit_training_set" -> q405PitTrainingSet,
-    "q295_target_encode" -> q295TargetEncode,
-    "q296_feature_hash" -> q296FeatureHash,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q405_pit_training_set" -> q405Sql,
-    "q295_target_encode" -> q295Sql,
-    "q296_feature_hash" -> q296Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q405_pit_training_set", q405PitTrainingSet, q405Sql),
+    Entry("q295_target_encode", q295TargetEncode, q295Sql),
+    Entry("q296_feature_hash", q296FeatureHash, q296Sql))
 }

@@ -1,10 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** FREQUENT 4-ITEMSETS — the general lattice level above q134's pairs
   * and q244's triples (Agrawal–Srikant VLDB'94 Apriori: candidate
@@ -38,7 +37,7 @@ import graft.core.{Tables => T}
   */
 object FrequentItemsets {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val MinSupport = 2L
   val TopK = 50
@@ -89,8 +88,5 @@ object FrequentItemsets {
       |ORDER BY n_orders DESC, p1 ASC, p2 ASC, p3 ASC, p4 ASC
       |LIMIT $TopK""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q563_itemsets4" -> q563Itemsets4)
-  val oracleSql: Map[String, String] = Map(
-    "q563_itemsets4" -> q563Sql)
+  val entries: Seq[Entry] = Seq(Entry("q563_itemsets4", q563Itemsets4, q563Sql))
 }

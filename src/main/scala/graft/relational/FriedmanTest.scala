@@ -1,11 +1,11 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** FRIEDMAN TEST (Friedman JASA'37 — the repeated-measures / blocked
   * rank test: "do the k treatments differ, judged WITHIN each block?"
@@ -32,7 +32,7 @@ import graft.core.{Tables => T}
   */
 object FriedmanTest {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** χ²(k−1=4) 95% critical value, pinned literal (q519's). */
   val ChiSq4Crit = KruskalWallis.ChiSq4Crit
@@ -126,8 +126,5 @@ object FriedmanTest {
       |  $QFormula > $ChiSq4Crit AS reject_95
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q521_friedman" -> q521Friedman)
-  val oracleSql: Map[String, String] = Map(
-    "q521_friedman" -> q521Sql)
+  val entries: Seq[Entry] = Seq(Entry("q521_friedman", q521Friedman, q521Sql))
 }

@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** TWO-PROPORTION z-TEST over funnel stages (the pooled two-sample
   * proportion test, Fleiss ch.2 — THE A/B readout for conversion
@@ -31,7 +31,7 @@ import graft.core.{Tables => T}
   */
 object FunnelProportionTest {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val ZCrit2 = AnsariBradley.ZCrit2
 
@@ -101,8 +101,6 @@ object FunnelProportionTest {
       |  ABS($ZFormula) > $ZCrit2 AS reject_95
       |FROM stages ORDER BY stage""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q552_funnel_proportion" -> q552FunnelProportion)
-  val oracleSql: Map[String, String] = Map(
-    "q552_funnel_proportion" -> q552Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q552_funnel_proportion", q552FunnelProportion, q552Sql))
 }

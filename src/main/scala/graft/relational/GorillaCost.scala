@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** GORILLA DELTA-OF-DELTA COMPRESSION COST (Pelkonen et al. VLDB'15 —
   * Facebook's in-memory TSDB encoding, the de-facto time-series
@@ -33,7 +33,7 @@ import graft.core.{Tables => T}
   */
 object GorillaCost {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** dod → encoded bits (shared verbatim — pure integer CASE). */
   val BitsCase: String =
@@ -104,8 +104,6 @@ object GorillaCost {
       |FROM bits GROUP BY event_type
       |ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q568_gorilla_cost" -> q568GorillaCost)
-  val oracleSql: Map[String, String] = Map(
-    "q568_gorilla_cost" -> q568Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q568_gorilla_cost", q568GorillaCost, q568Sql))
 }

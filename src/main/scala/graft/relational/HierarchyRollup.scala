@@ -1,10 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Hierarchical BOM-style cost rollup — WEIGHTED aggregation along a
   * tree (the parts-explosion query: extended cost of an assembly =
@@ -36,7 +35,7 @@ import graft.core.{Tables => T}
   */
 object HierarchyRollup {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val q325BomRollup: Q = (s, dir) => {
     import s.implicits._
@@ -122,10 +121,7 @@ object HierarchyRollup {
     */
   val q349Sql: String = q325Sql
 
-  val queries: Map[String, Q] = Map(
-    "q325_bom_rollup" -> q325BomRollup,
-    "q349_recursive_cte" -> q349RecursiveCte)
-  val oracleSql: Map[String, String] = Map(
-    "q325_bom_rollup" -> q325Sql,
-    "q349_recursive_cte" -> q349Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q325_bom_rollup", q325BomRollup, q325Sql),
+    Entry("q349_recursive_cte", q349RecursiveCte, q349Sql))
 }

@@ -1,9 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{ExactDiv, Tables => T}
+import graft.core.{Entry, ExactDiv, Tables => T}
 
 /** HIGHER STANDARDIZED MOMENTS — skewness β₁ (with sign) and Pearson
   * kurtosis β₂ per group (Pearson Phil.Trans.1905's moment-ratio
@@ -51,7 +51,7 @@ import graft.core.{ExactDiv, Tables => T}
   */
 object HigherMoments {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Mid-domain anchor for l_quantity ∈ [1, 50]. */
   val Anchor = 25
@@ -168,6 +168,6 @@ object HigherMoments {
       |ORDER BY g""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map("q580_higher_moments" -> q580HigherMoments)
-  val oracleSql: Map[String, String] = Map("q580_higher_moments" -> q580Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q580_higher_moments", q580HigherMoments, q580Sql))
 }

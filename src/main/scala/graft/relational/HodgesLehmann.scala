@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** HODGES–LEHMANN SHIFT ESTIMATOR (Hodges–Lehmann AMS'63 — THE robust
   * two-sample location difference: the median of all n1·n2 pairwise
@@ -36,7 +36,7 @@ import graft.core.{Tables => T}
   */
 object HodgesLehmann {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val HlGroup1 = "1-URGENT"
   val HlGroup2 = "5-LOW"
@@ -323,8 +323,6 @@ object HodgesLehmann {
       |SELECT n1, n2, p_pairs, hl2, $HlFormula AS hl_shift
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q537_hodges_lehmann" -> q537HodgesLehmann)
-  val oracleSql: Map[String, String] = Map(
-    "q537_hodges_lehmann" -> q537Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q537_hodges_lehmann", q537HodgesLehmann, q537Sql))
 }

@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 
 /** Incremental-maintenance operators: keyed upsert (MERGE) — the step
   * that turns a batch engine into an ETL engine, and the batch analogue
@@ -14,7 +14,7 @@ import graft.core.{Tables => T, dsl, OracleDsl => O}
   */
 object IncrementalQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Keyed upsert: rows of `updates` replace same-key rows of `target`;
     * unmatched update keys append. Exactly SQL MERGE's
@@ -487,27 +487,14 @@ object IncrementalQueries {
       |GROUP BY status
       |ORDER BY status""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q429_merge_matrix" -> q429MergeMatrix,
-    "q170_hll_overlap" -> q170HllOverlap,
-    "q166_incremental_join" -> q166IncrementalJoin,
-    "q264_incremental_topk" -> q264IncrementalTopK,
-    "q102_upsert" -> q102Upsert,
-    "q105_incremental_agg" -> q105IncrementalAgg,
-    "q106_scd2_intervals" -> q106Scd2,
-    "q114_snapshot_diff" -> q114SnapshotDiff,
-    "q122_hll_merge" -> q122HllMerge,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q429_merge_matrix" -> q429Sql,
-    "q170_hll_overlap" -> q170Sql,
-    "q166_incremental_join" -> q166Sql,
-    "q264_incremental_topk" -> q264Sql,
-    "q102_upsert" -> q102Sql,
-    "q105_incremental_agg" -> q105Sql,
-    "q106_scd2_intervals" -> q106Sql,
-    "q114_snapshot_diff" -> q114Sql,
-    "q122_hll_merge" -> q122Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q429_merge_matrix", q429MergeMatrix, q429Sql),
+    Entry("q170_hll_overlap", q170HllOverlap, q170Sql),
+    Entry("q166_incremental_join", q166IncrementalJoin, q166Sql),
+    Entry("q264_incremental_topk", q264IncrementalTopK, q264Sql),
+    Entry("q102_upsert", q102Upsert, q102Sql),
+    Entry("q105_incremental_agg", q105IncrementalAgg, q105Sql),
+    Entry("q106_scd2_intervals", q106Scd2, q106Sql),
+    Entry("q114_snapshot_diff", q114SnapshotDiff, q114Sql),
+    Entry("q122_hll_merge", q122HllMerge, q122Sql))
 }

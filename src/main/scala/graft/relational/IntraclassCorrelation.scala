@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** INTRACLASS CORRELATION ICC(1,1) (Fisher'25 / Shrout–Fleiss
   * Psych. Bull.'79 one-way-random form — "how much of the variance
@@ -30,7 +30,7 @@ import graft.core.{Tables => T}
   */
 object IntraclassCorrelation {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** ICC(1,1) from the exact pieces — shared verbatim.
     * MSB = (q_sum − s²/N)/(k−1), MSW = (q2 − q_sum)/(N−k),
@@ -93,8 +93,5 @@ object IntraclassCorrelation {
       |SELECT n, k, s_tot, nsq, q_sum, q2, $IccFormula AS icc
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q547_icc" -> q547Icc)
-  val oracleSql: Map[String, String] = Map(
-    "q547_icc" -> q547Sql)
+  val entries: Seq[Entry] = Seq(Entry("q547_icc", q547Icc, q547Sql))
 }

@@ -1,11 +1,11 @@
 package graft.relational
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** JONCKHEERE–TERPSTRA TEST (Jonckheere Biometrika'54 / Terpstra
   * Indag. Math.'52 — the ORDERED-alternative k-sample test: where
@@ -40,7 +40,7 @@ import graft.core.{Tables => T}
   */
 object JonckheereTerpstra {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** One-sided normal 95% critical value, pinned literal. */
   val ZCrit = "1.6448536269514722"
@@ -196,8 +196,6 @@ object JonckheereTerpstra {
       |FROM m""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q528_jonckheere" -> q528Jonckheere)
-  val oracleSql: Map[String, String] = Map(
-    "q528_jonckheere" -> q528Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q528_jonckheere", q528Jonckheere, q528Sql))
 }

@@ -1,11 +1,11 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** User-journey analytics: multi-touch credit allocation (q225) and
   * session path mining (q226) — the two shapes completing the
@@ -14,7 +14,7 @@ import graft.core.{Tables => T}
   */
 object JourneyQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Lookback for touch eligibility — q148's 7-day window. */
   val LookbackUs: Long = 7L * 24 * 3600 * 1000000
@@ -785,27 +785,14 @@ object JourneyQueries {
       |    AS p90_us
       |FROM r""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q464_time_decay_attribution" -> q464TimeDecayAttribution,
-    "q425_time_to_convert" -> q425TimeToConvert,
-    "q378_shapley_attribution" -> q378Shapley,
-    "q363_markov_attribution" -> q363MarkovAttribution,
-    "q305_markov_baseline" -> q305MarkovBaseline,
-    "q225_multi_touch" -> q225MultiTouch,
-    "q226_session_paths" -> q226SessionPaths,
-    "q270_path_patterns" -> q270PathPatterns,
-    "q284_seq_patterns" -> q284SeqPatterns,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q464_time_decay_attribution" -> q464Sql,
-    "q425_time_to_convert" -> q425Sql,
-    "q378_shapley_attribution" -> q378Sql,
-    "q363_markov_attribution" -> q363Sql,
-    "q305_markov_baseline" -> q305Sql,
-    "q225_multi_touch" -> q225Sql,
-    "q226_session_paths" -> q226Sql,
-    "q270_path_patterns" -> q270Sql,
-    "q284_seq_patterns" -> q284Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q464_time_decay_attribution", q464TimeDecayAttribution, q464Sql),
+    Entry("q425_time_to_convert", q425TimeToConvert, q425Sql),
+    Entry("q378_shapley_attribution", q378Shapley, q378Sql),
+    Entry("q363_markov_attribution", q363MarkovAttribution, q363Sql),
+    Entry("q305_markov_baseline", q305MarkovBaseline, q305Sql),
+    Entry("q225_multi_touch", q225MultiTouch, q225Sql),
+    Entry("q226_session_paths", q226SessionPaths, q226Sql),
+    Entry("q270_path_patterns", q270PathPatterns, q270Sql),
+    Entry("q284_seq_patterns", q284SeqPatterns, q284Sql))
 }

@@ -1,8 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.core.Entry
 
 /** KENDALL τ-b at ROW scale via DISTRIBUTED INVERSION COUNTING (Kendall
   * 1938; Knight JASA'66 for the O(n log n) inversion form) — the
@@ -47,7 +49,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   */
 object KendallTau {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Buckets per axis: 32 locally (= shuffle partitions); raise ∝ n on
     * a cluster — per-group memory is n/B rows, grid census B² rows. */
@@ -188,8 +190,6 @@ object KendallTau {
       |SELECT n, n_c, n_d, tie_x, tie_y, tie_xy, $TauFormula AS tau_b
       |FROM nn, cd, tx, ty, txy""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q500_kendall_tau" -> q500KendallTau)
-  val oracleSql: Map[String, String] = Map(
-    "q500_kendall_tau" -> q500Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q500_kendall_tau", q500KendallTau, q500Sql))
 }

@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** KRUSKAL–WALLIS H test (Kruskal–Wallis JASA'52 — the k-sample
   * generalization of the Mann–Whitney rank test the library already
@@ -34,7 +34,7 @@ import graft.core.{Tables => T}
   */
 object KruskalWallis {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** χ²(k−1=4) 95% critical value, pinned literal. */
   val ChiSq4Crit = "9.487729036781154"
@@ -95,8 +95,6 @@ object KruskalWallis {
       |  $HFormula > $ChiSq4Crit AS reject_95
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q519_kruskal_wallis" -> q519KruskalWallis)
-  val oracleSql: Map[String, String] = Map(
-    "q519_kruskal_wallis" -> q519Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q519_kruskal_wallis", q519KruskalWallis, q519Sql))
 }

@@ -1,11 +1,11 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{ExactDiv, Tables => T}
+import graft.core.{Entry, ExactDiv, Tables => T}
 
 /** LAD (LEAST-ABSOLUTE-DEVIATIONS / median) REGRESSION per group —
   * the τ=0.5 quantile regression of monthly revenue on time (Koenker–
@@ -41,7 +41,7 @@ import graft.core.{ExactDiv, Tables => T}
   */
 object LadRegression {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val ShortK = 8
 
@@ -185,10 +185,7 @@ object LadRegression {
       9, 1)
   }
 
-  val queries: Map[String, Q] = Map(
-    "q584_lad_regression" -> q584LadRegression,
-    "q586_quantile_regression" -> q586QuantileRegression)
-  val oracleSql: Map[String, String] = Map(
-    "q584_lad_regression" -> fitSql(1, 1),
-    "q586_quantile_regression" -> fitSql(9, 1))
+  val entries: Seq[Entry] = Seq(
+    Entry("q584_lad_regression", q584LadRegression, fitSql(1, 1)),
+    Entry("q586_quantile_regression", q586QuantileRegression, fitSql(9, 1)))
 }

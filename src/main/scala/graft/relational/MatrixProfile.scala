@@ -1,11 +1,11 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** MATRIX PROFILE over the daily series (Yeh et al. ICDM'16 — the
   * exact all-window nearest-neighbor distance vector; its argmin is
@@ -39,7 +39,7 @@ import graft.core.{Tables => T}
   */
 object MatrixProfile {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Window length in days (matches q511's word length). */
   val MpLen = 4
@@ -117,8 +117,6 @@ object MatrixProfile {
       |ORDER BY t, i""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q516_matrix_profile" -> q516MatrixProfile)
-  val oracleSql: Map[String, String] = Map(
-    "q516_matrix_profile" -> q516Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q516_matrix_profile", q516MatrixProfile, q516Sql))
 }

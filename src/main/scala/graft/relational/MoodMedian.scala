@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** MOOD'S MEDIAN TEST (Mood'50 — the blunt-but-assumption-free
   * k-sample location test: χ² independence of the k × {above, ≤}
@@ -30,7 +30,7 @@ import graft.core.{Tables => T}
   */
 object MoodMedian {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** χ²(k−1=4) 95% critical value (q519's pinned literal). */
   val ChiSq4Crit = KruskalWallis.ChiSq4Crit
@@ -113,8 +113,6 @@ object MoodMedian {
       |  $ChiFormula > $ChiSq4Crit AS reject_95
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q542_mood_median" -> q542MoodMedian)
-  val oracleSql: Map[String, String] = Map(
-    "q542_mood_median" -> q542Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q542_mood_median", q542MoodMedian, q542Sql))
 }

@@ -1,9 +1,8 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Null-semantics surfaces: the null-safe equality join.
   *
@@ -16,7 +15,7 @@ import graft.core.{Tables => T}
   */
 object NullSemantics {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** q214 — null-safe rollup join: events and customers bucketed into
     * a 10-way key where bucket 0 becomes NULL (`nullif` — standing in
@@ -49,11 +48,6 @@ object NullSemantics {
       |FROM l JOIN r ON l.k IS NOT DISTINCT FROM r.k
       |ORDER BY l.k ASC NULLS FIRST""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q214_null_safe_join" -> q214NullSafeJoin,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q214_null_safe_join" -> q214Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q214_null_safe_join", q214NullSafeJoin, q214Sql))
 }

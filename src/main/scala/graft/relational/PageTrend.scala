@@ -1,11 +1,11 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** PAGE'S TREND TEST (Page JASA'63 — the ORDERED-alternative companion
   * of the blocked Friedman test q521, exactly as Jonckheere–Terpstra
@@ -33,7 +33,7 @@ import graft.core.{Tables => T}
   */
 object PageTrend {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** One-sided normal 95% critical value, pinned literal (q528's). */
   val ZCrit = JonckheereTerpstra.ZCrit
@@ -103,8 +103,6 @@ object PageTrend {
       |  $ZFormula > $ZCrit AS reject_95
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q529_page_trend" -> q529PageTrend)
-  val oracleSql: Map[String, String] = Map(
-    "q529_page_trend" -> q529Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q529_page_trend", q529PageTrend, q529Sql))
 }

@@ -1,9 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** PARTIAL CORRELATION (Yule 1907 — "are views and purchases related
   * BEYOND what overall site traffic explains?": the first-order
@@ -28,7 +28,7 @@ import graft.core.{Tables => T}
   */
 object PartialCorrelation {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   private def r(sxy: String, sx: String, sy: String,
       sxx: String, syy: String): String =
@@ -113,8 +113,6 @@ object PartialCorrelation {
       |  $RxyFormula AS r_xy, $PartialFormula AS r_partial
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q546_partial_correlation" -> q546PartialCorrelation)
-  val oracleSql: Map[String, String] = Map(
-    "q546_partial_correlation" -> q546Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q546_partial_correlation", q546PartialCorrelation, q546Sql))
 }

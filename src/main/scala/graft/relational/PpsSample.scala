@@ -1,9 +1,8 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** PPS-SYSTEMATIC SAMPLING — probability proportional to size
   * (Madow AMS'49, the classic cumulative-size systematic PPS design;
@@ -32,7 +31,7 @@ import graft.core.{Tables => T}
   */
 object PpsSample {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** One selection point per this many tokens. */
   val PpsStep = 4096L
@@ -78,8 +77,6 @@ object PpsSample {
       |  - (cum - n_tokens - $PpsOffset + $PpsStep) // $PpsStep > 0
       |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q545_pps_sample" -> q545PpsSample)
-  val oracleSql: Map[String, String] = Map(
-    "q545_pps_sample" -> q545Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q545_pps_sample", q545PpsSample, q545Sql))
 }

@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** k-anonymity audit over a quasi-identifier projection — the
   * data-release gate that runs BEFORE a curated table leaves the
@@ -16,7 +16,7 @@ import graft.core.{Tables => T}
   */
 object PrivacyAudit {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Publication threshold. 8 leaves both publishable and suppressed
     * classes non-empty at sf0.01 (class sizes span 5–21 there), so
@@ -433,23 +433,12 @@ object PrivacyAudit {
        |FROM u
        |ORDER BY source""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q420_dp_counts" -> q420DpCounts,
-    "q316_randomized_response" -> q316RandomizedResponse,
-    "q258_cascade_delete" -> q258CascadeDelete,
-    "q217_k_anonymity" -> q217KAnonymity,
-    "q272_l_diversity" -> q272LDiversity,
-    "q449_t_closeness" -> q449TCloseness,
-    "q280_dp_release" -> q280DpRelease,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q420_dp_counts" -> q420Sql,
-    "q316_randomized_response" -> q316Sql,
-    "q217_k_anonymity" -> q217Sql,
-    "q258_cascade_delete" -> q258Sql,
-    "q272_l_diversity" -> q272Sql,
-    "q449_t_closeness" -> q449Sql,
-    "q280_dp_release" -> q280Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q420_dp_counts", q420DpCounts, q420Sql),
+    Entry("q316_randomized_response", q316RandomizedResponse, q316Sql),
+    Entry("q258_cascade_delete", q258CascadeDelete, q258Sql),
+    Entry("q217_k_anonymity", q217KAnonymity, q217Sql),
+    Entry("q272_l_diversity", q272LDiversity, q272Sql),
+    Entry("q449_t_closeness", q449TCloseness, q449Sql),
+    Entry("q280_dp_release", q280DpRelease, q280Sql))
 }

@@ -1,9 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Data-quality audit — the pre-flight checks an ETL run executes
   * before publishing a snapshot (the reference publishes atomically,
@@ -21,7 +21,7 @@ import graft.core.{Tables => T}
   */
 object QualityAuditQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** q107 — audit of orders/lineitem/customer: primary-key uniqueness,
     * FK orphan counts in both directions, null counts on required
@@ -151,13 +151,7 @@ object QualityAuditQueries {
       |    AS dev_micro
       |FROM e ORDER BY digit""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q358_benford_audit" -> q358BenfordAudit,
-    "q107_dq_audit" -> q107DqAudit,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q358_benford_audit" -> q358Sql,
-    "q107_dq_audit" -> q107Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q358_benford_audit", q358BenfordAudit, q358Sql),
+    Entry("q107_dq_audit", q107DqAudit, q107Sql))
 }

@@ -1,10 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** ITERATIVE PROPORTIONAL FITTING / raking (Deming–Stephan AoMS'40;
   * the same alternating scaling as Sinkhorn–Knopp matrix balancing):
@@ -31,7 +30,7 @@ import graft.core.{Tables => T}
   */
 object Raking {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Weight granularity: 10⁴ units = one document. */
   val WScale = 10000L
@@ -98,8 +97,5 @@ object Raking {
        |ORDER BY lang, source""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q491_raking" -> q491Raking)
-  val oracleSql: Map[String, String] = Map(
-    "q491_raking" -> q491Sql)
+  val entries: Seq[Entry] = Seq(Entry("q491_raking", q491Raking, q491Sql))
 }

@@ -1,10 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 
 /** Core relational operator surface (SURVEY.md §2.b, [T] rows): scans,
   * filters, projections, derived columns, every join type, aggregations.
@@ -15,7 +14,7 @@ import graft.core.{Tables => T, dsl, OracleDsl => O}
   */
 object RelationalQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Flagship pricing summary (TPC-H Q1 shape): scan → filter → hash agg
     * (partial+final automatic) → sort. At 100 TB this is a single shuffle
@@ -274,29 +273,15 @@ object RelationalQueries {
       |  ON s_suppkey = l_suppkey
       |ORDER BY suppkey""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q01_pricing_summary" -> q01PricingSummary,
-    "q02_filter_predicates" -> q02FilterPredicates,
-    "q03_derived_key" -> q03DerivedKey,
-    "q04_join_broadcast" -> q04JoinBroadcast,
-    "q05_join_shuffle" -> q05JoinShuffle,
-    "q06_join_left" -> q06JoinLeft,
-    "q07_join_semi" -> q07JoinSemi,
-    "q08_join_anti" -> q08JoinAnti,
-    "q09_join_theta" -> q09JoinTheta,
-    "q10_join_full_outer" -> q10JoinFullOuter,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" -> q01Sql,
-    "q02_filter_predicates" -> q02Sql,
-    "q03_derived_key" -> q03Sql,
-    "q04_join_broadcast" -> q04Sql,
-    "q05_join_shuffle" -> q05Sql,
-    "q06_join_left" -> q06Sql,
-    "q07_join_semi" -> q07Sql,
-    "q08_join_anti" -> q08Sql,
-    "q09_join_theta" -> q09Sql,
-    "q10_join_full_outer" -> q10Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q01_pricing_summary", q01PricingSummary, q01Sql),
+    Entry("q02_filter_predicates", q02FilterPredicates, q02Sql),
+    Entry("q03_derived_key", q03DerivedKey, q03Sql),
+    Entry("q04_join_broadcast", q04JoinBroadcast, q04Sql),
+    Entry("q05_join_shuffle", q05JoinShuffle, q05Sql),
+    Entry("q06_join_left", q06JoinLeft, q06Sql),
+    Entry("q07_join_semi", q07JoinSemi, q07Sql),
+    Entry("q08_join_anti", q08JoinAnti, q08Sql),
+    Entry("q09_join_theta", q09JoinTheta, q09Sql),
+    Entry("q10_join_full_outer", q10JoinFullOuter, q10Sql))
 }

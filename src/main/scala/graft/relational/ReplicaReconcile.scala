@@ -1,9 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** MERKLE-STYLE replica reconciliation — localize divergence between
   * two copies of a table WITHOUT a full row-level compare: each
@@ -35,7 +35,7 @@ import graft.core.{Tables => T}
   */
 object ReplicaReconcile {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val RrBucket = 1000L
   val DelMod = 1009L
@@ -119,6 +119,6 @@ object ReplicaReconcile {
        |GROUP BY COALESCE(ra.bkt, rb.bkt)
        |ORDER BY bkt""".stripMargin
 
-  val queries: Map[String, Q] = Map("q311_replica_diff" -> q311ReplicaDiff)
-  val oracleSql: Map[String, String] = Map("q311_replica_diff" -> q311Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q311_replica_diff", q311ReplicaDiff, q311Sql))
 }

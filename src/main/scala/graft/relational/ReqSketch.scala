@@ -1,9 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** RELATIVE-ERROR QUANTILE SKETCH, deterministic log-bucket form
   * (DDSketch — Masson, Rim & Lee VLDB'19: quantile state whose error
@@ -43,7 +43,7 @@ import graft.core.{Tables => T}
   */
 object ReqSketch {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Tail-heavy probe set (permille). */
   val ReqPermilles = Seq(500L, 900L, 990L, 999L)
@@ -137,8 +137,6 @@ object ReqSketch {
       |ORDER BY ks.p_permille""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q561_req_quantiles" -> q561ReqQuantiles)
-  val oracleSql: Map[String, String] = Map(
-    "q561_req_quantiles" -> q561Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q561_req_quantiles", q561ReqQuantiles, q561Sql))
 }

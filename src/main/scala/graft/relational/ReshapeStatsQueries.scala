@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 
 /** Reshaping (pivot / unpivot) and statistical-moment operators —
   * SURVEY.md §2.b agg/window extensions, round 3.
@@ -22,7 +22,7 @@ import graft.core.{Tables => T, dsl, OracleDsl => O}
   */
 object ReshapeStatsQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** q87 — pivot: order counts per priority, one column per order
     * status. The value list is explicit (F/O/P) so the output schema is
@@ -438,27 +438,14 @@ object ReshapeStatsQueries {
        |WHERE adev > $MadK * mad
        |ORDER BY event_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q227_mad_anomaly" -> q227MadAnomaly,
-    "q201_approx_pct_gate" -> q201ApproxPctGate,
-    "q87_pivot" -> q87Pivot,
-    "q88_unpivot" -> q88Unpivot,
-    "q89_stats_moments" -> q89StatsMoments,
-    "q90_median_rank" -> q90MedianRank,
-    "q339_weighted_median" -> q339WeightedMedian,
-    "q110_winsorize" -> q110Winsorize,
-    "q162_decile_summary" -> q162DecileSummary,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q227_mad_anomaly" -> q227Sql,
-    "q201_approx_pct_gate" -> q201Sql,
-    "q87_pivot" -> q87Sql,
-    "q88_unpivot" -> q88Sql,
-    "q89_stats_moments" -> q89Sql,
-    "q90_median_rank" -> q90Sql,
-    "q339_weighted_median" -> q339Sql,
-    "q110_winsorize" -> q110Sql,
-    "q162_decile_summary" -> q162Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q227_mad_anomaly", q227MadAnomaly, q227Sql),
+    Entry("q201_approx_pct_gate", q201ApproxPctGate, q201Sql),
+    Entry("q87_pivot", q87Pivot, q87Sql),
+    Entry("q88_unpivot", q88Unpivot, q88Sql),
+    Entry("q89_stats_moments", q89StatsMoments, q89Sql),
+    Entry("q90_median_rank", q90MedianRank, q90Sql),
+    Entry("q339_weighted_median", q339WeightedMedian, q339Sql),
+    Entry("q110_winsorize", q110Winsorize, q110Sql),
+    Entry("q162_decile_summary", q162DecileSummary, q162Sql))
 }

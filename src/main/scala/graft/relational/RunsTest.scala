@@ -1,11 +1,11 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** WALD–WOLFOWITZ RUNS TEST (Wald–Wolfowitz AMS'40 — "is the series
   * RANDOM around its level, or does it drift/oscillate?": the
@@ -31,7 +31,7 @@ import graft.core.{Tables => T}
   */
 object RunsTest {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Two-sided normal 95% critical value (q535's). */
   val ZCrit2 = AnsariBradley.ZCrit2
@@ -116,8 +116,5 @@ object RunsTest {
       |  ABS($ZFormula) > $ZCrit2 AS reject_95
       |FROM m ORDER BY t""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q539_runs_test" -> q539RunsTest)
-  val oracleSql: Map[String, String] = Map(
-    "q539_runs_test" -> q539Sql)
+  val entries: Seq[Entry] = Seq(Entry("q539_runs_test", q539RunsTest, q539Sql))
 }

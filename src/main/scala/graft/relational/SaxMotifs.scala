@@ -1,11 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** SYMBOLIC MOTIF CENSUS over daily series (SAX — Lin/Keogh/Lonardi
   * DMKD'07 — symbolize, then mine repeated words; the symbolic-
@@ -29,7 +28,7 @@ import graft.core.{Tables => T}
   */
 object SaxMotifs {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val SaxWord = 4
   val SaxTop = 20
@@ -101,8 +100,6 @@ object SaxMotifs {
       |ORDER BY cnt DESC, t, word
       |LIMIT $SaxTop""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q511_sax_motifs" -> q511SaxMotifs)
-  val oracleSql: Map[String, String] = Map(
-    "q511_sax_motifs" -> q511Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q511_sax_motifs", q511SaxMotifs, q511Sql))
 }

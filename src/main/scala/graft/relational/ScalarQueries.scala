@@ -1,10 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 import graft.functions.WeightedAvg
 
 /** Scalar-function surface (SURVEY.md §2.b scalar fns + UDx rows):
@@ -14,7 +13,7 @@ import graft.functions.WeightedAvg
   */
 object ScalarQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** String functions over part. Patterns are kept in the common
     * Java-regex/RE2 subset so Spark and DuckDB agree.
@@ -476,37 +475,19 @@ object ScalarQueries {
       |FROM rk GROUP BY event_type
       |ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q441_map_hofs" -> q441MapHofs,
-    "q442_arg_extremes" -> q442ArgExtremes,
-    "q281_variant" -> q281Variant,
-    "q282_collation" -> q282Collation,
-    "q283_try_gallery" -> q283TryGallery,
-    "q21_scalar_string" -> q21ScalarString,
-    "q22_scalar_datetime" -> q22ScalarDatetime,
-    "q23_scalar_math" -> q23ScalarMath,
-    "q24_json_extract" -> q24JsonExtract,
-    "q25_array_ops" -> q25ArrayOps,
-    "q26_map_explode" -> q26MapExplode,
-    "q27_udaf_weighted_avg" -> q27Udaf,
-    "q28_scalar_udf" -> q28ScalarUdf,
-    "q30_above_customer_avg" -> q30AboveCustomerAvg,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q441_map_hofs" -> q441Sql,
-    "q442_arg_extremes" -> q442Sql,
-    "q281_variant" -> q281Sql,
-    "q282_collation" -> q282Sql,
-    "q283_try_gallery" -> q283Sql,
-    "q21_scalar_string" -> q21Sql,
-    "q22_scalar_datetime" -> q22Sql,
-    "q23_scalar_math" -> q23Sql,
-    "q24_json_extract" -> q24Sql,
-    "q25_array_ops" -> q25Sql,
-    "q26_map_explode" -> q26Sql,
-    "q27_udaf_weighted_avg" -> q27Sql,
-    "q28_scalar_udf" -> q28Sql,
-    "q30_above_customer_avg" -> q30Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q441_map_hofs", q441MapHofs, q441Sql),
+    Entry("q442_arg_extremes", q442ArgExtremes, q442Sql),
+    Entry("q281_variant", q281Variant, q281Sql),
+    Entry("q282_collation", q282Collation, q282Sql),
+    Entry("q283_try_gallery", q283TryGallery, q283Sql),
+    Entry("q21_scalar_string", q21ScalarString, q21Sql),
+    Entry("q22_scalar_datetime", q22ScalarDatetime, q22Sql),
+    Entry("q23_scalar_math", q23ScalarMath, q23Sql),
+    Entry("q24_json_extract", q24JsonExtract, q24Sql),
+    Entry("q25_array_ops", q25ArrayOps, q25Sql),
+    Entry("q26_map_explode", q26MapExplode, q26Sql),
+    Entry("q27_udaf_weighted_avg", q27Udaf, q27Sql),
+    Entry("q28_scalar_udf", q28ScalarUdf, q28Sql),
+    Entry("q30_above_customer_avg", q30AboveCustomerAvg, q30Sql))
 }

@@ -1,11 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Two-pass DISTRIBUTED SELECTION for the exact grouped median — the
   * algorithm that replaces q90's rank-window spelling when groups are
@@ -32,7 +31,7 @@ import graft.core.{Tables => T}
   */
 object SelectionMedian {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Bucket width in cents: extendedprice spans ~[90k, 11M] cents, so
     * ~10k buckets — the bucket frame stays thousands of rows per
@@ -315,14 +314,9 @@ object SelectionMedian {
       |GROUP BY b.g
       |ORDER BY l_returnflag""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q366_mad_outliers" -> q366MadOutliers,
-    "q307_selection_median" -> q307SelectionMedian,
-    "q310_selection_percentiles" -> q310SelectionPercentiles,
-    "q356_trimmed_mean" -> q356TrimmedMean)
-  val oracleSql: Map[String, String] = Map(
-    "q366_mad_outliers" -> q366Sql,
-    "q307_selection_median" -> q307Sql,
-    "q310_selection_percentiles" -> q310Sql,
-    "q356_trimmed_mean" -> q356Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q366_mad_outliers", q366MadOutliers, q366Sql),
+    Entry("q307_selection_median", q307SelectionMedian, q307Sql),
+    Entry("q310_selection_percentiles", q310SelectionPercentiles, q310Sql),
+    Entry("q356_trimmed_mean", q356TrimmedMean, q356Sql))
 }

@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** SEQUENTIAL CO-PURCHASE census (temporal market-basket: "bought p1,
   * then p2 within a week" — Agrawal–Srikant ICDE'95 sequential
@@ -34,7 +34,7 @@ import graft.core.{Tables => T}
   */
 object SequentialPairs {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val SeqWindowDays = 7
   val SeqTop = 25
@@ -81,8 +81,6 @@ object SequentialPairs {
       |ORDER BY cnt DESC, p1, p2
       |LIMIT $SeqTop""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q508_sequential_pairs" -> q508SequentialPairs)
-  val oracleSql: Map[String, String] = Map(
-    "q508_sequential_pairs" -> q508Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q508_sequential_pairs", q508SequentialPairs, q508Sql))
 }

@@ -1,9 +1,8 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 import graft.functions.GraftFunctions
 
 /** Gate for the native Misra–Gries grouped heavy-hitters aggregate
@@ -11,7 +10,7 @@ import graft.functions.GraftFunctions
   */
 object SketchAggregates {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Summary capacity for the q215 gate: small enough that per-group
     * summaries stay trivially broadcastable, large enough that the
@@ -281,19 +280,10 @@ object SketchAggregates {
        |FROM ranked WHERE pos <= $RsK
        |ORDER BY segment, pos""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q306_reservoir_sample" -> q306ReservoirSample,
-    "q257_theta_intersection" -> q257ThetaIntersection,
-    "q215_mg_topk_gate" -> q215MgTopkGate,
-    "q220_kll_gate" -> q220KllGate,
-    "q223_cms_probe_gate" -> q223CmsProbeGate,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q306_reservoir_sample" -> q306Sql,
-    "q257_theta_intersection" -> q257Sql,
-    "q215_mg_topk_gate" -> q215Sql,
-    "q220_kll_gate" -> q220Sql,
-    "q223_cms_probe_gate" -> q223Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q306_reservoir_sample", q306ReservoirSample, q306Sql),
+    Entry("q257_theta_intersection", q257ThetaIntersection, q257Sql),
+    Entry("q215_mg_topk_gate", q215MgTopkGate, q215Sql),
+    Entry("q220_kll_gate", q220KllGate, q220Sql),
+    Entry("q223_cms_probe_gate", q223CmsProbeGate, q223Sql))
 }

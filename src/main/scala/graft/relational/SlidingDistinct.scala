@@ -1,10 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** q406 — SLIDING-WINDOW DISTINCT via re-aggregable HLL sketch merge:
   * trailing-7-day unique users per day. The scale story is the whole
@@ -30,7 +29,7 @@ import graft.core.{Tables => T}
   */
 object SlidingDistinct {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val WindowDays = 7
   val TolMilli = 50L
@@ -79,8 +78,6 @@ object SlidingDistinct {
        |SELECT day, exact_7d, TRUE AS ok
        |FROM exact ORDER BY day""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q406_sliding_distinct" -> q406SlidingDistinct)
-  val oracleSql: Map[String, String] = Map(
-    "q406_sliding_distinct" -> q406Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q406_sliding_distinct", q406SlidingDistinct, q406Sql))
 }

@@ -3,7 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** SPEARMAN RANK CORRELATION, tie-aware and exact (the monotone-
   * association reading next to the family's linear r (q89 `corr`),
@@ -31,7 +31,7 @@ import graft.core.{Tables => T}
   */
 object SpearmanCorr {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Exact CENTERED moments off the raw rank sums (r17 sweep: the
     * uncentered spelling's n·sxy/n·sxx terms read ~n⁴ — past 2⁶³ at
@@ -167,8 +167,5 @@ object SpearmanCorr {
       |  $RhoFormula AS rho
       |FROM c""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q492_spearman" -> q492Spearman)
-  val oracleSql: Map[String, String] = Map(
-    "q492_spearman" -> q492Sql)
+  val entries: Seq[Entry] = Seq(Entry("q492_spearman", q492Spearman, q492Sql))
 }

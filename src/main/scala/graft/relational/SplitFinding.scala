@@ -1,10 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Histogram-based decision-tree SPLIT FINDING — the distributed
   * kernel of every gradient-boosting system (XGBoost's approx/hist
@@ -28,7 +27,7 @@ import graft.core.{Tables => T}
   */
 object SplitFinding {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val SplitBins = 32
 
@@ -139,6 +138,6 @@ object SplitFinding {
        |  CAST(pos_right AS BIGINT) AS pos_right, gain
        |FROM best WHERE rk = 1 ORDER BY feature""".stripMargin
 
-  val queries: Map[String, Q] = Map("q330_split_finding" -> q330SplitFinding)
-  val oracleSql: Map[String, String] = Map("q330_split_finding" -> q330Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q330_split_finding", q330SplitFinding, q330Sql))
 }

@@ -1,9 +1,8 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Two more Spark 4 SQL surfaces proven against the oracle, in the
   * q349/q359 "certify the native surface" discipline: the |> pipe
@@ -14,7 +13,7 @@ import graft.core.{Tables => T}
   */
 object Sql4Surfaces {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** q367 — SQL PIPE syntax: the literal `FROM … |> WHERE …
     * |> AGGREGATE … |> ORDER BY` program, gated against the classic
@@ -556,36 +555,20 @@ object Sql4Surfaces {
 
   val q467Sql: String = lateralSql("nation", "supplier")
 
-  val queries: Map[String, Q] = Map(
-    "q466_session_variable" -> q466SessionVariable,
-    "q467_lateral_join" -> q467LateralJoin,
-    "q465_recursive_cte" -> q465RecursiveCte,
-    "q455_tablesample" -> q455Tablesample,
-    "q418_null_agg_semantics" -> q418NullAggSemantics,
-    "q419_calendar_semantics" -> q419CalendarSemantics,
-    "q411_percentile_cont" -> q411PercentileCont,
-    "q407_identifier" -> q407Identifier,
-    "q399_window_clause" -> q399WindowClause,
-    "q400_pivot_sql" -> q400PivotSql,
-    "q367_pipe_syntax" -> q367PipeSyntax,
-    "q368_collation_group" -> q368CollationGroup,
-    "q389_group_by_all" -> q389GroupByAll,
-    "q390_sql_udf" -> q390SqlUdf,
-    "q391_param_sql" -> q391ParamSql)
-  val oracleSql: Map[String, String] = Map(
-    "q466_session_variable" -> q466Sql,
-    "q467_lateral_join" -> q467Sql,
-    "q465_recursive_cte" -> q465Sql,
-    "q455_tablesample" -> q455Sql,
-    "q418_null_agg_semantics" -> q418Sql,
-    "q419_calendar_semantics" -> q419Sql,
-    "q411_percentile_cont" -> q411Sql,
-    "q407_identifier" -> q407Sql,
-    "q399_window_clause" -> q399Sql,
-    "q400_pivot_sql" -> q400Sql,
-    "q367_pipe_syntax" -> q367Sql,
-    "q368_collation_group" -> q368Sql,
-    "q389_group_by_all" -> q389Sql,
-    "q390_sql_udf" -> q390Sql,
-    "q391_param_sql" -> q391Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q466_session_variable", q466SessionVariable, q466Sql),
+    Entry("q467_lateral_join", q467LateralJoin, q467Sql),
+    Entry("q465_recursive_cte", q465RecursiveCte, q465Sql),
+    Entry("q455_tablesample", q455Tablesample, q455Sql),
+    Entry("q418_null_agg_semantics", q418NullAggSemantics, q418Sql),
+    Entry("q419_calendar_semantics", q419CalendarSemantics, q419Sql),
+    Entry("q411_percentile_cont", q411PercentileCont, q411Sql),
+    Entry("q407_identifier", q407Identifier, q407Sql),
+    Entry("q399_window_clause", q399WindowClause, q399Sql),
+    Entry("q400_pivot_sql", q400PivotSql, q400Sql),
+    Entry("q367_pipe_syntax", q367PipeSyntax, q367Sql),
+    Entry("q368_collation_group", q368CollationGroup, q368Sql),
+    Entry("q389_group_by_all", q389GroupByAll, q389Sql),
+    Entry("q390_sql_udf", q390SqlUdf, q390Sql),
+    Entry("q391_param_sql", q391ParamSql, q391Sql))
 }

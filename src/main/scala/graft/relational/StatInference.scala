@@ -1,11 +1,11 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Statistical-inference operators — grouped OLS regression, Welch's
   * two-sample t statistic (the A/B-experiment readout), and the
@@ -32,7 +32,7 @@ import graft.core.{Tables => T}
   */
 object StatInference {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** q228 — grouped OLS: per return-flag least-squares line of
     * extendedprice on quantity, from the closed form
@@ -2536,71 +2536,36 @@ object StatInference {
        |    / CAST(v_micro AS DOUBLE)) AS BIGINT) ELSE 0 END AS chi2_micro
        |FROM agg""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q446_log_rank" -> q446LogRank,
-    "q433_post_stratification" -> q433PostStratification,
-    "q423_median_of_means" -> q423MedianOfMeans,
-    "q422_two_way_anova" -> q422TwoWayAnova,
-    "q424_srm" -> q424Srm,
-    "q409_cohort_km" -> q409CohortKm,
-    "q408_sprt" -> q408Sprt,
-    "q404_ratio_metric" -> q404RatioMetric,
-    "q401_diff_in_diff" -> q401DiffInDiff,
-    "q396_bh_fdr" -> q396BhFdr,
-    "q397_conformal" -> q397Conformal,
-    "q386_kendall_tau" -> q386KendallTau,
-    "q388_perm_test" -> q388PermTest,
-    "q393_emd_drift" -> q393EmdDrift,
-    "q395_nelson_aalen" -> q395NelsonAalen,
-    "q357_mann_kendall" -> q357MannKendall,
-    "q343_balance_audit" -> q343BalanceAudit,
-    "q331_cuped" -> q331Cuped,
-    "q332_neyman_allocation" -> q332NeymanAllocation,
-    "q228_grouped_ols" -> q228GroupedOls,
-    "q229_welch_ttest" -> q229WelchTtest,
-    "q230_chi2_independence" -> q230Chi2Independence,
-    "q285_mann_whitney" -> q285MannWhitney,
-    "q288_sample_estimate" -> q288SampleEstimate,
-    "q289_spearman" -> q289Spearman,
-    "q290_ks_test" -> q290KsTest,
-    "q293_kaplan_meier" -> q293KaplanMeier,
-    "q302_poisson_bootstrap" -> q302PoissonBootstrap,
-    "q454_bca_bootstrap" -> q454BcaBootstrap,
-    "q458_theil_sen" -> q458TheilSen,
-    "q314_psi_drift" -> q314PsiDrift,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q446_log_rank" -> q446Sql,
-    "q386_kendall_tau" -> q386Sql,
-    "q388_perm_test" -> q388Sql,
-    "q393_emd_drift" -> q393Sql,
-    "q395_nelson_aalen" -> q395Sql,
-    "q396_bh_fdr" -> q396Sql,
-    "q401_diff_in_diff" -> q401Sql,
-    "q404_ratio_metric" -> q404Sql,
-    "q408_sprt" -> q408Sql,
-    "q409_cohort_km" -> q409Sql,
-    "q422_two_way_anova" -> q422Sql,
-    "q423_median_of_means" -> q423Sql,
-    "q433_post_stratification" -> q433Sql,
-    "q424_srm" -> q424Sql,
-    "q397_conformal" -> q397Sql,
-    "q357_mann_kendall" -> q357Sql,
-    "q343_balance_audit" -> q343Sql,
-    "q331_cuped" -> q331Sql,
-    "q332_neyman_allocation" -> q332Sql,
-    "q228_grouped_ols" -> q228Sql,
-    "q229_welch_ttest" -> q229Sql,
-    "q230_chi2_independence" -> q230Sql,
-    "q285_mann_whitney" -> q285Sql,
-    "q288_sample_estimate" -> q288Sql,
-    "q289_spearman" -> q289Sql,
-    "q290_ks_test" -> q290Sql,
-    "q293_kaplan_meier" -> q293Sql,
-    "q302_poisson_bootstrap" -> q302Sql,
-    "q454_bca_bootstrap" -> q454Sql,
-    "q458_theil_sen" -> q458Sql,
-    "q314_psi_drift" -> q314Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q446_log_rank", q446LogRank, q446Sql),
+    Entry("q433_post_stratification", q433PostStratification, q433Sql),
+    Entry("q423_median_of_means", q423MedianOfMeans, q423Sql),
+    Entry("q422_two_way_anova", q422TwoWayAnova, q422Sql),
+    Entry("q424_srm", q424Srm, q424Sql),
+    Entry("q409_cohort_km", q409CohortKm, q409Sql),
+    Entry("q408_sprt", q408Sprt, q408Sql),
+    Entry("q404_ratio_metric", q404RatioMetric, q404Sql),
+    Entry("q401_diff_in_diff", q401DiffInDiff, q401Sql),
+    Entry("q396_bh_fdr", q396BhFdr, q396Sql),
+    Entry("q397_conformal", q397Conformal, q397Sql),
+    Entry("q386_kendall_tau", q386KendallTau, q386Sql),
+    Entry("q388_perm_test", q388PermTest, q388Sql),
+    Entry("q393_emd_drift", q393EmdDrift, q393Sql),
+    Entry("q395_nelson_aalen", q395NelsonAalen, q395Sql),
+    Entry("q357_mann_kendall", q357MannKendall, q357Sql),
+    Entry("q343_balance_audit", q343BalanceAudit, q343Sql),
+    Entry("q331_cuped", q331Cuped, q331Sql),
+    Entry("q332_neyman_allocation", q332NeymanAllocation, q332Sql),
+    Entry("q228_grouped_ols", q228GroupedOls, q228Sql),
+    Entry("q229_welch_ttest", q229WelchTtest, q229Sql),
+    Entry("q230_chi2_independence", q230Chi2Independence, q230Sql),
+    Entry("q285_mann_whitney", q285MannWhitney, q285Sql),
+    Entry("q288_sample_estimate", q288SampleEstimate, q288Sql),
+    Entry("q289_spearman", q289Spearman, q289Sql),
+    Entry("q290_ks_test", q290KsTest, q290Sql),
+    Entry("q293_kaplan_meier", q293KaplanMeier, q293Sql),
+    Entry("q302_poisson_bootstrap", q302PoissonBootstrap, q302Sql),
+    Entry("q454_bca_bootstrap", q454BcaBootstrap, q454Sql),
+    Entry("q458_theil_sen", q458TheilSen, q458Sql),
+    Entry("q314_psi_drift", q314PsiDrift, q314Sql))
 }

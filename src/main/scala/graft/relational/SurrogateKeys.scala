@@ -1,11 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Distributed DENSE SURROGATE-KEY assignment — contiguous 1..n ids in
   * a stable order, the dimension-table ETL primitive
@@ -30,7 +29,7 @@ import graft.core.{Tables => T}
   */
 object SurrogateKeys {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val SkPartitions = 32
 
@@ -71,6 +70,6 @@ object SurrogateKeys {
       |FROM customer
       |ORDER BY sk""".stripMargin
 
-  val queries: Map[String, Q] = Map("q304_surrogate_keys" -> q304SurrogateKeys)
-  val oracleSql: Map[String, String] = Map("q304_surrogate_keys" -> q304Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q304_surrogate_keys", q304SurrogateKeys, q304Sql))
 }

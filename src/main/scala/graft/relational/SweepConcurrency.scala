@@ -1,10 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** PEAK CONCURRENCY by SWEEP LINE (the interval-scheduling classic —
   * Bentley–Ottmann is its geometric big sibling; ops dashboards call
@@ -31,7 +30,7 @@ import graft.core.{Tables => T}
   */
 object SweepConcurrency {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val q525SweepConcurrency: Q = (s, dir) => {
     import s.implicits._
@@ -73,8 +72,6 @@ object SweepConcurrency {
       |GROUP BY 1, 2
       |ORDER BY 1""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q525_sweep_concurrency" -> q525SweepConcurrency)
-  val oracleSql: Map[String, String] = Map(
-    "q525_sweep_concurrency" -> q525Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q525_sweep_concurrency", q525SweepConcurrency, q525Sql))
 }

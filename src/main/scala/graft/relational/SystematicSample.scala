@@ -1,9 +1,8 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** SYSTEMATIC (every-kth) SAMPLING over a total order (Madow–Madow
   * AMS'44 — the fixed-interval design; completes the sampling family:
@@ -30,7 +29,7 @@ import graft.core.{Tables => T}
   */
 object SystematicSample {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val SysK = 20
   val SysOffset = 7
@@ -56,8 +55,6 @@ object SystematicSample {
       |WHERE r % $SysK = $SysOffset
       |ORDER BY r""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q518_systematic_sample" -> q518SystematicSample)
-  val oracleSql: Map[String, String] = Map(
-    "q518_systematic_sample" -> q518Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q518_systematic_sample", q518SystematicSample, q518Sql))
 }

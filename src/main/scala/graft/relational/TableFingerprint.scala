@@ -1,9 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** ORDER-INDEPENDENT TABLE FINGERPRINT — the data-reconciliation
   * primitive (compare replicas / before-after of a migration / two
@@ -25,7 +25,7 @@ import graft.core.{Tables => T}
   */
 object TableFingerprint {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Largest prime below 2⁶³ (the sum-fold modulus). */
   val FpMod = "9223372036854775783"
@@ -74,8 +74,6 @@ object TableFingerprint {
       |    o_orderstatus)), 1, 15) AS BIGINT) AS h
       |  FROM orders)""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q513_table_fingerprint" -> q513TableFingerprint)
-  val oracleSql: Map[String, String] = Map(
-    "q513_table_fingerprint" -> q513Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q513_table_fingerprint", q513TableFingerprint, q513Sql))
 }

@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{GraftSession, Tables => T}
+import graft.core.{Entry, GraftSession, Tables => T}
 
 /** Catalog-grade table statistics + co-occurrence analytics.
   *
@@ -38,7 +38,7 @@ import graft.core.{GraftSession, Tables => T}
   */
 object TableStatsQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Columns profiled by q132 — one numeric key, one measure, one
     * low-cardinality flag, one timestamp.
@@ -656,29 +656,15 @@ object TableStatsQueries {
        |   FROM top JOIN test ON top.cust = test.cust
        |   WHERE top.cand = test.test_part) AS n_hit""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q132_table_stats" -> q132TableStats,
-    "q183_cbo_join_reorder" -> q183CboJoinReorder,
-    "q134_cooccurrence" -> q134Cooccurrence,
-    "q334_assoc_rules" -> q334AssocRules,
-    "q154_value_histogram" -> q154ValueHistogram,
-    "q236_item_similarity" -> q236ItemSimilarity,
-    "q244_triple_itemsets" -> q244Triples,
-    "q245_benford_audit" -> q245BenfordAudit,
-    "q312_recsys_holdout" -> q312RecsysHoldout,
-    "q246_concentration_profile" -> q246ConcentrationProfile,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q132_table_stats" -> q132Sql,
-    "q183_cbo_join_reorder" -> q183Sql,
-    "q134_cooccurrence" -> q134Sql,
-    "q334_assoc_rules" -> q334Sql,
-    "q154_value_histogram" -> q154Sql,
-    "q236_item_similarity" -> q236Sql,
-    "q244_triple_itemsets" -> q244Sql,
-    "q245_benford_audit" -> q245Sql,
-    "q312_recsys_holdout" -> q312Sql,
-    "q246_concentration_profile" -> q246Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q132_table_stats", q132TableStats, q132Sql),
+    Entry("q183_cbo_join_reorder", q183CboJoinReorder, q183Sql),
+    Entry("q134_cooccurrence", q134Cooccurrence, q134Sql),
+    Entry("q334_assoc_rules", q334AssocRules, q334Sql),
+    Entry("q154_value_histogram", q154ValueHistogram, q154Sql),
+    Entry("q236_item_similarity", q236ItemSimilarity, q236Sql),
+    Entry("q244_triple_itemsets", q244Triples, q244Sql),
+    Entry("q245_benford_audit", q245BenfordAudit, q245Sql),
+    Entry("q312_recsys_holdout", q312RecsysHoldout, q312Sql),
+    Entry("q246_concentration_profile", q246ConcentrationProfile, q246Sql))
 }

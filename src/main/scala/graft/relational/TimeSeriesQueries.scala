@@ -1,11 +1,11 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Time-series regularization: resample an irregular per-key event
   * series onto a fixed time grid with forward fill — the step that
@@ -23,7 +23,7 @@ import graft.core.{Tables => T}
   */
 object TimeSeriesQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Resample `df`'s (keyCol, tsCol, valueCol) onto a per-key grid of
     * `step` (a calendar-interval SQL string), bucketing by
@@ -1800,57 +1800,29 @@ object TimeSeriesQueries {
        |ORDER BY event_type, out_idx""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q478_lttb_per_key" -> q478LttbPerKey,
-    "q463_lttb_downsample" -> q463LttbDownsample,
-    "q445_holt_winters" -> q445HoltWinters,
-    "q426_stickiness" -> q426Stickiness,
-    "q421_lateness_profile" -> q421LatenessProfile,
-    "q394_pacf" -> q394Pacf,
-    "q380_holt" -> q380Holt,
-    "q381_hampel" -> q381Hampel,
-    "q369_ewma" -> q369Ewma,
-    "q338_forecast_backtest" -> q338ForecastBacktest,
-    "q320_seasonal_decompose" -> q320SeasonalDecompose,
-    "q313_interval_intersect" -> q313IntervalIntersect,
-    "q291_acf" -> q291Acf,
-    "q292_cusum" -> q292Cusum,
-    "q286_interval_merge" -> q286IntervalMerge,
-    "q275_theil_sen" -> q275TheilSen,
-    "q261_cumulative_uniques" -> q261CumulativeUniques,
-    "q259_twap" -> q259Twap,
-    "q199_ewma_exact" -> q199EwmaExact,
-    "q104_resample_ffill" -> q104ResampleFfill,
-    "q118_rolling_window" -> q118RollingWindow,
-    "q120_sessionize" -> q120Sessionize,
-    "q149_zscore_anomaly" -> q149ZscoreAnomaly,
-    "q174_resample_interp" -> q174ResampleInterp,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q478_lttb_per_key" -> q478Sql,
-    "q463_lttb_downsample" -> q463Sql,
-    "q394_pacf" -> q394Sql,
-    "q421_lateness_profile" -> q421Sql,
-    "q426_stickiness" -> q426Sql,
-    "q380_holt" -> q380Sql,
-    "q381_hampel" -> q381Sql,
-    "q369_ewma" -> q369Sql,
-    "q338_forecast_backtest" -> q338Sql,
-    "q320_seasonal_decompose" -> q320Sql,
-    "q313_interval_intersect" -> q313Sql,
-    "q291_acf" -> q291Sql,
-    "q292_cusum" -> q292Sql,
-    "q286_interval_merge" -> q286Sql,
-    "q275_theil_sen" -> q275Sql,
-    "q445_holt_winters" -> q445Sql,
-    "q261_cumulative_uniques" -> q261Sql,
-    "q259_twap" -> q259Sql,
-    "q199_ewma_exact" -> q199Sql,
-    "q104_resample_ffill" -> q104Sql,
-    "q118_rolling_window" -> q118Sql,
-    "q120_sessionize" -> q120Sql,
-    "q149_zscore_anomaly" -> q149Sql,
-    "q174_resample_interp" -> q174Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q478_lttb_per_key", q478LttbPerKey, q478Sql),
+    Entry("q463_lttb_downsample", q463LttbDownsample, q463Sql),
+    Entry("q445_holt_winters", q445HoltWinters, q445Sql),
+    Entry("q426_stickiness", q426Stickiness, q426Sql),
+    Entry("q421_lateness_profile", q421LatenessProfile, q421Sql),
+    Entry("q394_pacf", q394Pacf, q394Sql),
+    Entry("q380_holt", q380Holt, q380Sql),
+    Entry("q381_hampel", q381Hampel, q381Sql),
+    Entry("q369_ewma", q369Ewma, q369Sql),
+    Entry("q338_forecast_backtest", q338ForecastBacktest, q338Sql),
+    Entry("q320_seasonal_decompose", q320SeasonalDecompose, q320Sql),
+    Entry("q313_interval_intersect", q313IntervalIntersect, q313Sql),
+    Entry("q291_acf", q291Acf, q291Sql),
+    Entry("q292_cusum", q292Cusum, q292Sql),
+    Entry("q286_interval_merge", q286IntervalMerge, q286Sql),
+    Entry("q275_theil_sen", q275TheilSen, q275Sql),
+    Entry("q261_cumulative_uniques", q261CumulativeUniques, q261Sql),
+    Entry("q259_twap", q259Twap, q259Sql),
+    Entry("q199_ewma_exact", q199EwmaExact, q199Sql),
+    Entry("q104_resample_ffill", q104ResampleFfill, q104Sql),
+    Entry("q118_rolling_window", q118RollingWindow, q118Sql),
+    Entry("q120_sessionize", q120Sessionize, q120Sql),
+    Entry("q149_zscore_anomaly", q149ZscoreAnomaly, q149Sql),
+    Entry("q174_resample_interp", q174ResampleInterp, q174Sql))
 }

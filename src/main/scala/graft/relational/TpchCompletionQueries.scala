@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 
 /** The final eight TPC-H planner shapes (Q4/Q6/Q7/Q8/Q9/Q11/Q12/Q14),
   * completing the full 22-query suite across the repo (Q1=q01, Q2=q181,
@@ -40,7 +40,7 @@ import graft.core.{Tables => T, dsl, OracleDsl => O}
   */
 object TpchCompletionQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   private def registerViews(s: SparkSession, dir: String): Unit = {
     T.part(s, dir).createOrReplaceTempView("part")
@@ -329,25 +329,13 @@ object TpchCompletionQueries {
        |WHERE l_shipdate >= TIMESTAMP '1997-03-01 00:00:00'
        |  AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q204_priority_check" -> q204PriorityCheck,
-    "q205_forecast_revenue" -> q205ForecastRevenue,
-    "q206_volume_shipping" -> q206VolumeShipping,
-    "q207_market_share" -> q207MarketShare,
-    "q208_product_profit" -> q208ProductProfit,
-    "q209_important_parts" -> q209ImportantParts,
-    "q210_priority_counts" -> q210PriorityCounts,
-    "q211_promo_share" -> q211PromoShare,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q204_priority_check" -> q204Sql,
-    "q205_forecast_revenue" -> q205Sql,
-    "q206_volume_shipping" -> q206Sql,
-    "q207_market_share" -> q207Sql,
-    "q208_product_profit" -> q208Sql,
-    "q209_important_parts" -> q209Sql,
-    "q210_priority_counts" -> q210Sql,
-    "q211_promo_share" -> q211Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q204_priority_check", q204PriorityCheck, q204Sql),
+    Entry("q205_forecast_revenue", q205ForecastRevenue, q205Sql),
+    Entry("q206_volume_shipping", q206VolumeShipping, q206Sql),
+    Entry("q207_market_share", q207MarketShare, q207Sql),
+    Entry("q208_product_profit", q208ProductProfit, q208Sql),
+    Entry("q209_important_parts", q209ImportantParts, q209Sql),
+    Entry("q210_priority_counts", q210PriorityCounts, q210Sql),
+    Entry("q211_promo_share", q211PromoShare, q211Sql))
 }

@@ -1,9 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 
 /** The remaining distinct TPC-H planner shapes (Q13/Q15/Q16/Q17/Q19/Q22)
   * not yet exercised by q01/q82/q83/q153/q165/q173/q181/q182 — each one
@@ -27,7 +27,7 @@ import graft.core.{Tables => T, dsl, OracleDsl => O}
   */
 object TpchShapeQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   private def registerViews(s: SparkSession, dir: String): Unit = {
     T.part(s, dir).createOrReplaceTempView("part")
@@ -215,21 +215,11 @@ object TpchShapeQueries {
        |GROUP BY c_nationkey % 5
        |ORDER BY seg""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q191_order_count_dist" -> q191OrderCountDist,
-    "q192_top_supplier" -> q192TopSupplier,
-    "q193_supplier_cnt" -> q193SupplierCnt,
-    "q194_small_qty_revenue" -> q194SmallQtyRevenue,
-    "q195_disjunctive_revenue" -> q195DisjunctiveRevenue,
-    "q196_high_balance_no_urgent" -> q196HighBalanceNoUrgent,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q191_order_count_dist" -> q191Sql,
-    "q192_top_supplier" -> q192Sql,
-    "q193_supplier_cnt" -> q193Sql,
-    "q194_small_qty_revenue" -> q194Sql,
-    "q195_disjunctive_revenue" -> q195Sql,
-    "q196_high_balance_no_urgent" -> q196Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q191_order_count_dist", q191OrderCountDist, q191Sql),
+    Entry("q192_top_supplier", q192TopSupplier, q192Sql),
+    Entry("q193_supplier_cnt", q193SupplierCnt, q193Sql),
+    Entry("q194_small_qty_revenue", q194SmallQtyRevenue, q194Sql),
+    Entry("q195_disjunctive_revenue", q195DisjunctiveRevenue, q195Sql),
+    Entry("q196_high_balance_no_urgent", q196HighBalanceNoUrgent, q196Sql))
 }

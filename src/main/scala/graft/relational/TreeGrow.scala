@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Depth-2 decision-TREE GROWTH on the q330 histogram kernel — the
   * composition that turns one split into a learner: find the global
@@ -30,7 +30,7 @@ import graft.core.{Tables => T}
   */
 object TreeGrow {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   import SplitFinding.SplitBins
 
@@ -217,6 +217,6 @@ object TreeGrow {
        |ORDER BY node""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map("q333_tree_depth2" -> q333TreeDepth2)
-  val oracleSql: Map[String, String] = Map("q333_tree_depth2" -> q333Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q333_tree_depth2", q333TreeDepth2, q333Sql))
 }

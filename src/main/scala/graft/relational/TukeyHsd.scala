@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{ExactDiv, Tables => T}
+import graft.core.{Entry, ExactDiv, Tables => T}
 
 /** TUKEY–KRAMER HSD post-hoc pairwise comparisons (Tukey 1949 "The
   * problem of multiple comparisons"; Kramer Biometrics'56 for unequal
@@ -39,7 +39,7 @@ import graft.core.{ExactDiv, Tables => T}
   */
 object TukeyHsd {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** ⌊10⁶·q²⌋ for q_{0.05, k=3, ν=∞} = 3.3145. */
   val Q2Micro = 10985910L
@@ -137,6 +137,5 @@ object TukeyHsd {
       |ORDER BY g1, g2""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map("q588_tukey_hsd" -> q588TukeyHsd)
-  val oracleSql: Map[String, String] = Map("q588_tukey_hsd" -> q588Sql)
+  val entries: Seq[Entry] = Seq(Entry("q588_tukey_hsd", q588TukeyHsd, q588Sql))
 }

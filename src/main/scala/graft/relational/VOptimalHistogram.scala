@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** V-OPTIMAL HISTOGRAM construction (Jagadish et al. VLDB'98 — the
   * variance-minimizing bucket boundaries an optimizer's column stats
@@ -26,7 +26,7 @@ import graft.core.{Tables => T}
   */
 object VOptimalHistogram {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Bucket count. */
   val HistB = 8
@@ -138,8 +138,6 @@ object VOptimalHistogram {
        |  CAST($HistB AS BIGINT) AS n_buckets, TRUE AS ok
        |FROM lineitem""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q497_voptimal_histogram" -> q497VOptimal)
-  val oracleSql: Map[String, String] = Map(
-    "q497_voptimal_histogram" -> q497Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q497_voptimal_histogram", q497VOptimal, q497Sql))
 }

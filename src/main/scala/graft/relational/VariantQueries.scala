@@ -1,9 +1,8 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Spark 4's VARIANT type (SPARK-45891 — the open-source semi-
   * structured column: binary-encoded JSON with typed, lazy,
@@ -29,7 +28,7 @@ import graft.core.{Tables => T}
   */
 object VariantQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val q359VariantExtract: Q = (s, dir) => {
     import s.implicits._
@@ -61,6 +60,6 @@ object VariantQueries {
       |FROM events GROUP BY event_type
       |ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, Q] = Map("q359_variant_extract" -> q359VariantExtract)
-  val oracleSql: Map[String, String] = Map("q359_variant_extract" -> q359Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q359_variant_extract", q359VariantExtract, q359Sql))
 }

@@ -1,10 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** HAAR WAVELET SYNOPSIS of the per-type daily revenue series
   * (Matias–Vitter–Wang SIGMOD'98 — the THIRD synopsis family next to
@@ -32,7 +31,7 @@ import graft.core.{Tables => T}
   */
 object WaveletSynopsis {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val WgLevels = 5
   val WgDays = 32 // 2^WgLevels
@@ -120,8 +119,6 @@ object WaveletSynopsis {
        |ORDER BY event_type, lvl, pos""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q498_wavelet_synopsis" -> q498WaveletSynopsis)
-  val oracleSql: Map[String, String] = Map(
-    "q498_wavelet_synopsis" -> q498Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q498_wavelet_synopsis", q498WaveletSynopsis, q498Sql))
 }

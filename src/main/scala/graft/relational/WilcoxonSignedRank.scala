@@ -1,10 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** WILCOXON SIGNED-RANK TEST per group (Wilcoxon Biometrics'45 — the
   * PAIRED nonparametric location test the family lacked: q285/q290
@@ -34,7 +34,7 @@ import graft.core.{Tables => T}
   */
 object WilcoxonSignedRank {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Calendar midpoint of the TPC-H order range — the pre/post split. */
   val SplitDate = "1995-07-01"
@@ -155,8 +155,6 @@ object WilcoxonSignedRank {
       |FROM v
       |ORDER BY g""".stripMargin
 
-  val queries: Map[String, Q] =
-    Map("q583_wilcoxon_signed_rank" -> q583WilcoxonSignedRank)
-  val oracleSql: Map[String, String] =
-    Map("q583_wilcoxon_signed_rank" -> q583Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q583_wilcoxon_signed_rank", q583WilcoxonSignedRank, q583Sql))
 }

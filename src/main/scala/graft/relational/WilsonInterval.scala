@@ -1,9 +1,9 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** WILSON SCORE INTERVAL (Wilson JASA'27 — the binomial-rate CI that
   * stays honest at small n and extreme rates where the naive Wald
@@ -23,7 +23,7 @@ import graft.core.{Tables => T}
   */
 object WilsonInterval {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Two-sided 95% normal quantile, pinned literal (q535's). */
   val Z95 = AnsariBradley.ZCrit2
@@ -78,8 +78,6 @@ object WilsonInterval {
       |  $CenterFormula + ($HalfFormula) AS hi
       |FROM m ORDER BY grp""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q551_wilson_interval" -> q551WilsonInterval)
-  val oracleSql: Map[String, String] = Map(
-    "q551_wilson_interval" -> q551Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q551_wilson_interval", q551WilsonInterval, q551Sql))
 }

@@ -1,11 +1,10 @@
 package graft.relational
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 
 /** Multi-dimensional aggregation (rollup/cube/grouping sets), distinct
   * counts, window functions (ranking / analytic / frames), top-k, and set
@@ -18,7 +17,7 @@ import graft.core.{Tables => T, dsl, OracleDsl => O}
   */
 object WindowAggQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** ROLLUP: hierarchical subtotals. Map-side partial agg still applies;
     * at scale a rollup is one shuffle, not |levels| passes.
@@ -529,45 +528,23 @@ object WindowAggQueries {
       |FROM agg
       |ORDER BY o_orderstatus, o_orderpriority""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q167_rank_gallery" -> q167RankGallery,
-    "q168_string_agg" -> q168StringAgg,
-    "q179_ratio_to_report" -> q179RatioToReport,
-    "q11_agg_rollup" -> q11AggRollup,
-    "q12_agg_cube" -> q12AggCube,
-    "q13_grouping_sets" -> q13GroupingSets,
-    "q14_count_distinct" -> q14CountDistinct,
-    "q74_approx_distinct" -> q74ApproxDistinct,
-    "q335_approx_top_k" -> q335ApproxTopK,
-    "q84_approx_percentile" -> q84ApproxPercentile,
-    "q96_heavy_hitters" -> q96HeavyHitters,
-    "q98_window_pct" -> q98WindowPct,
-    "q15_window_ranking" -> q15WindowRanking,
-    "q16_window_analytic" -> q16WindowAnalytic,
-    "q17_window_frames" -> q17WindowFrames,
-    "q18_topk_per_group" -> q18TopkPerGroup,
-    "q19_global_topk" -> q19GlobalTopk,
-    "q20_set_ops" -> q20SetOps,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q167_rank_gallery" -> q167Sql,
-    "q168_string_agg" -> q168Sql,
-    "q179_ratio_to_report" -> q179Sql,
-    "q11_agg_rollup" -> q11Sql,
-    "q12_agg_cube" -> q12Sql,
-    "q13_grouping_sets" -> q13Sql,
-    "q14_count_distinct" -> q14Sql,
-    "q74_approx_distinct" -> q74Sql,
-    "q335_approx_top_k" -> q335Sql,
-    "q84_approx_percentile" -> q84Sql,
-    "q96_heavy_hitters" -> q96Sql,
-    "q98_window_pct" -> q98Sql,
-    "q15_window_ranking" -> q15Sql,
-    "q16_window_analytic" -> q16Sql,
-    "q17_window_frames" -> q17Sql,
-    "q18_topk_per_group" -> q18Sql,
-    "q19_global_topk" -> q19Sql,
-    "q20_set_ops" -> q20Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q167_rank_gallery", q167RankGallery, q167Sql),
+    Entry("q168_string_agg", q168StringAgg, q168Sql),
+    Entry("q179_ratio_to_report", q179RatioToReport, q179Sql),
+    Entry("q11_agg_rollup", q11AggRollup, q11Sql),
+    Entry("q12_agg_cube", q12AggCube, q12Sql),
+    Entry("q13_grouping_sets", q13GroupingSets, q13Sql),
+    Entry("q14_count_distinct", q14CountDistinct, q14Sql),
+    Entry("q74_approx_distinct", q74ApproxDistinct, q74Sql),
+    Entry("q335_approx_top_k", q335ApproxTopK, q335Sql),
+    Entry("q84_approx_percentile", q84ApproxPercentile, q84Sql),
+    Entry("q96_heavy_hitters", q96HeavyHitters, q96Sql),
+    Entry("q98_window_pct", q98WindowPct, q98Sql),
+    Entry("q15_window_ranking", q15WindowRanking, q15Sql),
+    Entry("q16_window_analytic", q16WindowAnalytic, q16Sql),
+    Entry("q17_window_frames", q17WindowFrames, q17Sql),
+    Entry("q18_topk_per_group", q18TopkPerGroup, q18Sql),
+    Entry("q19_global_topk", q19GlobalTopk, q19Sql),
+    Entry("q20_set_ops", q20SetOps, q20Sql))
 }

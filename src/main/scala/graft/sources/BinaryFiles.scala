@@ -3,10 +3,10 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** `binaryFile` source leg (5th format next to parquet / CSV q75 /
   * JSONL q70-q73 / ORC q121): read raw files as (path, modificationTime,
@@ -31,7 +31,7 @@ import graft.core.{Tables => T}
   */
 object BinaryFiles {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Fixture root, keyed by the sanitized dataset dir (the Federation /
     * DynamicOverwrite convention): the scan reads every *.bin under the
@@ -88,6 +88,6 @@ object BinaryFiles {
        |WHERE doc_id < $BlobDocBound
        |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map("q164_binary_files" -> q164BinaryFiles)
-  val oracleSql: Map[String, String] = Map("q164_binary_files" -> q164Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q164_binary_files", q164BinaryFiles, q164Sql))
 }

@@ -3,11 +3,11 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** CSV source coverage (SURVEY.md §2.b scan row 3).
   *
@@ -24,7 +24,7 @@ import graft.core.{Tables => T}
   */
 object CsvScan {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Fixed absolute path so the static oracle SQL can address it. */
   val FixturePath = "/root/repo/target/fixtures/nation.csv"
@@ -73,6 +73,5 @@ object CsvScan {
        |WHERE n_regionkey < 3
        |ORDER BY n_nationkey""".stripMargin
 
-  val queries: Map[String, Q] = Map("q75_csv_scan" -> q75CsvScan)
-  val oracleSql: Map[String, String] = Map("q75_csv_scan" -> q75Sql)
+  val entries: Seq[Entry] = Seq(Entry("q75_csv_scan", q75CsvScan, q75Sql))
 }

@@ -2,10 +2,10 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 
 /** Merge-on-read POSITION DELETES (q187) — the deletion-vector
   * mechanism of modern table formats (Iceberg position-delete files,
@@ -32,7 +32,7 @@ import graft.core.{Tables => T, dsl, OracleDsl => O}
   */
 object DeletionVectors {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Every event with event_id ≡ 3 (mod 7) is deleted — selective but
     * file-spanning, so every base file carries some tombstones.
@@ -162,10 +162,7 @@ object DeletionVectors {
     * rewrite; the scan no longer touches tombstones. */
   val q242Sql: String = q187Sql
 
-  val queries: Map[String, Q] = Map(
-    "q187_merge_on_read" -> q187MergeOnRead,
-    "q242_compact_tombstones" -> q242CompactTombstones)
-  val oracleSql: Map[String, String] = Map(
-    "q187_merge_on_read" -> q187Sql,
-    "q242_compact_tombstones" -> q242Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q187_merge_on_read", q187MergeOnRead, q187Sql),
+    Entry("q242_compact_tombstones", q242CompactTombstones, q242Sql))
 }

@@ -3,10 +3,9 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import java.util.Comparator
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{GraftSession, Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, GraftSession, Tables => T, dsl, OracleDsl => O}
 
 /** DYNAMIC partition overwrite — the write-side primitive between
   * full-table overwrite (loses everything else) and append (duplicates
@@ -32,7 +31,7 @@ import graft.core.{GraftSession, Tables => T, dsl, OracleDsl => O}
   */
 object DynamicOverwrite {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val FixtureRoot = "/root/repo/target/fixtures/dynow"
 
@@ -77,6 +76,6 @@ object DynamicOverwrite {
        |GROUP BY day
        |ORDER BY day""".stripMargin
 
-  val queries: Map[String, Q] = Map("q175_dynamic_overwrite" -> q175DynamicOverwrite)
-  val oracleSql: Map[String, String] = Map("q175_dynamic_overwrite" -> q175Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q175_dynamic_overwrite", q175DynamicOverwrite, q175Sql))
 }

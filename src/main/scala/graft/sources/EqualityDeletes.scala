@@ -2,10 +2,10 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 
 /** Merge-on-read EQUALITY DELETES composed with position deletes
   * (q579) — Iceberg's second delete-file kind (spec §Delete Formats:
@@ -38,7 +38,7 @@ import graft.core.{Tables => T, dsl, OracleDsl => O}
   */
 object EqualityDeletes {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Erase-set selector: user_ids with an 'error' event in the
     * deterministic bucket (user_id mod EqKeyMod = EqKeyRem).
@@ -109,8 +109,6 @@ object EqualityDeletes {
        |GROUP BY event_type
        |ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q579_equality_deletes" -> q579EqualityDeletes)
-  val oracleSql: Map[String, String] = Map(
-    "q579_equality_deletes" -> q579Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q579_equality_deletes", q579EqualityDeletes, q579Sql))
 }

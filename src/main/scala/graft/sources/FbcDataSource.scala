@@ -16,6 +16,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.core.Entry
+
 /** DataSource V2 connector for the reference's NATIVE cache layout —
   * the file-per-row JSON tree `{root}/{package}/{schema}/{name}.json`
   * the console-etl server writes (cache.go:107-113) and answers every
@@ -670,7 +672,7 @@ class FbcPartitionReader(part: FbcInputPartition, columns: Array[String])
   */
 object FbcSource {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val FixtureRoot = "/root/repo/target/fixtures/fbcfs"
 
@@ -736,10 +738,7 @@ object FbcSource {
        |GROUP BY package
        |ORDER BY package""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q237_fbc_source" -> q237FbcSource,
-    "q413_fbc_minmax" -> q413FbcMinmax)
-  val oracleSql: Map[String, String] = Map(
-    "q237_fbc_source" -> q237Sql,
-    "q413_fbc_minmax" -> q413Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q237_fbc_source", q237FbcSource, q237Sql),
+    Entry("q413_fbc_minmax", q413FbcMinmax, q413Sql))
 }

@@ -3,11 +3,11 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import java.util.Comparator
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 
 /** Cross-format FEDERATED read: one logical table whose rows live in
   * three physical formats at once — a third of `orders` stays parquet,
@@ -32,7 +32,7 @@ import graft.core.{Tables => T, dsl, OracleDsl => O}
   */
 object Federation {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val FixtureRoot = "/root/repo/target/fixtures/fed"
 
@@ -101,6 +101,6 @@ object Federation {
        |GROUP BY o_orderpriority
        |ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, Q] = Map("q171_federation" -> q171Federation)
-  val oracleSql: Map[String, String] = Map("q171_federation" -> q171Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q171_federation", q171Federation, q171Sql))
 }

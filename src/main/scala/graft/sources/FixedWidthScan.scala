@@ -3,10 +3,10 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** FIXED-WIDTH text source (SURVEY.md §2.b scan family, 7th format leg
   * after parquet/CSV/JSONL/ORC/XML/binaryFile): the mainframe/COBOL
@@ -32,7 +32,7 @@ import graft.core.{Tables => T}
   */
 object FixedWidthScan {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val FixturePath = "/root/repo/target/fixtures/supplier.fw"
 
@@ -86,6 +86,6 @@ object FixedWidthScan {
        |FROM parsed WHERE s_nationkey < 10
        |ORDER BY s_suppkey""".stripMargin
 
-  val queries: Map[String, Q] = Map("q301_fixed_width" -> q301FixedWidth)
-  val oracleSql: Map[String, String] = Map("q301_fixed_width" -> q301Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q301_fixed_width", q301FixedWidth, q301Sql))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 import graft.functions.HilbertXY2D
 
 /** Hilbert-curve clustering — the 4th physical-index leg next to
@@ -21,7 +21,7 @@ import graft.functions.HilbertXY2D
   */
 object HilbertLayout {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val HRoot = "/root/repo/target/fixtures/hilbert_events"
   val HFiles = 16
@@ -103,11 +103,6 @@ object HilbertLayout {
        |GROUP BY event_type
        |ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q222_hilbert_cluster" -> q222HilbertCluster,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q222_hilbert_cluster" -> q222Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q222_hilbert_cluster", q222HilbertCluster, q222Sql))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Entry
+
 /** Schema-on-read over a dumped stream of unstructured Kubernetes-style
   * objects — the reference's secondary source (SURVEY.md §2.a R1–R3:
   * dynamic-client list at main.go:93, unstructured→typed decode at
@@ -22,7 +24,7 @@ import org.apache.spark.sql.types._
   */
 object K8sObjects {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Fixed fixture path so the static oracle SQL addresses the same file. */
   val FixturePath = "/root/repo/src/test/resources/k8s/clustercatalogs.jsonl"
@@ -85,13 +87,7 @@ object K8sObjects {
        |WHERE status.phase = 'Unpacked'
        |ORDER BY name""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q77_k8s_list" -> q77K8sList,
-    "q78_k8s_unpacked" -> q78K8sUnpacked,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q77_k8s_list" -> q77Sql,
-    "q78_k8s_unpacked" -> q78Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q77_k8s_list", q77K8sList, q77Sql),
+    Entry("q78_k8s_unpacked", q78K8sUnpacked, q78Sql))
 }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 import graft.core.GraftSession.withConfs
 
 /** Date-partitioned table layout + partition pruning — the write-side
@@ -22,7 +22,7 @@ import graft.core.GraftSession.withConfs
   */
 object LayoutQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Fixed path so the static oracle SQL can address the layout. */
   val LayoutRoot = "/root/repo/target/fixtures/layout_events"
@@ -485,19 +485,10 @@ object LayoutQueries {
        |GROUP BY event_day
        |ORDER BY event_day""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q111_partition_pruning" -> q111PartitionPruning,
-    "q113_compaction" -> q113Compaction,
-    "q128_bloom_lookup" -> q128BloomLookup,
-    "q186_dynamic_pruning" -> q186DynamicPruning,
-    "q274_partition_evolution" -> q274PartitionEvolution,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q111_partition_pruning" -> q111Sql,
-    "q113_compaction" -> q113Sql,
-    "q128_bloom_lookup" -> q128Sql,
-    "q186_dynamic_pruning" -> q186Sql,
-    "q274_partition_evolution" -> q274Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q111_partition_pruning", q111PartitionPruning, q111Sql),
+    Entry("q113_compaction", q113Compaction, q113Sql),
+    Entry("q128_bloom_lookup", q128BloomLookup, q128Sql),
+    Entry("q186_dynamic_pruning", q186DynamicPruning, q186Sql),
+    Entry("q274_partition_evolution", q274PartitionEvolution, q274Sql))
 }

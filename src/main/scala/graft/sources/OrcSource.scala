@@ -2,10 +2,10 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 
 /** ORC source/sink coverage — the fourth format leg next to parquet
   * (everything), CSV (q75), and JSONL (q70-q73): `orders` is written
@@ -19,7 +19,7 @@ import graft.core.{Tables => T, dsl, OracleDsl => O}
   */
 object OrcSource {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val OrcRoot = "/root/repo/target/fixtures/orders_orc"
 
@@ -63,11 +63,6 @@ object OrcSource {
        |GROUP BY o_orderstatus, o_orderpriority
        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q121_orc_roundtrip" -> q121OrcRoundtrip,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q121_orc_roundtrip" -> q121Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q121_orc_roundtrip", q121OrcRoundtrip, q121Sql))
 }

@@ -2,10 +2,10 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** PERSISTED inverted index as a token-bucketed warehouse table — the
   * serving layout q135's inline postings join promises ("a served
@@ -29,7 +29,7 @@ import graft.core.{Tables => T}
   */
 object PostingsIndex {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val Buckets = 16
 
@@ -127,6 +127,6 @@ object PostingsIndex {
        |GROUP BY t1.doc_id
        |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map("q428_indexed_phrase" -> q428IndexedPhrase)
-  val oracleSql: Map[String, String] = Map("q428_indexed_phrase" -> q428Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q428_indexed_phrase", q428IndexedPhrase, q428Sql))
 }

@@ -3,11 +3,11 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 
 /** Bad-record quarantine on ingest (SURVEY.md §2.b source surface).
   *
@@ -37,7 +37,7 @@ import graft.core.{Tables => T, dsl, OracleDsl => O}
   */
 object QuarantineIngest {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** This JVM's pid + the run's SF tag, baked into the fixture name so
     * two CONCURRENT runs (always distinct JVMs) never rewrite each
@@ -148,6 +148,6 @@ object QuarantineIngest {
        |SELECT status, COUNT(*) AS n_rows, ${O.dsum("bal")} AS bal_sum
        |FROM c GROUP BY status ORDER BY status""".stripMargin
 
-  val queries: Map[String, Q] = Map("q133_quarantine" -> q133Quarantine)
-  val oracleSql: Map[String, String] = Map("q133_quarantine" -> q133Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q133_quarantine", q133Quarantine, q133Sql))
 }

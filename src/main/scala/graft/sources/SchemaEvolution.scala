@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** Parquet schema evolution (SURVEY.md §2.b source surface): a table
   * whose later batches added a column must stay readable as ONE
@@ -29,7 +29,7 @@ import graft.core.{Tables => T}
   */
 object SchemaEvolution {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Fixed absolute dir so the static oracle SQL can address it. */
   val FixtureDir = "/root/repo/target/fixtures/evo"
@@ -138,10 +138,7 @@ object SchemaEvolution {
       |  AS t(col_name, change, from_type, to_type)
       |ORDER BY col_name, change""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q144_schema_evolution" -> q144SchemaEvolution,
-    "q273_schema_drift" -> q273SchemaDrift)
-  val oracleSql: Map[String, String] = Map(
-    "q144_schema_evolution" -> q144Sql,
-    "q273_schema_drift" -> q273Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q144_schema_evolution", q144SchemaEvolution, q144Sql),
+    Entry("q273_schema_drift", q273SchemaDrift, q273Sql))
 }

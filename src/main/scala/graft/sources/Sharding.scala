@@ -1,9 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T}
+import graft.core.{Entry, Tables => T}
 
 /** RENDEZVOUS (highest-random-weight) sharding — Thaler & Ravishankar
   * 1998, the consistent-placement scheme memcached/Ceph-style systems
@@ -25,7 +24,7 @@ import graft.core.{Tables => T}
   */
 object Sharding {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   val NumShards = 8
 
@@ -70,6 +69,6 @@ object Sharding {
        |ORDER BY shard""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map("q382_rendezvous" -> q382Rendezvous)
-  val oracleSql: Map[String, String] = Map("q382_rendezvous" -> q382Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q382_rendezvous", q382Rendezvous, q382Sql))
 }

@@ -1,10 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 
 /** XML source leg (Spark 4 folded the spark-xml connector into core) —
   * the sixth format leg next to parquet/CSV/JSONL/ORC/binaryFile.
@@ -22,7 +22,7 @@ import graft.core.{Tables => T, dsl, OracleDsl => O}
   */
 object XmlSource {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   private def fixtureDir(dir: String): String =
     "/root/repo/target/fixtures/xml_orders_" +
@@ -71,6 +71,6 @@ object XmlSource {
        |GROUP BY o_orderpriority
        |ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, Q] = Map("q203_xml_roundtrip" -> q203XmlRoundtrip)
-  val oracleSql: Map[String, String] = Map("q203_xml_roundtrip" -> q203Sql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q203_xml_roundtrip", q203XmlRoundtrip, q203Sql))
 }

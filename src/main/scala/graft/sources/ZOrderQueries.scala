@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 
 /** Z-order (Morton-curve) multi-dimensional clustering — the layout
   * leg partitioning (q111) and compaction (q113) leave open: a table
@@ -33,7 +33,7 @@ import graft.core.{Tables => T, dsl, OracleDsl => O}
   */
 object ZOrderQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** Bits per dimension (two dims interleave into 2·[[ZBits]] bits). */
   val ZBits = 16
@@ -286,13 +286,7 @@ object ZOrderQueries {
        |GROUP BY event_type
        |ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q125_zorder_cluster" -> q125ZOrderCluster,
-    "q130_total_order" -> q130TotalOrder,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q125_zorder_cluster" -> q125Sql,
-    "q130_total_order" -> q130Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q125_zorder_cluster", q125ZOrderCluster, q125Sql),
+    Entry("q130_total_order", q130TotalOrder, q130Sql))
 }

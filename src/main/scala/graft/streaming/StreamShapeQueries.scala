@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
 import graft.operators.AsOfJoin
 
 /** Event-time operators over the `events` table in their *batch* form —
@@ -14,7 +13,7 @@ import graft.operators.AsOfJoin
   */
 object StreamShapeQueries {
 
-  type Q = (SparkSession, String) => DataFrame
+  import Entry.Q
 
   /** As-of join: each purchase event matched to the same user's most
     * recent signup at-or-before it ([[AsOfJoin]] union+window recipe —
@@ -202,21 +201,11 @@ object StreamShapeQueries {
       |WHERE rn = 1
       |ORDER BY event_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q31_asof_join" -> q31AsofJoin,
-    "q178_asof_nearest" -> q178AsofNearest,
-    "q60_tumbling_window" -> q60TumblingWindow,
-    "q61_sliding_window" -> q61SlidingWindow,
-    "q62_session_window" -> q62SessionWindow,
-    "q63_dedup_keep_earliest" -> q63DedupKeepEarliest,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q31_asof_join" -> q31Sql,
-    "q178_asof_nearest" -> q178Sql,
-    "q60_tumbling_window" -> q60Sql,
-    "q61_sliding_window" -> q61Sql,
-    "q62_session_window" -> q62Sql,
-    "q63_dedup_keep_earliest" -> q63Sql,
-  )
+  val entries: Seq[Entry] = Seq(
+    Entry("q31_asof_join", q31AsofJoin, q31Sql),
+    Entry("q178_asof_nearest", q178AsofNearest, q178Sql),
+    Entry("q60_tumbling_window", q60TumblingWindow, q60Sql),
+    Entry("q61_sliding_window", q61SlidingWindow, q61Sql),
+    Entry("q62_session_window", q62SessionWindow, q62Sql),
+    Entry("q63_dedup_keep_earliest", q63DedupKeepEarliest, q63Sql))
 }

@@ -71,6 +71,16 @@ object PlanBridge {
       case _ => ()
     }
 
+  /** The sweep between two entries: free every persisted block and
+    * cached plan of the session, so an entry never pays eviction churn
+    * for the blocks an earlier one left behind.
+    */
+  def sweep(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    spark.catalog.clearCache()
+  }
+
   /** `localCheckpoint`, then rebuild the frame over a copy of its
     * `LogicalRDD` whose `originStats` are the measured size of its blocks
     * (read for this one RDD, not for every persisted one) and whose

@@ -9,15 +9,19 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One way to do each thing: sessions come from `GraftSession.local`,
   * session confs are set only in `GraftSession`, frames are checkpointed
   * only through `PlanBridge.checkpointResetStats` and released only
-  * through `PlanBridge.release`, and the only mains are the three entry
-  * points. Scans every Scala file under `src/` (mains and checkpoints
-  * under `src/main`).
+  * through `PlanBridge.release`, persisted RDDs are swept only by
+  * `PlanBridge.sweep`, entries are declared only as `Entry` records
+  * (one `type Q`, no per-module query or SQL map), and the only mains
+  * are the three entry points. Scans every Scala file under `src/`
+  * (mains, checkpoints, sweeps and entries under `src/main`).
   */
 class SessionGuardSpec extends AnyFunSuite {
 
   private val factory = Paths.get("src/main/scala/graft/core/GraftSession.scala")
   private val bridge =
     Paths.get("src/main/scala/org/apache/spark/sql/graftbridge/PlanBridge.scala")
+  private val entry = Paths.get("src/main/scala/graft/core/Entry.scala")
+  private val registry = Paths.get("src/main/scala/graft/SparkEntry.scala")
 
   private val sources: Seq[(Path, Seq[String])] = {
     val walk = Files.walk(Paths.get("src"))
@@ -80,5 +84,27 @@ class SessionGuardSpec extends AnyFunSuite {
     val found = hits("""\.rdd\s*\.\s*unpersist\b|def\s+dropCheckpoint\b""")
       .filterNot { case (p, i) => p == bridge && i > start && i < end }
     assert(found.isEmpty, s"leaf-walk unpersist outside release: $found")
+  }
+
+  test("persisted RDDs are swept only by PlanBridge.sweep") {
+    val lines = sources.find(_._1 == bridge).get._2
+    val start = lines.indexWhere(_.contains("def sweep"))
+    val end = lines.indexWhere(_.startsWith("  }"), start)
+    assert(start >= 0 && end > start, "sweep not found in PlanBridge")
+    val found = hits("""getPersistentRDDs""")
+      .filter(_._1.startsWith("src/main"))
+      .filterNot { case (p, i) => p == bridge && i > start && i < end }
+    assert(found.isEmpty, s"persisted-RDD sweep outside sweep: $found")
+  }
+
+  test("the entry type Q is declared once, in Entry") {
+    val found = hits("""\btype\s+Q\s*=""").filter(_._1.startsWith("src/main"))
+    assert(found.map(_._1) == Seq(entry), s"type Q at: $found")
+  }
+
+  test("queries and oracleSql maps are built only in SparkEntry") {
+    val found = hits("""\b(val|def|var)\s+(oracleSql|queries)\s*[:=]\s*Map\b""")
+      .filter(_._1.startsWith("src/main"))
+    assert(found.map(_._1).distinct == Seq(registry), s"entry maps at: $found")
   }
 }
