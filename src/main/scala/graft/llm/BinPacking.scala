@@ -37,6 +37,11 @@ object BinPacking {
 
   import Entry.Q
 
+  /** Range partitions of the per-partition FFD pass — the `P` of the
+    * q479 bound `9·bins ≤ 11·(OPT + P) + 9·P + 6`.
+    */
+  val FfdParts = 32
+
   /** (n_docs, total_tokens, bins, max_fill, packed_tokens) — public
     * for the spec. */
   def packStats(s: SparkSession, dir: String)
@@ -51,7 +56,7 @@ object BinPacking {
     val nDocs = items.count()
     val total = items.agg(sum($"len")).head().getLong(0)
     val perPart = items
-      .repartitionByRange(32, $"len".desc, $"doc_id")
+      .repartitionByRange(FfdParts, $"len".desc, $"doc_id")
       .sortWithinPartitions($"len".desc, $"doc_id")
       .as[(Long, Long)]
       .mapPartitions { it =>
@@ -76,7 +81,7 @@ object BinPacking {
     val cap = CorpusOps.SeqLen
     val (nDocs, total, bins, maxFill, packed) = packStats(s, dir)
     val optLb = (total + cap - 1) / cap
-    val p = 32L
+    val p = FfdParts.toLong
     // global theorem bound: 9·bins ≤ 11·(OPT + P) + 9·P + 6, exact ints
     val boundOk = 9L * bins <= 11L * (optLb + p) + 9L * p + 6L
     val ok = nDocs > 0L && packed == total && maxFill <= cap &&

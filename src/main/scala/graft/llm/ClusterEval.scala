@@ -129,7 +129,7 @@ object ClusterEval {
     // frame via the two-level scan (inclusive cum − own count), not a
     // one-task global window
     val pre = graft.relational.QuantileNormalize.fullCumSum(
-        byScore, Seq($"score".asc), "nn_s", "cumnn")
+        byScore, Seq($"score".asc), "nn_s" -> "cumnn")
       .withColumn("nn_below", $"cumnn" - $"nn_s")
     pre.agg(
         sum($"np_s").as("n_pos"), sum($"nn_s").as("n_neg"),

@@ -485,7 +485,7 @@ object DiversityStats {
     val cum = fullCumSum(
       fullRankGlobal(trigramCounts(s, dir),
         Seq($"c".desc, $"g".asc), "rk"),
-      Seq($"rk".asc), "c", "cum")
+      Seq($"rk".asc), "c" -> "cum")
     val tot = cum.agg(max($"cum").as("total"), count(lit(1)).as("vocab"))
     cum.crossJoin(broadcast(tot))
       .agg(first($"vocab").as("vocab"), first($"total").as("total_mass"),

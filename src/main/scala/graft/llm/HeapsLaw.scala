@@ -52,7 +52,7 @@ object HeapsLaw {
       md5($"doc_id".cast("string")).as("ord"))
     val ranked = graft.relational.QuantileNormalize.fullCumSum(
         ordered.withColumn("one", lit(1L)),
-        Seq(col("ord"), col("doc_id")), "one", "rnk")
+        Seq(col("ord"), col("doc_id")), "one" -> "rnk")
       .withColumn("decile",
         expr(s"((rnk - 1L) * $HeapsDeciles) div ${n}L + 1L"))
     val tokD = ranked.select($"decile",

@@ -58,27 +58,13 @@ object SuffixArray {
   import Entry.Q
 
   /** Dense rank (1-based) of the distinct rows of `keys` under the
-    * lexicographic order of `cols` — the two-level scan: range
-    * partition, keyed row_number, broadcast partition offsets.
+    * lexicographic order of `cols` — the pinned two-level scan of
+    * [[graft.relational.QuantileNormalize.fullRankGlobal]].
     */
-  private[llm] def denseRank(keys: DataFrame, cols: Seq[String]): DataFrame = {
-    val s = keys.sparkSession
-    import s.implicits._
-    val kcols = cols.map(col)
-    val parts = keys.distinct()
-      .repartitionByRange(32, kcols: _*)
-      .withColumn("pid", spark_partition_id())
-    val wIn = Window.partitionBy($"pid").orderBy(kcols: _*)
-    val withRn = parts.withColumn("rn", row_number().over(wIn).cast("long"))
-    // bounded triangular join, not a pid-ordered window (r18, verdict
-    // item 5 — see QuantileNormalize.exclusivePrefix)
-    val offsets = graft.relational.QuantileNormalize.exclusivePrefix(
-        withRn.groupBy($"pid").agg(count(lit(1)).as("c")),
-        Seq(), "pid", Seq("c"))
-      .withColumnRenamed("c_off", "poff")
-    withRn.join(broadcast(offsets), "pid")
-      .select(kcols :+ ($"poff" + $"rn").as("rank"): _*)
-  }
+  private[llm] def denseRank(keys: DataFrame, cols: Seq[String]): DataFrame =
+    graft.relational.QuantileNormalize.fullRankGlobal(
+      keys.distinct(), cols.map(col), "rank")
+      .select((cols :+ "rank").map(col): _*)
 
   /** Suffix-array ranks of a token stream (gpos: Long, tok: String):
     * returns (final ranks (gpos, r) — a permutation of 1..n — and the
@@ -175,7 +161,7 @@ object SuffixArray {
     // (exclusive prefix = inclusive − own count)
     val offs = graft.relational.QuantileNormalize.fullCumSum(
         docs.select($"doc_id", (size($"toks") + 1).cast("long").as("ntok")),
-        Seq($"doc_id"), "ntok", "cum")
+        Seq($"doc_id"), "ntok" -> "cum")
       .select($"doc_id", ($"cum" - $"ntok").as("off"))
     val stream = PlanBridge.checkpointResetStats(docs.join(offs, "doc_id")
       .select($"doc_id", $"off", posexplode(concat($"toks",

@@ -805,35 +805,24 @@ object TextPipeline {
     * Scale shape: the global running sum is NOT a bare
     * `Window.orderBy` (no partition key ⇒ Spark collapses the whole
     * table into ONE task — the classic cumsum scale trap). Instead the
-    * classic two-pass distributed prefix sum: range-partition by
-    * doc_id, a per-partition window (parallel), then per-partition
+    * two-pass distributed prefix sum of
+    * [[graft.relational.QuantileNormalize.fullCumSum]]: range-partition
+    * by doc_id, a per-partition window (parallel), then per-partition
     * totals (one tiny row per partition) prefix-summed and broadcast
-    * back. The only single-task step handles `numPartitions` rows.
+    * back.
     */
   val PackBudget = 1000
 
-  def packDocs(docs: DataFrame, budget: Int = PackBudget,
-      parts: Int = 32): DataFrame = {
-    val wIn = Window.partitionBy(col("pid")).orderBy(col("doc_id"))
-    val local = docs
-      .select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      .repartitionByRange(parts, col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .withColumn("local_end", sum(col("n_tokens")).over(wIn))
-    // bounded triangular join, not a pid-ordered window (r18, verdict
-    // item 5 — see QuantileNormalize.exclusivePrefix)
-    val offsets = graft.relational.QuantileNormalize.exclusivePrefix(
-        local.groupBy(col("pid")).agg(max(col("local_end")).as("ptotal")),
-        Seq(), "pid", Seq("ptotal"))
-      .withColumnRenamed("ptotal_off", "poffset")
-    local.join(broadcast(offsets), "pid")
-      .withColumn("start_tok", col("poffset") + col("local_end") - col("n_tokens"))
+  def packDocs(docs: DataFrame, budget: Int = PackBudget): DataFrame =
+    graft.relational.QuantileNormalize.fullCumSum(
+        docs.select(col("doc_id"),
+          size(split(col("text"), " ")).cast("long").as("n_tokens")),
+        Seq(col("doc_id")), "n_tokens" -> "end_tok")
+      .withColumn("start_tok", col("end_tok") - col("n_tokens"))
       .withColumn("pack_first", expr(s"start_tok div $budget"))
-      .withColumn("pack_last", expr(s"(poffset + local_end - 1) div $budget"))
+      .withColumn("pack_last", expr(s"(end_tok - 1) div $budget"))
       .select(col("doc_id"), col("n_tokens"), col("start_tok"),
         col("pack_first"), col("pack_last"))
-  }
 
   /** q103 — packing assignment for every document; the oracle computes
     * the same offsets with a plain single-node running sum, which is

@@ -116,7 +116,7 @@ object Word2vecPrep {
     // constant-bounded — 10⁸-10⁹ distinct tokens at 100 TB would
     // funnel through the old one-task global window.
     graft.relational.QuantileNormalize.fullCumSum(
-      uni, Seq($"w_micro".desc, $"term"), "w_micro", "cum_micro")
+      uni, Seq($"w_micro".desc, $"term"), "w_micro" -> "cum_micro")
       .select($"term", $"cnt", $"w_micro",
         expr(s"1000000 * w_micro div ${z}L").as("prob_ppm"),
         expr(s"1000000 * cum_micro div ${z}L").as("cum_ppm"))

@@ -49,12 +49,13 @@ object Betweenness {
   /** Pair-dependency fixed-point scale. */
   val BcScale = 1000000L
 
-  /** All-sources path-counting BFS closure (s, v, d, σ) — shared by
-    * node betweenness (q531) and edge betweenness (q556). `sources`
-    * defaults to every node; q556 passes its pivot sample.
+  /** All-sources path-counting BFS closure (s, v, d, σ) and its round
+    * count — shared by node betweenness (q531) and edge betweenness
+    * (q556). `sources` defaults to every node; q556 passes its pivot
+    * sample.
     */
   private[operators] def bfsClosure(edges0: DataFrame,
-      sources: Option[DataFrame] = None): DataFrame = {
+      sources: Option[DataFrame] = None): (DataFrame, Int) = {
     val s = edges0.sparkSession
     import s.implicits._
     val edges = PlanBridge.checkpointResetStats(edges0)
@@ -67,30 +68,35 @@ object Betweenness {
     // it yields the identical set.
     val nodes = sources.getOrElse(
       edges.select($"u".as("v")).unionAll(edges.select($"v")).distinct())
-    var frontier = PlanBridge.checkpointResetStats(
-      nodes.select($"v".as("s"), $"v", lit(0L).as("d"), lit(1L).as("sig")))
+    var (frontier, n) = PlanBridge.checkpointMeasured(
+      nodes.select($"v".as("s"), $"v", lit(0L).as("d"), lit(1L).as("sig")),
+      count(lit(1)))
     var settled = frontier
     var r = 0
-    while (!frontier.isEmpty) {
+    while (n > 0L) {
       r += 1
       require(r <= BcMaxRounds, s"BFS did not close in $r rounds")
-      val next = frontier
+      val (next, nNext) = PlanBridge.checkpointMeasured(frontier
         .join(edges.select($"u", $"v".as("w")), frontier("v") === $"u")
         .groupBy($"s", $"w").agg(sum($"sig").as("sig"))
         .select($"s", $"w".as("v"), lit(r.toLong).as("d"), $"sig")
-        .join(settled.select($"s", $"v"), Seq("s", "v"), "left_anti")
-      frontier = PlanBridge.checkpointResetStats(next)
-      settled = PlanBridge.checkpointResetStats(
-        settled.unionAll(frontier))
+        .join(settled.select($"s", $"v"), Seq("s", "v"), "left_anti"),
+        count(lit(1)))
+      val grown = PlanBridge.checkpointResetStats(settled.unionAll(next))
+      Seq(frontier, settled).foreach(PlanBridge.release)
+      frontier = next
+      settled = grown
+      n = nNext
     }
-    settled
+    Seq(edges, frontier).foreach(PlanBridge.release)
+    (settled, r)
   }
 
   /** (v, ecc, bc6) over a symmetrized `(u, v)` edge list. */
   def betweenness(edges0: DataFrame): DataFrame = {
     val s = edges0.sparkSession
     import s.implicits._
-    val d = bfsClosure(edges0)
+    val (d, _) = bfsClosure(edges0)
     // eccentricity, reach and distance-sum per source come free off the
     // same closure — max/count/sum are one partial agg; sum_d feeds the
     // CLOSENESS readout (harmonic's exact sibling: q499 estimates via

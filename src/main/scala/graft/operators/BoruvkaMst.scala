@@ -131,13 +131,13 @@ object BoruvkaMst {
   def mst(edges0: DataFrame): DataFrame = {
     val s = edges0.sparkSession
     import s.implicits._
-    val acc = mstForest(edges0)
+    val (acc, _, _) = mstForest(edges0)
     // single-linkage merge order: ascending (w, u, v) rank over the
     // forest — unique keys, so the inclusive two-level cumsum IS the
     // rank (no single-partition window at any scale)
     graft.relational.QuantileNormalize.fullCumSum(
         acc.withColumn("one", lit(1L)),
-        Seq(col("w"), col("u"), col("v")), "one", "sl_rank")
+        Seq(col("w"), col("u"), col("v")), "one" -> "sl_rank")
       .select($"u", $"v", $"w".as("dist_ppm"), $"merge_round", $"sl_rank")
       .orderBy($"sl_rank")
   }
@@ -145,9 +145,10 @@ object BoruvkaMst {
   /** The spanning forest `(u, v, w, merge_round)` WITHOUT the
     * single-linkage rank finish — the form consumers that only need
     * the edge set (the q571/q573 bridge census) read, skipping the
-    * cumsum scan and the global sort.
+    * cumsum scan and the global sort — with the engine rounds run and
+    * the most pointer-halving steps any round took.
     */
-  def mstForest(edges0: DataFrame): DataFrame = {
+  def mstForest(edges0: DataFrame): (DataFrame, Int, Int) = {
     val s = edges0.sparkSession
     import s.implicits._
     val edges = PlanBridge.checkpointResetStats(edges0)
@@ -157,11 +158,12 @@ object BoruvkaMst {
     var acc = s.emptyDataset[(Long, Long, Long, Long)]
       .toDF("u", "v", "w", "merge_round")
     var r = 0
-    var done = false
-    while (!done) {
+    var halvings = 0
+    var nChosen = 1L
+    while (nChosen > 0L) {
       r += 1
       // r counts the final convergence-DETECT pass too (the round where
-      // chosen.isEmpty flips done): an input needing exactly
+      // no component chooses an edge): an input needing exactly
       // MstMaxRounds HOOKING rounds takes MstMaxRounds+1 engine rounds
       // while the oracle's MstMaxRounds-deep unroll still replays it —
       // budget at +1 so engine and oracle capacities match (r15 advice).
@@ -175,12 +177,12 @@ object BoruvkaMst {
           struct($"w", $"u", $"v", $"cv".as("oc")).as("e"))
         .unionAll(tagged.select($"cv".as("cc"),
           struct($"w", $"u", $"v", $"cu".as("oc")).as("e")))
-      val chosen = PlanBridge.checkpointResetStats(
+      val (chosen, n) = PlanBridge.checkpointMeasured(
         dir.groupBy($"cc").agg(min($"e").as("e"))
           .select($"cc", $"e.w".as("w"), $"e.u".as("u"),
-            $"e.v".as("v"), $"e.oc".as("oc")))
-      if (chosen.isEmpty) done = true
-      else {
+            $"e.v".as("v"), $"e.oc".as("oc")), count(lit(1)))
+      nChosen = n
+      if (n > 0L) {
         acc = PlanBridge.checkpointResetStats(
           acc.unionAll(chosen.select($"u", $"v", $"w").distinct()
             .withColumn("merge_round", lit(r.toLong))))
@@ -189,28 +191,27 @@ object BoruvkaMst {
         val mut = p0raw.as("x").join(p0raw.as("y"),
             $"x.oc" === $"y.cc" && $"y.oc" === $"x.cc")
           .select($"x.cc".as("cc"), lit(true).as("mu"))
-        var p = PlanBridge.checkpointResetStats(
+        val p0 = PlanBridge.checkpointResetStats(
           p0raw.join(mut, Seq("cc"), "left")
             .select($"cc", when($"mu".isNotNull && $"cc" < $"oc", $"cc")
               .otherwise($"oc").as("p")))
-        var halve = 0
-        var stable = false
-        while (!stable) {
-          halve += 1
-          require(halve <= MstMaxHalve,
-            s"pointer halving exceeded $MstMaxHalve steps — re-measure")
-          val nxt = PlanBridge.checkpointResetStats(
-            p.as("a").join(p.as("b"), $"a.p" === $"b.cc")
-              .select($"a.cc".as("cc"), $"b.p".as("p")))
-          stable = nxt.join(p, Seq("cc", "p"), "left_anti").isEmpty
-          p = nxt
-        }
-        comp = PlanBridge.checkpointResetStats(
+        // pointer halving p := p∘p; every pointer target is itself a
+        // hooked component, so the previous pointer rides along as `old`
+        val (p, halve, _) = PlanBridge.iterate(p0, MstMaxHalve,
+            s"pointer halving (MstMaxHalve=$MstMaxHalve — re-measure)") {
+          (p, _) => p.as("a").join(p.as("b"), $"a.p" === $"b.cc")
+            .select($"a.cc".as("cc"), $"b.p".as("p"), $"a.p".as("old"))
+        }(count(when($"p" =!= $"old", 1)), _ == 0)
+        halvings = math.max(halvings, halve)
+        val nextComp = PlanBridge.checkpointResetStats(
           comp.join(p.select($"cc".as("c"), $"p"), Seq("c"), "left")
             .select($"id", coalesce($"p", $"c").as("c")))
+        Seq(p0, p, comp).foreach(PlanBridge.release)
+        comp = nextComp
       }
+      PlanBridge.release(chosen)
     }
-    acc
+    (acc, r, halvings)
   }
 
   /** q559 — Borůvka MST / single-linkage merge sequence of the

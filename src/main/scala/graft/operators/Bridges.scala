@@ -76,8 +76,6 @@ object Bridges {
     */
   val BrMaxRounds = 40
 
-  @volatile var lastMaxRounds: Int = 0
-
   /** One LCA-climb step's joined frame — the climb loop BODY, exposed
     * so ScalePlanSpec can pin its plan (checkpointing erases round
     * joins): active pairs pick up both endpoints' parents via two
@@ -94,24 +92,23 @@ object Bridges {
   }
 
   /** Both censuses off one pass: returns
-    * (edges: (u, v, is_bridge), nodes: (node, deg, is_articulation)).
+    * (edges: (u, v, is_bridge), nodes: (node, deg, is_articulation),
+    * rounds run by the BFS, climb and parts loops).
     * Precondition: `wEdges` carries each undirected edge ONCE with
     * u < v (what [[BoruvkaMst.jaccardDistEdges]] and
     * [[treeChordEdges]] emit) — the tree/non-tree anti-join matches on
     * that orientation.
     */
-  def census(wEdges: DataFrame): (DataFrame, DataFrame) = {
+  def census(wEdges: DataFrame): (DataFrame, DataFrame, Seq[Int]) = {
     val s = wEdges.sparkSession
     import s.implicits._
-    lastMaxRounds = 0
-    def bump(r: Int): Unit = { if (r > lastMaxRounds) lastMaxRounds = r }
     // materialize the (possibly expensive) edge build ONCE — mst() and
     // the census both read it
     val wc = PlanBridge.checkpointResetStats(wEdges.select($"u", $"v", $"w"))
     val edges = PlanBridge.checkpointResetStats(
       wc.select($"u", $"v").distinct())
     val tree = PlanBridge.checkpointResetStats(
-      BoruvkaMst.mstForest(wc).select($"u", $"v"))
+      BoruvkaMst.mstForest(wc)._1.select($"u", $"v"))
     val nte = PlanBridge.checkpointResetStats(
       edges.join(tree, Seq("u", "v"), "left_anti"))
     val tAdj = tree.select($"u".as("x"), $"v".as("y"))
@@ -123,54 +120,62 @@ object Bridges {
     val lbl = ConnectedComponents(tree, "u", "v")
 
     // BFS parent/depth from the roots (parents are unique in a tree)
-    var assigned = PlanBridge.checkpointResetStats(
+    var (assigned, n) = PlanBridge.checkpointMeasured(
       lbl.select($"comp").distinct()
         .select($"comp".as("node"), lit(-1L).as("parent"),
-          lit(0L).as("depth")))
+          lit(0L).as("depth")), count(lit(1)))
     var frontier = assigned
     var r = 0
-    while (!frontier.isEmpty) {
+    while (n > 0L) {
       r += 1
       require(r <= BrMaxRounds, s"tree BFS exceeded $BrMaxRounds")
-      val fresh = PlanBridge.checkpointResetStats(
+      val (fresh, nFresh) = PlanBridge.checkpointMeasured(
         tAdj.join(frontier.select($"node".as("x"), $"depth"), Seq("x"))
           .select($"y".as("node"), $"x".as("parent"),
             ($"depth" + 1L).as("depth"))
           .join(assigned.select($"node"), Seq("node"), "left_anti")
           .groupBy($"node")
-          .agg(min($"parent").as("parent"), min($"depth").as("depth")))
-      assigned = PlanBridge.checkpointResetStats(assigned.unionAll(fresh))
+          .agg(min($"parent").as("parent"), min($"depth").as("depth")),
+        count(lit(1)))
+      val grown = PlanBridge.checkpointResetStats(assigned.unionAll(fresh))
+      Seq(frontier, assigned).foreach(PlanBridge.release)
+      assigned = grown
       frontier = fresh
+      n = nFresh
     }
-    bump(r)
+    val bfsRounds = r
     val pmap = assigned // (node, parent, depth)
 
     // CLIMB: all non-tree pairs toward their LCA in lockstep
-    var st = PlanBridge.checkpointResetStats(nte
+    val unmet = count(when($"x" =!= $"y", 1))
+    var (st, nActive) = PlanBridge.checkpointMeasured(nte
       .join(pmap.select($"node".as("u"), $"depth".as("du")), "u")
       .join(pmap.select($"node".as("v"), $"depth".as("dv")), "v")
       .select($"u".as("a"), $"v".as("b"), $"u".as("x"), $"du".as("dx"),
-        $"v".as("y"), $"dv".as("dy")))
+        $"v".as("y"), $"dv".as("dy")), unmet)
     // covers accumulate as a buffer of per-round (already-checkpointed
     // lineage) frames and union ONCE — checkpointing the growing union
     // every round was the dominant cost on deep trees
     val coverRounds = scala.collection.mutable.ArrayBuffer[DataFrame]()
     r = 0
-    while (!st.filter($"x" =!= $"y").isEmpty) {
+    while (nActive > 0L) {
       r += 1
       require(r <= BrMaxRounds, s"LCA climb exceeded $BrMaxRounds")
       val act = PlanBridge.checkpointResetStats(climbJoined(st, pmap))
       coverRounds +=
         act.filter($"lx").select($"a", $"b", $"x".as("child"))
           .unionAll(act.filter($"ly").select($"a", $"b", $"y".as("child")))
-      st = PlanBridge.checkpointResetStats(
+      val (next, nNext) = PlanBridge.checkpointMeasured(
         st.filter($"x" === $"y").unionAll(act.select($"a", $"b",
           when($"lx", $"px").otherwise($"x").as("x"),
           when($"lx", $"dx" - 1L).otherwise($"dx").as("dx"),
           when($"ly", $"py").otherwise($"y").as("y"),
-          when($"ly", $"dy" - 1L).otherwise($"dy").as("dy"))))
+          when($"ly", $"dy" - 1L).otherwise($"dy").as("dy"))), unmet)
+      PlanBridge.release(st)
+      st = next
+      nActive = nNext
     }
-    bump(r)
+    val climbRounds = r
     val covers = PlanBridge.checkpointResetStats(
       coverRounds.foldLeft(
         s.emptyDataset[(Long, Long, Long)].toDF("a", "b", "child"))(
@@ -207,25 +212,21 @@ object Bridges {
       .select($"vx".as("node"), $"n1", $"n2").distinct())
     val mAdj = merges.select($"node", $"n1".as("p"), $"n2".as("q"))
       .unionAll(merges.select($"node", $"n2".as("p"), $"n1".as("q")))
-    // parts = tree neighbors of each vertex
-    var parts = PlanBridge.checkpointResetStats(
+    // parts = tree neighbors of each vertex, one row per (node, nb); the
+    // previous label rides along as `old`, so a round's change count is
+    // measured on its own checkpoint
+    val parts0 = PlanBridge.checkpointResetStats(
       tAdj.select($"x".as("node"), $"y".as("nb"), $"y".as("pl")))
-    var stable = false
-    r = 0
-    while (!stable) {
-      r += 1
-      require(r <= BrMaxRounds, s"parts CC exceeded $BrMaxRounds")
+    val (parts, partsRounds, _) = PlanBridge.iterate(parts0, BrMaxRounds,
+        "parts CC") { (parts, _) =>
       val viaMerge = parts
         .join(mAdj.select($"node", $"p".as("nb"), $"q"),
           Seq("node", "nb"))
-        .select($"node", $"q".as("nb"), $"pl")
-      val nxt = PlanBridge.checkpointResetStats(
-        parts.unionAll(viaMerge)
-          .groupBy($"node", $"nb").agg(min($"pl").as("pl")))
-      stable = nxt.join(parts, Seq("node", "nb", "pl"), "left_anti").isEmpty
-      parts = nxt
-    }
-    bump(r)
+        .select($"node", $"q".as("nb"), $"pl", lit(null).cast("long").as("old"))
+      parts.select($"node", $"nb", $"pl", $"pl".as("old")).unionAll(viaMerge)
+        .groupBy($"node", $"nb").agg(min($"pl").as("pl"), max($"old").as("old"))
+    }(count(when($"pl" =!= $"old", 1)), _ == 0)
+    PlanBridge.release(parts0)
     val nParts = parts.groupBy($"node")
       .agg(countDistinct($"pl").as("n_parts"))
     val deg = edges.select($"u".as("node")).unionAll(edges.select($"v"))
@@ -233,7 +234,7 @@ object Bridges {
     val nodeCensus = deg.join(nParts, Seq("node"))
       .select($"node", $"deg", ($"n_parts" > 1L).as("is_articulation"))
       .orderBy($"node")
-    (edgeCensus, nodeCensus)
+    (edgeCensus, nodeCensus, Seq(bfsRounds, climbRounds, partsRounds))
   }
 
   /** The near-dup graph's edge census as a build-once PERSISTED table

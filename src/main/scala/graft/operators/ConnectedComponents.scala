@@ -20,9 +20,9 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   * large-star/small-star MapReduce formulation gives, with two
   * equi-joins + one agg per round, each a plain key shuffle.
   *
-  * Driver involvement per round is ONE scalar (`changed` count) plus
-  * an eager `localCheckpoint` that truncates the growing lineage —
-  * no per-row driver work, so the loop distributes at any scale.
+  * Driver involvement per round is ONE scalar (`changed` count), read
+  * off the eager checkpoint that truncates the growing lineage — no
+  * per-row driver work, so the loop distributes at any scale.
   */
 object ConnectedComponents {
 
@@ -32,23 +32,21 @@ object ConnectedComponents {
     * no edges don't appear (callers union singletons back if needed).
     */
   def apply(edges: DataFrame, src: String = "src", dst: String = "dst",
-      maxIter: Int = 50): DataFrame = {
+      maxIter: Int = 50): DataFrame =
+    withRounds(edges, src, dst, maxIter)._1
+
+  /** [[apply]] and the number of propagation rounds it ran. */
+  def withRounds(edges: DataFrame, src: String = "src", dst: String = "dst",
+      maxIter: Int = 50): (DataFrame, Int) = {
     val s = edges.sparkSession
     import s.implicits._
     val sym = PlanBridge.checkpointResetStats(
       edges.select(col(src).as("id"), col(dst).as("nbr"))
         .union(edges.select(col(dst).as("id"), col(src).as("nbr"))))
-    var labels = PlanBridge.checkpointResetStats(sym.select($"id").distinct()
+    val labels0 = PlanBridge.checkpointResetStats(sym.select($"id").distinct()
       .withColumn("comp", $"id"))
-    // the frame whose checkpoint blocks may be dropped once the round
-    // that superseded it has materialized (labels at round r reads the
-    // round-(r-1) checkpoint, so only current + previous may be live —
-    // without this, 50 rounds pin 50 checkpoint generations in executor
-    // storage)
-    var retired: DataFrame = null
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
+    val (labels, rounds, _) = PlanBridge.iterate(labels0, maxIter,
+        "connected components") { (labels, _) =>
       val nbrMin = sym
         .join(labels.select($"id".as("nbr"), $"comp".as("nbr_comp")), "nbr")
         .groupBy($"id").agg(min($"nbr_comp").as("nbr_comp"))
@@ -58,26 +56,17 @@ object ConnectedComponents {
           least($"old", coalesce($"nbr_comp", $"old")).as("comp"))
       // path halving: follow the label pointer one hop (comp(comp) ≤
       // comp because labels only decrease); the previous label rides
-      // along so the convergence check below is a filter over the
+      // along so the convergence measure is a count over the
       // checkpointed frame, not another join against `labels`
-      val next = PlanBridge.checkpointResetStats(viaNbr.as("a")
+      viaNbr.as("a")
         .join(viaNbr.select($"id".as("c0"), $"comp".as("c2")).as("b"),
           $"a.comp" === $"b.c0")
-        .select($"a.id".as("id"), $"a.old".as("old"), $"b.c2".as("comp")))
-      changed = next.filter($"comp" =!= $"old").count()
-      // `next` is materialized (the count above); the generation before
-      // last can no longer be referenced — release its blocks
-      if (retired ne null) PlanBridge.release(retired)
-      retired = labels
-      labels = next.select($"id", $"comp")
-      iter += 1
-    }
-    require(changed == 0,
-      s"connected components did not converge in $maxIter rounds")
+        .select($"a.id".as("id"), $"a.old".as("old"), $"b.c2".as("comp"))
+    }(count(when($"comp" =!= $"old", 1)), _ == 0)
     // the final labels are their own checkpoint — the symmetric edge
-    // frame is no longer reachable through them
+    // frame and the seed labels are no longer reachable through them
     PlanBridge.release(sym)
-    if (retired ne null) PlanBridge.release(retired)
-    labels
+    PlanBridge.release(labels0)
+    (labels.select($"id", $"comp"), rounds)
   }
 }

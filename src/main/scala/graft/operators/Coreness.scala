@@ -19,8 +19,8 @@ import graft.core.Entry
   * Exactness of the fixpoint test: the iteration is per-node monotone
   * NON-INCREASING (H of neighbor values never exceeds the previous
   * own value once seeded with degrees), so Σc strictly decreases until
-  * the fixpoint and ONE sum aggregate per round detects convergence —
-  * no row-diff join.
+  * the fixpoint and ONE sum aggregate per round, observed on the
+  * round's own checkpoint, detects convergence — no row-diff join.
   *
   * H-index without loops: sort the collected neighbor values desc,
   * H = Σ_i [x_i ≥ i] (1-based) — `aggregate(zip_with(sorted, 1..len,
@@ -62,35 +62,29 @@ object Coreness {
       lit(0L), (acc, z) => acc + z)
 
   /** Coreness of every node of `e0` (symmetrized edge list, both
-    * directions, checkpointed by the caller; node set = endpoints).
+    * directions, checkpointed by the caller; node set = endpoints),
+    * and the H-index rounds run.
     */
-  def coreness(e0: DataFrame): DataFrame = {
+  def coreness(e0: DataFrame): (DataFrame, Int) = {
     val s = e0.sparkSession
     import s.implicits._
-    var cur = PlanBridge.checkpointResetStats(
-      e0.groupBy($"u".as("v")).agg(count(lit(1)).as("c")))
-    var prevSum = cur.agg(sum($"c")).as[Long].head()
-    var stable = false
-    var r = 0
-    while (!stable) {
-      r += 1
-      require(r <= CorenessMaxRounds,
-        s"H-index iteration did not converge in $r rounds")
-      cur = PlanBridge.checkpointResetStats(
-        e0.join(cur.select($"v".as("w"), $"c".as("cw")), $"w" === $"v")
-          .drop($"v")
-          .groupBy($"u".as("v"))
-          .agg(sort_array(collect_list($"cw"), asc = false).as("a"))
-          .select($"v", hIndex($"a").as("c")))
-      val sumC = cur.agg(sum($"c")).as[Long].head()
-      stable = sumC == prevSum // monotone non-increasing ⟹ equal = fixpoint
-      prevSum = sumC
-    }
-    cur.select($"v", $"c".as("coreness")).orderBy($"v")
+    val (deg, sum0) = PlanBridge.checkpointMeasured(
+      e0.groupBy($"u".as("v")).agg(count(lit(1)).as("c")), sum($"c"))
+    // monotone non-increasing ⟹ an equal Σc is the fixpoint
+    val (cur, r, _) = PlanBridge.iterate(deg, CorenessMaxRounds,
+        "H-index iteration") { (cur, _) =>
+      e0.join(cur.select($"v".as("w"), $"c".as("cw")), $"w" === $"v")
+        .drop($"v")
+        .groupBy($"u".as("v"))
+        .agg(sort_array(collect_list($"cw"), asc = false).as("a"))
+        .select($"v", hIndex($"a").as("c"))
+    }(sum($"c"), PlanBridge.settled(sum0))
+    PlanBridge.release(deg)
+    (cur.select($"v", $"c".as("coreness")).orderBy($"v"), r)
   }
 
   val q520Coreness: Q = (s, dir) =>
-    coreness(PlanBridge.checkpointResetStats(KTruss.ktEdges(s, dir)))
+    coreness(PlanBridge.checkpointResetStats(KTruss.ktEdges(s, dir)))._1
 
   val q520Sql: String = {
     val base =

@@ -268,9 +268,9 @@ object Dbscan {
     * cross a component boundary, so the loop "converges" instantly at
     * 24‰ recall). The seed must be a connected EXPANDER, which the
     * global hash ring was by accident of its random order. Scalable
-    * spelling: dense POSITIONS from the two-level scan (range
-    * partition + keyed row_number + broadcast offsets — the q351/q451
-    * machinery, no single-task window), then K' successors at
+    * spelling: dense POSITIONS from the pinned two-level scan
+    * (`QuantileNormalize.fullRankGlobal` — no single-task window), then
+    * K' successors at
     * hash-derived RANDOM OFFSETS (1 + xxhash(vec_id, j) mod (n−1)) —
     * a random K'-out graph: connected w.h.p., expander mixing, the
     * geometry-blindness NN-Descent's convergence proof wants.
@@ -278,19 +278,10 @@ object Dbscan {
   private[graft] def nndSeedEdgesScalable(pts: DataFrame, n: Long): DataFrame = {
     val s = pts.sparkSession
     import s.implicits._
-    val W = org.apache.spark.sql.expressions.Window
-    val parts = pts.select($"vec_id").repartitionByRange(32, $"vec_id")
-      .withColumn("pid", spark_partition_id())
-    val wIn = W.partitionBy($"pid").orderBy($"vec_id")
-    val withRn = parts.withColumn("rn", row_number().over(wIn).cast("long"))
-    val wP = W.orderBy($"pid")
-    val offs = withRn.groupBy($"pid").agg(count(lit(1)).as("c"))
-      .withColumn("poff", coalesce(sum($"c").over(
-        wP.rowsBetween(Long.MinValue, -1)), lit(0L)))
-      .select($"pid", $"poff")
     val ring = PlanBridge.checkpointResetStats(
-      withRn.join(broadcast(offs), "pid")
-        .select($"vec_id", ($"poff" + $"rn" - 1L).as("pos")))
+      graft.relational.QuantileNormalize.fullRankGlobal(
+        pts.select($"vec_id"), Seq($"vec_id"), "rank")
+        .select($"vec_id", ($"rank" - 1L).as("pos")))
     val succ = (1 to NndSeedK).map(j => ring.select($"vec_id".as("a"),
         (($"pos" + lit(1L) + pmod(xxhash64($"vec_id", lit(j)), lit(n - 1)))
           % n).as("spos")))
@@ -488,8 +479,9 @@ object Dbscan {
     // leg arrived. Late rounds touch only the shrinking churn, which
     // is what makes run-to-convergence affordable (measured 23.5 s →
     // see BASELINE.md for the incremental number at sf0.1). The flag
-    // is computed by the same left join that counts updates, so the
-    // termination test costs no extra pass.
+    // is computed by the same left join that counts updates, and the
+    // count is read off the round's own checkpoint — the termination
+    // test costs no extra pass.
     var working = PlanBridge.checkpointResetStats(
       nndTopkByDist(pts)(seedEdges, NndSeedK).withColumn("is_new", lit(true)))
     var r = 0
@@ -505,12 +497,13 @@ object Dbscan {
         .filter($"a" =!= $"b")
         .unionByName(working.select($"a", $"b"))
         .distinct()
-      val next = PlanBridge.checkpointResetStats(
+      val (next, updates) = PlanBridge.checkpointMeasured(
         nndTopkByDist(pts)(cand, NndSeedK)
           .join(working.select($"a", $"b", lit(false).as("held")),
             Seq("a", "b"), "left")
-          .select($"a", $"b", coalesce($"held", lit(true)).as("is_new")))
-      val updates = next.filter($"is_new").count()
+          .select($"a", $"b", coalesce($"held", lit(true)).as("is_new")),
+        count(when($"is_new", 1)))
+      Seq(undirected, working).foreach(PlanBridge.release)
       working = next
       r += 1
       if (1000L * updates < NndConvergeDeltaPermille * (NndSeedK * n))

@@ -62,9 +62,9 @@ object JpColoring {
 
   /** Greedy coloring of the symmetrized edge list `edges0` (both
     * directions, no self-loops; node set = endpoints): one row
-    * (v, color) per node.
+    * (v, color, r) per node, and the rounds run.
     */
-  def jpColoring(edges0: DataFrame): DataFrame = {
+  def jpColoring(edges0: DataFrame): (DataFrame, Int) = {
     val s = edges0.sparkSession
     import s.implicits._
     val edges = PlanBridge.checkpointResetStats(edges0)
@@ -72,16 +72,13 @@ object JpColoring {
     // uncolored; a round is one edges⋈state neighbor read, one agg
     // (uncolored-neighbor max + colored-neighbor color set in the same
     // pass), one update join, one checkpoint.
-    var state = PlanBridge.checkpointResetStats(
+    val state0 = PlanBridge.checkpointResetStats(
       edges.groupBy($"u".as("v")).agg(count(lit(1)).as("deg"))
         .withColumn("p", prio)
         .select($"v", $"p", $"deg",
           lit(null).cast("long").as("color"), lit(0L).as("r")))
-    var n = state.filter($"color".isNull).count()
-    var r = 0
-    while (n > 0L) {
-      r += 1
-      require(r <= JpMaxRounds, s"JP coloring did not drain in $r rounds")
+    val (state, r, _) = PlanBridge.iterate(state0, JpMaxRounds,
+        "JP coloring") { (state, r) =>
       val agg = edges
         .join(state.select($"v".as("w"), $"p".as("pw"), $"color".as("cw")),
           $"w" === $"v")
@@ -89,26 +86,25 @@ object JpColoring {
         .groupBy($"u").agg(
           max(when($"cw".isNull, struct($"pw", $"w"))).as("mx"),
           collect_set($"cw").as("used"))
-      state = PlanBridge.checkpointResetStats(
-        state.join(agg, state("v") === agg("u"), "left")
-          .withColumn("win", state("color").isNull &&
-            ($"mx".isNull || struct(state("p"), state("v")) >
-              struct($"mx.pw", $"mx.w")))
-          .select(state("v"), state("p"), state("deg"),
-            when(state("color").isNotNull, state("color"))
-              .when($"win", array_min(array_except(
-                sequence(lit(1L), state("deg") + 1L),
-                coalesce($"used", array().cast("array<bigint>")))))
-              .as("color"),
-            when(state("color").isNotNull, state("r"))
-              .when($"win", lit(r.toLong)).otherwise(lit(0L)).as("r")))
-      n = state.filter($"color".isNull).count()
-    }
-    state.select($"v", $"color", $"r").orderBy($"v")
+      state.join(agg, state("v") === agg("u"), "left")
+        .withColumn("win", state("color").isNull &&
+          ($"mx".isNull || struct(state("p"), state("v")) >
+            struct($"mx.pw", $"mx.w")))
+        .select(state("v"), state("p"), state("deg"),
+          when(state("color").isNotNull, state("color"))
+            .when($"win", array_min(array_except(
+              sequence(lit(1L), state("deg") + 1L),
+              coalesce($"used", array().cast("array<bigint>")))))
+            .as("color"),
+          when(state("color").isNotNull, state("r"))
+            .when($"win", lit(r.toLong)).otherwise(lit(0L)).as("r"))
+    }(count(when($"color".isNull, 1)), _ == 0)
+    Seq(edges, state0).foreach(PlanBridge.release)
+    (state.select($"v", $"color", $"r").orderBy($"v"), r)
   }
 
   val q522JpColoring: Q = (s, dir) =>
-    jpColoring(PlanBridge.checkpointResetStats(KTruss.ktEdges(s, dir)))
+    jpColoring(PlanBridge.checkpointResetStats(KTruss.ktEdges(s, dir)))._1
 
   val q522Sql: String = {
     val base =

@@ -27,10 +27,10 @@ import graft.core.{Entry, Tables => T}
   * Scale shape: each round is two LEFT-SEMI equi-joins (edges against
   * the surviving-node set — hash-partitioned on the node id, the same
   * shuffle reused) + one partial-aggregated degree count; rounds are
-  * localCheckpoint'ed with the ConnectedComponents generation
-  * management (current + previous pinned, older released). No driver
-  * iteration over rows — the only driver-side values are the one
-  * per-round surviving-count scalar used for the early exit.
+  * checkpointed through `PlanBridge.iterate` (current + previous
+  * pinned, older released). No driver iteration over rows — the only
+  * driver-side value is the per-round surviving count, read off each
+  * round's own checkpoint, used for the early exit.
   *
   * The graph is q147's co-purchase part graph with support ≥ 2 — the
   * repo's standard product graph. Reference has no graph surface;
@@ -46,40 +46,27 @@ object KCore {
 
   /** Nodes of the k-core of an undirected simple graph given as
     * canonical edges (u < v, no duplicates), with each node's degree
-    * WITHIN the core: `(part, core_deg)`.
+    * WITHIN the core: `(part, core_deg)`, and the peeling rounds run.
     */
-  def kcore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+  def kcore(edges: DataFrame, k: Int, rounds: Int): (DataFrame, Int) = {
     val s = edges.sparkSession
     import s.implicits._
     val e0 = PlanBridge.checkpointResetStats(edges)
     def surviving(surv: DataFrame): DataFrame =
       e0.join(surv.select($"n".as("u")), Seq("u"), "left_semi")
         .join(surv.select($"n".as("v")), Seq("v"), "left_semi")
-    var surv = PlanBridge.checkpointResetStats(
+    val (surv0, n0) = PlanBridge.checkpointMeasured(
       e0.select($"u".as("n")).union(e0.select($"v".as("n")))
-        .distinct())
-    var retired: DataFrame = null
-    var prevCount = surv.count()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < rounds) {
+        .distinct(), count(lit(1)))
+    // monotone shrinkage: same size ⇒ same SET ⇒ fixpoint
+    val (surv, iters, _) = PlanBridge.iterate(surv0, rounds,
+        "k-core peeling (raise KCoreRounds in BOTH engines — the round " +
+          "count is the contract)") { (surv, _) =>
       val ee = surviving(surv)
-      val next = PlanBridge.checkpointResetStats(
-        ee.select($"u".as("n")).union(ee.select($"v".as("n")))
-          .groupBy($"n").agg(count(lit(1)).as("d"))
-          .filter($"d" >= k).select($"n"))
-      val nextCount = next.count()
-      // monotone shrinkage: same size ⇒ same SET ⇒ fixpoint
-      converged = nextCount == prevCount
-      prevCount = nextCount
-      if (retired ne null) PlanBridge.release(retired)
-      retired = surv
-      surv = next
-      iter += 1
-    }
-    require(converged || prevCount == 0,
-      s"k-core peeling did not converge in $rounds rounds " +
-        "(raise KCoreRounds in BOTH engines — the round count is the contract)")
+      ee.select($"u".as("n")).union(ee.select($"v".as("n")))
+        .groupBy($"n").agg(count(lit(1)).as("d"))
+        .filter($"d" >= k).select($"n")
+    }(count(lit(1)), PlanBridge.settled(n0))
     val ef = surviving(surv)
     // materialize the (small) core frame BEFORE releasing the edge and
     // round checkpoints it still references — the returned DataFrame is
@@ -87,10 +74,8 @@ object KCore {
     val out = PlanBridge.checkpointResetStats(
       ef.select($"u".as("part")).union(ef.select($"v".as("part")))
         .groupBy($"part").agg(count(lit(1)).as("core_deg")))
-    PlanBridge.release(e0)
-    if (retired ne null) PlanBridge.release(retired)
-    PlanBridge.release(surv)
-    out.orderBy($"part")
+    Seq(e0, surv0, surv).foreach(PlanBridge.release)
+    (out.orderBy($"part"), iters)
   }
 
   /** q294 — the [[KCoreK]]-core of the support-≥2 co-purchase part
@@ -106,7 +91,7 @@ object KCore {
       .agg(count(lit(1)).as("supp"))
       .filter($"supp" >= SupportMin)
       .select($"u", $"v")
-    kcore(edges, KCoreK, KCoreRounds)
+    kcore(edges, KCoreK, KCoreRounds)._1
   }
 
   /** Oracle: the identical peeling unrolled to [[KCoreRounds]] chained

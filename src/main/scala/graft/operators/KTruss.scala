@@ -25,7 +25,8 @@ import graft.core.{Entry, Tables => T}
   * agg (fan-out bounded by block degree) — then a HAVING filter;
   * rounds are checkpointed (checkpointResetStats — the iterative-loop
   * rule) and the shrinking is monotone, so count-equality IS
-  * set-equality and the fixpoint test costs one count per round.
+  * set-equality and the fixpoint test is the count each round's
+  * checkpoint measures.
   * Peel count grows slowly with n (4/5/7 at sf0.001/0.01/0.1).
   *
   * Oracle: [[KtUnrolledRounds]] peel rounds UNROLLED as MATERIALIZED
@@ -71,36 +72,26 @@ object KTruss {
       .groupBy($"u", $"v").agg(count(lit(1)).as("sup"))
   }
 
-  /** Peel `e` (symmetrized edge list, both directions) to the k-truss
-    * fixpoint; every round is checkpointed (the iterative-loop rule)
-    * and monotone shrinking makes count-equality the fixpoint test.
-    * Returns the surviving edges and their count.
+  /** Peel `e` (symmetrized edge list, both directions, `prev0` edges)
+    * to the k-truss fixpoint; every round is checkpointed (the
+    * iterative-loop rule) and monotone shrinking makes count-equality
+    * the fixpoint test. Returns the surviving edges, their count and
+    * the peel rounds run.
     */
-  private def peelFixpoint(e0: DataFrame, k: Int,
-      prev0: Long): (DataFrame, Long) = {
+  private[operators] def peelFixpoint(e0: DataFrame, k: Int,
+      prev0: Long): (DataFrame, Long, Int) = {
     import e0.sparkSession.implicits._
-    var e = e0
-    var prev = prev0
-    var rounds = 0
-    var stable = prev == 0L
-    while (!stable) {
-      rounds += 1
-      require(rounds <= KtMaxRounds,
-        s"peel(k=$k) did not stabilize in $rounds rounds")
-      e = PlanBridge.checkpointResetStats(
-        support(e).filter($"sup" >= k - 2).select($"u", $"v"))
-      val n = e.count()
-      stable = n == prev
-      prev = n
-    }
-    (e, prev)
+    val (e, rounds, n) = PlanBridge.iterate(e0, KtMaxRounds, s"peel(k=$k)") {
+      (e, _) => support(e).filter($"sup" >= k - 2).select($"u", $"v")
+    }(count(lit(1)), PlanBridge.settled(prev0))
+    (e, n, rounds)
   }
 
   val q509KTruss: Q = (s, dir) => {
     import s.implicits._
-    val e0 = PlanBridge.checkpointResetStats(ktEdges(s, dir))
-    val (e, _) = peelFixpoint(e0, TrussK, e0.count())
-    e.filter($"u" < $"v").orderBy($"u", $"v")
+    val (e0, n0) =
+      PlanBridge.checkpointMeasured(ktEdges(s, dir), count(lit(1)))
+    peelFixpoint(e0, TrussK, n0)._1.filter($"u" < $"v").orderBy($"u", $"v")
   }
 
   val q509Sql: String = {
@@ -174,7 +165,7 @@ object KTruss {
     var k = 3
     val levels = Seq.newBuilder[DataFrame]
     while (n > 0L && k <= KtMaxK) {
-      val (ek, nk) = peelFixpoint(cur, k, n)
+      val (ek, nk, _) = peelFixpoint(cur, k, n)
       cur = ek
       n = nk
       if (nk > 0L) levels += ek.filter($"u" < $"v").select($"u", $"v")

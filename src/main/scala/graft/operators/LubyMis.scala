@@ -55,15 +55,14 @@ object LubyMis {
 
   /** MIS of the symmetrized edge list `edges0` (both directions, no
     * self-loops; node set = the edge list's endpoints): one row
-    * (v, r) per member with the round it joined.
+    * (v, r) per member with the round it joined, and the rounds run.
     */
-  def lubyMis(edges0: DataFrame): DataFrame = {
+  def lubyMis(edges0: DataFrame): (DataFrame, Int) = {
     val s = edges0.sparkSession
     import s.implicits._
     var liveEdges = PlanBridge.checkpointResetStats(edges0)
-    var live = PlanBridge.checkpointResetStats(
-      liveEdges.select($"u".as("v")).distinct())
-    var n = live.count()
+    var (live, n) = PlanBridge.checkpointMeasured(
+      liveEdges.select($"u".as("v")).distinct(), count(lit(1)))
     val mis = Seq.newBuilder[DataFrame]
     var r = 0
     while (n > 0L) {
@@ -84,19 +83,24 @@ object LubyMis {
       val removed = misR.select($"v")
         .unionAll(liveEdges.join(misR.select($"v".as("u")), "u")
           .select($"v"))
-      live = PlanBridge.checkpointResetStats(
-        live.join(removed, Seq("v"), "left_anti"))
-      liveEdges = PlanBridge.checkpointResetStats(
-        liveEdges.join(live.select($"v".as("u")), Seq("u"))
-          .join(live, Seq("v"))
+      val (nextLive, nLive) = PlanBridge.checkpointMeasured(
+        live.join(removed, Seq("v"), "left_anti"), count(lit(1)))
+      val nextEdges = PlanBridge.checkpointResetStats(
+        liveEdges.join(nextLive.select($"v".as("u")), Seq("u"))
+          .join(nextLive, Seq("v"))
           .select($"u", $"v"))
-      n = live.count()
+      // this round's frames are superseded; the winners stay for the union
+      Seq(pl, live, liveEdges).foreach(PlanBridge.release)
+      live = nextLive
+      liveEdges = nextEdges
+      n = nLive
     }
-    mis.result().reduce(_ unionAll _).orderBy($"v")
+    Seq(live, liveEdges).foreach(PlanBridge.release)
+    (mis.result().reduce(_ unionAll _).orderBy($"v"), r)
   }
 
   val q517LubyMis: Q = (s, dir) =>
-    lubyMis(PlanBridge.checkpointResetStats(KTruss.ktEdges(s, dir)))
+    lubyMis(PlanBridge.checkpointResetStats(KTruss.ktEdges(s, dir)))._1
 
   val q517Sql: String = {
     val base =

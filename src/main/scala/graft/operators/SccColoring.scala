@@ -72,9 +72,6 @@ object SccColoring {
     */
   val SccMaxProp = 40
 
-  @volatile var lastPeels: Int = 0
-  @volatile var lastMaxProp: Int = 0
-
   /** (u, v) directed md5 edges over 0-based supplier keys + node count. */
   def edges(s: SparkSession, dir: String): (DataFrame, Long) = {
     import s.implicits._
@@ -95,17 +92,19 @@ object SccColoring {
   /** One forward min-label propagation step — the coloring loop BODY,
     * exposed so ScalePlanSpec can pin its plan (checkpointing erases
     * round joins from final plans): col(v) ← min(col(v), col(u) over
-    * in-edges), restricted to live nodes.
+    * in-edges), restricted to live nodes; the previous label rides
+    * along as `old`.
     */
   def colorStep(col: DataFrame, liveEdges: DataFrame, live: DataFrame)
       : DataFrame = {
     val s = col.sparkSession
     import s.implicits._
     col.join(liveEdges, $"node" === $"u", "left")
-      .select(coalesce($"v", $"node").as("tgt"), $"col")
-      .unionAll(col.select($"node".as("tgt"), $"col"))
-      .groupBy($"tgt").agg(min($"col").as("col"))
-      .select($"tgt".as("node"), $"col")
+      .select(coalesce($"v", $"node").as("tgt"), $"col",
+        lit(null).cast("long").as("old"))
+      .unionAll(col.select($"node".as("tgt"), $"col", $"col".as("old")))
+      .groupBy($"tgt").agg(min($"col").as("col"), max($"old").as("old"))
+      .select($"tgt".as("node"), $"col", $"old")
       .join(live, Seq("node"), "left_semi")
   }
 
@@ -113,19 +112,42 @@ object SccColoring {
     * list (node universe = endpoints of both columns), scc_id = the
     * SCC's minimum node.
     */
-  def scc(edges0: DataFrame): DataFrame = {
+  def scc(edges0: DataFrame): DataFrame = sccWithRounds(edges0)._1
+
+  /** [[scc]] and the rounds its loops ran: "peel" (outer), and the most
+    * any one peel's "trim", "color" and "harvest" loop took.
+    */
+  def sccWithRounds(edges0: DataFrame): (DataFrame, Map[String, Int]) = {
     val s = edges0.sparkSession
     import s.implicits._
-    lastPeels = 0; lastMaxProp = 0
     val edgesAll = PlanBridge.checkpointResetStats(
       edges0.select($"u", $"v").distinct())
-    var live = PlanBridge.checkpointResetStats(
+    var (live, nLive) = PlanBridge.checkpointMeasured(
       edgesAll.select($"u".as("node")).unionAll(edgesAll.select($"v"))
-        .distinct())
+        .distinct(), count(lit(1)))
     var liveEdges = edgesAll
     var acc = s.emptyDataset[(Long, Long)].toDF("node", "scc_id")
+    val rounds = scala.collection.mutable.Map(
+      "peel" -> 0, "trim" -> 0, "color" -> 0, "harvest" -> 0)
+    def ran(loop: String, r: Int): Unit =
+      rounds(loop) = math.max(rounds(loop), r)
+    // move `gone` (node, scc_id) from the live subgraph to the result
+    def assign(gone: DataFrame): Unit = {
+      val superseded = Seq(acc, live, liveEdges)
+      acc = PlanBridge.checkpointResetStats(acc.unionAll(gone))
+      val (nextLive, n) = PlanBridge.checkpointMeasured(
+        live.join(gone.select($"node"), Seq("node"), "left_anti"),
+        count(lit(1)))
+      live = nextLive
+      nLive = n
+      liveEdges = PlanBridge.checkpointResetStats(
+        liveEdges
+          .join(gone.select($"node".as("u")), Seq("u"), "left_anti")
+          .join(gone.select($"node".as("v")), Seq("v"), "left_anti"))
+      superseded.foreach(PlanBridge.release)
+    }
     var peel = 0
-    while (!live.isEmpty) {
+    while (nLive > 0L) {
       peel += 1
       require(peel <= SccMaxPeels,
         s"SCC exceeded $SccMaxPeels peels — re-measure the budget")
@@ -134,47 +156,32 @@ object SccColoring {
       // self-loop singleton is still a singleton SCC, id = itself).
       // Iterating inside the peel collapses DAG-like tail chains in
       // one peel instead of one peel per layer.
-      var trimming = true
+      var nTrimmed = 1L
       var trimRounds = 0
-      while (trimming) {
+      while (nTrimmed > 0L) {
         trimRounds += 1
         require(trimRounds <= SccMaxProp,
           s"SCC trim exceeded $SccMaxProp rounds — re-measure")
         val nonSelf = liveEdges.filter($"u" =!= $"v")
         val hasOut = nonSelf.select($"u".as("node")).distinct()
         val hasIn = nonSelf.select($"v".as("node")).distinct()
-        val trimmed = PlanBridge.checkpointResetStats(
+        val (trimmed, n) = PlanBridge.checkpointMeasured(
           live.join(hasOut, Seq("node"), "left_anti")
             .unionAll(live.join(hasIn, Seq("node"), "left_anti"))
-            .distinct())
-        if (trimmed.isEmpty) trimming = false
-        else {
-          acc = PlanBridge.checkpointResetStats(
-            acc.unionAll(trimmed.select($"node", $"node".as("scc_id"))))
-          live = PlanBridge.checkpointResetStats(
-            live.join(trimmed, Seq("node"), "left_anti"))
-          liveEdges = PlanBridge.checkpointResetStats(
-            liveEdges
-              .join(trimmed.select($"node".as("u")), Seq("u"), "left_anti")
-              .join(trimmed.select($"node".as("v")), Seq("v"), "left_anti"))
-        }
+            .distinct(), count(lit(1)))
+        nTrimmed = n
+        if (n > 0L) assign(trimmed.select($"node", $"node".as("scc_id")))
+        PlanBridge.release(trimmed)
       }
-      if (trimRounds > lastMaxProp) lastMaxProp = trimRounds
-      if (!live.isEmpty) {
+      ran("trim", trimRounds)
+      if (nLive > 0L) {
         // 2. COLOR: forward min-label to fixpoint
-        var col = live.select($"node", $"node".as("col"))
-        var prop = 0
-        var stable = false
-        while (!stable) {
-          prop += 1
-          require(prop <= SccMaxProp,
-            s"SCC coloring exceeded $SccMaxProp rounds — re-measure")
-          val nxt = PlanBridge.checkpointResetStats(
-            colorStep(col, liveEdges, live))
-          stable = nxt.join(col, Seq("node", "col"), "left_anti").isEmpty
-          col = nxt
-        }
-        if (prop > lastMaxProp) lastMaxProp = prop
+        val (col, prop, _) = PlanBridge.iterate(
+            live.select($"node", $"node".as("col")), SccMaxProp,
+            "SCC coloring (re-measure SccMaxProp)") {
+          (col, _) => colorStep(col, liveEdges, live)
+        }(count(when($"col" =!= $"old", 1)), _ == 0)
+        ran("color", prop)
         // 3. HARVEST: backward reach-to-root within the color class
         val colEdges = PlanBridge.checkpointResetStats(
           liveEdges
@@ -184,35 +191,34 @@ object SccColoring {
             .select($"u", $"v"))
         var b = PlanBridge.checkpointResetStats(
           col.filter($"node" === $"col").select($"node", $"col"))
-        var grew = true
+        var nAdd = 1L
         var bprop = 0
-        while (grew) {
+        while (nAdd > 0L) {
           bprop += 1
           require(bprop <= SccMaxProp,
             s"SCC harvest exceeded $SccMaxProp rounds — re-measure")
-          val add = PlanBridge.checkpointResetStats(
+          val (add, n) = PlanBridge.checkpointMeasured(
             colEdges.join(b.select($"node".as("v"), $"col"), Seq("v"))
               .select($"u".as("node"), $"col").distinct()
-              .join(b, Seq("node"), "left_anti"))
-          grew = !add.isEmpty
-          if (grew)
-            b = PlanBridge.checkpointResetStats(b.unionAll(add))
+              .join(b, Seq("node"), "left_anti"), count(lit(1)))
+          nAdd = n
+          if (n > 0L) {
+            val grown = PlanBridge.checkpointResetStats(b.unionAll(add))
+            PlanBridge.release(b)
+            b = grown
+          }
+          PlanBridge.release(add)
         }
-        if (bprop > lastMaxProp) lastMaxProp = bprop
-        acc = PlanBridge.checkpointResetStats(
-          acc.unionAll(b.select($"node", $"col".as("scc_id"))))
-        live = PlanBridge.checkpointResetStats(
-          live.join(b, Seq("node"), "left_anti"))
-        liveEdges = PlanBridge.checkpointResetStats(
-          liveEdges.join(b.select($"node".as("u")), Seq("u"), "left_anti")
-            .join(b.select($"node".as("v")), Seq("v"), "left_anti"))
+        ran("harvest", bprop)
+        assign(b.select($"node", $"col".as("scc_id")))
+        Seq(col, colEdges, b).foreach(PlanBridge.release)
       }
     }
-    lastPeels = peel
+    ran("peel", peel)
     val sizes = acc.groupBy($"scc_id").agg(count(lit(1)).as("scc_size"))
-    acc.join(sizes, Seq("scc_id"))
+    (acc.join(sizes, Seq("scc_id"))
       .select($"node", $"scc_id", $"scc_size")
-      .orderBy($"node")
+      .orderBy($"node"), rounds.toMap)
   }
 
   /** The SCC partition as a build-once PERSISTED table per (JVM, dir)
@@ -264,8 +270,6 @@ object SccColoring {
     */
   val SccMaxLevels = 40
 
-  @volatile var lastLevels: Int = 0
-
   /** q574 — CONDENSATION-DAG topological levels: contract every SCC to
     * one node (the condensation is acyclic — the classic quotient),
     * then level(c) = longest path from a source SCC, by iterated
@@ -278,20 +282,20 @@ object SccColoring {
     * max path length — an independent algorithm again.
     */
   val q574SccLevels: Q = (s, dir) =>
-    sccLevelsFrom(edges(s, dir)._1, sccTable(s, dir))
+    sccLevelsFrom(edges(s, dir)._1, sccTable(s, dir))._1
 
   /** `(scc_id, scc_size, level)` over a directed `(u, v)` frame. */
   def sccLevels(edges0: DataFrame): DataFrame =
-    sccLevelsFrom(edges0, scc(edges0))
+    sccLevelsFrom(edges0, scc(edges0))._1
 
   /** The level propagation off a PREBUILT `(node, scc_id, scc_size)`
     * partition — q574's marginal cost when the partition is served
-    * from [[sccTable]].
+    * from [[sccTable]] — and the propagation rounds run.
     */
-  def sccLevelsFrom(edges0: DataFrame, byNode0: DataFrame): DataFrame = {
+  def sccLevelsFrom(edges0: DataFrame, byNode0: DataFrame)
+      : (DataFrame, Int) = {
     val s = edges0.sparkSession
     import s.implicits._
-    lastLevels = 0
     val e = PlanBridge.checkpointResetStats(edges0.select($"u", $"v"))
     val byNode = PlanBridge.checkpointResetStats(
       byNode0.select($"node", $"scc_id", $"scc_size"))
@@ -300,30 +304,23 @@ object SccColoring {
         .join(byNode.select($"node".as("v"), $"scc_id".as("cv")), "v")
         .filter($"cu" =!= $"cv")
         .select($"cu", $"cv").distinct())
-    var lvl = PlanBridge.checkpointResetStats(
+    val lvl0 = PlanBridge.checkpointResetStats(
       byNode.select($"scc_id", $"scc_size").distinct()
         .withColumn("level", lit(0L)))
-    var stable = false
-    var r = 0
-    while (!stable) {
-      r += 1
-      require(r <= SccMaxLevels,
-        s"condensation levels exceeded $SccMaxLevels rounds — re-measure")
-      val nxt = PlanBridge.checkpointResetStats(
-        lvl.join(cond, $"scc_id" === $"cu", "left")
-          .select(coalesce($"cv", $"scc_id").as("tgt"),
-            when($"cv".isNotNull, $"level" + 1L).otherwise($"level")
-              .as("lv"))
-          .unionAll(lvl.select($"scc_id".as("tgt"), $"level".as("lv")))
-          .groupBy($"tgt").agg(max($"lv").as("level"))
-          .select($"tgt".as("scc_id"), $"level")
-          .join(lvl.select($"scc_id", $"scc_size"), Seq("scc_id")))
-      stable = nxt.select($"scc_id", $"level")
-        .join(lvl, Seq("scc_id", "level"), "left_anti").isEmpty
-      lvl = nxt
-    }
-    lastLevels = r
-    lvl.select($"scc_id", $"scc_size", $"level").orderBy($"scc_id")
+    val (lvl, r, _) = PlanBridge.iterate(lvl0, SccMaxLevels,
+        "condensation levels (re-measure SccMaxLevels)") { (lvl, _) =>
+      lvl.join(cond, $"scc_id" === $"cu", "left")
+        .select(coalesce($"cv", $"scc_id").as("tgt"),
+          when($"cv".isNotNull, $"level" + 1L).otherwise($"level")
+            .as("lv"))
+        .unionAll(lvl.select($"scc_id".as("tgt"), $"level".as("lv")))
+        .groupBy($"tgt").agg(max($"lv").as("level"))
+        .select($"tgt".as("scc_id"), $"level")
+        .join(lvl.select($"scc_id", $"scc_size", $"level".as("old")),
+          Seq("scc_id"))
+    }(count(when($"level" =!= $"old", 1)), _ == 0)
+    Seq(e, byNode, cond, lvl0).foreach(PlanBridge.release)
+    (lvl.select($"scc_id", $"scc_size", $"level").orderBy($"scc_id"), r)
   }
 
   val q574Sql: String =

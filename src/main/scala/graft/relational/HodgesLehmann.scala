@@ -80,13 +80,20 @@ object HodgesLehmann {
       .agg(count(lit(1)).as("c"))
     // Y census with inclusive cumulative counts (two-level scan)
     val cy = PlanBridge.checkpointResetStats(
-      QuantileNormalize.fullCumSum(cyRaw, Seq(col("v")), "c", "cum"))
+      QuantileNormalize.fullCumSum(cyRaw, Seq(col("v")), "c" -> "cum"))
     val (n1, minX, maxX) = cx
       .agg(sum($"c"), min($"v"), max($"v")).as[(Long, Long, Long)].head()
     val (n2, minY, maxY) = cy
       .agg(sum($"c"), min($"v"), max($"v")).as[(Long, Long, Long)].head()
     val pairs = n1 * n2
     require(pairs > 0L, "both groups must be non-empty")
+
+    /** Partitions of the probe scans: countLEMany's pid is the
+      * fixed value-domain bucket (pv − lo)·HlParts div span, so its
+      * pid arithmetic, the exchange width and the per-pid partials all
+      * read this one number.
+      */
+    val HlParts = 32
 
     /** #{(x,y) : x − y ≤ t} for EVERY threshold in `ts`, in ONE merged
       * cumulative pass: probe rows at value x − t − 1 pick up
@@ -114,8 +121,8 @@ object HodgesLehmann {
       val span = hi - lo + 1
       val parts = ys.unionAll(probes)
         .withColumn("pid",
-          expr(s"CAST((pv - ${lo}L) * 32 div ${span}L AS INT)"))
-        .repartition(32, col("pid"))
+          expr(s"CAST((pv - ${lo}L) * $HlParts div ${span}L AS INT)"))
+        .repartition(HlParts, col("pid"))
       val wIn = org.apache.spark.sql.expressions.Window
         .partitionBy($"pid").orderBy($"pv", $"flag", $"t")
         .rowsBetween(org.apache.spark.sql.expressions.Window
@@ -184,7 +191,7 @@ object HodgesLehmann {
         $"v".as("ym"), lit(Long.MinValue).as("x"))
       val parts = org.apache.spark.sql.graftbridge.PlanBridge
         .checkpointResetStats(ys.unionAll(probes)
-          .repartitionByRange(32, col("pv"), col("flag"))
+          .repartitionByRange(HlParts, col("pv"), col("flag"))
           .withColumn("pid", spark_partition_id()))
       val wIn = org.apache.spark.sql.expressions.Window
         .partitionBy($"pid").orderBy($"pv", $"flag")

@@ -1,7 +1,6 @@
 package graft.relational
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 
@@ -19,9 +18,8 @@ import graft.core.{Entry, Tables => T}
   *
   * Exactness: the DOUBLED statistic jt2 = 2·JT is an exact BIGINT:
   * per distinct value v the census carries each group's count nᵢ(v)
-  * and below-count bᵢ(<v) (one multi-column two-level cumulative scan,
-  * [[multiCumSum]] — fullCumSum's shape with k running sums in the
-  * same window pass), and jt2 folds as Σ_v Σ_j nⱼ(v)·(2·Σ_{i<j} bᵢ +
+  * and below-count bᵢ(<v) (one [[QuantileNormalize.fullCumSum]] scan
+  * with k running sums in the same window pass), and jt2 folds as Σ_v Σ_j nⱼ(v)·(2·Σ_{i<j} bᵢ +
   * Σ_{i<j} nᵢ) in DECIMAL(38,0). The null mean is the exact integer
   * mean2 = 2·E[JT] = (N² − Σn_g²)/2 (always even by the multinomial
   * square identity); the TIE-CORRECTED null variance (Hollander–Wolfe
@@ -31,7 +29,7 @@ import graft.core.{Entry, Tables => T}
   * chains. jt2 ≤ N²/2 fits BIGINT through sf10.
   *
   * Scale shape: one partial agg to the value census, ONE two-level
-  * cumulative scan (32 range partitions + broadcast pid offsets — no
+  * cumulative scan (range partitions + broadcast pid offsets — no
   * single-task window, k sums share the pass), two census aggs, 1-row
   * finish. k is fixed-cardinality (5 priorities).
   *
@@ -55,40 +53,6 @@ object JonckheereTerpstra {
       "/ NULLIF(36.0 * n * (n - 1) * (n - 2), 0.0) " +
       "+ CAST(cg AS DOUBLE) * ct / NULLIF(8.0 * n * (n - 1), 0.0)), 0.0)"
 
-  /** Inclusive running sums of ALL `valueCols` under lexicographic
-    * `ordCols` in ONE two-level scan — fullCumSum's discipline
-    * (32 range partitions, per-pid window, broadcast pid offsets;
-    * the k running sums share the single window pass).
-    */
-  private[relational] def multiCumSum(df: DataFrame, ordCols: Seq[Column],
-      valueCols: Seq[String]): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    val parts = org.apache.spark.sql.graftbridge.PlanBridge
-      .checkpointResetStats(df.repartitionByRange(32, ordCols: _*)
-        .withColumn("pid", spark_partition_id()))
-    val wIn = Window.partitionBy($"pid").orderBy(ordCols: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val withCum = valueCols.foldLeft(parts) { (d, c) =>
-      d.withColumn(s"__pc_$c", sum(col(c)).over(wIn))
-    }
-    // bounded triangular join, not a pid-ordered window (r18, verdict
-    // item 5 — see QuantileNormalize.exclusivePrefix)
-    val psums = withCum.groupBy($"pid")
-      .agg(valueCols.map(c => sum(col(c)).as(s"__ps_$c")).head,
-        valueCols.map(c => sum(col(c)).as(s"__ps_$c")).tail: _*)
-    val offsets = valueCols.foldLeft(
-      QuantileNormalize.exclusivePrefix(psums, Seq(), "pid",
-        valueCols.map(c => s"__ps_$c"))) { (d, c) =>
-      d.withColumnRenamed(s"__ps_${c}_off", s"__po_$c")
-    }
-    val joined = withCum.join(broadcast(offsets), "pid")
-    valueCols.foldLeft(joined) { (d, c) =>
-      d.withColumn(s"cum_$c", col(s"__po_$c") + col(s"__pc_$c"))
-        .drop(s"__pc_$c", s"__po_$c")
-    }.drop("pid")
-  }
-
   val q528Jonckheere: Q = (s, dir) => {
     import s.implicits._
     jtTest(T.orders(s, dir).select(
@@ -108,7 +72,8 @@ object JonckheereTerpstra {
       sum(when($"g" === 1, 1L).otherwise(0L)).as("n1"),
       (2 to k).map(i =>
         sum(when($"g" === i, 1L).otherwise(0L)).as(s"n$i")): _*)
-    val withB = multiCumSum(census, Seq(col("v")), ns)
+    val withB = QuantileNormalize.fullCumSum(census, Seq(col("v")),
+      ns.map(c => c -> s"cum_$c"): _*)
     // below-count bᵢ = inclusive cum − own count
     val contrib = (2 to k).map { j =>
       val below = (1 until j).map(i => s"(cum_n$i - n$i)").mkString(" + ")

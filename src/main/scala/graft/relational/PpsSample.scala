@@ -44,7 +44,7 @@ object PpsSample {
         size(split($"text", " ")).cast("long").as("n_tokens"),
         md5(concat(lit("pps:"), $"doc_id")).as("ord"))
     val cum = QuantileNormalize.fullCumSum(docs,
-      Seq(col("ord"), col("doc_id")), "n_tokens", "cum")
+      Seq(col("ord"), col("doc_id")), "n_tokens" -> "cum")
     // +step keeps both div operands strictly positive (off < step, cum
     // ≥ 0): truncating `div` and flooring `//` agree only off negatives
     // — the q534 floor-semantics lesson

@@ -125,17 +125,17 @@ object QuantileNormalize {
       .drop("pid", "rn", "poff")
   }
 
-  /** Exact inclusive running SUM of `valueCol` under lexicographic
-    * `ordCols` — the cumulative twin of [[fullRank]], same two-level
-    * scan: the per-partition cumulative runs inside each range
-    * partition and only the partition TOTALS pass through the
-    * bounded [[exclusivePrefix]] join (never a window), broadcast
-    * back as offsets. Replaces the one-task
-    * `Window.orderBy(...).rowsBetween(unboundedPreceding, 0)` shape
-    * that funnels the whole frame through a single task at scale.
+  /** Exact inclusive running SUMs under lexicographic `ordCols`, one
+    * `outName` per `(valueCol, outName)` pair — the cumulative twin of
+    * [[fullRank]], same two-level scan: the per-partition cumulatives
+    * share one window pass inside each range partition and only the
+    * partition TOTALS pass through the bounded [[exclusivePrefix]]
+    * join (never a window), broadcast back as offsets. Replaces the
+    * one-task `Window.orderBy(...).rowsBetween(unboundedPreceding, 0)`
+    * shape that funnels the whole frame through a single task at scale.
     */
-  def fullCumSum(df: DataFrame, ordCols: Seq[Column], valueCol: String,
-      outName: String): DataFrame = {
+  def fullCumSum(df: DataFrame, ordCols: Seq[Column],
+      sums: (String, String)*): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
     // pinned for the same two-branch consistency reason as [[fullRank]]
@@ -144,15 +144,20 @@ object QuantileNormalize {
         .withColumn("pid", spark_partition_id()))
     val wIn = Window.partitionBy($"pid").orderBy(ordCols: _*)
       .rowsBetween(Window.unboundedPreceding, 0)
-    val withCum = parts.withColumn("pcum", sum(col(valueCol)).over(wIn))
+    val withCum = sums.foldLeft(parts) { case (d, (v, _)) =>
+      d.withColumn(s"__pc_$v", sum(col(v)).over(wIn))
+    }
     // bounded triangular join, not a pid-ordered window (see fullRank)
     val psums = withCum.groupBy($"pid")
-      .agg(sum(col(valueCol)).as("psum"))
-    val offsets = exclusivePrefix(psums, Seq(), "pid", Seq("psum"))
-      .withColumnRenamed("psum_off", "poff")
-    withCum.join(broadcast(offsets), "pid")
-      .withColumn(outName, $"poff" + $"pcum")
-      .drop("pid", "pcum", "poff")
+      .agg(sum(col(sums.head._1)).as(s"__ps_${sums.head._1}"),
+        sums.tail.map { case (v, _) => sum(col(v)).as(s"__ps_$v") }: _*)
+    val offsets = exclusivePrefix(psums, Seq(), "pid",
+      sums.map { case (v, _) => s"__ps_$v" })
+    sums.foldLeft(withCum.join(broadcast(offsets), "pid")) {
+      case (d, (v, out)) =>
+        d.withColumn(out, col(s"__ps_${v}_off") + col(s"__pc_$v"))
+          .drop(s"__pc_$v", s"__ps_${v}_off")
+    }.drop("pid")
   }
 
   val q487QuantileNorm: Q = (s, dir) => {

@@ -75,14 +75,14 @@ object ReqSketch {
       .groupBy(d10.as("d10"), m.as("m"), est.as("est"))
       .agg(count(lit(1)).as("c"))
     val bcum = QuantileNormalize.fullCumSum(
-      buckets, Seq(col("d10"), col("m")), "c", "cum")
+      buckets, Seq(col("d10"), col("m")), "c" -> "cum")
     val sk = bcum.crossJoin(broadcast(ks))
       .filter($"cum" >= $"k")
       .groupBy($"p_permille").agg(min($"est").as("est"))
     // exact side: NDV-bounded value census + inclusive cum
     val vcum = QuantileNormalize.fullCumSum(
       vals.groupBy($"v").agg(count(lit(1)).as("c")), Seq(col("v")),
-      "c", "cum")
+      "c" -> "cum")
     val ex = vcum.crossJoin(broadcast(ks))
       .filter($"cum" >= $"k")
       .groupBy($"p_permille").agg(min($"v").as("exact"))

@@ -78,7 +78,7 @@ object SpearmanCorr {
     // per customer, i.e. the rank map IS corpus-sized, so the old
     // one-task Window.orderBy would funnel the corpus through a single
     // task. 2·cum_before + cnt + 1 = 2·(cum_incl − cnt) + cnt + 1.
-    val ranks = QuantileNormalize.fullCumSum(byVal, Seq(col(c)), "cnt", "cum")
+    val ranks = QuantileNormalize.fullCumSum(byVal, Seq(col(c)), "cnt" -> "cum")
       .withColumn(rName, lit(2L) * ($"cum" - $"cnt") + $"cnt" + lit(1L))
       .drop("cnt", "cum")
     df.join(ranks, c)

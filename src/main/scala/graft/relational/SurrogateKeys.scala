@@ -1,8 +1,5 @@
 package graft.relational
 
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.core.{Entry, Tables => T}
 
@@ -19,8 +16,10 @@ import graft.core.{Entry, Tables => T}
   * local ranks reproduce the global dense rank for ANY partition
   * boundaries, as long as every row is numbered within the partition
   * that range-holds it and the order key is total (the unique
-  * c_custkey here). The one real trap is scaladoc'd on the
-  * localCheckpoint below.
+  * c_custkey here). The one real trap — the boundaries must be
+  * sampled once for both consumers of the layout — is handled by the
+  * checkpoint pin inside [[QuantileNormalize.fullRankGlobal]], which
+  * runs the recipe.
   *
   * Scale shape: one range exchange + per-partition sort (the same
   * work a sorted write pays anyway), one bounded groupBy(pid) frame,
@@ -31,32 +30,12 @@ object SurrogateKeys {
 
   import Entry.Q
 
-  val SkPartitions = 32
-
   /** q304 — dense surrogate keys for the customer dimension. */
   val q304SurrogateKeys: Q = (s, dir) => {
     import s.implicits._
-    // localCheckpoint pins ONE materialization: RangePartitioner samples
-    // boundaries with an RDD-id-derived seed, so the two consumers below
-    // (counts, final numbering) would otherwise re-execute the exchange
-    // with DIFFERENT boundaries — offsets from one layout applied to
-    // ranks from another silently corrupts the numbering.
-    val parted = PlanBridge.checkpointResetStats(
-      T.customer(s, dir).select($"c_custkey", $"c_name")
-        .repartitionByRange(SkPartitions, $"c_custkey")
-        .sortWithinPartitions($"c_custkey")
-        .withColumn("pid", spark_partition_id()))
-    // bounded triangular join, not a pid-ordered window (r18, verdict
-    // item 5 — see QuantileNormalize.exclusivePrefix)
-    val offsets = QuantileNormalize.exclusivePrefix(
-        parted.groupBy($"pid").agg(count(lit(1)).as("n")),
-        Seq(), "pid", Seq("n"))
-      .withColumnRenamed("n_off", "off")
-    val wIn = Window.partitionBy($"pid").orderBy($"c_custkey")
-    parted
-      .withColumn("rn", row_number().over(wIn))
-      .join(broadcast(offsets), "pid")
-      .select($"c_custkey", $"c_name", ($"off" + $"rn").as("sk"))
+    QuantileNormalize.fullRankGlobal(
+        T.customer(s, dir).select($"c_custkey", $"c_name"),
+        Seq($"c_custkey"), "sk")
       .orderBy($"sk")
   }
 

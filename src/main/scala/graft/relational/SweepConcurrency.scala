@@ -42,7 +42,7 @@ object SweepConcurrency {
       // starts sort before ends at the same instant: dsort = -delta
       .withColumn("dsort", -$"delta")
     val cum = PlanBridge.checkpointResetStats(QuantileNormalize.fullCumSum(pts,
-      Seq(col("ts"), col("dsort"), col("u")), "delta", "cc")
+      Seq(col("ts"), col("dsort"), col("u")), "delta" -> "cc")
       .withColumn("d", to_date($"ts")))
     val mx = cum.groupBy($"d").agg(max($"cc").as("max_cc"))
     cum.join(broadcast(mx), Seq("d"))

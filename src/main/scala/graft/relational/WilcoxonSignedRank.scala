@@ -53,7 +53,7 @@ object WilcoxonSignedRank {
     // within-group cum_before = global inclusive cum − cnt − the mass
     // of all PRIOR groups (a |groups|-row broadcast)
     val cum = QuantileNormalize.fullCumSum(byVal,
-      Seq($"g", $"ad"), "cnt", "cum")
+      Seq($"g", $"ad"), "cnt" -> "cum")
     // r18 (verdict item 5): |groups|-row frame — triangular join, not
     // a partition-less window
     val goff = QuantileNormalize.exclusivePrefix(

@@ -99,6 +99,10 @@ object SlidingHllStream {
     override def handleInputRows(shard: Long, rows: Iterator[Event],
         timerValues: TimerValues): Iterator[SlidingHllEmit] = {
       val wm = timerValues.getCurrentWatermarkInMs()
+      // expiries this key already holds: consecutive days share W−1
+      // window days, and re-registering one is a logged no-op
+      lazy val held = getHandle.listTimers().toSet
+      val added = scala.collection.mutable.Set[Long]()
       rows.foreach { e =>
         val d = dayOf(e.ts.getTime)
         // a day wholly behind the watermark is already finalized —
@@ -109,12 +113,11 @@ object SlidingHllStream {
             // feeds (d .. d+W−1) — this shard may have no rows on a
             // later window day yet still owe that window its sketches
             // (measured: a shard dark on day d lost its older days
-            // from d's global union). Re-registering an existing
-            // (key, expiry) timer is idempotent; already-final windows
-            // are skipped.
-            (d to d + windowDays - 1)
-              .filter(w => (w + 1) * DayMillis > wm)
-              .foreach(w => getHandle.registerTimer((w + 1) * DayMillis))
+            // from d's global union). Held expiries and already-final
+            // windows are skipped.
+            (d to d + windowDays - 1).map(w => (w + 1) * DayMillis)
+              .filter(t => t > wm && !held(t) && added.add(t))
+              .foreach(getHandle.registerTimer)
             val sk = new HllSketch(lgK, TgtHllType.HLL_8)
             sk.update(e.user_id)
             days.updateValue(d, sk.toUpdatableByteArray)

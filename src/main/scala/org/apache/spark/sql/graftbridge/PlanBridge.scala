@@ -60,6 +60,58 @@ object PlanBridge {
   def checkpointResetStats[T](ds: Dataset[T]): Dataset[T] =
     checkpoint(ds)(_.outputPartitioning)
 
+  /** [[checkpointResetStats]] that also returns one aggregate `measure`
+    * over the checkpointed rows (`count(...)`, `sum(...)`; null reads
+    * 0), read off the checkpoint's own job through a fresh
+    * `Observation` at the plan's root — the one way a loop reads its
+    * stop value, with no second action over the frame. The frame
+    * declares what `checkpointResetStats` declares.
+    */
+  def checkpointMeasured[T](ds: Dataset[T], measure: Column)
+      : (Dataset[T], Long) = {
+    val obs = Observation()
+    val cp = checkpoint(ds.observe(obs,
+      functions.coalesce(measure.cast("long"), functions.lit(0L)).as("m"))
+    )(_.outputPartitioning)
+    (cp, obs.get("m").asInstanceOf[Long])
+  }
+
+  /** THE fixpoint loop of this library for a single-state iteration:
+    * round r checkpoints `step(state, r)` through [[checkpointMeasured]]
+    * and stops once `done(measure)`; a round past `maxRounds` fails
+    * naming `what`. Round r−2's checkpoint is released once round r is
+    * materialized, and round r−1's when the loop ends (`init` stays the
+    * caller's). Returns the final state, the number of rounds run (at
+    * least one) and the final round's measure.
+    */
+  def iterate[T](init: Dataset[T], maxRounds: Int, what: String)(
+      step: (Dataset[T], Int) => Dataset[T])(
+      measure: Column, done: Long => Boolean): (Dataset[T], Int, Long) = {
+    var state = init
+    var older: Option[Dataset[T]] = None // round r−2, once made here
+    var r = 0
+    var m = 0L
+    while (r == 0 || !done(m)) {
+      r += 1
+      require(r <= maxRounds, s"$what did not converge in $maxRounds rounds")
+      val (next, mr) = checkpointMeasured(step(state, r), measure)
+      older.foreach(release)
+      older = if (r > 1) Some(state) else None
+      state = next
+      m = mr
+    }
+    older.foreach(release)
+    (state, r, m)
+  }
+
+  /** The `done` test of a monotone loop: the measure repeated the
+    * previous round's (round 1 compares with `first`).
+    */
+  def settled(first: Long): Long => Boolean = {
+    var last = first
+    m => try m == last finally last = m
+  }
+
   /** Free the storage blocks behind a checkpointed frame.
     * `Dataset.unpersist` only clears cache-manager entries (`.persist`);
     * checkpoint blocks live under the RDD inside the plan's `LogicalRDD`

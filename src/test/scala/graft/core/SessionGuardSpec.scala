@@ -12,8 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * through `PlanBridge.release`, persisted RDDs are swept only by
   * `PlanBridge.sweep`, entries are declared only as `Entry` records
   * (one `type Q`, no per-module query or SQL map), and the only mains
-  * are the three entry points. Scans every Scala file under `src/`
-  * (mains, checkpoints, sweeps and entries under `src/main`).
+  * are the three entry points. Convergence loops read their stop value
+  * off their checkpoint (`PlanBridge.checkpointMeasured`/`iterate`),
+  * with no separate stop action, release bookkeeping or global round
+  * counter, and two-level scans live in `QuantileNormalize`. Scans
+  * every Scala file under `src/` (mains, checkpoints, sweeps, entries,
+  * loops and scans under `src/main`).
   */
 class SessionGuardSpec extends AnyFunSuite {
 
@@ -22,6 +26,7 @@ class SessionGuardSpec extends AnyFunSuite {
     Paths.get("src/main/scala/org/apache/spark/sql/graftbridge/PlanBridge.scala")
   private val entry = Paths.get("src/main/scala/graft/core/Entry.scala")
   private val registry = Paths.get("src/main/scala/graft/SparkEntry.scala")
+  private val operators = Paths.get("src/main/scala/graft/operators")
 
   private val sources: Seq[(Path, Seq[String])] = {
     val walk = Files.walk(Paths.get("src"))
@@ -106,5 +111,53 @@ class SessionGuardSpec extends AnyFunSuite {
     val found = hits("""\b(val|def|var)\s+(oracleSql|queries)\s*[:=]\s*Map\b""")
       .filter(_._1.startsWith("src/main"))
     assert(found.map(_._1).distinct == Seq(registry), s"entry maps at: $found")
+  }
+
+  test("Observation is attached only by the fixpoint primitive and " +
+      "q370's demo") {
+    val found = hits("""\bObservation\b|\.observe\(""")
+      .filter(_._1.startsWith("src/main")).map(_._1).distinct
+    assert(found.toSet == Set(bridge,
+      Paths.get("src/main/scala/graft/plans/PlanMetrics.scala")),
+      s"Observation at: $found")
+  }
+
+  test("operators keep no release bookkeeping and no global round " +
+      "counter") {
+    val found = hits("""\bvar\s+retired\b|@volatile\s+var\s+last""")
+      .filter(_._1.startsWith(operators))
+    assert(found.isEmpty, s"retired / last* vars at: $found")
+  }
+
+  test("no convergence loop runs a separate isEmpty or count() stop " +
+      "action") {
+    val loopFiles = Seq("ConnectedComponents", "KCore", "KTruss",
+      "Coreness", "JpColoring", "LubyMis", "Betweenness", "Bridges",
+      "BoruvkaMst", "SccColoring", "Dbscan")
+      .map(n => operators.resolve(s"$n.scala"))
+    val found = for {
+      p <- loopFiles
+      lines = sources.find(_._1 == p).getOrElse(fail(s"no $p"))._2
+      (l, i) <- lines.zipWithIndex if l.contains("while (")
+      // the loop: its condition line through the line closing its body
+      depth = lines.drop(i).scanLeft(0)((d, x) =>
+        d + x.count(_ == '{') - x.count(_ == '}')).tail
+      end = i + depth.indexWhere(_ <= 0, 1)
+      j <- i to end if """\.isEmpty\b|\.count\(\)""".r
+        .findFirstIn(lines(j)).isDefined
+    } yield (p, j + 1)
+    assert(found.isEmpty, s"stop actions inside loops at: $found")
+  }
+
+  test("two-level scans (range partition + partition id) live only in " +
+      "QuantileNormalize, and in HodgesLehmann's value-domain probes") {
+    val scans = sources.collect {
+      case (p, lines) if p.startsWith("src/main") &&
+          lines.exists(_.contains("repartitionByRange(")) &&
+          lines.exists(_.contains("spark_partition_id()")) =>
+        p.getFileName.toString
+    }
+    assert(scans.sorted == Seq("HodgesLehmann.scala",
+      "QuantileNormalize.scala"), s"scans in: $scans")
   }
 }

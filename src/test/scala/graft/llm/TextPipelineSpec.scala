@@ -126,7 +126,7 @@ class TextPipelineSpec extends SparkSpec {
       (i, Seq.fill((i % 37 + 3).toInt)("w").mkString(" "))
     }.toDF("doc_id", "text")
     val budget = 100
-    val got = TextPipeline.packDocs(docs, budget = budget, parts = 7)
+    val got = TextPipeline.packDocs(docs, budget = budget)
       .orderBy($"doc_id")
       .as[(Long, Long, Long, Long, Long)].collect()
     // ground truth: driver-side running sum in doc_id order

@@ -8,7 +8,7 @@ class KCoreSpec extends SparkSpec {
   import spark.implicits._
 
   private def core(edges: Seq[(Long, Long)], k: Int) =
-    KCore.kcore(edges.toDF("u", "v"), k, rounds = 12)
+    KCore.kcore(edges.toDF("u", "v"), k, rounds = 12)._1
       .as[(Long, Long)].collect().toMap
 
   test("K4 with pendant path: 3-core is exactly the K4") {

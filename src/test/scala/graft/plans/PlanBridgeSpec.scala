@@ -1,7 +1,12 @@
 package graft.plans
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
 import graft.SparkSpec
 import graft.core.GraftSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -19,7 +24,9 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   * against a plain localCheckpoint on a SKEWED fixture (one hot key
   * owning most rows — the regime where a falsified bucket map would
   * visibly split a group), plus the argument validation the helper
-  * promises.
+  * promises. The fixpoint primitives [[PlanBridge.checkpointMeasured]]
+  * and [[PlanBridge.iterate]] read each round's stop value off the
+  * round's own checkpoint job and release superseded rounds.
   */
 class PlanBridgeSpec extends SparkSpec {
 
@@ -128,5 +135,120 @@ class PlanBridgeSpec extends SparkSpec {
     PlanBridge.release(cp.select("k"))
     assert(!spark.sparkContext.getPersistentRDDs.contains(id),
       s"rdd $id still persisted after release")
+  }
+
+  private def toyInit: DataFrame = PlanBridge.checkpointResetStats(
+    spark.range(0, 64, 1, 4).select(col("id").as("v")))
+
+  /** Halves every value each round until all are 0: 63 → 0 in 6. */
+  private def halving(init: DataFrame,
+      observe: (DataFrame, Int) => Unit = (_, _) => ())
+      : (DataFrame, Int, Long) = {
+    import spark.implicits._
+    PlanBridge.iterate(init, 10, "halving") { (f, r) =>
+      observe(f, r)
+      f.select(($"v" / 2).cast("long").as("v"))
+    }(count(when($"v" > 0L, 1)), _ == 0)
+  }
+
+  test("iterate runs one job per round: the stop value comes from the " +
+      "checkpoint's own job") {
+    val group = s"fixpoint-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val init = toyInit
+      spark.sparkContext.setJobGroup(group, "toy fixpoint")
+      val (_, rounds, last) = try halving(init)
+        finally spark.sparkContext.clearJobGroup()
+      assert(rounds == 6 && last == 0L)
+      // listener events arrive in order: once a later job's start is
+      // seen, every loop job's start has been delivered
+      val marker = s"$group-marker"
+      spark.sparkContext.setJobGroup(marker, "marker")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30.seconds.toNanos
+      while (!jobs.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(jobs.contains(marker), "listener never saw the marker job")
+      val n = jobs.toArray.count(_ == group)
+      assert(n == rounds, s"$n jobs for $rounds rounds")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("iterate frees round n-2 once round n exists, keeps init and " +
+      "the final round") {
+    val seen = scala.collection.mutable.ArrayBuffer[Int]() // rdd of round r-1
+    val persisted = () => spark.sparkContext.getPersistentRDDs.keySet
+    val (last, rounds, _) = halving(toyInit, { (f, r) =>
+      seen += leaf(f).rdd.id
+      // the step of round r reads round r-1; rounds ≤ r-3 are gone
+      val live = persisted()
+      seen.zipWithIndex.foreach { case (id, k) => // id is round k's
+        if (k >= 1 && k <= r - 3)
+          assert(!live.contains(id), s"round $k still held at round $r")
+        if (k >= r - 2 || k == 0)
+          assert(live.contains(id), s"round $k freed early at round $r")
+      }
+    })
+    assert(rounds == 6)
+    val live = persisted()
+    assert(live.contains(seen.head), "init was freed")
+    assert(seen.tail.forall(id => !live.contains(id)),
+      "a superseded round is still held after the loop")
+    assert(live.contains(leaf(last).rdd.id), "final round was freed")
+  }
+
+  test("checkpointMeasured reads 0 from an empty frame without hanging, " +
+      "AQE on and off") {
+    import spark.implicits._
+    for (aqe <- Seq("true", "false")) {
+      val ns = GraftSession.withConfs(spark,
+          "spark.sql.adaptive.enabled" -> aqe) {
+        Await.result(Future {
+          val filtered = spark.range(0, 100).filter($"id" < 0L)
+          // a shuffle whose every stage is empty: AQE replaces it with
+          // an empty relation
+          val grouped = filtered.groupBy(($"id" % 7).as("k")).count()
+          Seq(filtered.toDF(), grouped).map(f =>
+            PlanBridge.checkpointMeasured(f, count(lit(1)))._2)
+        }, 60.seconds)
+      }
+      assert(ns == Seq(0L, 0L), s"aqe=$aqe")
+    }
+  }
+
+  test("checkpointMeasured reads a sum over no rows as 0, not null") {
+    import spark.implicits._
+    val (cp, m) = PlanBridge.checkpointMeasured(
+      spark.range(0, 10).filter($"id" > 100L), sum($"id"))
+    assert(m == 0L)
+    assert(cp.count() == 0L)
+    assert(PlanBridge.checkpointMeasured(spark.range(0, 10), sum($"id"))._2
+      == 45L)
+  }
+
+  test("checkpointMeasured declares what checkpointResetStats declares " +
+      "on a sorted, filtered frame") {
+    import spark.implicits._
+    for (aqe <- Seq("true", "false")) {
+      val (plain, measured) = GraftSession.withConfs(spark,
+          "spark.sql.adaptive.enabled" -> aqe) {
+        val df = skewed.filter($"v" > 3).orderBy($"k", $"v")
+        (leaf(PlanBridge.checkpointResetStats(df)),
+          leaf(PlanBridge.checkpointMeasured(df, count(lit(1)))._1))
+      }
+      assert(plain.constraints.nonEmpty, s"no constraints to keep (aqe=$aqe)")
+      assert(measured.outputPartitioning == plain.outputPartitioning,
+        s"aqe=$aqe")
+      assert(measured.outputOrdering == plain.outputOrdering, s"aqe=$aqe")
+      assert(measured.constraints == plain.constraints, s"aqe=$aqe")
+    }
   }
 }

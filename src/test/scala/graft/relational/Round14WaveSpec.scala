@@ -63,7 +63,7 @@ class Round14WaveSpec extends SparkSpec {
     import spark.implicits._
     def checkMisOn(sym: org.apache.spark.sql.DataFrame): Unit = {
       val edges = sym.as[(Long, Long)].collect()
-      val mis = graft.operators.LubyMis.lubyMis(sym)
+      val mis = graft.operators.LubyMis.lubyMis(sym)._1
         .collect().map(_.getLong(0)).toSet
       // independence: no edge inside the MIS
       edges.foreach { case (u, v) =>
@@ -151,7 +151,7 @@ class Round14WaveSpec extends SparkSpec {
     val e = canon.toDF("u", "v")
     val sym = e.unionAll(e.select($"v".as("u"), $"u".as("v")))
       .localCheckpoint()
-    val got = graft.operators.Coreness.coreness(sym)
+    val got = graft.operators.Coreness.coreness(sym)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val expected = Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
       5L -> 2L, 6L -> 2L, 7L -> 1L)
@@ -160,7 +160,7 @@ class Round14WaveSpec extends SparkSpec {
     // with coreness >= c, every node keeps >= c neighbors (the k-core
     // definition, re-checked from the output itself)
     val fx = graft.operators.KTruss.ktEdges(spark, dir).localCheckpoint()
-    val cor = graft.operators.Coreness.coreness(fx).localCheckpoint()
+    val cor = graft.operators.Coreness.coreness(fx)._1.localCheckpoint()
     val maxC = cor.agg(max($"coreness")).head().getLong(0)
     (2L to maxC).foreach { c =>
       val nodes = cor.filter($"coreness" >= c).select($"v")
@@ -177,7 +177,7 @@ class Round14WaveSpec extends SparkSpec {
       "neighbors") {
     import spark.implicits._
     val fx = graft.operators.KTruss.ktEdges(spark, dir).localCheckpoint()
-    val col = graft.operators.JpColoring.jpColoring(fx).localCheckpoint()
+    val col = graft.operators.JpColoring.jpColoring(fx)._1.localCheckpoint()
     // propriety + per-round independence in one edge join
     val bad = fx
       .join(col.select($"v".as("u"), $"color".as("cu"), $"r".as("ru")), "u")
@@ -271,7 +271,7 @@ class Round14WaveSpec extends SparkSpec {
       .unionAll(iv.select($"u", $"en".as("ts"), lit(-1L).as("delta")))
       .withColumn("dsort", -$"delta")
     val cum = QuantileNormalize.fullCumSum(pts,
-      Seq(col("ts"), col("dsort"), col("u")), "delta", "cc")
+      Seq(col("ts"), col("dsort"), col("u")), "delta" -> "cc")
     val got = cum.orderBy($"ts", $"dsort", $"u")
       .select($"cc").as[Long].collect().toSeq
     // order: +A(10:00)=1, +B(10:30)=2, -B(11:00)=1, +C=2, -C=1,

@@ -106,12 +106,12 @@ class Round16WaveSpec extends SparkSpec {
     import spark.implicits._
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (9L, 9L))
       .toDF("u", "v")
-    val out = graft.operators.SccColoring.scc(chain).collect()
+    val (sccs, rounds) = graft.operators.SccColoring.sccWithRounds(chain)
+    val out = sccs.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(out == Seq((1L, 1L, 1L), (2L, 2L, 1L), (3L, 3L, 1L),
       (4L, 4L, 1L), (5L, 5L, 1L), (9L, 9L, 1L)), s"got $out")
-    assert(graft.operators.SccColoring.lastPeels <= 2,
-      s"chain took ${graft.operators.SccColoring.lastPeels} peels")
+    assert(rounds("peel") <= 2, s"chain took ${rounds("peel")} peels")
   }
 
   test("q570: fixture measurement — peel and propagation budgets " +
@@ -119,21 +119,20 @@ class Round16WaveSpec extends SparkSpec {
     for ((sf, nExp) <- Seq(("sf0.001", 10L), ("sf0.01", 100L))) {
       val (e, _) = graft.operators.SccColoring
         .edges(spark, s"/root/testdata/$sf")
-      val n = graft.operators.SccColoring.scc(e).count()
-      assert(n == nExp)
-      info(s"$sf: peels=${graft.operators.SccColoring.lastPeels} " +
-        s"maxProp=${graft.operators.SccColoring.lastMaxProp}")
-      assert(graft.operators.SccColoring.lastPeels <=
-        graft.operators.SccColoring.SccMaxPeels / 2)
-      assert(graft.operators.SccColoring.lastMaxProp <=
-        graft.operators.SccColoring.SccMaxProp / 2)
+      val (sccs, rounds) = graft.operators.SccColoring.sccWithRounds(e)
+      assert(sccs.count() == nExp)
+      val maxProp = Seq("trim", "color", "harvest").map(rounds).max
+      info(s"$sf: peels=${rounds("peel")} maxProp=$maxProp")
+      assert(rounds("peel") <= graft.operators.SccColoring.SccMaxPeels / 2)
+      assert(maxProp <= graft.operators.SccColoring.SccMaxProp / 2)
     }
     // q574's level fixpoint: depth-bounded on the condensation DAG
-    graft.operators.SccColoring
-      .q574SccLevels(spark, "/root/testdata/sf0.001").count()
-    info(s"levels rounds=${graft.operators.SccColoring.lastLevels}")
-    assert(graft.operators.SccColoring.lastLevels <=
-      graft.operators.SccColoring.SccMaxLevels / 2)
+    val dir = "/root/testdata/sf0.001"
+    val (_, levels) = graft.operators.SccColoring.sccLevelsFrom(
+      graft.operators.SccColoring.edges(spark, dir)._1,
+      graft.operators.SccColoring.sccTable(spark, dir))
+    info(s"levels rounds=$levels")
+    assert(levels <= graft.operators.SccColoring.SccMaxLevels / 2)
   }
 
   test("q574: condensation-DAG levels of the hand digraph — sources " +
@@ -250,7 +249,7 @@ class Round16WaveSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (3L, 5L),
       (10L, 11L), (20L, 21L), (21L, 22L), (22L, 23L), (20L, 23L))
       .toDF("u", "v").withColumn("w", lit(1L))
-    val (be, ap) = graft.operators.Bridges.census(edges)
+    val (be, ap, _) = graft.operators.Bridges.census(edges)
     val bridges = be.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     assert(bridges == Seq((1L, 2L, true), (2L, 3L, true),
@@ -283,13 +282,11 @@ class Round16WaveSpec extends SparkSpec {
       "on both fixture graphs") {
     implicit val sp: org.apache.spark.sql.SparkSession = spark
     val dir = "/root/testdata/sf0.001"
-    graft.operators.Bridges.census(
+    val r1 = graft.operators.Bridges.census(
       graft.operators.BoruvkaMst.jaccardDistEdges(
-        graft.core.Tables.documents(spark, dir)))._1.count()
-    val r1 = graft.operators.Bridges.lastMaxRounds
-    graft.operators.Bridges.census(
-      graft.operators.Bridges.treeChordEdges(spark, dir))._2.count()
-    val r2 = graft.operators.Bridges.lastMaxRounds
+        graft.core.Tables.documents(spark, dir)))._3.max
+    val r2 = graft.operators.Bridges.census(
+      graft.operators.Bridges.treeChordEdges(spark, dir))._3.max
     info(s"near-dup census maxRounds=$r1, tree+chords maxRounds=$r2")
     assert(r1 <= graft.operators.Bridges.BrMaxRounds / 2)
     assert(r2 <= graft.operators.Bridges.BrMaxRounds / 2)

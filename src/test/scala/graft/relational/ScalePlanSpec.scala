@@ -429,7 +429,7 @@ class ScalePlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
     atScaleRegime {
-      // every new doubled-rank / fullRank / fullCumSum / multiCumSum
+      // every new doubled-rank / fullRank / fullCumSum
       // consumer: any global window or single-partition exchange must
       // carry the 32-row pid-offsets aggregate (the q489/q492 rule) —
       // NOT a data-column census that grows with the corpus

@@ -1,7 +1,11 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
@@ -10,7 +14,8 @@ import graft.SparkSpec
   * equal the batch twin through the same (shard, day) atomic sketches
   * EXACTLY, independent of micro-batch slicing; each day is emitted
   * once; state stays bounded by the window + lateness; a row behind
-  * the watermark is dropped without disturbing finalized answers.
+  * the watermark is dropped without disturbing finalized answers; each
+  * window-day timer is registered once per shard.
   */
 class SlidingHllStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -116,5 +121,34 @@ class SlidingHllStreamSpec extends SparkSpec {
     val a = SlidingHllStream.mergeEstimates(withLate)
     val b = SlidingHllStream.mergeEstimates(clean)
     assert(a == b, "late row altered finalized windows")
+  }
+
+  test("consecutive per-day batches register each window expiry once, " +
+      "answers unchanged") {
+    // the state store logs every registration of an expiry the key
+    // already holds; count those lines while the stream runs
+    val timers = LogManager.getLogger("org.apache.spark.sql.execution." +
+      "streaming.operators.stateful.transformwithstate.timers." +
+      "TimerStateImpl").asInstanceOf[CoreLogger]
+    val again = new AtomicInteger()
+    val counter = new AbstractAppender("timer-again", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("already exists"))
+          again.incrementAndGet()
+    }
+    counter.start()
+    timers.addAppender(counter)
+    val byDay = rows.groupBy(e => SlidingHllStream.dayOf(e.ts.getTime))
+      .toSeq.sortBy(_._1)
+    assert(byDay.sliding(2).exists { case Seq(a, b) => b._1 == a._1 + 1 },
+      "fixture has no two consecutive days")
+    val emits = try runChunks(byDay.map(_._2))
+      finally { timers.removeAppender(counter); counter.stop() }
+    assert(again.get == 0, s"${again.get} timers registered twice")
+    val twin = SlidingHllStream.batchEstimates(rows)
+    val got = SlidingHllStream.mergeEstimates(emits)
+    assert(got.nonEmpty)
+    got.foreach { case (d, est) => assert(est == twin(d), s"day $d") }
   }
 }
