@@ -13,7 +13,8 @@ import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 
 /** EXACT distinct-set algebra over compressed Roaring bitmaps — the
-  * exact counterpart of the theta-sketch row (ThetaSketch.scala): theta
+  * exact counterpart of the theta-sketch row (q257, on Spark's
+  * built-in `theta_sketch_agg`): theta
   * trades exactness for constant state; a Roaring bitmap keeps the SET
   * itself in compressed form (array / bitset / run containers per
   * 2^16-key chunk), so counts, intersections, and unions are exact at

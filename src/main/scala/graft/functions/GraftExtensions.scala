@@ -7,7 +7,7 @@ import org.apache.spark.sql.graftbridge.FunctionBridge
 
 /** SQL surface for graft's native Catalyst expressions.
   *
-  * Two registration paths, both exposing the same four functions so
+  * Two registration paths, both exposing the same functions so
   * `spark.sql("SELECT simhash64(tokens) FROM ...")` works wherever the
   * Column API does:
   *
@@ -89,36 +89,10 @@ object GraftFunctions {
       (args: Seq[Expression]) => {
         arity("hilbert_xy2d", args, 2); HilbertXY2D(args(0), args(1))
       }),
-    (FunctionIdentifier("kll_quantiles"),
-      new ExpressionInfo(classOf[KllQuantiles].getName, "kll_quantiles"),
-      (args: Seq[Expression]) => {
-        arity("kll_quantiles", args, 3)
-        KllQuantiles(args.head,
-          intArg(args(1), "kll_quantiles", 1),
-          intArg(args(2), "kll_quantiles", 2))
-      }),
     (FunctionIdentifier("count_values"),
       new ExpressionInfo(classOf[CountValues].getName, "count_values"),
       (args: Seq[Expression]) => {
         arity("count_values", args, 1); CountValues(args.head)
-      }),
-    (FunctionIdentifier("theta_sketch"),
-      new ExpressionInfo(classOf[ThetaSketchAgg].getName, "theta_sketch"),
-      (args: Seq[Expression]) => {
-        arity("theta_sketch", args, 2)
-        ThetaSketchAgg(args.head, intArg(args(1), "theta_sketch", 1))
-      }),
-    (FunctionIdentifier("theta_estimate"),
-      new ExpressionInfo(classOf[ThetaEstimate].getName, "theta_estimate"),
-      (args: Seq[Expression]) => {
-        arity("theta_estimate", args, 1); ThetaEstimate(args.head)
-      }),
-    (FunctionIdentifier("theta_intersect_est"),
-      new ExpressionInfo(classOf[ThetaIntersectEstimate].getName,
-        "theta_intersect_est"),
-      (args: Seq[Expression]) => {
-        arity("theta_intersect_est", args, 2)
-        ThetaIntersectEstimate(args(0), args(1))
       }),
     (FunctionIdentifier("rbm_agg"),
       new ExpressionInfo(classOf[BitmapAgg].getName, "rbm_agg"),

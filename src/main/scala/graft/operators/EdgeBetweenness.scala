@@ -51,8 +51,7 @@ object EdgeBetweenness {
     val pivots = edges.select($"u".as("v")).distinct()
       .filter(expr("substring(md5(concat('ebp:', CAST(v AS STRING))), " +
         s"1, 1) < '$pivotPrefix'"))
-    val d = PlanBridge.checkpointResetStats(
-      Betweenness.bfsClosure(edges, Some(pivots))._1)
+    val d = Betweenness.bfsClosure(edges, Some(pivots))._1
     // σ_st between pivot pairs (both endpoints must be pivots so the
     // pair set is sample², symmetric and replayable)
     val pvSet = pivots.select($"v".as("t"))

@@ -397,7 +397,7 @@ object ReshapeStatsQueries {
     *
     * Scale shape: two keyed windows (rank + count) and two tiny
     * median-per-group joins back — same q90/q162 shape; the production
-    * variant swaps the exact rank windows for kll_quantiles (q220)
+    * variant swaps the exact rank windows for a KLL sketch (q220)
     * when groups stop fitting a window partition.
     */
   val q227MadAnomaly: Q = (s, dir) => {

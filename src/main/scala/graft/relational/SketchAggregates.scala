@@ -1,12 +1,15 @@
 package graft.relational
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.core.{Entry, Tables => T}
 import graft.functions.GraftFunctions
 
-/** Gate for the native Misra–Gries grouped heavy-hitters aggregate
-  * ([[graft.functions.MisraGriesTopK]], SQL `mg_topk`).
+/** Contract gates for the sketch aggregates: graft's native
+  * Misra–Gries heavy hitters (q215, [[graft.functions.MisraGriesTopK]]),
+  * Count-Min probe (q223) and reservoir sample (q306), and Spark's
+  * built-in KLL quantile (q220) and theta set-algebra (q257) sketches.
   */
 object SketchAggregates {
 
@@ -85,39 +88,43 @@ object SketchAggregates {
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin
 
-  /** Sketch size and rank-error tolerance for the q220 gate. k=200 over
-    * sf0.1's 100k events gives ~9 compaction levels; the deterministic
-    * worst case for the uniform-capacity scheme is levels·n/2k ≈ 2.2%
-    * of n, so the 5% gate holds with margin while staying meaningful
-    * (a broken merge or weight-losing compaction lands tens of percent
-    * off).
+  /** Sketch size and rank-error tolerance for the q220 gate. k=200
+    * puts the KLL normalized rank error near 1.3% (datasketches' 99%
+    * single-sided bound), so the 5% gate holds with margin while
+    * staying meaningful (a broken merge or weight-losing compaction
+    * lands tens of percent off).
     */
   val KllK = 200
   val KllNq = 10
   val KllEps = 0.05
 
-  /** q220 — kll_quantiles contract gate, the q74 (n, ok) convention:
-    * sketch `events.value` with the native KLL-family aggregate
-    * ([[graft.functions.KllQuantiles]], SQL `kll_quantiles`), then FOR
-    * EACH of the nq+1 returned decile estimates recompute the exact
-    * rank (count of values ≤ estimate) over the same scan and require
-    * |rank − j·n/nq| ≤ [[KllEps]]·n. The raw sketch is never hashed —
-    * retained elements legitimately vary with partitioning/merge order;
-    * the rank bound does not.
+  /** q220's read path: the quantiles of a `kll_sketch_agg_double`
+    * sketch at fractions 0, 1/nq, …, 1, or NULL for an empty sketch
+    * (an all-null group's), from which Spark's reader throws.
+    */
+  def kllQuantiles(sk: Column, nq: Int): Column =
+    when(kll_sketch_get_n_double(sk) > 0L, kll_sketch_get_quantile_double(sk,
+      array((0 to nq).map(j => lit(j.toDouble / nq)): _*)))
+
+  /** q220 — KLL quantile contract gate, the q74 (n, ok) convention:
+    * sketch `events.value` with Spark's `kll_sketch_agg_double`, read
+    * the nq+1 quantiles with [[kllQuantiles]], then FOR EACH estimate
+    * recompute the exact rank (count of values ≤ estimate) over the
+    * same scan and require |rank − j·n/nq| ≤ [[KllEps]]·n. The raw sketch is never hashed — retained elements
+    * legitimately vary with partitioning/merge order; the rank bound
+    * does not.
     *
-    * Scale shape: the sketch side is ObjectHashAggregate with full
-    * partial aggregation — every partition ships one O(k·log(n/k))
-    * state, never values (local[32] forces ~32 real merges). The exact
-    * ranks exist only to gate: one broadcast of nq+1 estimate rows
-    * against a second scan.
+    * Scale shape: the sketch side is one aggregate with full partial
+    * aggregation — every partition ships one O(k·log(n/k)) state,
+    * never values. The exact ranks exist only to gate: one broadcast
+    * of nq+1 estimate rows against a second scan.
     */
   val q220KllGate: Q = (s, dir) => {
-    GraftFunctions.register(s)
     import s.implicits._
     val ev = T.events(s, dir).select($"value")
-    val sk = ev.agg(
-      expr(s"kll_quantiles(value, $KllK, $KllNq)").as("qs"),
-      count(lit(1)).as("n"))
+    val sk = ev.agg(kll_sketch_agg_double($"value", KllK).as("sk"),
+        count(lit(1)).as("n"))
+      .select($"n", kllQuantiles($"sk", KllNq).as("qs"))
     val est = sk.select($"n", posexplode($"qs"))
       .withColumnRenamed("pos", "j").withColumnRenamed("col", "est")
     val ranks = ev.crossJoin(broadcast(est))
@@ -195,27 +202,26 @@ object SketchAggregates {
   val ThetaTol = 0.01
 
   /** q257 — theta-sketch INTERSECTION gate, the q74 (n, ok)
-    * convention: audience overlap |viewers ∩ buyers| via native
-    * theta-sketch set algebra ([[graft.functions.ThetaSketchAgg]] /
-    * [[graft.functions.ThetaIntersectEstimate]]) — the set operation
-    * q170's HLL inclusion–exclusion can only approximate with error
-    * scaling in |A∪B|; theta intersection error tracks the RESULT.
-    * `ok` requires the sketch estimate within [[ThetaTol]] of the
-    * exact overlap recomputed in the same query.
+    * convention: audience overlap |viewers ∩ buyers| via Spark's
+    * theta-sketch set algebra (`theta_sketch_agg`,
+    * `theta_intersection`, `theta_sketch_estimate`) — the set
+    * operation q170's HLL inclusion–exclusion can only approximate
+    * with error scaling in |A∪B|; theta intersection error tracks the
+    * RESULT. `ok` requires the sketch estimate within [[ThetaTol]] of
+    * the exact overlap recomputed in the same query.
     *
     * Scale shape: two partial-aggregated sketch folds over one scan
-    * each (per-partition states, ObjectHashAggregate merge); the
-    * intersection is a scalar expression over the two 1-row sketch
-    * frames; the exact sides exist only to gate.
+    * each (per-partition states, union merge); the intersection is a
+    * scalar expression over the two 1-row sketch frames; the exact
+    * sides exist only to gate.
     */
   val q257ThetaIntersection: Q = (s, dir) => {
-    GraftFunctions.register(s)
     import s.implicits._
     val ev = T.events(s, dir).select($"user_id", $"event_type")
     val ska = ev.filter($"event_type" === "view")
-      .agg(expr(s"theta_sketch(user_id, $ThetaLgK)").as("ska"))
+      .agg(theta_sketch_agg($"user_id", ThetaLgK).as("ska"))
     val skb = ev.filter($"event_type" === "purchase")
-      .agg(expr(s"theta_sketch(user_id, $ThetaLgK)").as("skb"))
+      .agg(theta_sketch_agg($"user_id", ThetaLgK).as("skb"))
     val exact = ev.agg(
       countDistinct(when($"event_type" === "view", $"user_id"))
         .as("n_viewers"),
@@ -225,7 +231,7 @@ object SketchAggregates {
       .intersect(ev.filter($"event_type" === "purchase").select($"user_id"))
       .agg(count(lit(1)).as("n_both"))
     exact.crossJoin(both).crossJoin(ska).crossJoin(skb)
-      .withColumn("est", expr("theta_intersect_est(ska, skb)"))
+      .withColumn("est", theta_sketch_estimate(theta_intersection($"ska", $"skb")))
       .select($"n_viewers", $"n_buyers", $"n_both",
         (abs($"est" - $"n_both") <= lit(ThetaTol) * $"n_both" + lit(0.5))
           .as("ok"))

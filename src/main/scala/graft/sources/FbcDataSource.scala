@@ -24,7 +24,7 @@ import graft.core.Entry
   * query from by directory walking (main.go:143-268). This is the
   * custom-SOURCE tier of the extension surface, next to the custom
   * expressions (SimHash64, JaroWinkler, …), aggregates (MisraGries,
-  * KllSketch), plans (TopKPerGroup, SortedRuns, AsOfMergeJoin) and
+  * ReservoirSample), plans (TopKPerGroup, SortedRuns, AsOfMergeJoin) and
   * optimizer rule (TopKFilterPushdown): Spark has no built-in reader
   * for a file-per-ROW layout (its JSON source assumes line- or
   * document-per-FILE semantics with the path carrying no data), so the

@@ -1,28 +1,34 @@
 package graft.streaming
 
+import org.apache.datasketches.kll.KllDoublesSketch
+import org.apache.datasketches.memory.Memory
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
-import graft.functions.KllState
-
-/** Streaming quantile tracking on the native KLL-family sketch
-  * ([[graft.functions.KllState]], q220's aggregate) — the streaming
-  * member of the sketch-state family: Bloom (membership, qs01), CMS
-  * (frequency, qs03), and now KLL (distribution). Each shard folds its
-  * substream into one O(k·log n) state blob; because the sketch is
-  * MERGEABLE (the exact property the q220 gate certifies), the
-  * shard states combine into one corpus-level sketch after any number
-  * of micro-batches — continuous "p50/p90/p99 right now" over an
-  * unbounded stream with constant memory, the observability shape no
-  * exact method can deliver.
+/** Streaming quantile tracking on a KLL sketch (datasketches-java
+  * `KllDoublesSketch` — the same library and serialized format as
+  * Spark SQL's `kll_sketch_agg_double`, q220's aggregate, so the batch
+  * `kll_sketch_*_double` functions read this stream's state, as
+  * [[HllStream]] shares `hll_sketch_agg`'s) — the streaming member of
+  * the sketch-state family: Bloom (membership, qs01), CMS (frequency,
+  * qs03), and KLL (distribution). Each shard folds its substream into
+  * one O(k·log n) state blob; because the sketch is MERGEABLE (the
+  * property the q220 gate certifies), the shard states combine into
+  * one corpus-level sketch after any number of micro-batches —
+  * continuous "p50/p90/p99 right now" over an unbounded stream with
+  * constant memory, the observability shape no exact method can
+  * deliver.
   */
 object KllStream {
 
   /** q220's capacity, shared so stream and batch sketches compare. */
   val K = 200
 
+  private def sketch(bytes: Array[Byte]): KllDoublesSketch =
+    KllDoublesSketch.heapify(Memory.wrap(bytes))
+
   /** Per-shard KLL fold over the `value` stream. Emits the shard's
-    * serialized state each batch (Update mode) — downstream keeps the
+    * serialized sketch each batch (Update mode) — downstream keeps the
     * last emission per shard and merges (numShards blobs, not rows).
     */
   class KllSketchProcessor(k: Int)
@@ -35,10 +41,10 @@ object KllStream {
 
     override def handleInputRows(key: Long, rows: Iterator[Event],
         timerValues: TimerValues): Iterator[(Long, Array[Byte])] = {
-      val st = if (state.exists()) KllState.deserialize(state.get())
-        else new KllState(k)
-      rows.foreach(e => st.update(e.value))
-      val bytes = st.serialized
+      val sk = if (state.exists()) sketch(state.get())
+        else KllDoublesSketch.newHeapInstance(k)
+      rows.foreach(e => sk.update(e.value))
+      val bytes = sk.toByteArray
       state.update(bytes)
       Iterator.single((key, bytes))
     }
@@ -56,10 +62,16 @@ object KllStream {
       Encoders.product[(Long, Array[Byte])])
   }
 
-  /** Merge serialized shard states into one sketch. */
-  def merge(shards: Seq[Array[Byte]]): KllState = {
+  /** Each shard's latest sketch among its `(shard, sketch)` emissions:
+    * the one with the largest folded count (n only grows).
+    */
+  def latest(emissions: Seq[(Long, Array[Byte])]): Seq[Array[Byte]] =
+    emissions.groupBy(_._1).values
+      .map(_.map(_._2).maxBy(sketch(_).getN)).toSeq
+
+  /** Merge serialized shard sketches into one sketch. */
+  def merge(shards: Seq[Array[Byte]]): KllDoublesSketch = {
     require(shards.nonEmpty, "no shard sketches to merge")
-    shards.map(KllState.deserialize)
-      .reduce { (a, b) => a.merge(b); a }
+    shards.map(sketch).reduce { (a, b) => a.merge(b); a }
   }
 }

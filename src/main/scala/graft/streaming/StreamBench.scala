@@ -358,17 +358,12 @@ object StreamBench {
       q.processAllAvailable()
     }
     q.stop(); q.awaitTermination()
-    // latest sketch per shard = the one with the largest folded count
-    // (n only grows); shards·batches rows — driver-side pick is bounded
+    // shards·batches emissions — the driver-side latest pick is bounded
     val all = s.table(name).select($"shard", $"sketch")
       .as[(Long, Array[Byte])].collect()
-    val latest = all.groupBy(_._1).map { case (_, rs) =>
-      rs.map(_._2).maxBy(b => graft.functions.KllState.deserialize(b).n)
-    }.toSeq
     s.catalog.dropTempView(name)
-    val merged = KllStream.merge(latest)
-    val deciles = merged.quantiles(10)
-    Seq((rows.size.toLong, merged.n, deciles(5)))
+    val merged = KllStream.merge(KllStream.latest(all.toSeq))
+    Seq((rows.size.toLong, merged.getN, merged.getQuantile(0.5)))
       .toDF("n_in", "sketch_n", "p50")
   }
 

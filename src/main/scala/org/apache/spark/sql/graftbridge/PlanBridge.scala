@@ -119,7 +119,7 @@ object PlanBridge {
     */
   def release(df: Dataset[_]): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case lr: execution.LogicalRDD => free(lr.rdd)
       case _ => ()
     }
 
@@ -128,10 +128,17 @@ object PlanBridge {
     * for the blocks an earlier one left behind.
     */
   def sweep(spark: SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+    spark.sparkContext.getPersistentRDDs.values.foreach(free)
     spark.catalog.clearCache()
   }
+
+  /** Drop an RDD's blocks and its persistence entry. `RDD.unpersist`
+    * does the same and then only logs (a WARN per locally checkpointed
+    * RDD, whose lineage is gone by design) and resets the storage level
+    * of an RDD that is never read again.
+    */
+  private def free(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   /** `localCheckpoint`, then rebuild the frame over a copy of its
     * `LogicalRDD` whose `originStats` are the measured size of its blocks

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One way to do each thing: sessions come from `GraftSession.local`,
@@ -15,9 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * are the three entry points. Convergence loops read their stop value
   * off their checkpoint (`PlanBridge.checkpointMeasured`/`iterate`),
   * with no separate stop action, release bookkeeping or global round
-  * counter, and two-level scans live in `QuantileNormalize`. Scans
-  * every Scala file under `src/` (mains, checkpoints, sweeps, entries,
-  * loops and scans under `src/main`).
+  * counter, and two-level scans live in `QuantileNormalize`. Theta and
+  * KLL sketches are Spark's built-ins (only `KllStream` holds
+  * datasketches KLL state), and no graft SQL function takes a built-in
+  * name. Scans every Scala file under `src/` (mains, checkpoints,
+  * sweeps, entries, loops, scans and sketches under `src/main`).
   */
 class SessionGuardSpec extends AnyFunSuite {
 
@@ -147,6 +150,19 @@ class SessionGuardSpec extends AnyFunSuite {
         .findFirstIn(lines(j)).isDefined
     } yield (p, j + 1)
     assert(found.isEmpty, s"stop actions inside loops at: $found")
+  }
+
+  test("datasketches theta and KLL are used in src/main only by KllStream") {
+    val found = hits("""org\.apache\.datasketches\.(theta|kll)\b""")
+      .filter(_._1.startsWith("src/main"))
+      .filterNot(_._1.getFileName.toString == "KllStream.scala")
+    assert(found.isEmpty, s"theta/kll sketch code at: $found")
+  }
+
+  test("no graft SQL function shadows a Spark built-in") {
+    val shadowed = graft.functions.GraftFunctions.descriptions.map(_._1)
+      .filter(FunctionRegistry.builtin.functionExists)
+    assert(shadowed.isEmpty, s"built-in names re-registered: $shadowed")
   }
 
   test("two-level scans (range partition + partition id) live only in " +

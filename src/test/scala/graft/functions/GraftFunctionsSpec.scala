@@ -90,9 +90,8 @@ class GraftFunctionsSpec extends SparkSpec {
   test("extensions class exposes the same function set") {
     val names = GraftFunctions.descriptions.map(_._1.funcName).toSet
     assert(names == Set("simhash64", "dot_f32", "dot_q20", "srp_bucket",
-      "jaro_winkler", "mg_topk", "kll_quantiles", "cms_estimate",
+      "jaro_winkler", "mg_topk", "cms_estimate",
       "hilbert_xy2d", "nfc_normalize", "reservoir_sample",
-      "theta_sketch", "theta_estimate", "theta_intersect_est",
       "count_values",
       "rbm_agg", "rbm_or_agg", "rbm_count", "rbm_and_count",
       "rbm_or_count", "deflate_len"))

@@ -1,16 +1,21 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.relational.SketchAggregates.kllQuantiles
 
-/** Contracts for the KLL-family quantile aggregate behind q220. */
+/** Contracts q220 relies on from Spark's KLL sketch
+  * (`kll_sketch_agg_double`) and q220's read path
+  * ([[graft.relational.SketchAggregates.kllQuantiles]]).
+  */
 class KllSketchSpec extends AnyFunSuite with SparkSpec {
 
-  private def maxRankErr(data: Array[Double], st: KllState, nq: Int): Double = {
+  private def maxRankErr(data: Array[Double], qs: Seq[Double]): Double = {
     val n = data.length
-    val qs = st.quantiles(nq)
+    val nq = qs.length - 1
     (0 to nq).map { j =>
       val r = data.count(_ <= qs(j)).toDouble
       math.abs(r - n.toDouble * j / nq) / n
@@ -26,63 +31,70 @@ class KllSketchSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  /** (n, deciles) of one sketch column over a one-row frame. */
+  private def read(df: DataFrame, sk: Column): (Long, Seq[Double]) = {
+    val row = df.select(kll_sketch_get_n_double(sk),
+      kllQuantiles(sk, 10)).first()
+    (row.getLong(0), row.getSeq[Double](1))
+  }
+
+  private def sketched(data: Array[Double], k: Int): (Long, Seq[Double]) = {
+    import spark.implicits._
+    read(data.toSeq.toDF("value").repartition(4)
+      .agg(kll_sketch_agg_double($"value", k).as("sk")), $"sk")
+  }
+
   test("exact below capacity") {
-    val st = new KllState(256)
     val data = lcg(200)
-    data.foreach(st.update)
-    assert(st.n === 200L)
+    val (n, qs) = sketched(data, 256)
+    assert(n === 200L)
     // no compaction has happened: every decile is an exact order statistic
-    assert(maxRankErr(data, st, 10) <= 1.0 / 200 + 1e-9)
+    assert(maxRankErr(data, qs) <= 1.0 / 200 + 1e-9)
   }
 
   test("rank error bound on random data") {
-    val st = new KllState(200)
     val data = lcg(50000)
-    data.foreach(st.update)
-    assert(st.n === 50000L)
-    val err = maxRankErr(data, st, 10)
+    val (n, qs) = sketched(data, 200)
+    assert(n === 50000L)
+    val err = maxRankErr(data, qs)
     assert(err <= 0.03, s"rank error $err")
   }
 
   test("rank error bound on sorted (adversarial) input") {
-    val st = new KllState(200)
     val data = Array.tabulate(50000)(_.toDouble)
-    data.foreach(st.update)
-    val err = maxRankErr(data, st, 10)
+    val (_, qs) = sketched(data, 200)
+    val err = maxRankErr(data, qs)
     assert(err <= 0.03, s"rank error $err on sorted input")
   }
 
   test("merge tree matches the bound and preserves weight exactly") {
+    import spark.implicits._
     val data = lcg(60000, seed = 7L)
-    val chunks = data.grouped(9000).toArray
-    val states = chunks.map { c =>
-      val st = new KllState(200); c.foreach(st.update); st
-    }
+    val chunks = data.grouped(9000).toSeq.zipWithIndex
+      .flatMap { case (c, i) => c.map((i, _)) }.toDF("chunk", "value")
+      .groupBy($"chunk").agg(kll_sketch_agg_double($"value", 200).as("sk"))
+      .orderBy($"chunk").as[(Int, Array[Byte])].collect().map(_._2)
+    assert(chunks.length === 7)
     // unbalanced fold merge (worst-ish tree shape)
-    val root = states.reduce { (a, b) => a.merge(b); a }
-    assert(root.n === data.length.toLong)
-    val err = maxRankErr(data, root, 10)
+    val root = chunks.tail.foldLeft(lit(chunks.head)) { (acc, b) =>
+      kll_sketch_merge_double(acc, lit(b))
+    }
+    val (n, qs) = read(spark.range(1).toDF(), root)
+    assert(n === data.length.toLong)
+    val err = maxRankErr(data, qs)
     assert(err <= 0.03, s"rank error $err after merges")
   }
 
-  test("serialize round-trips") {
-    val st = new KllState(64)
-    lcg(5000, seed = 3L).foreach(st.update)
-    val back = KllState.deserialize(st.serialized)
-    assert(back.n === st.n)
-    assert(back.quantiles(10).toSeq === st.quantiles(10).toSeq)
-  }
-
   test("grouped SQL aggregate honors the bound per group") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val n = 20000
     val df = lcg(n, seed = 11L).zipWithIndex
       .map { case (v, i) => (i % 3, v) }.toSeq.toDF("g", "value")
       .repartition(8)
     val rows = df.groupBy($"g")
-      .agg(expr("kll_quantiles(value, 128, 4)").as("qs"),
+      .agg(kll_sketch_agg_double($"value", 128).as("sk"),
         count(lit(1)).as("cnt"))
+      .select($"g", kllQuantiles($"sk", 4), $"cnt")
       .collect()
     assert(rows.length === 3)
     val byGroup = lcg(n, seed = 11L).zipWithIndex
@@ -103,12 +115,12 @@ class KllSketchSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("all-null group evaluates to NULL") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((1, Option.empty[Double]), (1, None), (2, Some(5.0)))
       .toDF("g", "value")
     val rows = df.groupBy($"g")
-      .agg(expr("kll_quantiles(value, 32, 2)").as("qs"))
+      .agg(kll_sketch_agg_double($"value", 32).as("sk"))
+      .select($"g", kllQuantiles($"sk", 2))
       .orderBy($"g").collect()
     assert(rows(0).isNullAt(1))
     assert(rows(1).getSeq[Double](1) === Seq(5.0, 5.0, 5.0))

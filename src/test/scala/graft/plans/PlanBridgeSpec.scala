@@ -1,16 +1,22 @@
 package graft.plans
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
 import graft.SparkSpec
 import graft.core.GraftSession
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.graftbridge.{BlockProbe, PlanBridge}
+import org.scalatest.concurrent.Eventually._
 
 /** Pins for the checkpoint primitive [[PlanBridge.checkpointResetStats]]
   * (only its size statistics differ from Spark's own `localCheckpoint`;
@@ -132,9 +138,27 @@ class PlanBridgeSpec extends SparkSpec {
     val cp = PlanBridge.checkpointResetStats(skewed)
     val id = leaf(cp).rdd.id
     assert(spark.sparkContext.getPersistentRDDs.contains(id))
-    PlanBridge.release(cp.select("k"))
+    // Spark's RDD.unpersist logs a WARN per locally checkpointed RDD
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    val truncated = new AtomicInteger()
+    val counter = new AbstractAppender("release-warn", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("was locally checkpointed"))
+          truncated.incrementAndGet()
+    }
+    counter.start()
+    root.addAppender(counter)
+    try PlanBridge.release(cp.select("k"))
+    finally { root.removeAppender(counter); counter.stop() }
     assert(!spark.sparkContext.getPersistentRDDs.contains(id),
       s"rdd $id still persisted after release")
+    // the release is asynchronous (blocking = false)
+    eventually(timeout(10.seconds), interval(50.millis)) {
+      val blocks = BlockProbe.rddBlocks(spark.sparkContext, id)
+      assert(blocks.isEmpty, s"blocks of rdd $id left after release: $blocks")
+    }
+    assert(truncated.get == 0, s"${truncated.get} lineage-truncated WARN lines")
   }
 
   private def toyInit: DataFrame = PlanBridge.checkpointResetStats(
