@@ -58,7 +58,12 @@ object CatalogQueries {
       .select(col("pkg.icon.mediatype").as("mediatype"),
         unbase64(col("pkg.icon.base64data")).as("data"))
 
-  /** The full catalog API bound to the active snapshot of a cache root. */
+  /** The full catalog API bound to the active snapshot of a cache root.
+    * `ACTIVE` is read on every call, so a publish is seen at once; the
+    * snapshot's frame is opened once per session and reused while its
+    * `_SUCCESS` marker is unchanged, and dropped when the snapshot is
+    * rewritten or collected ([[FbcIngest.snapshotMeta]]).
+    */
   def forRoot(spark: SparkSession, root: String): DataFrame =
     FbcIngest.activeMeta(spark, root)
 }

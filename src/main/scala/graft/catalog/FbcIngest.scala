@@ -1,10 +1,14 @@
 package graft.catalog
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths,
+  StandardCopyOption}
+import java.nio.file.attribute.FileTime
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 import java.util.Comparator
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -33,7 +37,10 @@ import FbcModel._
   *     unchanged source is a no-op;
   *   - retention GC keeps the newest N snapshots (the reference's
   *     LRU+TTL eviction, cache.go:26-28, done by version count which is
-  *     deterministic and cluster-friendly).
+  *     deterministic and cluster-friendly);
+  *   - a published snapshot is opened once per session, with the fixed
+  *     stored schema, and its frame reused by later reads (the
+  *     reference's snapshot LRU, cache.go:39).
   *
   * Malformed records fail the load (the reference silently swallows
   * non-200 errors at cache.go:67-69 — we deliberately do not).
@@ -88,14 +95,15 @@ object FbcIngest {
   def writeSnapshot(spark: SparkSession, meta: DataFrame, root: String,
       snapshotId: Option[String] = None, sourceWatermark: Long = 0L): String = {
     val id = snapshotId.getOrElse(tsFmt.format(Instant.now()))
-    val snapDir = s"$root/snapshots/$id"
+    val snapDir = snapshotDir(root, id)
+    evict(Set(snapDir))
     try {
       checkedMeta(meta)
         .repartition(col("package"), col("schema"))
         .sortWithinPartitions("package", "schema", "name")
         .write.mode(SaveMode.Overwrite)
         .partitionBy("package", "schema")
-        .parquet(snapDir)
+        .parquet(snapDir.toString)
     } catch {
       case e: Throwable if causeChain(e).exists(
           m => m != null && m.contains(BadMetaMsg)) =>
@@ -134,12 +142,68 @@ object FbcIngest {
     }
   }
 
-  /** Read the active snapshot's meta table (partition-pruned scans). */
+  /** The active snapshot's meta table (partition-pruned scans). `ACTIVE`
+    * is read on every call, so a publish is seen by the very next one;
+    * the snapshot it names is opened once per session and its frame
+    * reused, as [[snapshotMeta]] does.
+    */
   def activeMeta(spark: SparkSession, root: String): DataFrame = {
     val (id, _) = activeSnapshot(root).getOrElse(
       throw new IllegalStateException(s"no active snapshot under $root"))
-    spark.read.parquet(s"$root/snapshots/$id")
+    openSnapshot(spark, snapshotDir(root, id))
   }
+
+  private def snapshotDir(root: String, id: String): Path =
+    Paths.get(root, "snapshots", id).toAbsolutePath.normalize
+
+  /** Read a meta table dir with the stored schema: one listing, no
+    * schema-inference job.
+    */
+  private def open(spark: SparkSession, dir: Path): DataFrame =
+    spark.read.schema(storedSchema).parquet(dir.toString)
+
+  /** Opened snapshot frames by (session, dir), each with the `_SUCCESS`
+    * modification time seen before it was opened. At most 100, least
+    * recently used out — the reference's snapshot LRU (cache.go:26-28,39).
+    */
+  private val OpenedCap = 100
+  private val opened =
+    new java.util.LinkedHashMap[(SparkSession, Path), (FileTime, DataFrame)](
+        16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[
+          (SparkSession, Path), (FileTime, DataFrame)]): Boolean =
+        size() > OpenedCap
+    }
+
+  /** A snapshot dir's frame: the one opened earlier while the dir's
+    * `_SUCCESS` keeps the modification time it had then, else a fresh
+    * open, stored only if the dir has a `_SUCCESS`. The time is read
+    * before the open, so a rewrite racing the open only costs a reopen.
+    */
+  private def openSnapshot(spark: SparkSession, dir: Path): DataFrame = {
+    val key = (spark, dir)
+    val committed =
+      try Some(Files.getLastModifiedTime(dir.resolve("_SUCCESS")))
+      catch { case _: NoSuchFileException => None }
+    opened.synchronized(Option(opened.get(key))) match {
+      case Some((t, df)) if committed.contains(t) => df
+      case _ =>
+        val df = open(spark, dir)
+        opened.synchronized(committed match {
+          case Some(t) => opened.put(key, (t, df))
+          case None => opened.remove(key)
+        })
+        df
+    }
+  }
+
+  /** Drop every session's opened frame of these dirs. */
+  private def evict(dirs: Set[Path]): Unit =
+    opened.synchronized(opened.keySet.removeIf(k => dirs.contains(k._2)))
+
+  /** The dirs with an opened frame, least recently used first. */
+  private[catalog] def openedDirs: Seq[Path] =
+    opened.synchronized(opened.keySet.asScala.toList.map(_._2))
 
   /** Published snapshot ids, oldest-first (ids sort chronologically —
     * timestamp-format by default, caller-supplied otherwise).
@@ -147,7 +211,6 @@ object FbcIngest {
   def listSnapshots(root: String): Seq[String] = {
     val snaps = Paths.get(root, "snapshots")
     if (!Files.exists(snaps)) return Nil
-    import scala.jdk.CollectionConverters._
     val s = Files.list(snaps)
     try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
     finally s.close()
@@ -158,12 +221,19 @@ object FbcIngest {
     * snapshot layout (every version is a self-contained partitioned
     * dir, so historical reads cost the same partition-pruned scan as
     * the active one; retention GC bounds how far back this reaches).
+    *
+    * The frame is opened once per session and snapshot dir and reused
+    * while the dir's `_SUCCESS` marker keeps the modification time it
+    * had at open; a dir without one is opened afresh on every call.
+    * [[writeSnapshot]] drops its dir's frames before it writes (ids
+    * passed in are overwritten in place), [[gcSnapshots]] drops its
+    * victims', and at most 100 frames are held, least recently used out.
     */
   def snapshotMeta(spark: SparkSession, root: String, id: String): DataFrame = {
-    val dir = Paths.get(root, "snapshots", id)
+    val dir = snapshotDir(root, id)
     require(Files.exists(dir), s"no snapshot '$id' under $root " +
       s"(published: ${listSnapshots(root).mkString(", ")})")
-    spark.read.parquet(dir.toString)
+    openSnapshot(spark, dir)
   }
 
   /** Incremental refresh: re-ingest only if the source's watermark (max
@@ -222,24 +292,27 @@ object FbcIngest {
     q.awaitTermination()
   }
 
-  /** The incrementally-maintained meta table (partition-pruned scans). */
+  /** The incrementally-maintained meta table (partition-pruned scans).
+    * Opened afresh on every call: the table grows in place.
+    */
   def incrementalMeta(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/incremental/data")
+    open(spark, Paths.get(root, "incremental", "data"))
 
   /** Retention GC: delete all but the newest `keep` snapshots, never the
     * active one (fixes the reference's evict-before-load hazard,
-    * cache.go:39).
+    * cache.go:39), and drop the deleted snapshots' opened frames.
     */
   def gcSnapshots(root: String, keep: Int): Seq[String] = {
     val active = activeSnapshot(root).map(_._1)
     val victims = listSnapshots(root).dropRight(keep).filterNot(active.contains)
     victims.foreach { id =>
-      val dir = Paths.get(root, "snapshots", id)
+      val dir = snapshotDir(root, id)
       val walk = Files.walk(dir)
       try walk.sorted(Comparator.reverseOrder[Path]())
         .forEach(f => Files.delete(f))
       finally walk.close()
     }
+    evict(victims.map(snapshotDir(root, _)).toSet)
     victims
   }
 }

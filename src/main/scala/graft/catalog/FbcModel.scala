@@ -21,6 +21,14 @@ object FbcModel {
     StructField("package", StringType),
     StructField("name", StringType)))
 
+  /** A published snapshot as read back: the data columns, then the
+    * (package, schema) partition columns, all strings. Reading with it
+    * skips schema inference and keeps numeric-looking package names
+    * (`007`) verbatim.
+    */
+  val storedSchema: StructType = StructType(
+    Seq("name", "blob", "package", "schema").map(StructField(_, StringType)))
+
   /** Typed view of an `olm.package` blob — only the fields the reference
     * decodes (/root/reference/main.go:306: name, icon{base64data,
     * mediatype}).

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +16,36 @@ import graft.core.GraftSession
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** The result of `body` and the number of Spark jobs it started,
+    * counted by a listener under a job group of its own.
+    */
+  def jobsIn[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-in-${System.nanoTime()}"
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val a = try body finally sc.clearJobGroup()
+      // listener events arrive in order: once a later job's start is
+      // seen, every job of `body` has been delivered
+      val marker = s"$group-marker"
+      sc.setJobGroup(marker, "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30.seconds.toNanos
+      while (!jobs.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(jobs.contains(marker), "listener never saw the marker job")
+      (a, jobs.asScala.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** Run `body` on the RocksDB state store (transformWithState needs it). */
   def withRocksDb[A](body: => A): A =

@@ -3,13 +3,16 @@ package graft.catalog
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
 
 /** End-to-end FBC semantics against the hand-written fixture — covers the
   * reference edge cases inventoried in FIXTURES.md §B: the 3-way
   * partition-key rule, empty-package → __global, icon null propagation,
   * `.json` suffix strip, verbatim blob round-trip, atomic/idempotent
-  * snapshot publish, incremental refresh, retention GC.
+  * snapshot publish (also after a crash before the ACTIVE rename),
+  * incremental refresh, retention GC, numeric-looking package names.
   */
 class FbcCatalogSpec extends SparkSpec {
 
@@ -107,6 +110,50 @@ class FbcCatalogSpec extends SparkSpec {
     FbcIngest.refreshIncremental(spark, src.toString, incRoot)
     assert(FbcIngest.incrementalMeta(spark, incRoot).count() == 12,
       "no-op refresh re-ingested files")
+  }
+
+  test("numeric-looking package names come back verbatim") {
+    val src = Files.createTempDirectory("fbc-numeric").resolve("all.jsonl")
+    val bundle =
+      "{\"schema\":\"olm.bundle\",\"package\":\"007\",\"name\":\"007.v1\"}"
+    Files.write(src, Seq("{\"schema\":\"olm.package\",\"name\":\"007\"}",
+      bundle, "{\"schema\":\"olm.package\",\"name\":\"1\"}")
+      .mkString("\n").getBytes(StandardCharsets.UTF_8))
+    val numRoot = Files.createTempDirectory("fbc-numeric-root").toString
+    FbcIngest.refreshIfChanged(spark, src.toString, numRoot)
+    val m = CatalogQueries.forRoot(spark, numRoot)
+    assert(CatalogQueries.listPackages(m).collect().map(_.getString(0))
+      .toSeq == Seq("007", "1"))
+    assert(CatalogQueries.getObject(m, "007", "olm.bundle", "007.v1")
+      .collect().map(_.getString(0)).toSeq == Seq(bundle))
+  }
+
+  test("a publish that dies before the ACTIVE rename leaves the old " +
+      "snapshot active, and the next refresh publishes over its ACTIVE.tmp") {
+    val src = Files.createTempDirectory("fbc-crash-src").resolve("all.jsonl")
+    Files.copy(Paths.get(fixture), src)
+    val crashRoot = Files.createTempDirectory("fbc-crash-root")
+    val old = FbcIngest.refreshIfChanged(spark, src.toString, crashRoot.toString)
+    // what the crash leaves: the new snapshot dir written and ACTIVE.tmp
+    // naming it, but no rename
+    FbcIngest.withPackageKey(FbcIngest.readMetaStream(spark, src.toString))
+      .filter(col("package") === "pkg-a")
+      .write.partitionBy("package", "schema")
+      .parquet(crashRoot.resolve("snapshots").resolve("crashed").toString)
+    Files.write(crashRoot.resolve("ACTIVE.tmp"),
+      "crashed\n0".getBytes(StandardCharsets.UTF_8))
+    def packages = CatalogQueries.listPackages(
+        CatalogQueries.forRoot(spark, crashRoot.toString))
+      .collect().map(_.getString(0)).toSeq
+    assert(FbcIngest.activeSnapshot(crashRoot.toString).map(_._1) == Some(old))
+    assert(packages == Seq("__global", "pkg-a", "pkg-b"))
+    Files.setLastModifiedTime(src, java.nio.file.attribute.FileTime
+      .fromMillis(System.currentTimeMillis() + 5000))
+    val next = FbcIngest.refreshIfChanged(spark, src.toString, crashRoot.toString)
+    assert(next != old && next != "crashed")
+    assert(FbcIngest.activeSnapshot(crashRoot.toString).map(_._1) == Some(next))
+    assert(!Files.exists(crashRoot.resolve("ACTIVE.tmp")))
+    assert(packages == Seq("__global", "pkg-a", "pkg-b"))
   }
 
   test("malformed meta records fail the load (no silent swallow)") {

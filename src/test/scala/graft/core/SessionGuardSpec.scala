@@ -19,8 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * counter, and two-level scans live in `QuantileNormalize`. Theta and
   * KLL sketches are Spark's built-ins (only `KllStream` holds
   * datasketches KLL state), and no graft SQL function takes a built-in
-  * name. Scans every Scala file under `src/` (mains, checkpoints,
-  * sweeps, entries, loops, scans and sketches under `src/main`).
+  * name. Catalog snapshots are opened only by `FbcIngest`: no parquet
+  * read under `graft/catalog` elsewhere. Scans every Scala file under
+  * `src/` (mains, checkpoints, sweeps, entries, loops, scans, sketches
+  * and snapshot opens under `src/main`).
   */
 class SessionGuardSpec extends AnyFunSuite {
 
@@ -163,6 +165,13 @@ class SessionGuardSpec extends AnyFunSuite {
     val shadowed = graft.functions.GraftFunctions.descriptions.map(_._1)
       .filter(FunctionRegistry.builtin.functionExists)
     assert(shadowed.isEmpty, s"built-in names re-registered: $shadowed")
+  }
+
+  test("catalog snapshots are opened only by FbcIngest") {
+    val found = hits("""\.read\b.*\bparquet\(""")
+      .filter(_._1.startsWith("src/main/scala/graft/catalog"))
+      .filterNot(_._1.getFileName.toString == "FbcIngest.scala")
+    assert(found.isEmpty, s"parquet reads under graft/catalog at: $found")
   }
 
   test("two-level scans (range partition + partition id) live only in " +

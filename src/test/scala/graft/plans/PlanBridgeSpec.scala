@@ -11,7 +11,6 @@ import graft.core.GraftSession
 import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -177,33 +176,10 @@ class PlanBridgeSpec extends SparkSpec {
 
   test("iterate runs one job per round: the stop value comes from the " +
       "checkpoint's own job") {
-    val group = s"fixpoint-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val init = toyInit
-      spark.sparkContext.setJobGroup(group, "toy fixpoint")
-      val (_, rounds, last) = try halving(init)
-        finally spark.sparkContext.clearJobGroup()
-      assert(rounds == 6 && last == 0L)
-      // listener events arrive in order: once a later job's start is
-      // seen, every loop job's start has been delivered
-      val marker = s"$group-marker"
-      spark.sparkContext.setJobGroup(marker, "marker")
-      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
-      val deadline = System.nanoTime() + 30.seconds.toNanos
-      while (!jobs.contains(marker) && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(jobs.contains(marker), "listener never saw the marker job")
-      val n = jobs.toArray.count(_ == group)
-      assert(n == rounds, s"$n jobs for $rounds rounds")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val init = toyInit
+    val ((_, rounds, last), n) = jobsIn(halving(init))
+    assert(rounds == 6 && last == 0L)
+    assert(n == rounds, s"$n jobs for $rounds rounds")
   }
 
   test("iterate frees round n-2 once round n exists, keeps init and " +
