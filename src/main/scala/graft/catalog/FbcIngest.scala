@@ -11,7 +11,11 @@ import java.util.Comparator
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import FbcModel._
 
@@ -40,7 +44,10 @@ import FbcModel._
   *     deterministic and cluster-friendly);
   *   - a published snapshot is opened once per session, with the fixed
   *     stored schema, and its frame reused by later reads (the
-  *     reference's snapshot LRU, cache.go:39).
+  *     reference's snapshot LRU, cache.go:39);
+  *   - the package and schema listings read the opened frame's
+  *     partition index ([[partitionValues]]) as the reference reads its
+  *     directories (main.go:143-155, :185-197), with no scan.
   *
   * Malformed records fail the load (the reference silently swallows
   * non-200 errors at cache.go:67-69 — we deliberately do not).
@@ -91,6 +98,13 @@ object FbcIngest {
     * — ONE scan of the source, not a count() action followed by a second
     * full read (at 100 TB the extra pass is real money). A bad record
     * aborts the job before publish, surfaced as IllegalArgumentException.
+    *
+    * The write shuffles into the session's shuffle-partition count, not
+    * the count AQE would coalesce it to: the write costs per file, not
+    * per byte (Hadoop's local file system creates each file and its
+    * `.crc`), so a small catalog coalesced into one task would write
+    * every `(package, schema)` file one after another. Each key still
+    * lands in one task, so each partition dir holds one file.
     */
   def writeSnapshot(spark: SparkSession, meta: DataFrame, root: String,
       snapshotId: Option[String] = None, sourceWatermark: Long = 0L): String = {
@@ -99,7 +113,8 @@ object FbcIngest {
     evict(Set(snapDir))
     try {
       checkedMeta(meta)
-        .repartition(col("package"), col("schema"))
+        .repartition(spark.sessionState.conf.numShufflePartitions,
+          col("package"), col("schema"))
         .sortWithinPartitions("package", "schema", "name")
         .write.mode(SaveMode.Overwrite)
         .partitionBy("package", "schema")
@@ -204,6 +219,28 @@ object FbcIngest {
   /** The dirs with an opened frame, least recently used first. */
   private[catalog] def openedDirs: Seq[Path] =
     opened.synchronized(opened.keySet.asScala.toList.map(_._2))
+
+  /** The `(package, schema)` values of every partition of a meta table
+    * opened here ([[activeMeta]], [[snapshotMeta]], [[incrementalMeta]]),
+    * read from the file index listed when it was opened: no job, no I/O.
+    * A value stored as Hive's default partition (an empty key) reads as
+    * null, as a scan reads it. Fails on any other frame, a filtered or
+    * projected meta table included.
+    */
+  private[catalog] def partitionValues(meta: DataFrame): Seq[(String, String)] = {
+    val plan = meta.queryExecution.analyzed
+    val index = plan match {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
+          if fs.partitionSchema.map(f => (f.name, f.dataType)) ==
+            Seq("package" -> StringType, "schema" -> StringType) => fs.location
+      case _ =>
+        throw new IllegalArgumentException(s"not an opened meta table:\n$plan")
+    }
+    def str(v: InternalRow, i: Int): String =
+      if (v.isNullAt(i)) null else v.getUTF8String(i).toString
+    index.listFiles(Nil, Nil).filter(_.files.nonEmpty)
+      .map(d => (str(d.values, 0), str(d.values, 1)))
+  }
 
   /** Published snapshot ids, oldest-first (ids sort chronologically —
     * timestamp-format by default, caller-supplied otherwise).

@@ -17,18 +17,27 @@ import graft.core.GraftSession
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 
-  /** The result of `body` and the number of Spark jobs it started,
-    * counted by a listener under a job group of its own.
-    */
+  /** The result of `body` and the number of Spark jobs it started. */
   def jobsIn[A](body: => A): (A, Int) = {
+    val (a, tasks) = resultTasksIn(body)
+    (a, tasks.size)
+  }
+
+  /** The result of `body` and, for each Spark job it started in start
+    * order, the task count of the job's result stage, counted by a
+    * listener under a job group of its own.
+    */
+  def resultTasksIn[A](body: => A): (A, Seq[Int]) = {
     val sc = spark.sparkContext
     val group = s"jobs-in-${System.nanoTime()}"
-    val jobs = new ConcurrentLinkedQueue[String]()
+    val jobs = new ConcurrentLinkedQueue[(String, Int)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties)
+        jobs.add((Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
+          .getOrElse(""),
+          // a job's result stage is created after its parents
+          e.stageInfos.maxBy(_.stageId).numTasks))
     }
     sc.addSparkListener(listener)
     try {
@@ -40,10 +49,10 @@ trait SparkSpec extends AnyFunSuite {
       sc.setJobGroup(marker, "marker")
       try spark.range(1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 30.seconds.toNanos
-      while (!jobs.contains(marker) && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(jobs.contains(marker), "listener never saw the marker job")
-      (a, jobs.asScala.count(_ == group))
+      def seen = jobs.asScala.exists(_._1 == marker)
+      while (!seen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen, "listener never saw the marker job")
+      (a, jobs.asScala.collect { case (`group`, n) => n }.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 

@@ -3,6 +3,7 @@ package graft.catalog
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
@@ -12,7 +13,8 @@ import graft.SparkSpec
   * partition-key rule, empty-package → __global, icon null propagation,
   * `.json` suffix strip, verbatim blob round-trip, atomic/idempotent
   * snapshot publish (also after a crash before the ACTIVE rename),
-  * incremental refresh, retention GC, numeric-looking package names.
+  * incremental refresh, retention GC, package and schema keys that are
+  * numeric-looking, path-escaped, empty or non-ASCII.
   */
 class FbcCatalogSpec extends SparkSpec {
 
@@ -21,6 +23,30 @@ class FbcCatalogSpec extends SparkSpec {
   private lazy val root = Files.createTempDirectory("fbc-root").toString
   private lazy val snapId = FbcIngest.refreshIfChanged(spark, fixture, root)
   private lazy val meta = { snapId; FbcIngest.activeMeta(spark, root) }
+
+  private val bundle007 =
+    "{\"schema\":\"olm.bundle\",\"package\":\"007\",\"name\":\"007.v1\"}"
+
+  /** Package and schema keys a listing can get wrong: numeric-looking,
+    * escaped in the path (space, `%`, `=`), empty (stored as Hive's
+    * default partition, read back as null), and two whose UTF-16 and
+    * UTF-8 orders differ (U+FF61 before U+1F600 in UTF-8 only).
+    */
+  private lazy val edgeMeta = {
+    val src = Files.createTempDirectory("fbc-edge").resolve("all.jsonl")
+    def pkg(name: String) = s"""{"schema":"olm.package","name":"$name"}"""
+    Files.write(src, (Seq("007", "1", "a b%c=d", "", "\uFF61", "\uD83D\uDE00")
+        .map(pkg) ++ Seq(bundle007,
+          """{"schema":"olm.bundle","package":"a b%c=d","name":"x"}""",
+          """{"schema":"","package":"a b%c=d","name":"no-schema"}"""))
+      .mkString("\n").getBytes(StandardCharsets.UTF_8))
+    val edgeRoot = Files.createTempDirectory("fbc-edge-root").toString
+    FbcIngest.refreshIfChanged(spark, src.toString, edgeRoot)
+    CatalogQueries.forRoot(spark, edgeRoot)
+  }
+
+  private def strings(df: DataFrame): Seq[String] =
+    df.collect().map(_.getString(0)).toSeq
 
   test("ingest applies the 3-way partition-key rule") {
     val keys = meta.select("package").distinct()
@@ -41,14 +67,41 @@ class FbcCatalogSpec extends SparkSpec {
   }
 
   test("listPackages / listSchemas / listObjects are sorted + pruned") {
-    assert(CatalogQueries.listPackages(meta).collect().map(_.getString(0))
-      .toSeq == Seq("__global", "pkg-a", "pkg-b"))
-    assert(CatalogQueries.listSchemas(meta, "pkg-a").collect()
-      .map(_.getString(0)).toSeq ==
-      Seq("olm.bundle", "olm.channel", "olm.package"))
-    // .json suffix strip (reference main.go:235)
-    assert(CatalogQueries.listObjects(meta, "pkg-b", "olm.bundle").collect()
-      .map(_.getString(0)).toSeq == Seq("pkg-b.v0.1.0", "weird"))
+    meta
+    val (packages, packageJobs) = jobsIn(strings(CatalogQueries.listPackages(meta)))
+    assert(packages == Seq("__global", "pkg-a", "pkg-b"))
+    val (schemas, schemaJobs) =
+      jobsIn(strings(CatalogQueries.listSchemas(meta, "pkg-a")))
+    assert(schemas == Seq("olm.bundle", "olm.channel", "olm.package"))
+    assert(packageJobs == 0 && schemaJobs == 0,
+      s"$packageJobs + $schemaJobs jobs to list from the partition index")
+    // .json suffix strip (reference main.go:235), sorted in one job
+    val (objects, objectJobs) =
+      jobsIn(strings(CatalogQueries.listObjects(meta, "pkg-b", "olm.bundle")))
+    assert(objects == Seq("pkg-b.v0.1.0", "weird"))
+    assert(objectJobs == 1, s"$objectJobs jobs to list objects")
+  }
+
+  test("listPackages / listSchemas read the partition index: no job, the " +
+      "scan's rows, null first in UTF-8 order") {
+    val m = edgeMeta
+    def scanPackages = strings(m.select("package").distinct().orderBy("package"))
+    def scanSchemas(p: String) = strings(m.filter(col("package") === p)
+      .select("schema").distinct().orderBy("schema"))
+    val (packages, jobs) = jobsIn(strings(CatalogQueries.listPackages(m)))
+    assert(jobs == 0, s"$jobs jobs to list packages")
+    assert(packages ==
+      Seq(null, "007", "1", "a b%c=d", "\uFF61", "\uD83D\uDE00"))
+    assert(packages == scanPackages)
+    (packages :+ "nope").foreach { p =>
+      val (schemas, jobs) = jobsIn(strings(CatalogQueries.listSchemas(m, p)))
+      assert(jobs == 0, s"$jobs jobs to list the schemas of $p")
+      assert(schemas == scanSchemas(p), s"schemas of $p")
+    }
+    assert(strings(CatalogQueries.listSchemas(m, "a b%c=d")) ==
+      Seq(null, "olm.bundle", "olm.package"))
+    intercept[IllegalArgumentException](
+      CatalogQueries.listPackages(m.filter(col("schema") === "olm.bundle")))
   }
 
   test("getObject returns the verbatim blob") {
@@ -99,13 +152,24 @@ class FbcCatalogSpec extends SparkSpec {
     // append ONE new file: only its rows land (checkpointed file
     // tracking — the original file is NOT re-ingested, so no duplicates)
     Files.write(src.resolve("delta.jsonl"),
-      ("{\"schema\":\"olm.bundle\",\"package\":\"pkg-a\",\"name\":\"pkg-a.v2.0.0\"}\n"
+      ("{\"schema\":\"olm.bundle\",\"package\":\"pkg-a\",\"name\":\"pkg-a.v0.9.0\"}\n"
         + "{\"schema\":\"olm.bundle\",\"package\":\"pkg-c\",\"name\":\"pkg-c.v1.0.0\"}\n")
         .getBytes(StandardCharsets.UTF_8))
     FbcIngest.refreshIncremental(spark, src.toString, incRoot)
     val meta2 = FbcIngest.incrementalMeta(spark, incRoot)
     assert(meta2.count() == 12, "delta file not ingested exactly once")
     assert(meta2.filter(meta2("package") === "pkg-c").count() == 1)
+    assert(strings(CatalogQueries.listPackages(meta2)) ==
+      Seq("__global", "pkg-a", "pkg-b", "pkg-c"))
+    // pkg-a's bundles now span two files: still one job, globally sorted
+    val bundles = Paths.get(incRoot, "incremental", "data", "package=pkg-a",
+      "schema=olm.bundle")
+    assert(Files.list(bundles).filter(_.toString.endsWith(".parquet"))
+      .count() == 2)
+    val (objects, objectJobs) =
+      jobsIn(strings(CatalogQueries.listObjects(meta2, "pkg-a", "olm.bundle")))
+    assert(objects == Seq("pkg-a.v0.9.0", "pkg-a.v1.0.0", "pkg-a.v1.1.0"))
+    assert(objectJobs == 1, s"$objectJobs jobs to list objects")
     // unchanged source: refresh is a no-op
     FbcIngest.refreshIncremental(spark, src.toString, incRoot)
     assert(FbcIngest.incrementalMeta(spark, incRoot).count() == 12,
@@ -114,18 +178,15 @@ class FbcCatalogSpec extends SparkSpec {
 
   test("numeric-looking package names come back verbatim") {
     val src = Files.createTempDirectory("fbc-numeric").resolve("all.jsonl")
-    val bundle =
-      "{\"schema\":\"olm.bundle\",\"package\":\"007\",\"name\":\"007.v1\"}"
     Files.write(src, Seq("{\"schema\":\"olm.package\",\"name\":\"007\"}",
-      bundle, "{\"schema\":\"olm.package\",\"name\":\"1\"}")
+      bundle007, "{\"schema\":\"olm.package\",\"name\":\"1\"}")
       .mkString("\n").getBytes(StandardCharsets.UTF_8))
     val numRoot = Files.createTempDirectory("fbc-numeric-root").toString
     FbcIngest.refreshIfChanged(spark, src.toString, numRoot)
     val m = CatalogQueries.forRoot(spark, numRoot)
-    assert(CatalogQueries.listPackages(m).collect().map(_.getString(0))
-      .toSeq == Seq("007", "1"))
-    assert(CatalogQueries.getObject(m, "007", "olm.bundle", "007.v1")
-      .collect().map(_.getString(0)).toSeq == Seq(bundle))
+    assert(strings(CatalogQueries.listPackages(m)) == Seq("007", "1"))
+    assert(strings(CatalogQueries.getObject(m, "007", "olm.bundle", "007.v1"))
+      == Seq(bundle007))
   }
 
   test("a publish that dies before the ACTIVE rename leaves the old " +

@@ -12,7 +12,8 @@ import graft.SparkSpec
   * `FbcIngest.snapshotMeta`: an opened snapshot is reused without a job
   * (jobs counted by `SparkSpec.jobsIn`), a cold one lists in one job, and
   * no read is served from a snapshot that was published over, rewritten,
-  * overwritten or collected.
+  * overwritten or collected. The publish write runs in parallel, one
+  * file per partition dir.
   */
 class SnapshotCacheSpec extends SparkSpec {
 
@@ -48,6 +49,28 @@ class SnapshotCacheSpec extends SparkSpec {
     assert(CatalogQueries.getObject(warm, "pkg-07", "olm.package", "pkg-07")
       .collect().map(_.getString(0)).toSeq ==
       Seq("""{"name":"pkg-07","tag":"a"}"""))
+  }
+
+  test("the publish write runs on every shuffle partition and writes one " +
+      "file per partition dir") {
+    val root = newRoot()
+    val (_, tasks) = resultTasksIn(
+      FbcIngest.writeSnapshot(spark, catalog(40, "w"), root, Some("w")))
+    // the last job is the write: AQE must not coalesce it into one task
+    assert(tasks.last > 1, s"result-stage tasks per job: $tasks")
+    def children(p: Path, prefix: String): List[Path] = {
+      val s = Files.list(p)
+      try s.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix))
+        .toList
+      finally s.close()
+    }
+    val dirs = children(dir(root, "w"), "package=")
+      .flatMap(children(_, "schema="))
+    assert(dirs.size == 40)
+    dirs.foreach { d =>
+      val files = children(d, "part-").filter(_.toString.endsWith(".parquet"))
+      assert(files.size == 1, s"$d holds $files")
+    }
   }
 
   test("after a publish the next forRoot reads the new snapshot") {

@@ -20,7 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * KLL sketches are Spark's built-ins (only `KllStream` holds
   * datasketches KLL state), and no graft SQL function takes a built-in
   * name. Catalog snapshots are opened only by `FbcIngest`: no parquet
-  * read under `graft/catalog` elsewhere. Scans every Scala file under
+  * read under `graft/catalog` elsewhere, and `CatalogQueries` lists
+  * packages and schemas from the partition index, not with a distinct()
+  * over a scan. Scans every Scala file under
   * `src/` (mains, checkpoints, sweeps, entries, loops, scans, sketches
   * and snapshot opens under `src/main`).
   */
@@ -172,6 +174,18 @@ class SessionGuardSpec extends AnyFunSuite {
       .filter(_._1.startsWith("src/main/scala/graft/catalog"))
       .filterNot(_._1.getFileName.toString == "FbcIngest.scala")
     assert(found.isEmpty, s"parquet reads under graft/catalog at: $found")
+  }
+
+  test("CatalogQueries lists packages and schemas from the partition " +
+      "index, with no distinct() over them") {
+    val queries = Paths.get("src/main/scala/graft/catalog/CatalogQueries.scala")
+    val lines = sources.find(_._1 == queries).getOrElse(fail(s"no $queries"))._2
+    val found = lines.zipWithIndex.collect {
+      case (l, i) if l.contains("distinct()") &&
+        lines.slice(i - 1, i + 1).exists(_.matches(""".*"(package|schema)".*""")) =>
+        i + 1
+    }
+    assert(found.isEmpty, s"distinct() over package/schema at lines: $found")
   }
 
   test("two-level scans (range partition + partition id) live only in " +
