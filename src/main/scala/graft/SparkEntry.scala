@@ -9,7 +9,7 @@ import graft.operators.{Dbscan, GeoGridJoin, Hits, IntervalJoin, Isotonic, KCore
 import graft.sources.{BinaryFiles, CsvScan, FixedWidthScan, DynamicOverwrite, FbcSource, Federation, HilbertLayout, K8sObjects, LayoutQueries, OrcSource, QuarantineIngest, SchemaEvolution, XmlSource, ZOrderQueries}
 import graft.streaming.StreamShapeQueries
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The entry registry contract — see SURVEY.md §7.
   *
   * Collects the entries each module declares; every entry here is an
   * operator from SURVEY.md §2.b with a matching DuckDB SQL string with

@@ -1,16 +1,14 @@
 package graft.catalog
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
-import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{base64, col, count, countDistinct,
   lit, row_number}
 
-import graft.core.Entry
+import graft.core.{Entry, Fixtures}
 
 /** Oracle-checkable bindings of the catalog query surface (R10–R14) —
   * [[CatalogQueries]] run over a parquet snapshot materialized from the
@@ -28,26 +26,27 @@ object CatalogOracle {
   import Entry.Q
 
   /** Fixed paths so the static oracle SQL can address them. */
-  val FixtureSource = "/root/repo/src/test/resources/fbc/all.jsonl"
-  val FixtureRoot = "/root/repo/target/fixtures/fbc"
+  val FixtureSource = Fixtures.resource("fbc/all.jsonl")
+  val FixtureRoot = Fixtures.path("fbc")
   val SnapshotId = "oracle"
   private val parquetGlob = s"$FixtureRoot/snapshots/$SnapshotId/*/*/*.parquet"
 
-  @volatile private var built = false
+  /** SHA-256 of the fixture source: every catalog fixture's key starts
+    * with it, so a changed source rebuilds them all.
+    */
+  private[graft] lazy val sourceKey = MessageDigest.getInstance("SHA-256")
+    .digest(Files.readAllBytes(Paths.get(FixtureSource)))
+    .map("%02x".format(_)).mkString
 
-  /** Ingest the fixture (once per JVM — it is static; idempotent
-    * overwrite, 10 records) and open the snapshot through
-    * [[FbcIngest.snapshotMeta]] — partition columns (package, schema)
-    * reconstructed from the Hive layout, exactly as DuckDB's
-    * hive_partitioning does.
+  /** Ingest the fixture once (10 records, content-addressed like q91's)
+    * and open the snapshot through [[FbcIngest.snapshotMeta]] —
+    * partition columns (package, schema) reconstructed from the Hive
+    * layout, exactly as DuckDB's hive_partitioning does.
     */
   private def fixtureMeta(s: SparkSession): DataFrame = {
-    if (!built) synchronized {
-      if (!built) {
-        FbcIngest.writeSnapshot(s, FbcIngest.readMetaStream(s, FixtureSource),
-          FixtureRoot, snapshotId = Some(SnapshotId))
-        built = true
-      }
+    Fixtures.once("fbc", s"$sourceKey:snapshot=$SnapshotId") {
+      FbcIngest.writeSnapshot(s, FbcIngest.readMetaStream(s, FixtureSource),
+        FixtureRoot, snapshotId = Some(SnapshotId))
     }
     FbcIngest.snapshotMeta(s, FixtureRoot, SnapshotId)
   }
@@ -107,7 +106,7 @@ object CatalogOracle {
     * oracle pins the golden layout as literals: 0001 collected, 0002
     * kept, 0003 kept-and-active.
     *
-    * The build is content-addressed ([[buildOnce]]): a marker file
+    * The build is content-addressed ([[Fixtures.once]]): a marker file
     * records the SHA-256 of the fixture source plus the publish/GC
     * parameters, written only AFTER a successful GC. A later invocation
     * (warm bench run, next JVM) whose key matches skips the triple
@@ -115,13 +114,14 @@ object CatalogOracle {
     * the build, is the query.
     * Any fixture or parameter change misses the key and rebuilds.
     */
-  val GcRoot = "/root/repo/target/fixtures/gc"
+  val GcRoot = Fixtures.path("gc")
   private val GcSnapshotIds = Seq("0001", "0002", "0003")
   private val GcKeep = 2
 
   val q91SnapshotGc: Q = (s, _) => {
     import s.implicits._
-    buildOnce(GcRoot, s":keep=$GcKeep:ids=${GcSnapshotIds.mkString(",")}") {
+    Fixtures.once("gc",
+        s"$sourceKey:keep=$GcKeep:ids=${GcSnapshotIds.mkString(",")}") {
       val meta = FbcIngest.readMetaStream(s, FixtureSource)
       GcSnapshotIds.foreach(id =>
         FbcIngest.writeSnapshot(s, meta, GcRoot, snapshotId = Some(id)))
@@ -144,15 +144,15 @@ object CatalogOracle {
     * [[FbcIngest.snapshotMeta]] and aggregates it. The oracle addresses
     * v2's partition glob explicitly, so reading the wrong version
     * (e.g. following ACTIVE) changes row counts and breaks the hash.
-    * Content-addressed build ([[buildOnce]], as q91).
+    * Content-addressed build ([[Fixtures.once]], as q91).
     */
-  val TtRoot = "/root/repo/target/fixtures/tt"
+  val TtRoot = Fixtures.path("tt")
   private val ttVersions = Seq("v1" -> 4, "v2" -> 7, "v3" -> 10)
 
   val q169TimeTravel: Q = (s, _) => {
     import s.implicits._
-    buildOnce(TtRoot,
-        s":versions=${ttVersions.map(v => s"${v._1}=${v._2}").mkString(",")}") {
+    Fixtures.once("tt", s"$sourceKey:versions=" +
+        ttVersions.map(v => s"${v._1}=${v._2}").mkString(",")) {
       // growing prefixes in name order — simulated append-only history
       val ranked = FbcIngest.readMetaStream(s, FixtureSource)
         .withColumn("rn", row_number().over(Window.orderBy(col("name"))))
@@ -175,30 +175,6 @@ object CatalogOracle {
        |                  hive_partitioning=1)
        |GROUP BY package
        |ORDER BY package""".stripMargin
-
-  /** Build a fixture root once, content-addressed: unless its marker
-    * holds the SHA-256 of the fixture source plus `params`, wipe the
-    * root, run `build`, then write the marker.
-    */
-  private def buildOnce(root: String, params: String)(build: => Unit): Unit = {
-    val rootP = Paths.get(root)
-    val marker = rootP.resolve(".fixture_key")
-    val key = MessageDigest.getInstance("SHA-256")
-      .digest(Files.readAllBytes(Paths.get(FixtureSource)))
-      .map("%02x".format(_)).mkString + params
-    val cached = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), UTF_8) == key
-    if (!cached) {
-      if (Files.exists(rootP)) {
-        val walk = Files.walk(rootP)
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => Files.delete(f))
-        finally walk.close()
-      }
-      build
-      Files.write(marker, key.getBytes(UTF_8))
-    }
-  }
 
   val entries: Seq[Entry] = Seq(
     Entry("q169_time_travel", q169TimeTravel, q169Sql),

@@ -6,7 +6,6 @@ import java.nio.file.{Files, NoSuchFileException, Path, Paths,
 import java.nio.file.attribute.FileTime
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
-import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 
@@ -16,6 +15,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
+
+import graft.core.Fixtures
 
 import FbcModel._
 
@@ -342,13 +343,7 @@ object FbcIngest {
   def gcSnapshots(root: String, keep: Int): Seq[String] = {
     val active = activeSnapshot(root).map(_._1)
     val victims = listSnapshots(root).dropRight(keep).filterNot(active.contains)
-    victims.foreach { id =>
-      val dir = snapshotDir(root, id)
-      val walk = Files.walk(dir)
-      try walk.sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
-    }
+    victims.foreach(id => Fixtures.deleteTree(snapshotDir(root, id)))
     evict(victims.map(snapshotDir(root, _)).toSet)
     victims
   }

@@ -1,12 +1,12 @@
 package graft.llm
 
 import java.nio.charset.StandardCharsets.US_ASCII
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Entry, Tables => T}
+import graft.core.{Entry, Fixtures, Tables => T}
 import graft.llm.Multimodal.{GvidMime, MediaRecord, PpmMime, WavMime}
 
 /** q180 — the multimodal decode seam as a DRIVER-CHECKED row (the
@@ -36,7 +36,7 @@ object MultimodalOracle {
   val MediaDocBound = 25L
 
   def fixtureDir(dir: String): String =
-    "/root/repo/target/fixtures/media_" + dir.replaceAll("[^a-zA-Z0-9.]", "_")
+    Fixtures.path(s"media_${Fixtures.dirTag(dir)}")
 
   // ---- deterministic generators (payload bytes from id alone) ----
 
@@ -134,14 +134,8 @@ object MultimodalOracle {
     import s.implicits._
     val ids = T.documents(s, dir).filter($"doc_id" < MediaDocBound)
       .select($"doc_id").as[Long].collect().sorted
-    val root = Paths.get(fixtureDir(dir))
-    Files.createDirectories(root)
-    def put(name: String, bytes: Array[Byte]): Unit = {
-      val tmp = root.resolve(name + ".tmp")
-      Files.write(tmp, bytes)
-      Files.move(tmp, root.resolve(name),
-        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-    }
+    def put(name: String, bytes: Array[Byte]): Unit =
+      Fixtures.writeAtomic(Paths.get(fixtureDir(dir), name), bytes)
     ids.foreach { id =>
       put(s"img_$id.ppm", ppmBytes(id))
       put(s"aud_$id.wav", wavBytes(id))

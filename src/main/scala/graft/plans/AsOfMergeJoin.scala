@@ -267,13 +267,7 @@ object AsOfMergeJoin {
     Seq(p, g).foreach { t =>
       s.sql(s"DROP TABLE IF EXISTS $t")
       // leftovers from prior JVMs survive the in-memory catalog
-      val dir = java.nio.file.Paths.get(warehouse, t)
-      if (java.nio.file.Files.exists(dir)) {
-        val w = java.nio.file.Files.walk(dir)
-        try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(java.nio.file.Files.delete(_))
-        finally w.close()
-      }
+      graft.core.Fixtures.deleteTree(java.nio.file.Paths.get(warehouse, t))
     }
     val ev = graft.core.Tables.events(s, dir)
     ev.filter($"event_type" === "purchase")

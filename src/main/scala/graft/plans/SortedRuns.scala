@@ -137,23 +137,18 @@ object SortedRuns {
     * every group in exactly one file, which ranging on the group key
     * alone guarantees.
     */
-  val UserSortRoot = "/root/repo/target/fixtures/usersort_events"
+  val UserSortRoot = graft.core.Fixtures.path("usersort_events")
   val UserSortFiles = 16
 
   private def ensureUserLayout(s: SparkSession, dir: String): Unit = {
-    import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.functions.col
-    val marker = Paths.get(UserSortRoot, ".fixture_key")
-    val key = s"usersort:$dir:$UserSortFiles:v1"
-    val cached = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == key
-    if (!cached) {
+    graft.core.Fixtures.once("usersort_events",
+        s"usersort:$dir:$UserSortFiles:v1") {
       graft.core.Tables.events(s, dir)
         .repartitionByRange(UserSortFiles, col("user_id"))
         .sortWithinPartitions(col("user_id"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(UserSortRoot)
-      Files.write(marker, key.getBytes("UTF-8"))
     }
   }
 

@@ -1,12 +1,11 @@
 package graft.relational
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
+import java.nio.file.Paths
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Fixtures, Tables => T, dsl, OracleDsl => O}
 import graft.operators.SaltedJoin
 
 /** The two explicit shuffle-management recipes from SURVEY.md §4 /
@@ -30,13 +29,6 @@ object BucketedQueries {
 
   private val built = scala.collection.concurrent.TrieMap[String, (String, String)]()
 
-  private def deleteRec(p: Path): Unit =
-    if (Files.exists(p)) {
-      val w = Files.walk(p)
-      try w.sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
-      finally w.close()
-    }
-
   /** Write orders+lineitem for `dir` as bucketed+sorted managed tables
     * (once per JVM per scale dir). Bucketed layout only exists through
     * the catalog — `saveAsTable`, not `save` — which is exactly how a
@@ -50,7 +42,7 @@ object BucketedQueries {
         s.conf.get("spark.sql.warehouse.dir")).getPath
       Seq(o, l).foreach { t =>
         s.sql(s"DROP TABLE IF EXISTS $t")
-        deleteRec(Paths.get(warehouse, t)) // leftovers from prior JVMs
+        Fixtures.deleteTree(Paths.get(warehouse, t)) // leftovers from prior JVMs
       }
       T.orders(s, dir).write.format("parquet")
         .bucketBy(Buckets, "o_orderkey").sortBy("o_orderkey")

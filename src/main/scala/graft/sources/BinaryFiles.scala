@@ -1,12 +1,12 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Entry, Tables => T}
+import graft.core.{Entry, Fixtures, Tables => T}
 
 /** `binaryFile` source leg (5th format next to parquet / CSV q75 /
   * JSONL q70-q73 / ORC q121): read raw files as (path, modificationTime,
@@ -40,7 +40,7 @@ object BinaryFiles {
     * run against a different SF leak into the result.
     */
   def fixtureDir(dir: String): String =
-    "/root/repo/target/fixtures/blobs_" + dir.replaceAll("[^a-zA-Z0-9.]", "_")
+    Fixtures.path(s"blobs_${Fixtures.dirTag(dir)}")
 
   /** Documents written as files: doc_id < this bound. */
   val BlobDocBound = 25L
@@ -51,13 +51,9 @@ object BinaryFiles {
       .filter($"doc_id" < BlobDocBound)
       .select($"doc_id", $"text")
       .as[(Long, String)].collect()
-    val root = Paths.get(fixtureDir(dir))
-    Files.createDirectories(root)
     rows.foreach { case (id, text) =>
-      val tmp = root.resolve(s"doc_$id.bin.tmp")
-      Files.write(tmp, text.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, root.resolve(s"doc_$id.bin"),
-        StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+      Fixtures.writeAtomic(Paths.get(fixtureDir(dir), s"doc_$id.bin"),
+        text.getBytes(StandardCharsets.UTF_8))
     }
   }
 

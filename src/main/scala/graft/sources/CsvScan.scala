@@ -1,13 +1,13 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Entry, Tables => T}
+import graft.core.{Entry, Fixtures, Tables => T}
 
 /** CSV source coverage (SURVEY.md §2.b scan row 3).
   *
@@ -27,7 +27,7 @@ object CsvScan {
   import Entry.Q
 
   /** Fixed absolute path so the static oracle SQL can address it. */
-  val FixturePath = "/root/repo/target/fixtures/nation.csv"
+  val FixturePath = Fixtures.path("nation.csv")
 
   private val nationCsvSchema = StructType(Seq(
     StructField("n_nationkey", IntegerType),
@@ -45,12 +45,8 @@ object CsvScan {
     val body = "n_nationkey,n_name,n_regionkey\n" + rows.map { r =>
       s"${r.getInt(0)},${r.getString(1)},${r.getInt(2)}"
     }.mkString("", "\n", "\n")
-    val target = Paths.get(FixturePath)
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling("nation.csv.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    Fixtures.writeAtomic(Paths.get(FixturePath),
+      body.getBytes(StandardCharsets.UTF_8))
   }
 
   /** CSV scan with explicit schema + pushed filter + projection. */

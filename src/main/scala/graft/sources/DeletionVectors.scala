@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Fixtures, Tables => T, dsl, OracleDsl => O}
 
 /** Merge-on-read POSITION DELETES (q187) — the deletion-vector
   * mechanism of modern table formats (Iceberg position-delete files,
@@ -44,11 +44,9 @@ object DeletionVectors {
   /** (base, tombstones) fixture roots — single source of truth for the
     * path scheme (the spec reads through this, never re-deriving it).
     */
-  private[sources] def roots(dir: String): (String, String) = {
-    val key = dir.replaceAll("[^a-zA-Z0-9.]", "_")
-    (s"/root/repo/target/fixtures/mor_base_$key",
-      s"/root/repo/target/fixtures/mor_deletes_$key")
-  }
+  private[sources] def roots(dir: String): (String, String) =
+    (Fixtures.path(s"mor_base_${Fixtures.dirTag(dir)}"),
+      Fixtures.path(s"mor_deletes_${Fixtures.dirTag(dir)}"))
 
   /** Shared with [[EqualityDeletes]] — q579 composes its equality-key
     * sidecar with this base/position fixture in one scan.
@@ -59,11 +57,8 @@ object DeletionVectors {
   private def ensureFixture(s: SparkSession, dir: String): (String, String) = {
     import s.implicits._
     val (baseRoot, delRoot) = roots(dir)
-    val marker = Paths.get(baseRoot, ".fixture_key")
-    val key = s"mor:$dir:$BaseFiles:$DeleteMod:$DeleteRem"
-    val cached = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == key
-    if (!cached) {
+    Fixtures.once(s"mor_base_${Fixtures.dirTag(dir)}",
+        s"mor:$dir:$BaseFiles:$DeleteMod:$DeleteRem") {
       T.events(s, dir).repartition(BaseFiles)
         .write.mode(SaveMode.Overwrite).parquet(baseRoot)
       // tombstone creation: the ONLY place the logical predicate runs —
@@ -74,7 +69,6 @@ object DeletionVectors {
         .filter($"event_id" % DeleteMod === DeleteRem)
         .select($"fp", $"ri")
         .write.mode(SaveMode.Overwrite).parquet(delRoot)
-      Files.write(marker, key.getBytes("UTF-8"))
     }
     (baseRoot, delRoot)
   }
@@ -129,8 +123,7 @@ object DeletionVectors {
   val q242CompactTombstones: Q = (s, dir) => {
     import s.implicits._
     val (baseRoot, delRoot) = ensureFixture(s, dir)
-    val key = dir.replaceAll("[^a-zA-Z0-9.]", "_")
-    val compactRoot = s"/root/repo/target/fixtures/mor_compact_$key"
+    val compactRoot = Fixtures.path(s"mor_compact_${Fixtures.dirTag(dir)}")
     val deletes = s.read.parquet(delRoot)
     val live = s.read.parquet(baseRoot)
       .select($"_metadata.file_path".as("fp"),

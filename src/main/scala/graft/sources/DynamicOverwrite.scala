@@ -1,11 +1,8 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-import java.util.Comparator
-
 import org.apache.spark.sql.functions._
 
-import graft.core.{Entry, GraftSession, Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Fixtures, GraftSession, Tables => T, dsl, OracleDsl => O}
 
 /** DYNAMIC partition overwrite — the write-side primitive between
   * full-table overwrite (loses everything else) and append (duplicates
@@ -33,7 +30,7 @@ object DynamicOverwrite {
 
   import Entry.Q
 
-  val FixtureRoot = "/root/repo/target/fixtures/dynow"
+  val FixtureRoot = Fixtures.path("dynow")
 
   /** The reprocessed day and its deterministic adjustment. */
   val TargetDay = "2024-01-10"
@@ -41,17 +38,11 @@ object DynamicOverwrite {
 
   val q175DynamicOverwrite: Q = (s, dir) => {
     import s.implicits._
-    val key = dir.replaceAll("[^a-zA-Z0-9.]", "_")
-    val table = s"$FixtureRoot/$key/events_by_day"
+    val root = s"$FixtureRoot/${Fixtures.dirTag(dir)}"
+    val table = s"$root/events_by_day"
     // rebuild the base table fresh every run: the overwrite IS the
     // query, so the fixture must start un-overwritten every time
-    val root = Paths.get(FixtureRoot, key)
-    if (Files.exists(root)) {
-      val walk = Files.walk(root)
-      try walk.sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
-    }
+    Fixtures.deleteTree(java.nio.file.Paths.get(root))
     val ev = T.events(s, dir)
       .select($"event_id", $"user_id", $"value", to_date($"ts").as("day"))
     ev.write.partitionBy("day").parquet(table)

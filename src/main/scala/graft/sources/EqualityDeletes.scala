@@ -1,11 +1,9 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Fixtures, Tables => T, dsl, OracleDsl => O}
 
 /** Merge-on-read EQUALITY DELETES composed with position deletes
   * (q579) — Iceberg's second delete-file kind (spec §Delete Formats:
@@ -46,11 +44,11 @@ object EqualityDeletes {
   val EqKeyMod = 17L
   val EqKeyRem = 2L
 
-  /** Equality-key sidecar root (the q187 roots scheme). */
-  private[sources] def eqRoot(dir: String): String = {
-    val key = dir.replaceAll("[^a-zA-Z0-9.]", "_")
-    s"/root/repo/target/fixtures/mor_eqdeletes_$key"
-  }
+  /** Equality-key sidecar name under the fixture root (the q187 roots
+    * scheme).
+    */
+  private def eqName(dir: String): String =
+    s"mor_eqdeletes_${Fixtures.dirTag(dir)}"
 
   /** Ensure the q187 base/position fixture AND the equality-key
     * sidecar exist; returns (baseRoot, posDeleteRoot, eqDeleteRoot).
@@ -59,12 +57,8 @@ object EqualityDeletes {
       : (String, String, String) = {
     import s.implicits._
     val (baseRoot, posRoot) = DeletionVectors.ensureAll(s, dir)
-    val root = eqRoot(dir)
-    val marker = Paths.get(root, ".fixture_key")
-    val key = s"eq:$dir:$EqKeyMod:$EqKeyRem"
-    val cached = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == key
-    if (!cached) {
+    val root = Fixtures.path(eqName(dir))
+    Fixtures.once(eqName(dir), s"eq:$dir:$EqKeyMod:$EqKeyRem") {
       // key creation: the ONLY place the erase predicate runs — what
       // is persisted is pure entity keys
       T.events(s, dir)
@@ -72,7 +66,6 @@ object EqualityDeletes {
           $"user_id" % EqKeyMod === EqKeyRem)
         .select($"user_id").distinct()
         .write.mode(SaveMode.Overwrite).parquet(root)
-      Files.write(marker, key.getBytes("UTF-8"))
     }
     (baseRoot, posRoot, root)
   }

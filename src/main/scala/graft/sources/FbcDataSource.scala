@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.Entry
+import graft.core.{Entry, Fixtures}
 
 /** DataSource V2 connector for the reference's NATIVE cache layout —
   * the file-per-row JSON tree `{root}/{package}/{schema}/{name}.json`
@@ -87,10 +87,7 @@ object FbcDataSource {
   def writeFileTree(meta: DataFrame, root: String): Unit = {
     val rows = meta.select("package", "schema", "name", "blob").collect()
     val rootP = Paths.get(root)
-    if (Files.exists(rootP)) {
-      Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Fixtures.deleteTree(rootP)
     rows.foreach { r =>
       val dir = rootP.resolve(r.getString(0)).resolve(r.getString(1))
       Files.createDirectories(dir)
@@ -674,24 +671,15 @@ object FbcSource {
 
   import Entry.Q
 
-  val FixtureRoot = "/root/repo/target/fixtures/fbcfs"
+  val FixtureRoot = Fixtures.path("fbcfs")
 
-  @volatile private var built = false
-
-  private def fixtureTree(s: SparkSession): Unit = {
-    if (!built) synchronized {
-      if (!built) {
-        val meta = graft.catalog.FbcIngest.withPackageKey(
-          graft.catalog.FbcIngest.readMetaStream(
-            s, graft.catalog.CatalogOracle.FixtureSource))
-        FbcDataSource.writeFileTree(meta, FixtureRoot)
-        built = true
-      }
-    }
-  }
-
+  /** Reads the fixture tree, built once per content of the source. */
   def read(s: SparkSession): DataFrame = {
-    fixtureTree(s)
+    import graft.catalog.{CatalogOracle, FbcIngest}
+    Fixtures.once("fbcfs", s"${CatalogOracle.sourceKey}:tree") {
+      FbcDataSource.writeFileTree(FbcIngest.withPackageKey(
+        FbcIngest.readMetaStream(s, CatalogOracle.FixtureSource)), FixtureRoot)
+    }
     s.read.format(classOf[FbcDataSource].getName).load(FixtureRoot)
   }
 

@@ -1,13 +1,12 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
-import java.util.Comparator
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Fixtures, Tables => T, dsl, OracleDsl => O}
 
 /** Cross-format FEDERATED read: one logical table whose rows live in
   * three physical formats at once — a third of `orders` stays parquet,
@@ -34,44 +33,32 @@ object Federation {
 
   import Entry.Q
 
-  val FixtureRoot = "/root/repo/target/fixtures/fed"
-
   private val csvSchema = StructType(Seq(
     StructField("o_orderkey", LongType),
     StructField("o_orderpriority", StringType),
     StructField("o_totalprice", DoubleType)))
 
-  private def legDirs(dir: String): (String, String) = {
-    val key = dir.replaceAll("[^a-zA-Z0-9.]", "_")
-    (s"$FixtureRoot/$key/orc", s"$FixtureRoot/$key/csv")
-  }
+  private def sfName(dir: String): String = s"fed/${Fixtures.dirTag(dir)}"
+
+  private def legDirs(dir: String): (String, String) =
+    (Fixtures.path(s"${sfName(dir)}/orc"), Fixtures.path(s"${sfName(dir)}/csv"))
 
   private def writeFixture(s: SparkSession, dir: String): Unit = {
     import s.implicits._
     val (orcDir, csvDir) = legDirs(dir)
-    val marker = Paths.get(FixtureRoot,
-      dir.replaceAll("[^a-zA-Z0-9.]", "_"), ".fixture_key")
     // key on the source file's identity, not just its path: a
     // regenerated testdata dir must invalidate the fixture
     val src = Paths.get(dir, "orders.parquet")
     val key = s"src=$dir:size=${Files.size(src)}" +
       s":mtime=${Files.getLastModifiedTime(src).toMillis}:legs=orc,csv:mod3"
-    if (Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == key) return
-    val root = marker.getParent
-    if (Files.exists(root)) {
-      val walk = Files.walk(root)
-      try walk.sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
+    Fixtures.once(sfName(dir), key) {
+      val base = T.orders(s, dir)
+        .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")
+      base.filter($"o_orderkey" % 3 === 1)
+        .write.mode("overwrite").orc(orcDir)
+      base.filter($"o_orderkey" % 3 === 2)
+        .write.mode("overwrite").option("header", "false").csv(csvDir)
     }
-    val base = T.orders(s, dir)
-      .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")
-    base.filter($"o_orderkey" % 3 === 1)
-      .write.mode("overwrite").orc(orcDir)
-    base.filter($"o_orderkey" % 3 === 2)
-      .write.mode("overwrite").option("header", "false").csv(csvDir)
-    Files.write(marker, key.getBytes("UTF-8"))
   }
 
   /** q171 — the federated relation, aggregated per priority. */

@@ -1,12 +1,12 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Entry, Tables => T}
+import graft.core.{Entry, Fixtures, Tables => T}
 
 /** FIXED-WIDTH text source (SURVEY.md §2.b scan family, 7th format leg
   * after parquet/CSV/JSONL/ORC/XML/binaryFile): the mainframe/COBOL
@@ -34,7 +34,7 @@ object FixedWidthScan {
 
   import Entry.Q
 
-  val FixturePath = "/root/repo/target/fixtures/supplier.fw"
+  val FixturePath = Fixtures.path("supplier.fw")
 
   /** (Re)write the fixture from the parquet supplier table — bounded
     * (|supplier| rows), atomic tmp+move (the CsvScan discipline).
@@ -48,12 +48,8 @@ object FixedWidthScan {
     val body = rows.map { r =>
       f"${r.getLong(0)}%10d${r.getString(1)}%-18s${r.getInt(2)}%4d${r.getLong(3)}%12d"
     }.mkString("", "\n", "\n")
-    val target = Paths.get(FixturePath)
-    Files.createDirectories(target.getParent)
-    val tmp = target.resolveSibling("supplier.fw.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    Fixtures.writeAtomic(Paths.get(FixturePath),
+      body.getBytes(StandardCharsets.UTF_8))
   }
 
   /** q301 — fixed-width scan + typed parse + pushed-down-style filter. */

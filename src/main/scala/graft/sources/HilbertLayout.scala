@@ -1,12 +1,10 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Fixtures, Tables => T, dsl, OracleDsl => O}
 import graft.functions.HilbertXY2D
 
 /** Hilbert-curve clustering — the 4th physical-index leg next to
@@ -23,7 +21,7 @@ object HilbertLayout {
 
   import Entry.Q
 
-  val HRoot = "/root/repo/target/fixtures/hilbert_events"
+  val HRoot = Fixtures.path("hilbert_events")
   val HFiles = 16
 
   private def hilbert(a: org.apache.spark.sql.Column,
@@ -52,14 +50,9 @@ object HilbertLayout {
   }
 
   private def ensureHilbertLayout(s: SparkSession, dir: String): Unit = {
-    val marker = Paths.get(HRoot, ".fixture_key")
-    val key = s"hilbert:$dir:$HFiles"
-    val cached = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == key
-    if (!cached) {
+    Fixtures.once("hilbert_events", s"hilbert:$dir:$HFiles") {
       val ev = T.events(s, dir).withColumn("ts_us", expr("unix_micros(ts)"))
       hilbertWrite(ev, "user_id", "ts_us", HRoot, HFiles)
-      Files.write(marker, key.getBytes("UTF-8"))
     }
     // the unclustered round-robin twin (ZBaseRoot) is the shared
     // baseline both curve gates measure against

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Entry
+import graft.core.{Entry, Fixtures}
 
 /** Schema-on-read over a dumped stream of unstructured Kubernetes-style
   * objects — the reference's secondary source (SURVEY.md §2.a R1–R3:
@@ -27,7 +27,7 @@ object K8sObjects {
   import Entry.Q
 
   /** Fixed fixture path so the static oracle SQL addresses the same file. */
-  val FixturePath = "/root/repo/src/test/resources/k8s/clustercatalogs.jsonl"
+  val FixturePath = Fixtures.resource("k8s/clustercatalogs.jsonl")
 
   /** Partial typed view: just the fields the query layer touches
     * (mirrors the reference's sparse ClusterCatalog struct).

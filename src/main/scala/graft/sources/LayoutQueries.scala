@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Fixtures, Tables => T, dsl, OracleDsl => O}
 import graft.core.GraftSession.withConfs
 
 /** Date-partitioned table layout + partition pruning — the write-side
@@ -25,7 +25,7 @@ object LayoutQueries {
   import Entry.Q
 
   /** Fixed path so the static oracle SQL can address the layout. */
-  val LayoutRoot = "/root/repo/target/fixtures/layout_events"
+  val LayoutRoot = Fixtures.path("layout_events")
   val PruneDay = "2024-01-15"
 
   /** Build the day-partitioned layout once per (sfDir) — marker-keyed
@@ -33,11 +33,7 @@ object LayoutQueries {
     */
   private def ensureLayout(s: SparkSession, dir: String): Unit = {
     import s.implicits._
-    val marker = Paths.get(LayoutRoot, ".fixture_key")
-    val key = s"events:$dir"
-    val cached = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == key
-    if (!cached) {
+    Fixtures.once("layout_events", s"events:$dir") {
       T.events(s, dir)
         .withColumn("event_day", date_format($"ts", "yyyy-MM-dd"))
         .repartition($"event_day")
@@ -45,7 +41,6 @@ object LayoutQueries {
         .write.mode(SaveMode.Overwrite)
         .partitionBy("event_day")
         .parquet(LayoutRoot)
-      Files.write(marker, key.getBytes("UTF-8"))
     }
   }
 
@@ -141,8 +136,8 @@ object LayoutQueries {
   // writes exactly one JSON per directory).
   // ---------------------------------------------------------------------
 
-  val FragRoot = "/root/repo/target/fixtures/frag_events"
-  val CompactRoot = "/root/repo/target/fixtures/compact_events"
+  val FragRoot = Fixtures.path("frag_events")
+  val CompactRoot = Fixtures.path("compact_events")
   val FragFilesPerDay = 8
   val CompactTargetBytes = 128L * 1024
 
@@ -172,11 +167,7 @@ object LayoutQueries {
     */
   private def ensureFragmented(s: SparkSession, dir: String): Unit = {
     import s.implicits._
-    val marker = Paths.get(FragRoot, ".fixture_key")
-    val key = s"frag:$dir:$FragFilesPerDay"
-    val cached = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == key
-    if (!cached) {
+    Fixtures.once("frag_events", s"frag:$dir:$FragFilesPerDay") {
       withConfs(s, KeepSaltGroups) {
         T.events(s, dir)
           .withColumn("event_day", date_format($"ts", "yyyy-MM-dd"))
@@ -187,7 +178,6 @@ object LayoutQueries {
           .parquet(FragRoot)
       }
       s.read.parquet(FragRoot).foreach(_ => ()) // fail loudly if unreadable
-      Files.write(marker, key.getBytes("UTF-8"))
     }
   }
 
@@ -243,14 +233,7 @@ object LayoutQueries {
       .toDF("__slot", "__slotval")
     // a stale dst (e.g. from a previous run over different partitions)
     // must not leak old partitions into the compacted layout
-    val dstP = Paths.get(dst)
-    if (Files.exists(dstP)) {
-      val walk = Files.walk(dstP)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toList.reverse.foreach(Files.delete)
-      } finally walk.close()
-    }
+    Fixtures.deleteTree(Paths.get(dst))
     val df = s.read.parquet(src)
     val dataCols = df.columns.filter(_ != partitionCol).toSeq
     df.join(broadcast(parts), col(partitionCol).cast("string") === $"__pval")
@@ -278,17 +261,12 @@ object LayoutQueries {
   val q113Compaction: Q = (s, dir) => {
     import s.implicits._
     ensureFragmented(s, dir)
-    val marker = Paths.get(CompactRoot, ".fixture_key")
     // v2: one-job slot-bijection writer (key bump forces a rebuild so
     // the layout on disk is the new writer's output)
-    val key = s"compact:v2:$dir:$CompactTargetBytes"
-    val cached = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == key
-    if (!cached) {
+    Fixtures.once("compact_events", s"compact:v2:$dir:$CompactTargetBytes") {
       val (nb, na) = compact(s, FragRoot, CompactRoot, "event_day",
         Seq("user_id", "ts"), CompactTargetBytes)
       require(na < nb, s"compaction did not shrink the layout: $nb -> $na")
-      Files.write(marker, key.getBytes("UTF-8"))
     }
     s.read.parquet(CompactRoot)
       .groupBy($"event_day".cast("string").as("event_day"))
@@ -317,7 +295,7 @@ object LayoutQueries {
   // lookup) is the layout contract this generalizes.
   // ---------------------------------------------------------------------
 
-  val BloomRoot = "/root/repo/target/fixtures/bloom_orders"
+  val BloomRoot = Fixtures.path("bloom_orders")
   /** The bloom column must be HIGH-cardinality: parquet-mr drops the
     * bloom filter for a chunk whose pages all stayed dictionary-encoded
     * (the dictionary already gives exact chunk-level filtering), so a
@@ -333,12 +311,8 @@ object LayoutQueries {
   val BloomProbeKey = 37L
   val BloomFiles = 4
 
-  private def ensureBloomLayout(s: SparkSession, dir: String): Unit = {
-    val marker = Paths.get(BloomRoot, ".fixture_key")
-    val key = s"bloom:$dir:$BloomFiles"
-    val cached = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == key
-    if (!cached) {
+  private def ensureBloomLayout(s: SparkSession, dir: String): Unit =
+    Fixtures.once("bloom_orders", s"bloom:$dir:$BloomFiles") {
       T.orders(s, dir)
         .repartition(BloomFiles)
         .write.mode(SaveMode.Overwrite)
@@ -348,9 +322,7 @@ object LayoutQueries {
         .option(s"parquet.bloom.filter.enabled#$BloomCol", "true")
         .option(s"parquet.bloom.filter.expected.ndv#$BloomCol", "200000")
         .parquet(BloomRoot)
-      Files.write(marker, key.getBytes("UTF-8"))
     }
-  }
 
   /** True iff every non-empty file embeds a bloom filter for `column`
     * (footer metadata: the column chunk's bloom-filter offset is set).
@@ -408,18 +380,14 @@ object LayoutQueries {
     * mid-table-life and readers must span both layouts transparently,
     * pruning each generation BY ITS OWN spec.
     */
-  val EvoRoot = "/root/repo/target/fixtures/evo_partitions"
+  val EvoRoot = Fixtures.path("evo_partitions")
   val EvoCutoff = "2024-01-15"
   val EvoDayOld = "2024-01-10"
   val EvoDayNew = "2024-01-20"
 
   private def ensureEvolvedLayout(s: SparkSession, dir: String): Unit = {
     import s.implicits._
-    val marker = Paths.get(EvoRoot, ".fixture_key")
-    val key = s"evo:$dir"
-    val cached = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == key
-    if (!cached) {
+    Fixtures.once("evo_partitions", s"evo:$dir") {
       val ev = T.events(s, dir)
         .withColumn("event_day", date_format($"ts", "yyyy-MM-dd"))
       ev.filter($"event_day" < EvoCutoff)
@@ -432,7 +400,6 @@ object LayoutQueries {
         .write.mode(SaveMode.Overwrite)
         .partitionBy("event_day", "event_type")
         .parquet(s"$EvoRoot/gen2")
-      Files.write(marker, key.getBytes("UTF-8"))
     }
   }
 

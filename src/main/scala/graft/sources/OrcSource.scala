@@ -1,11 +1,9 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Fixtures, Tables => T, dsl, OracleDsl => O}
 
 /** ORC source/sink coverage — the fourth format leg next to parquet
   * (everything), CSV (q75), and JSONL (q70-q73): `orders` is written
@@ -21,18 +19,12 @@ object OrcSource {
 
   import Entry.Q
 
-  val OrcRoot = "/root/repo/target/fixtures/orders_orc"
+  val OrcRoot = Fixtures.path("orders_orc")
 
-  private def ensureOrc(s: SparkSession, dir: String): Unit = {
-    val marker = Paths.get(OrcRoot, ".fixture_key")
-    val key = s"orders:$dir"
-    val cached = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == key
-    if (!cached) {
+  private def ensureOrc(s: SparkSession, dir: String): Unit =
+    Fixtures.once("orders_orc", s"orders:$dir") {
       T.orders(s, dir).write.mode(SaveMode.Overwrite).orc(OrcRoot)
-      Files.write(marker, key.getBytes("UTF-8"))
     }
-  }
 
   /** q121 — order-status rollup off the ORC copy, with the status
     * filter REQUIRED to reach the ORC scan as a pushed filter (the same

@@ -1,13 +1,13 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Fixtures, Tables => T, dsl, OracleDsl => O}
 
 /** Bad-record quarantine on ingest (SURVEY.md §2.b source surface).
   *
@@ -49,20 +49,19 @@ object QuarantineIngest {
     * from dead pids are reaped below before any write).
     */
   private val Pid = ProcessHandle.current().pid()
-  private val FixtureDir = "/root/repo/target/fixtures"
 
   private def sfTag(dir: String): String =
     dir.split('/').filter(_.nonEmpty).lastOption.getOrElse("sf")
       .replaceAll("[^A-Za-z0-9.]", "_")
 
   def fixturePath(dir: String): String =
-    s"$FixtureDir/supplier_feed_p${Pid}_${sfTag(dir)}.csv"
+    s"${Fixtures.root}/supplier_feed_p${Pid}_${sfTag(dir)}.csv"
 
   /** Delete feed fixtures owned by pids that no longer resolve — a
     * dead JVM can't be racing, and a recycled pid must not inherit a
     * stale different-SF file that would widen this JVM's glob. */
   private def reapDeadPidFixtures(): Unit = {
-    val d = Paths.get(FixtureDir)
+    val d = Paths.get(Fixtures.root)
     if (Files.isDirectory(d)) {
       val st = Files.list(d)
       try {
@@ -100,13 +99,9 @@ object QuarantineIngest {
       else if (k % 7 == 5) s"$k,${r.getString(1)},NOT_A_NUMBER"
       else s"$k,${r.getString(1)},${r.getDouble(2)}"
     }.mkString("", "\n", "\n")
-    val target = Paths.get(fixturePath(dir))
-    Files.createDirectories(target.getParent)
     reapDeadPidFixtures()
-    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    Fixtures.writeAtomic(Paths.get(fixturePath(dir)),
+      body.getBytes(StandardCharsets.UTF_8))
   }
 
   /** q133 — permissive ingest + quarantine split summary: row count and
@@ -131,7 +126,7 @@ object QuarantineIngest {
 
   val q133Sql: String =
     s"""WITH raw AS (
-       |  SELECT line FROM read_csv('$FixtureDir/supplier_feed_p${Pid}_*.csv',
+       |  SELECT line FROM read_csv('${Fixtures.root}/supplier_feed_p${Pid}_*.csv',
        |    header=false, delim='|',
        |    columns={'line': 'VARCHAR'})),
        |p AS (SELECT string_split(line, ',') AS f FROM raw),

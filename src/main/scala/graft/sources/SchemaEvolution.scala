@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Entry, Tables => T}
+import graft.core.{Entry, Fixtures, Tables => T}
 
 /** Parquet schema evolution (SURVEY.md §2.b source surface): a table
   * whose later batches added a column must stay readable as ONE
@@ -32,18 +32,23 @@ object SchemaEvolution {
   import Entry.Q
 
   /** Fixed absolute dir so the static oracle SQL can address it. */
-  val FixtureDir = "/root/repo/target/fixtures/evo"
+  val FixtureDir = Fixtures.path("evo")
 
   /** Write one batch as a single parquet FILE (tmp dir write + move the
-    * part file to a stable name, q91/compaction pattern).
+    * part file to a stable name, q91/compaction pattern), then delete
+    * the tmp dir.
     */
   private def writeOneFile(df: DataFrame, target: Path): Unit = {
-    val tmp = Files.createTempDirectory("evo_batch").toString
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = Files.list(Paths.get(tmp)).filter(_.toString.endsWith(".parquet"))
-      .findFirst().orElseThrow()
-    Files.createDirectories(target.getParent)
-    Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+    val tmp = Files.createTempDirectory("evo_batch")
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val parts = Files.list(tmp)
+      val part =
+        try parts.filter(_.toString.endsWith(".parquet")).findFirst().orElseThrow()
+        finally parts.close()
+      Files.createDirectories(target.getParent)
+      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+    } finally Fixtures.deleteTree(tmp)
   }
 
   private def writeFixture(s: SparkSession, dir: String): Unit = {
@@ -80,8 +85,8 @@ object SchemaEvolution {
     * catch — a column ADDED (added_at), a column REMOVED (legacy_flag),
     * a type WIDENED (id int → bigint), and untouched survivors.
     */
-  val DriftV1 = "/root/repo/target/fixtures/drift_v1"
-  val DriftV2 = "/root/repo/target/fixtures/drift_v2"
+  val DriftV1 = Fixtures.path("drift_v1")
+  val DriftV2 = Fixtures.path("drift_v2")
 
   private def writeDriftFixture(s: SparkSession): Unit = {
     import s.implicits._

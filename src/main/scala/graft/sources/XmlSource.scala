@@ -4,7 +4,7 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Fixtures, Tables => T, dsl, OracleDsl => O}
 
 /** XML source leg (Spark 4 folded the spark-xml connector into core) —
   * the sixth format leg next to parquet/CSV/JSONL/ORC/binaryFile.
@@ -25,8 +25,7 @@ object XmlSource {
   import Entry.Q
 
   private def fixtureDir(dir: String): String =
-    "/root/repo/target/fixtures/xml_orders_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
+    Fixtures.path("xml_orders_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
 
   private val ordersXmlSchema = StructType(Seq(
     StructField("o_orderkey", LongType),

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Entry, Tables => T, dsl, OracleDsl => O}
+import graft.core.{Entry, Fixtures, Tables => T, dsl, OracleDsl => O}
 
 /** Z-order (Morton-curve) multi-dimensional clustering — the layout
   * leg partitioning (q111) and compaction (q113) leave open: a table
@@ -145,8 +145,8 @@ object ZOrderQueries {
   // plus the physical locality gate, in one hash-checked result.
   // ---------------------------------------------------------------------
 
-  val ZRoot = "/root/repo/target/fixtures/zorder_events"
-  val ZBaseRoot = "/root/repo/target/fixtures/zorder_events_base"
+  val ZRoot = Fixtures.path("zorder_events")
+  val ZBaseRoot = Fixtures.path("zorder_events_base")
   val ZFiles = 16
   /** The probe band: a user_id slice a support query would ask for;
     * non-empty at every scale factor (sf0.001 only has user_ids 0-14).
@@ -154,12 +154,8 @@ object ZOrderQueries {
   val ZProbeLo = 5L
   val ZProbeHi = 10L
 
-  private[sources] def ensureZLayout(s: SparkSession, dir: String): Unit = {
-    val marker = Paths.get(ZRoot, ".fixture_key")
-    val key = s"zorder:$dir:$ZFiles"
-    val cached = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == key
-    if (!cached) {
+  private[sources] def ensureZLayout(s: SparkSession, dir: String): Unit =
+    Fixtures.once("zorder_events", s"zorder:$dir:$ZFiles") {
       val ev = T.events(s, dir)
         .withColumn("ts_us", expr("unix_micros(ts)"))
       // clustered layout: Morton order over (user_id, event time)
@@ -169,9 +165,7 @@ object ZOrderQueries {
       // baseline the footer gate compares against
       ev.repartition(ZFiles)
         .write.mode(SaveMode.Overwrite).parquet(ZBaseRoot)
-      Files.write(marker, key.getBytes("UTF-8"))
     }
-  }
 
   /** q125 — aggregate a narrow user band off the z-ordered layout.
     * Three contracts in one green row:
@@ -223,20 +217,16 @@ object ZOrderQueries {
   // merge-reader can stream the table in order without re-sorting.
   // ---------------------------------------------------------------------
 
-  val SortRoot = "/root/repo/target/fixtures/totalsort_events"
+  val SortRoot = Fixtures.path("totalsort_events")
   val SortCol = "user_id"
   val SortFiles = 16
 
   private[graft] def ensureSortedLayout(s: SparkSession, dir: String): Unit = {
     import s.implicits._
-    val marker = Paths.get(SortRoot, ".fixture_key")
     // v2: event_id joined the within-file sort as the unique tiebreak —
     // the total order it completes is what makes q184's positional
     // checksum deterministic across engines
-    val key = s"totalsort:$dir:$SortFiles:v2"
-    val cached = Files.exists(marker) &&
-      new String(Files.readAllBytes(marker), "UTF-8") == key
-    if (!cached) {
+    Fixtures.once("totalsort_events", s"totalsort:$dir:$SortFiles:v2") {
       // the classic distributed total order: sampled range bounds give
       // balanced partitions (the terasort shape — no single-reducer
       // sort), each partition sorted within, equal keys never split
@@ -245,7 +235,6 @@ object ZOrderQueries {
         .repartitionByRange(SortFiles, col(SortCol), col("ts"))
         .sortWithinPartitions(col(SortCol), col("ts"), col("event_id"))
         .write.mode(SaveMode.Overwrite).parquet(SortRoot)
-      Files.write(marker, key.getBytes("UTF-8"))
     }
   }
 

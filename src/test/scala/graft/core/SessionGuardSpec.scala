@@ -22,9 +22,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * name. Catalog snapshots are opened only by `FbcIngest`: no parquet
   * read under `graft/catalog` elsewhere, and `CatalogQueries` lists
   * packages and schemas from the partition index, not with a distinct()
-  * over a scan. Scans every Scala file under
-  * `src/` (mains, checkpoints, sweeps, entries, loops, scans, sketches
-  * and snapshot opens under `src/main`).
+  * over a scan. On-disk fixtures go through `Fixtures`: no absolute
+  * fixture path literal, fixture marker or recursive tree delete
+  * elsewhere.
+  * Scans every Scala file under `src/` (mains, checkpoints, sweeps,
+  * entries, loops, scans, sketches, snapshot opens and fixtures under
+  * `src/main`).
   */
 class SessionGuardSpec extends AnyFunSuite {
 
@@ -34,6 +37,7 @@ class SessionGuardSpec extends AnyFunSuite {
   private val entry = Paths.get("src/main/scala/graft/core/Entry.scala")
   private val registry = Paths.get("src/main/scala/graft/SparkEntry.scala")
   private val operators = Paths.get("src/main/scala/graft/operators")
+  private val fixtures = Paths.get("src/main/scala/graft/core/Fixtures.scala")
 
   private val sources: Seq[(Path, Seq[String])] = {
     val walk = Files.walk(Paths.get("src"))
@@ -186,6 +190,24 @@ class SessionGuardSpec extends AnyFunSuite {
         i + 1
     }
     assert(found.isEmpty, s"distinct() over package/schema at lines: $found")
+  }
+
+  test("src/main holds no absolute fixture or resource path literal") {
+    val found = hits("\"/[^\"]*(target/fixtures|src/test/resources)")
+      .filter(_._1.startsWith("src/main"))
+    assert(found.isEmpty, s"absolute fixture paths at: $found")
+  }
+
+  test("fixture markers are read and written only by Fixtures.once") {
+    val found = hits("""\.fixture_key""")
+      .filter(_._1.startsWith("src/main")).filterNot(_._1 == fixtures)
+    assert(found.isEmpty, s"fixture markers at: $found")
+  }
+
+  test("recursive tree deletes live only in Fixtures.deleteTree") {
+    val found = hits("""Comparator\.reverseOrder""")
+      .filter(_._1.startsWith("src/main")).filterNot(_._1 == fixtures)
+    assert(found.isEmpty, s"tree deletes at: $found")
   }
 
   test("two-level scans (range partition + partition id) live only in " +

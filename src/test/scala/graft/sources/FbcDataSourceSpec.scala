@@ -1,6 +1,9 @@
 package graft.sources
 
+import java.nio.file.{Files, Path}
+
 import graft.SparkSpec
+import graft.core.Fixtures
 import org.apache.spark.sql.functions._
 
 /** The FBC file-per-row DSv2 connector: content parity with the ingest
@@ -10,6 +13,12 @@ import org.apache.spark.sql.functions._
   */
 class FbcDataSourceSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Run `body` on a fresh temp dir, deleted afterwards. */
+  private def withTempDir(body: Path => Unit): Unit = {
+    val dir = Files.createTempDirectory("fbcfs-spec")
+    try body(dir) finally Fixtures.deleteTree(dir)
+  }
 
   test("full read matches the parsed fixture stream verbatim") {
     val viaConnector = FbcSource.read(spark)
@@ -62,30 +71,26 @@ class FbcDataSourceSpec extends SparkSpec {
   }
 
   test("distributed write path round-trips through the connector") {
-    val root = "/root/repo/target/fixtures/fbcfs-written"
-    val p = java.nio.file.Paths.get(root)
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.delete(f))
+    withTempDir { tmp =>
+      val root = tmp.resolve("fbcfs-written").toString
+      val meta = graft.catalog.FbcIngest.withPackageKey(
+          graft.catalog.FbcIngest.readMetaStream(
+            spark, graft.catalog.CatalogOracle.FixtureSource))
+        .select($"package", $"schema", $"name", $"blob")
+        .repartition(3) // force multiple write tasks
+      meta.write.format(classOf[FbcDataSource].getName)
+        .mode("append").save(root)
+      val back = spark.read.format(classOf[FbcDataSource].getName).load(root)
+        .as[(String, String, String, String)].collect().toSet
+      val expected = meta.as[(String, String, String, String)].collect().toSet
+      assert(back == expected, "write->read round trip diverged")
+      // idempotent rewrite (task-retry semantics): same content, same tree
+      meta.write.format(classOf[FbcDataSource].getName)
+        .mode("append").save(root)
+      val again = spark.read.format(classOf[FbcDataSource].getName).load(root)
+        .as[(String, String, String, String)].collect().toSet
+      assert(again == expected)
     }
-    val meta = graft.catalog.FbcIngest.withPackageKey(
-        graft.catalog.FbcIngest.readMetaStream(
-          spark, graft.catalog.CatalogOracle.FixtureSource))
-      .select($"package", $"schema", $"name", $"blob")
-      .repartition(3) // force multiple write tasks
-    meta.write.format(classOf[FbcDataSource].getName)
-      .mode("append").save(root)
-    val back = spark.read.format(classOf[FbcDataSource].getName).load(root)
-      .as[(String, String, String, String)].collect().toSet
-    val expected = meta.as[(String, String, String, String)].collect().toSet
-    assert(back == expected, "write->read round trip diverged")
-    // idempotent rewrite (task-retry semantics): same content, same tree
-    meta.write.format(classOf[FbcDataSource].getName)
-      .mode("append").save(root)
-    val again = spark.read.format(classOf[FbcDataSource].getName).load(root)
-      .as[(String, String, String, String)].collect().toSet
-    assert(again == expected)
   }
 
   test("COUNT(*) pushes down completely: answered from metadata alone") {
@@ -193,50 +198,52 @@ class FbcDataSourceSpec extends SparkSpec {
   }
 
   test("micro-batch stream tails new files without reprocessing old ones") {
-    import java.nio.file.{Files, Paths}
-    val root = "/root/repo/target/fixtures/fbcfs-stream"
-    val outDir = Files.createTempDirectory("fbc-stream-out").toString
-    val ckpt = Files.createTempDirectory("fbc-stream-ckpt").toString
-    val meta = graft.catalog.FbcIngest.withPackageKey(
-      graft.catalog.FbcIngest.readMetaStream(
-        spark, graft.catalog.CatalogOracle.FixtureSource))
-    FbcDataSource.writeFileTree(meta, root)
-    val t0 = java.nio.file.attribute.FileTime.fromMillis(1700000000000L)
-    Files.walk(Paths.get(root)).filter(_.toString.endsWith(".json"))
-      .forEach(p => Files.setLastModifiedTime(p, t0))
-    def runOnce(): Unit = {
-      val q = spark.readStream.format(classOf[FbcDataSource].getName)
-        .load(root)
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    import java.nio.file.Paths
+    withTempDir { tmp =>
+      val root = tmp.resolve("fbcfs-stream").toString
+      val outDir = tmp.resolve("fbc-stream-out").toString
+      val ckpt = tmp.resolve("fbc-stream-ckpt").toString
+      val meta = graft.catalog.FbcIngest.withPackageKey(
+        graft.catalog.FbcIngest.readMetaStream(
+          spark, graft.catalog.CatalogOracle.FixtureSource))
+      FbcDataSource.writeFileTree(meta, root)
+      val t0 = java.nio.file.attribute.FileTime.fromMillis(1700000000000L)
+      Files.walk(Paths.get(root)).filter(_.toString.endsWith(".json"))
+        .forEach(p => Files.setLastModifiedTime(p, t0))
+      def runOnce(): Unit = {
+        val q = spark.readStream.format(classOf[FbcDataSource].getName)
+          .load(root)
+          .writeStream.format("parquet")
+          .option("path", outDir).option("checkpointLocation", ckpt)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      }
+      runOnce()
+      val n0 = meta.count()
+      assert(spark.read.parquet(outDir).count() == n0,
+        "first run must ingest every existing file")
+      // two new records land later (mtime moves forward)
+      val d = Paths.get(root, "pkg-new", "olm.bundle")
+      Files.createDirectories(d)
+      val t1 = java.nio.file.attribute.FileTime.fromMillis(1700000060000L)
+      Seq("n1", "n2").foreach { n =>
+        val f = d.resolve(s"$n.json")
+        Files.write(f, s"""{"schema":"olm.bundle","package":"pkg-new","name":"$n"}""".getBytes)
+        Files.setLastModifiedTime(f, t1)
+      }
+      runOnce()
+      val after = spark.read.parquet(outDir)
+      assert(after.count() == n0 + 2,
+        s"second run must add exactly the two new files, got ${after.count()}")
+      import org.apache.spark.sql.functions.col
+      val counts = after.groupBy(col("name")).count()
+        .as[(String, Long)].collect().toMap
+      assert(counts("n1") == 1L && counts("n2") == 1L,
+        "new files must appear exactly once")
+      assert(counts.values.forall(_ == 1L),
+        s"no file may be reprocessed across restarts: $counts")
     }
-    runOnce()
-    val n0 = meta.count()
-    assert(spark.read.parquet(outDir).count() == n0,
-      "first run must ingest every existing file")
-    // two new records land later (mtime moves forward)
-    val d = Paths.get(root, "pkg-new", "olm.bundle")
-    Files.createDirectories(d)
-    val t1 = java.nio.file.attribute.FileTime.fromMillis(1700000060000L)
-    Seq("n1", "n2").foreach { n =>
-      val f = d.resolve(s"$n.json")
-      Files.write(f, s"""{"schema":"olm.bundle","package":"pkg-new","name":"$n"}""".getBytes)
-      Files.setLastModifiedTime(f, t1)
-    }
-    runOnce()
-    val after = spark.read.parquet(outDir)
-    assert(after.count() == n0 + 2,
-      s"second run must add exactly the two new files, got ${after.count()}")
-    import org.apache.spark.sql.functions.col
-    val counts = after.groupBy(col("name")).count()
-      .as[(String, Long)].collect().toMap
-    assert(counts("n1") == 1L && counts("n2") == 1L,
-      "new files must appear exactly once")
-    assert(counts.values.forall(_ == 1L),
-      s"no file may be reprocessed across restarts: $counts")
   }
 
   test("grouped count + limit keeps Spark's Limit (no silent drop)") {
@@ -251,37 +258,34 @@ class FbcDataSourceSpec extends SparkSpec {
   }
 
   test("global COUNT(*) over a missing tree is one row with count 0") {
-    val missing = "/root/repo/target/fixtures/fbcfs-does-not-exist"
-    val rows = spark.read.format(classOf[FbcDataSource].getName)
-      .load(missing).groupBy().count().collect()
-    assert(rows.length == 1 && rows.head.getLong(0) == 0L,
-      s"empty-tree global count must be a single 0 row, got ${rows.toSeq}")
+    withTempDir { tmp =>
+      val missing = tmp.resolve("fbcfs-does-not-exist").toString
+      val rows = spark.read.format(classOf[FbcDataSource].getName)
+        .load(missing).groupBy().count().collect()
+      assert(rows.length == 1 && rows.head.getLong(0) == 0L,
+        s"empty-tree global count must be a single 0 row, got ${rows.toSeq}")
+    }
   }
 
   test("write path: null blob becomes an empty file; bad path components fail") {
-    val root = "/root/repo/target/fixtures/fbcfs-nullblob"
-    val p = java.nio.file.Paths.get(root)
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.delete(f))
-    }
-    Seq(("pkg-x", "olm.bundle", "obj-1", null: String))
-      .toDF("package", "schema", "name", "blob")
-      .write.format(classOf[FbcDataSource].getName).mode("append").save(root)
-    val back = spark.read.format(classOf[FbcDataSource].getName).load(root)
-      .select($"name", $"blob").as[(String, String)].collect()
-    assert(back.toSeq == Seq(("obj-1", "")),
-      s"null blob must round-trip as empty content, got ${back.toSeq}")
-    val ex = intercept[org.apache.spark.SparkException] {
-      Seq(("../escape", "olm.bundle", "obj-2", "x"))
+    withTempDir { tmp =>
+      val root = tmp.resolve("fbcfs-nullblob").toString
+      Seq(("pkg-x", "olm.bundle", "obj-1", null: String))
         .toDF("package", "schema", "name", "blob")
         .write.format(classOf[FbcDataSource].getName).mode("append").save(root)
+      val back = spark.read.format(classOf[FbcDataSource].getName).load(root)
+        .select($"name", $"blob").as[(String, String)].collect()
+      assert(back.toSeq == Seq(("obj-1", "")),
+        s"null blob must round-trip as empty content, got ${back.toSeq}")
+      val ex = intercept[org.apache.spark.SparkException] {
+        Seq(("../escape", "olm.bundle", "obj-2", "x"))
+          .toDF("package", "schema", "name", "blob")
+          .write.format(classOf[FbcDataSource].getName).mode("append").save(root)
+      }
+      assert(ex.getMessage != null)
+      assert(!java.nio.file.Files.exists(tmp.resolve("escape")),
+        "path-separator values must not escape the tree root")
     }
-    assert(ex.getMessage != null)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get("/root/repo/target/fixtures/escape")),
-      "path-separator values must not escape the tree root")
   }
 
   test("scan reports exact statistics; filters shrink them") {
