@@ -1,6 +1,6 @@
 package graft.catalog
 
-import java.nio.charset.StandardCharsets
+import java.nio.charset.{Charset, StandardCharsets}
 import java.nio.file.{Files, NoSuchFileException, Path, Paths,
   StandardCopyOption}
 import java.nio.file.attribute.FileTime
@@ -9,14 +9,14 @@ import java.time.{Instant, ZoneOffset}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
-import graft.core.Fixtures
+import graft.core.{Fixtures, LocalFs}
 
 import FbcModel._
 
@@ -37,6 +37,10 @@ import FbcModel._
   *     renaming an ACTIVE pointer file over the previous one — the
   *     Spark-world equivalent of cache.go:85-91's symlink swap, made
   *     idempotent (the reference wedges on a stale `next` symlink);
+  *   - the snapshot write runs on [[graft.core.LocalFs]], passed as
+  *     write options, so a publish forks no `chmod` per created file;
+  *     the caller's session, its reads and every other write keep the
+  *     stock file system;
   *   - refresh is incremental: the source's max modification time is the
   *     version watermark (cache.go:54-66's If-Modified-Since), and an
   *     unchanged source is a no-op;
@@ -79,17 +83,40 @@ object FbcIngest {
       packageKey(col("schema"), col("package"), col("name")))
 
   private val BadMetaMsg = "meta record lacks schema/name"
+  private val BadKeyMsg = "catalog key cannot be a file name"
+
+  /** The charset this JVM encodes file names with, fixed at start-up
+    * from the locale (`sun.jnu.encoding`).
+    */
+  private val FileNames =
+    Charset.forName(System.getProperty("sun.jnu.encoding", "UTF-8"))
 
   /** The stored columns: the derived partition key, plus a schema
     * column that raises on a record lacking schema or name — validation
     * rides the write pass instead of a separate count() over the source.
+    *
+    * Unless file names are UTF-8, a `package` or `schema` key that
+    * `fileNames` cannot encode raises too, naming the key: its partition
+    * dir could not be created.
     */
-  private def checkedMeta(meta: DataFrame): DataFrame =
-    withPackageKey(meta).select(col("package"),
-      when(col("schema").isNull || col("name").isNull,
+  private[catalog] def checkedMeta(meta: DataFrame,
+      fileNames: Charset = FileNames): DataFrame = {
+    val nameable: (String, Column) => Column =
+      if (fileNames == StandardCharsets.UTF_8) (_, c) => c
+      else {
+        val cs = fileNames.name
+        val encodable = udf((v: String) =>
+          v == null || Charset.forName(cs).newEncoder().canEncode(v))
+        (key, c) => when(!encodable(c), raise_error(concat(
+          lit(s"$BadKeyMsg in $cs: $key="), c))).otherwise(c)
+      }
+    withPackageKey(meta).select(
+      nameable("package", col("package")).as("package"),
+      nameable("schema", when(col("schema").isNull || col("name").isNull,
         raise_error(concat(lit(s"$BadMetaMsg: "), coalesce(col("blob"), lit("")))))
-        .otherwise(col("schema")).as("schema"),
+        .otherwise(col("schema"))).as("schema"),
       col("name"), col("blob"))
+  }
 
   /** Validate-and-write one immutable snapshot under
     * `root/snapshots/<ts>/` partitioned by (package, schema), and
@@ -98,41 +125,55 @@ object FbcIngest {
     * Validation is fused into the write pass with an inline raise_error
     * — ONE scan of the source, not a count() action followed by a second
     * full read (at 100 TB the extra pass is real money). A bad record
-    * aborts the job before publish, surfaced as IllegalArgumentException.
+    * aborts the job before publish, surfaced as IllegalArgumentException,
+    * as does a key the JVM cannot encode as a file name.
     *
-    * The write shuffles into the session's shuffle-partition count, not
-    * the count AQE would coalesce it to: the write costs per file, not
-    * per byte (Hadoop's local file system creates each file and its
-    * `.crc`), so a small catalog coalesced into one task would write
-    * every `(package, schema)` file one after another. Each key still
-    * lands in one task, so each partition dir holds one file.
+    * The write runs on [[graft.core.LocalFs]], which sets each created
+    * file's and dir's permissions through NIO instead of forking `chmod`
+    * (about 10 ms per file without libhadoop). It still costs per file,
+    * not per byte: each file is created with its `.crc` and renamed at
+    * commit. So the write shuffles into the session's shuffle-partition
+    * count, not the count AQE would coalesce it to: a small catalog
+    * coalesced into one task would write every `(package, schema)` file
+    * one after another. Each key still lands in one task, so each
+    * partition dir holds one file.
     */
   def writeSnapshot(spark: SparkSession, meta: DataFrame, root: String,
       snapshotId: Option[String] = None, sourceWatermark: Long = 0L): String = {
     val id = snapshotId.getOrElse(tsFmt.format(Instant.now()))
     val snapDir = snapshotDir(root, id)
     evict(Set(snapDir))
-    try {
+    refusing {
       checkedMeta(meta)
         .repartition(spark.sessionState.conf.numShufflePartitions,
           col("package"), col("schema"))
         .sortWithinPartitions("package", "schema", "name")
-        .write.mode(SaveMode.Overwrite)
+        .write.mode(SaveMode.Overwrite).options(LocalFs.options)
         .partitionBy("package", "schema")
         .parquet(snapDir.toString)
-    } catch {
-      case e: Throwable if causeChain(e).exists(
-          m => m != null && m.contains(BadMetaMsg)) =>
-        throw new IllegalArgumentException(
-          s"refusing to load snapshot: $BadMetaMsg", e)
     }
     publishActive(root, id, sourceWatermark)
     id
   }
 
-  private def causeChain(e: Throwable): Seq[String] =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
-      .map(_.getMessage).toSeq
+  /** Run the write `body`; when [[checkedMeta]] refused the source (a
+    * record lacking schema or name, or a key that cannot be a file name)
+    * raise that as an IllegalArgumentException saying why. The reason is
+    * read off the innermost cause that carries it, the raised error
+    * itself, with Spark's SQL state cut off.
+    */
+  private[catalog] def refusing[A](body: => A): A =
+    try body catch {
+      case e: Throwable =>
+        val why = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
+          .map(_.getMessage).filter(_ != null).toSeq.reverse.collectFirst {
+            case m if m.contains(BadMetaMsg) => BadMetaMsg
+            case m if m.contains(BadKeyMsg) =>
+              m.substring(m.indexOf(BadKeyMsg)).replaceFirst(" SQLSTATE: \\w+$", "")
+          }
+        throw why.fold(e)(w =>
+          new IllegalArgumentException(s"refusing to load snapshot: $w", e))
+    }
 
   /** Atomic publish: write ACTIVE.tmp then rename over ACTIVE.
     * Idempotent — a leftover tmp from a crashed publish is overwritten,
@@ -313,7 +354,10 @@ object FbcIngest {
     * Scale notes: AvailableNow drains all pending files in rate-limited
     * micro-batches then stops — an incremental batch job, restart-safe
     * via the checkpoint; the parquet sink appends partition-pruned
-    * (package, schema) directories exactly like the snapshot writer.
+    * (package, schema) directories exactly like the snapshot writer,
+    * but on the stock file system: Spark's file stream sink builds its
+    * Hadoop conf from the session alone, so write options such as
+    * [[graft.core.LocalFs.options]] never reach it.
     */
   def refreshIncremental(spark: SparkSession, sourceDir: String,
       root: String): Unit = {

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -51,15 +51,6 @@ object IndexStore {
   def tableFor(prefix: String, dir: String): String =
     "graft_" + prefix + "_" + dir.replaceAll("[^a-zA-Z0-9]", "_") + "_p" + Pid
 
-  private def deleteRec(p: Path): Unit =
-    if (Files.exists(p)) {
-      if (Files.isDirectory(p)) {
-        val ls = Files.list(p) // must close: each list() holds an fd
-        try ls.forEach(deleteRec(_)) finally ls.close()
-      }
-      Files.delete(p)
-    }
-
   /** Ensure `graft_<prefix>_<dir>_p<pid>` exists in `s`'s catalog,
     * building it from `build` on first call; returns the table name.
     * `build` runs at most once per (JVM, prefix, dir) while the table
@@ -84,11 +75,11 @@ object IndexStore {
             if (n.startsWith("graft_" + prefix + "_") && i > 0) {
               val dead = scala.util.Try(n.substring(i + 2).toLong).toOption
                 .exists(id => id != Pid && !ProcessHandle.of(id).isPresent)
-              if (dead) scala.util.Try(deleteRec(p))
+              if (dead) scala.util.Try(Fixtures.deleteTree(p))
             }
           } finally ls.close()
         }
-        deleteRec(Paths.get(warehouse, t)) // leftovers from a pid reuse
+        Fixtures.deleteTree(Paths.get(warehouse, t)) // leftovers from a pid reuse
         val t0 = System.nanoTime()
         build.write.saveAsTable(t)
         recordBuild(prefix, (System.nanoTime() - t0) / 1e9)

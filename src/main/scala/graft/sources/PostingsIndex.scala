@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Entry, Tables => T}
+import graft.core.{Entry, Fixtures, Tables => T}
 
 /** PERSISTED inverted index as a token-bucketed warehouse table — the
   * serving layout q135's inline postings join promises ("a served
@@ -51,14 +51,6 @@ object PostingsIndex {
       if (!s.catalog.tableExists(t)) {
         val warehouse = java.net.URI.create(
           s.conf.get("spark.sql.warehouse.dir")).getPath
-        def deleteRec(p: java.nio.file.Path): Unit =
-          if (Files.exists(p)) {
-            if (Files.isDirectory(p)) {
-              val ls = Files.list(p) // must close: each list() holds an fd
-              try ls.forEach(deleteRec(_)) finally ls.close()
-            }
-            Files.delete(p)
-          }
         // Reap index dirs left by DEAD JVMs only — the owner pid is in
         // the name, and a pid that no longer resolves can't be racing
         // us. Live siblings belong to concurrent sbt processes and are
@@ -72,11 +64,11 @@ object PostingsIndex {
             if (n.startsWith("graft_postings_") && i > 0) {
               val dead = scala.util.Try(n.substring(i + 2).toLong).toOption
                 .exists(id => id != Pid && !ProcessHandle.of(id).isPresent)
-              if (dead) scala.util.Try(deleteRec(p))
+              if (dead) scala.util.Try(Fixtures.deleteTree(p))
             }
           } finally ls.close()
         }
-        deleteRec(Paths.get(warehouse, t)) // leftovers from a pid reuse
+        Fixtures.deleteTree(Paths.get(warehouse, t)) // leftovers from a pid reuse
         val t0 = System.nanoTime()
         T.documents(s, dir)
           .select($"doc_id",

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
@@ -14,7 +15,8 @@ import graft.SparkSpec
   * `.json` suffix strip, verbatim blob round-trip, atomic/idempotent
   * snapshot publish (also after a crash before the ACTIVE rename),
   * incremental refresh, retention GC, package and schema keys that are
-  * numeric-looking, path-escaped, empty or non-ASCII.
+  * numeric-looking, path-escaped, empty or non-ASCII, and a key the
+  * file-name charset cannot encode.
   */
 class FbcCatalogSpec extends SparkSpec {
 
@@ -215,6 +217,25 @@ class FbcCatalogSpec extends SparkSpec {
     assert(FbcIngest.activeSnapshot(crashRoot.toString).map(_._1) == Some(next))
     assert(!Files.exists(crashRoot.resolve("ACTIVE.tmp")))
     assert(packages == Seq("__global", "pkg-a", "pkg-b"))
+  }
+
+  test("where file names are not UTF-8, a key they cannot encode fails " +
+      "the write pass naming it; under UTF-8 the plan has no check") {
+    import spark.implicits._
+    val meta = Seq(("olm.package", "p", "caf\u00e9"), ("olm.package", "p", "plain"))
+      .toDF("schema", "package", "name").withColumn("blob", col("name"))
+    val ascii = FbcIngest.checkedMeta(meta, StandardCharsets.US_ASCII)
+    val out = Files.createTempDirectory("fbc-ascii").resolve("t").toString
+    val e = intercept[IllegalArgumentException](
+      FbcIngest.refusing(ascii.write.parquet(out)))
+    assert(e.getMessage == "refusing to load snapshot: catalog key cannot be " +
+      "a file name in US-ASCII: package=caf\u00e9")
+    assert(FbcIngest.checkedMeta(meta.filter(col("name") === "plain"),
+      StandardCharsets.US_ASCII).collect().map(_.getString(0)).toSeq == Seq("plain"))
+    def udfs(df: DataFrame) = df.queryExecution.analyzed.expressions
+      .flatMap(_.collect { case u: ScalaUDF => u })
+    assert(udfs(ascii).size == 2)
+    assert(udfs(FbcIngest.checkedMeta(meta, StandardCharsets.UTF_8)).isEmpty)
   }
 
   test("malformed meta records fail the load (no silent swallow)") {

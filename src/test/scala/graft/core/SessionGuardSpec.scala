@@ -23,8 +23,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * read under `graft/catalog` elsewhere, and `CatalogQueries` lists
   * packages and schemas from the partition index, not with a distinct()
   * over a scan. On-disk fixtures go through `Fixtures`: no absolute
-  * fixture path literal, fixture marker or recursive tree delete
-  * elsewhere.
+  * fixture path literal, fixture marker, recursive tree delete or
+  * `Files.delete` elsewhere. The `file:` file system is chosen only in
+  * `LocalFs`, and `FbcIngest`'s snapshot write passes its options.
   * Scans every Scala file under `src/` (mains, checkpoints, sweeps,
   * entries, loops, scans, sketches, snapshot opens and fixtures under
   * `src/main`).
@@ -38,6 +39,8 @@ class SessionGuardSpec extends AnyFunSuite {
   private val registry = Paths.get("src/main/scala/graft/SparkEntry.scala")
   private val operators = Paths.get("src/main/scala/graft/operators")
   private val fixtures = Paths.get("src/main/scala/graft/core/Fixtures.scala")
+  private val localFs = Paths.get("src/main/scala/graft/core/LocalFs.scala")
+  private val ingest = Paths.get("src/main/scala/graft/catalog/FbcIngest.scala")
 
   private val sources: Seq[(Path, Seq[String])] = {
     val walk = Files.walk(Paths.get("src"))
@@ -205,9 +208,22 @@ class SessionGuardSpec extends AnyFunSuite {
   }
 
   test("recursive tree deletes live only in Fixtures.deleteTree") {
-    val found = hits("""Comparator\.reverseOrder""")
+    val found = hits("""Comparator\.reverseOrder|Files\.delete\(""")
       .filter(_._1.startsWith("src/main")).filterNot(_._1 == fixtures)
     assert(found.isEmpty, s"tree deletes at: $found")
+  }
+
+  test("the file: file system is chosen only in LocalFs") {
+    val found = hits("""fs\.file\.impl|disable\.cache""")
+      .filter(_._1.startsWith("src/main")).map(_._1).distinct
+    assert(found == Seq(localFs), s"file system keys in: $found")
+  }
+
+  test("FbcIngest's snapshot write passes LocalFs's options") {
+    val lines = sources.find(_._1 == ingest).getOrElse(fail(s"no $ingest"))._2
+    val writes = lines.filter("""(?<!Files)\.write\b""".r.findFirstIn(_).isDefined)
+    assert(writes.nonEmpty && writes.forall(_.contains(".options(LocalFs.options)")),
+      s"batch writes: $writes")
   }
 
   test("two-level scans (range partition + partition id) live only in " +
